@@ -14,7 +14,6 @@ xxhash64); Python never touches row data. Scale design:
 
 from __future__ import annotations
 
-import os
 import random
 
 from pyspark.sql import Column, DataFrame
@@ -25,9 +24,9 @@ from pyspark.sql import functions as F
 #: fallback below instead of one task's array fold. 64-bit minhash band
 #: keys keep buckets duplicate-group-sized on real corpora, so at every
 #: tested SF the guard branch is empty; a degenerate corpus
-#: (mass-duplicated boilerplate) is what it exists for. Env-overridable
-#: for experiments; the property test monkeypatches the module attr.
-_LSH_BUCKET_CAP = int(os.environ.get("S4_LSH_BUCKET_CAP", "1024"))
+#: (mass-duplicated boilerplate) is what it exists for. The property
+#: test monkeypatches the module attr.
+_LSH_BUCKET_CAP = 1024
 
 # (a*h + b) % P universal-hash family; P prime > 2^32, h < 2^32 and
 # a < 2^31 keep a*h+b inside int64.

@@ -111,9 +111,10 @@ def main(argv: list[str] | None = None) -> int:
             .load()
             .select(F.to_json(F.struct(F.col("value").alias("index"))).alias("value"))
         )
-        q = stream.writeStream.format("console").start()
-        q.awaitTermination(args.seconds)
-        q.stop()
+        from s4_spark.streaming.rigs import running
+
+        with running(stream.writeStream.format("console")) as q:
+            q.awaitTermination(args.seconds)
         return 0
 
     for req in ("input", "output", "checkpoint"):

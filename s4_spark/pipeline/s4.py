@@ -30,7 +30,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from s4_spark.streaming.rigs import drain, hadoop_fs
 
 # Mirrors river.Config (/root/reference/river/river.go:22-27) +
 # the CLI flag surface (/root/reference/main.go:20-57).
@@ -43,7 +45,6 @@ class S4Config:
     flush_interval: str = "5 minutes"  # --flush (ticker default, main.go:44-49)
     sink: str = "lake"  # "lake" (gzip text, partitioned) | "console"
     json_schema: str | None = None  # schema for json mode (None -> permissive map)
-    available_now: bool = False  # test/backfill mode: drain and stop
     source_format: str = "text"  # "text" | "unixline" | "socket" (dev only)
     socket_mode: str = "connect"  # unixline only: "connect" (A22 client) |
     # "listen" (A23 server — bind + fan-in of N producer connections)
@@ -166,8 +167,6 @@ def single_object_batch_sink(cfg: S4Config):
     makes a retried batch overwrite its own object rather than
     duplicate it — idempotent like rigs.idempotent_batch_sink, and
     scheme-agnostic the same way."""
-    from s4_spark.streaming.rigs import hadoop_fs
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         fs, Path = hadoop_fs(spark, cfg.output_path)
@@ -194,9 +193,8 @@ def single_object_batch_sink(cfg: S4Config):
     return sink
 
 
-def start(spark: SparkSession, cfg: S4Config) -> StreamingQuery:
-    """Wire source → validation → sink and start the query (the analog of
-    `s4 client|server` wiring in /root/reference/main.go:106-140)."""
+def _writer(spark: SparkSession, cfg: S4Config) -> DataStreamWriter:
+    """Source → validation → sink wiring, without a trigger."""
     df = build_pipeline(spark, cfg)
     if cfg.sink == "console":
         # the validation helper column must not reach the console
@@ -215,17 +213,17 @@ def start(spark: SparkSession, cfg: S4Config) -> StreamingQuery:
                 .option("compression", "gzip")
                 .partitionBy("year", "month", "day")
             )
-    writer = writer.option("checkpointLocation", cfg.checkpoint_path)
-    if cfg.available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=cfg.flush_interval)
-    return writer.start()
+    return writer.option("checkpointLocation", cfg.checkpoint_path)
+
+
+def start(spark: SparkSession, cfg: S4Config) -> StreamingQuery:
+    """Start the pipeline on the flush ticker and hand back the live
+    query (the analog of the reference's `s4 client|server` wiring,
+    main.go:106-140); the caller owns its stop()."""
+    return _writer(spark, cfg).trigger(processingTime=cfg.flush_interval).start()
 
 
 def run_once(spark: SparkSession, cfg: S4Config) -> None:
     """Drain everything currently in the landing dir and stop (test /
     backfill mode; also how the e2e parity check runs the pipeline)."""
-    cfg.available_now = True
-    q = start(spark, cfg)
-    q.awaitTermination()
+    drain(_writer(spark, cfg).trigger(availableNow=True))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from s4_spark.queries.helpers import csum, dsum, ordered_small, sql_dsum, t
 from s4_spark.queries.registry import query
 from s4_spark.scratch import scratch_root
+from s4_spark.streaming.rigs import drain, run_to_memory
 
 
 def _scratch(tag: str) -> str:
@@ -213,17 +214,7 @@ def q007(spark, sf_dir):
     agg = stream.agg(
         F.count("*").alias("n"), dsum("value").alias("sum_value")
     )
-    sink_name = f"q007_sink_{abs(hash(sf_dir)) % 10_000}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch(f"q007_ckpt_{os.path.basename(sf_dir)}"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_name)
+    return run_to_memory(agg, "complete", tag="q007")
 
 
 @query(
@@ -243,16 +234,13 @@ def q008(spark, sf_dir):
     cardinality exactly — and that at least one batch committed. The
     sink itself writes stdout (unassertable), but the metrics surface a
     production monitor scrapes is exact and oracle-checked."""
-    stream = _events_stream_raw(spark, sf_dir)
-    q = (
-        stream.writeStream.format("console")
+    progresses = drain(
+        _events_stream_raw(spark, sf_dir)
+        .writeStream.format("console")
         .option("numRows", 5)
         .trigger(availableNow=True)
         .option("checkpointLocation", _scratch(f"q008_ckpt_{os.path.basename(sf_dir)}"))
-        .start()
     )
-    q.awaitTermination()
-    progresses = [p for p in (q.recentProgress or []) if p is not None]
     n_rows = sum(int(p["numInputRows"]) for p in progresses)
     committed = int(any(int(p["batchId"]) >= 0 for p in progresses))
     return spark.createDataFrame(
@@ -369,7 +357,7 @@ def q108(spark, sf_dir):
     import time as _time
 
     import s4_spark.sources as sources
-    from s4_spark.streaming.rigs import _counter, scratch
+    from s4_spark.streaming.rigs import _counter, running, scratch
 
     sources.register(spark)
     langs = [r[0] for r in t(spark, sf_dir, "documents").select("lang").collect()]
@@ -377,7 +365,7 @@ def q108(spark, sf_dir):
     run_id = f"{os.path.basename(sf_dir)}_{os.getpid()}_{next(_counter)}"
     sock = os.path.join(_tf.gettempdir(), f"s4_q108_{run_id}.sock")
     name = f"s4_q108_{run_id}".replace(".", "_")
-    q = (
+    writer = (
         spark.readStream.format("s4_unixline")
         .option("path", sock)
         .option("mode", "listen")
@@ -387,7 +375,6 @@ def q108(spark, sf_dir):
         .queryName(name)
         .option("checkpointLocation", scratch(f"q108_ckpt_{name}"))
         .trigger(processingTime="500 milliseconds")
-        .start()
     )
 
     def push(sl):
@@ -406,7 +393,7 @@ def q108(spark, sf_dir):
         c.sendall(payload)
         c.close()
 
-    try:
+    with running(writer):
         threads = [_threading.Thread(target=push, args=(s,)) for s in slices]
         for th in threads:
             th.start()
@@ -417,10 +404,10 @@ def q108(spark, sf_dir):
             if spark.table(name).count() >= len(langs):
                 break
             _time.sleep(0.2)
-    finally:
-        q.stop()
+    got = spark.table(name)
+    spark.catalog.dropTempView(name)
     return (
-        spark.table(name)
+        got
         .select(F.col("value").alias("lang"))
         .groupBy("lang")
         .agg(F.count("*").alias("n"))
@@ -1165,14 +1152,12 @@ def q243(spark, sf_dir):
     lines = events_stream(spark, sf_dir).select(
         F.to_json(F.struct("event_id", "value")).alias("value")
     )
-    q = (
+    drain(
         lines.writeStream.format("linespool")
         .option("path", out)
         .option("checkpointLocation", scratch(f"q243_ckpt_{os.path.basename(sf_dir)}"))
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     back = spark.read.text(os.path.join(out, "batch=*")).withColumn(
         "__row", F.from_json("value", "event_id long, value double")
     )
@@ -1206,7 +1191,7 @@ def q246(spark, sf_dir):
     run 1's chunks and re-reads nothing (exactly-once drain)."""
     import s4_spark.sources as sources
     from s4_spark.sources.chunk_spool import chunk_path
-    from s4_spark.streaming.rigs import run_to_memory, scratch
+    from s4_spark.streaming.rigs import scratch
 
     sources.register(spark)
     spool = scratch(f"q246_spool_{os.path.basename(sf_dir)}")

@@ -17,12 +17,16 @@ from pyspark.sql import functions as F
 from s4_spark.queries.helpers import dsum, ordered_small, sql_dsum, t
 from s4_spark.queries.registry import query
 from s4_spark.streaming.rigs import (
+    drain,
+    drain_to_memory,
     events_stream,
     instant_as_utc_ntz,
     ntz_as_utc_instant,
+    replay,
     run_to_memory,
     run_to_parquet,
     scratch,
+    stage_file,
 )
 
 
@@ -249,8 +253,6 @@ def q094(spark, sf_dir):
     )
     p2 = late.unionByName(fresh)
 
-    from s4_spark.streaming.rigs import two_phase_replay
-
     def build(stream):
         return (
             stream.withWatermark("ts", "10 minutes")
@@ -260,7 +262,7 @@ def q094(spark, sf_dir):
         )
 
     # bounded result (calendar-sized window buckets)
-    return ordered_small(two_phase_replay(spark, p1, p2, build, tag="q094"), "w_start")
+    return ordered_small(replay(spark, [(p1,), (p2,)], build, tag="q094"), "w_start")
 
 
 @query(
@@ -380,24 +382,7 @@ def q099(spark, sf_dir):
     keyed by batchId (idempotent on retry — the exactly-once upgrade of
     the reference's log-and-drop error policy, main.go:88-104); the
     re-read equals the batch aggregate."""
-    out_dir = scratch(f"q099_out_{os.path.basename(sf_dir)}")
-    ev = events_stream(spark, sf_dir)
-
-    def write_batch(batch_df, batch_id: int):
-        (
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch={batch_id}")
-            )
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch(f"q099_ckpt_{os.path.basename(sf_dir)}"))
-        .start()
-    )
-    q.awaitTermination()
-    back = spark.read.parquet(out_dir + "/batch=*")
+    back = run_to_parquet(events_stream(spark, sf_dir), mode="append", tag="q099")
     return (
         back.groupBy("event_type")
         .agg(F.count("*").alias("n"), dsum("value").alias("sum_value"))
@@ -559,8 +544,6 @@ def q165(spark, sf_dir):
         F.lit(-1).alias("r_val"),
     )
 
-    from s4_spark.streaming.rigs import two_stream_two_phase
-
     def build(ls, rs):
         lw = ls.withWatermark("lts", "5 minutes")
         rw = rs.withWatermark("rts", "5 minutes")
@@ -572,7 +555,7 @@ def q165(spark, sf_dir):
             "left_outer",
         ).select("user_id", "l_val", "r_val")
 
-    return two_stream_two_phase(spark, l1, r1, l2, r2, build, tag="q165").orderBy(
+    return replay(spark, [(l1, r1), (l2, r2)], build, tag="q165").orderBy(
         "user_id"
     )
 
@@ -605,16 +588,7 @@ def q171(spark, sf_dir):
     run_id = f"{os.path.basename(sf_dir)}_{next(_counter)}".replace(".", "_")
     ckpt = scratch(f"q171_ckpt_{run_id}")
     agg = ev.groupBy("event_type").agg(F.count("*").alias("n"))
-    name = f"s4_q171_{run_id}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_memory(agg, "complete", tag="q171", checkpoint=ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return (
         state.select(
@@ -858,13 +832,11 @@ def q209(spark, sf_dir):
             os.path.join(index_dir, f"batch_id={batch_id}")
         )
 
-    q = (
+    drain(
         stream.writeStream.foreachBatch(upsert)
         .trigger(availableNow=True)
         .option("checkpointLocation", scratch(f"q209_ckpt_{name}"))
-        .start()
     )
-    q.awaitTermination()
 
     index = spark.read.parquet(index_dir).select("doc_id")
     return index.agg(
@@ -1097,7 +1069,6 @@ def q235(spark, sf_dir):
     socket frames before its flush loop (river/jsonr.go) — this is the
     event-time analog with exactly-once state."""
     import os
-    import shutil
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -1115,31 +1086,25 @@ def q235(spark, sf_dir):
     landing = scratch("q235_landing")
     os.makedirs(landing, exist_ok=True)
 
-    def drop(df, fname, mtime):
-        stage = scratch("q235_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            p for p in os.listdir(stage)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dest = os.path.join(landing, fname)
-        shutil.copyfile(os.path.join(stage, part), dest)
-        os.utime(dest, (mtime, mtime))
-
     # three hash-split (time-interleaved) batches, then the watermark
     # sentinel, then an empty tick so the release timeout fires in a
     # deterministic final micro-batch; strictly increasing mtimes pin
     # FileStreamSource's processing order
     for i in range(3):
-        drop(ev.filter(F.abs(F.xxhash64("event_id")) % 3 == i), f"{i:03d}.parquet", 1_000_000 + i)
+        stage_file(
+            ev.filter(F.abs(F.xxhash64("event_id")) % 3 == i),
+            landing,
+            f"{i:03d}.parquet",
+            1_000_000 + i,
+        )
     sentinel = spark.range(1).select(
         F.lit(-1).cast("long").alias("user_id"),
         F.lit("sentinel").alias("event_type"),
         F.timestamp_add("HOUR", F.lit(span_hours + 1), hi).alias("ts"),
         F.lit(-1).cast("long").alias("event_id"),
     )
-    drop(sentinel, "003.parquet", 1_000_003)
-    drop(ev.limit(0), "004.parquet", 1_000_004)
+    stage_file(sentinel, landing, "003.parquet", 1_000_003)
+    stage_file(ev.limit(0), landing, "004.parquet", 1_000_004)
 
     stream = (
         spark.readStream.schema(
@@ -1265,18 +1230,10 @@ def q238(spark, sf_dir):
     store's files per partition — no shuffle, no driver collect; the
     comparison join is per-user, keyed like every other shuffle in the
     funnel family."""
-    name = f"s4_mem_q238_{os.getpid()}"
-    ckpt = scratch(f"ckpt_{name}")
-    q = (
-        _funnel_stateful_stream(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
+    ckpt = scratch(f"q238_ckpt_{os.getpid()}")
+    run_to_memory(
+        _funnel_stateful_stream(spark, sf_dir), "update", tag="q238", checkpoint=ckpt
     )
-    q.awaitTermination()
     st = spark.read.format("statestore").load(ckpt)
     return st.select(
         F.col("key.user_id").alias("user_id"),
@@ -1416,31 +1373,18 @@ def _q241(spark, sf_dir):
         ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
     hi = ev.agg(F.max("ts")).collect()[0][0]
 
-    import shutil
-
     landing = scratch("q241_landing")
     os.makedirs(landing, exist_ok=True)
 
-    def drop(df, fname, mtime):
-        stage = scratch("q241_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            p for p in os.listdir(stage)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dest = os.path.join(landing, fname)
-        shutil.copyfile(os.path.join(stage, part), dest)
-        os.utime(dest, (mtime, mtime))
-
-    drop(ev, "000.parquet", 1_000_000)
+    stage_file(ev, landing, "000.parquet", 1_000_000)
     sentinel = spark.range(1).select(
         F.lit(-1).cast("long").alias("user_id"),
         F.lit("sentinel").alias("event_type"),
         F.timestamp_add("HOUR", F.lit(40), F.lit(hi).cast("timestamp")).alias("ts"),
         F.lit(-1).cast("long").alias("event_id"),
     )
-    drop(sentinel, "001.parquet", 1_000_001)
-    drop(ev.limit(0), "002.parquet", 1_000_002)
+    stage_file(sentinel, landing, "001.parquet", 1_000_001)
+    stage_file(ev.limit(0), landing, "002.parquet", 1_000_002)
 
     stream = (
         spark.readStream.schema(
@@ -1642,17 +1586,9 @@ def _q247(spark, sf_dir):
         )
     )
 
-    import shutil
-
     landing = scratch("q247_landing")
     os.makedirs(landing, exist_ok=True)
-    stage = scratch("q247_stage")
-    ev.filter(F.col("ts_us") >= mid).coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(
-        p for p in os.listdir(stage)
-        if p.startswith("part-") and p.endswith(".parquet")
-    )
-    shutil.copyfile(os.path.join(stage, part), os.path.join(landing, "p1.parquet"))
+    stage_file(ev.filter(F.col("ts_us") >= mid), landing, "p1.parquet")
 
     stream = spark.readStream.schema(
         "user_id long, event_type string, ts_us long, event_id long"
@@ -1700,17 +1636,8 @@ def _q247(spark, sf_dir):
         timeMode="None",
         initialState=warm.groupBy("user_id"),
     )
-    name = f"s4_mem_q247_{os.getpid()}"
-    ckpt = scratch(f"ckpt_{name}")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt = scratch(f"q247_ckpt_{os.getpid()}")
+    run_to_memory(out, "update", tag="q247", checkpoint=ckpt)
     st = spark.read.format("statestore").option("stateVarName", "agg").load(ckpt)
     final = st.select(
         F.col("key.user_id").alias("user_id"),
@@ -1756,17 +1683,7 @@ def q248(spark, sf_dir):
     executors beyond the metrics Spark already aggregates."""
     ev = events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count("*").alias("n"))
-    name = f"s4_mem_q248_{os.getpid()}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch(f"ckpt_{name}"))
-        .start()
-    )
-    q.awaitTermination()
-    progresses = [p for p in q.recentProgress if p is not None]
+    _, progresses = drain_to_memory(agg, "complete", tag="q248")
     input_rows = sum(int(p["numInputRows"]) for p in progresses)
     state_rows = 0
     for p in reversed(progresses):
@@ -1815,64 +1732,35 @@ def q251(spark, sf_dir):
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    # Restored in the finally: this conf leaked at session scope and an
-    # r13 x1000 probe measured the blast radius — a q258 run AFTER q251
-    # in one session took 188 s vs 23 s solo (changelog mode defers
-    # snapshot work to the shared background maintenance thread, and
-    # q251's 1.5M-row complete-mode stores keep it busy long after this
-    # entry returns). providerClass above is left set deliberately: it
-    # matches get_spark()'s default and exists for vanilla sessions.
-    _CHANGELOG_CONF = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    saved = spark.conf.get(_CHANGELOG_CONF, None)
-    spark.conf.set(_CHANGELOG_CONF, "true")
-    try:
-        ev = t(spark, sf_dir, "events").select("event_id", "user_id", "value")
-        landing = scratch(f"q251_landing_{os.path.basename(sf_dir)}")
-        ckpt = scratch(f"q251_ckpt_{os.path.basename(sf_dir)}")
-        os.makedirs(landing, exist_ok=True)
+    # Scoped to each run by the runner: this conf leaked at session
+    # scope once and an x1000 probe measured the blast radius — a q258
+    # run AFTER q251 in one session took 188 s vs 23 s solo (changelog
+    # mode defers snapshot work to the shared background maintenance
+    # thread, and q251's 1.5M-row complete-mode stores keep it busy long
+    # after this entry returns). providerClass above is left set
+    # deliberately: it matches get_spark()'s default and exists for
+    # vanilla sessions.
+    changelog = {
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true"
+    }
+    ev = t(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    landing = scratch(f"q251_landing_{os.path.basename(sf_dir)}")
+    ckpt = scratch(f"q251_ckpt_{os.path.basename(sf_dir)}")
+    os.makedirs(landing, exist_ok=True)
 
-        def drop_phase(pred, fname):
-            stage = scratch(f"q251_stage_{fname}")
-            ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                p for p in os.listdir(stage)
-                if p.startswith("part-") and p.endswith(".parquet")
-            )
-            os.replace(os.path.join(stage, part), os.path.join(landing, fname))
+    def run(tag):
+        agg = (
+            spark.readStream.schema(ev.schema)
+            .parquet(landing)
+            .groupBy("user_id")
+            .agg(F.count("*").alias("n_events"), dsum("value").alias("value_sum"))
+        )
+        return run_to_memory(agg, "complete", tag=tag, checkpoint=ckpt, conf=changelog)
 
-        def run(name):
-            agg = (
-                spark.readStream.schema(ev.schema)
-                .parquet(landing)
-                .groupBy("user_id")
-                .agg(
-                    F.count("*").alias("n_events"),
-                    dsum("value").alias("value_sum"),
-                )
-            )
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-
-        drop_phase(F.col("event_id") % 2 == 0, "phase1.parquet")
-        run(f"s4_mem_q251a_{os.getpid()}")
-        drop_phase(F.col("event_id") % 2 != 0, "phase2.parquet")
-        final = f"s4_mem_q251b_{os.getpid()}"
-        run(final)
-        return spark.table(final).orderBy("user_id")
-    finally:
-        if saved is None:
-            spark.conf.unset(_CHANGELOG_CONF)
-        else:
-            spark.conf.set(_CHANGELOG_CONF, saved)
+    stage_file(ev.filter(F.col("event_id") % 2 == 0), landing, "phase1.parquet")
+    run("q251a")
+    stage_file(ev.filter(F.col("event_id") % 2 != 0), landing, "phase2.parquet")
+    return run("q251b").orderBy("user_id")
 
 
 def q251_checkpoint_dir(sf_dir: str) -> str:
@@ -1931,15 +1819,6 @@ def _q252(spark, sf_dir):
         def close(self) -> None:
             pass
 
-    def drop_phase(pred, fname):
-        stage = scratch(f"q252_stage_{fname}")
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            p for p in os.listdir(stage)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        os.replace(os.path.join(stage, part), os.path.join(landing, fname))
-
     def run(name, outdir):
         out = (
             spark.readStream.schema(ev.schema)
@@ -1955,7 +1834,9 @@ def _q252(spark, sf_dir):
 
         from s4_spark.streaming.rigs import (
             idempotent_batch_sink,
+            progress_of,
             read_batched_parquet,
+            running,
         )
 
         sink = idempotent_batch_sink(outdir)
@@ -1971,13 +1852,12 @@ def _q252(spark, sf_dir):
         # such a checkpoint, so each run's rows land in a per-phase
         # parquet dir via foreachBatch (restart-safe) instead.
         os.makedirs(outdir, exist_ok=True)
-        q = (
+        writer = (
             out.writeStream.foreachBatch(sink)
             .queryName(name)
             .outputMode("update")
             .trigger(availableNow=True)
             .option("checkpointLocation", ckpt)
-            .start()
         )
         # Drain on BATCH-COMPLETION signals, with no bound on the data
         # batch itself (round-10 ×1000 probe catch: the previous fixed
@@ -1998,27 +1878,25 @@ def _q252(spark, sf_dir):
         saw_data = False
         guard_tripped = False
         hang_guard = time.time() + 3600
-        while q.isActive:
-            for p in q.recentProgress:
-                if p and int(p["numInputRows"]) > 0:
+        with running(writer) as q:
+            while q.isActive:
+                if any(int(p["numInputRows"]) > 0 for p in progress_of(q)):
                     saw_data = True
-            lp = q.lastProgress
-            if saw_data and lp is not None and int(lp["numInputRows"]) == 0:
-                drained = True
-                break
-            if time.time() > hang_guard:
-                guard_tripped = True
-                break
-            time.sleep(0.2)
-        q.stop()
-        q.awaitTermination()
+                lp = q.lastProgress
+                if saw_data and lp is not None and int(lp["numInputRows"]) == 0:
+                    drained = True
+                    break
+                if time.time() > hang_guard:
+                    guard_tripped = True
+                    break
+                time.sleep(0.2)
         if not drained and not guard_tripped:
             # the query ended on its own: a clean availableNow
             # termination implies every available record was processed
             # even if no trailing zero-input batch was observed
-            for p in q.recentProgress:
-                if p and int(p["numInputRows"]) > 0:
-                    saw_data = True
+            saw_data = saw_data or any(
+                int(p["numInputRows"]) > 0 for p in progress_of(q)
+            )
             drained = saw_data and q.exception() is None
         assert drained, f"{name}: data batch never committed"
         return read_batched_parquet(spark, outdir, out.schema)
@@ -2027,12 +1905,12 @@ def _q252(spark, sf_dir):
 
     out1 = scratch(f"q252_out1_{os.path.basename(sf_dir)}")
     out2 = scratch(f"q252_out2_{os.path.basename(sf_dir)}")
-    drop_phase(F.col("event_id") % 2 == 0, "phase1.parquet")
+    stage_file(ev.filter(F.col("event_id") % 2 == 0), landing, "phase1.parquet")
     p1 = run(f"s4_q252a_{os.getpid()}", out1).select(
         F.lit(1).alias("phase"), "user_id", "n"
     )
     time.sleep(2.5)  # let the 1000 ms TTL lapse before phase 2 arrives
-    drop_phase(F.col("event_id") % 2 != 0, "phase2.parquet")
+    stage_file(ev.filter(F.col("event_id") % 2 != 0), landing, "phase2.parquet")
     p2 = run(f"s4_q252b_{os.getpid()}", out2).select(
         F.lit(2).alias("phase"), "user_id", "n"
     )
@@ -2109,27 +1987,14 @@ def q258(spark, sf_dir):
             "sum_value",
         )
     )
-    # inlined run_to_memory so the query handle is observable: the
-    # progress report must show TWO state operators (the 10-min agg and
-    # the hourly rollup) — pinned by tests/test_streaming.py
-    name = f"s4_mem_q258_{os.getpid()}"
-    q = (
-        hourly.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch(f"ckpt_{name}"))
-        .start()
+    # the progress report must show TWO state operators (the 10-min agg
+    # and the hourly rollup) — pinned by tests/test_streaming.py
+    out, progress = drain_to_memory(hourly, "append", tag="q258")
+    q258.last_state_operator_count = max(
+        (len(p.get("stateOperators") or []) for p in progress), default=0
     )
-    q.awaitTermination()
-    counts = [
-        len(p.get("stateOperators") or [])
-        for p in q.recentProgress
-        if p is not None
-    ]
-    q258.last_state_operator_count = max(counts, default=0)
     # bounded result (calendar hours x event types)
-    return ordered_small(spark.table(name), "h_start", "event_type")
+    return ordered_small(out, "h_start", "event_type")
 
 
 @query(
@@ -2165,13 +2030,12 @@ def q268(spark, sf_dir):
 
     shutil.rmtree(path, ignore_errors=True)
     ev = events_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
-    q = (
+    drain(
         ev.writeStream.trigger(availableNow=True)
         .option("checkpointLocation", scratch(f"q268_ckpt_{tag}"))
-        .option("path", path)
-        .toTable(name)
+        .option("path", path),
+        table=name,
     )
-    q.awaitTermination()
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -2262,26 +2126,12 @@ def q269(spark, sf_dir):
         t(spark, sf_dir, "events").agg(F.max("ts").alias("mx")).collect()[0]["mx"]
     )
     hourly = _q269_chain(ev)
-    # inlined run_to_memory so the query handle is observable: the
-    # progress report must show TWO state operators (the interval join
-    # and the hourly rollup) — pinned by tests/test_streaming.py
-    name = f"s4_mem_q269_{os.getpid()}"
-    q = (
-        hourly.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch(f"ckpt_{name}"))
-        .start()
+    # the progress report must show TWO state operators (the interval
+    # join and the hourly rollup) — pinned by tests/test_streaming.py
+    out, progress = drain_to_memory(hourly, "append", tag="q269")
+    q269.last_state_operator_count = max(
+        (len(p.get("stateOperators") or []) for p in progress), default=0
     )
-    q.awaitTermination()
-    counts = [
-        len(p.get("stateOperators") or [])
-        for p in q.recentProgress
-        if p is not None
-    ]
-    q269.last_state_operator_count = max(counts, default=0)
-    out = spark.table(name)
     # string -> NTZ parse, never F.lit(datetime): a naive-datetime
     # literal becomes session-tz-interpreted TIMESTAMP and the NTZ
     # comparison would silently cast through the session zone
@@ -2344,8 +2194,6 @@ def q273(spark, sf_dir):
     verbatim in the oracle's HAVING."""
     from pyspark.sql import Window as W
 
-    from s4_spark.streaming.rigs import two_stream_two_phase
-
     ev = t(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
         ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
@@ -2378,8 +2226,11 @@ def q273(spark, sf_dir):
 
     # bounded result (calendar windows x event types)
     return ordered_small(
-        two_stream_two_phase(
-            spark, clicks, purch, clicks.limit(0), purch.limit(0), build, tag="q273"
+        replay(
+            spark,
+            [(clicks, purch), (clicks.limit(0), purch.limit(0))],
+            build,
+            tag="q273",
         ),
         "w_start",
         "etype",

@@ -1,7 +1,16 @@
-"""Streaming test rigs: batch-equivalence runners (SURVEY.md §2-B
-methodology — run the streaming query with availableNow over static data,
-compare with batch SQL) and the deterministic two-phase replay rig for
-watermark semantics (the one category no batch oracle can express).
+"""Streaming runner and test rigs.
+
+:func:`running` / :func:`drain` are the one way the package runs a
+stream to completion: scope an optional session conf, start the query,
+drain it (availableNow -> ``awaitTermination``; a phased query ->
+``processAllAvailable`` before its first step and after each step),
+always ``stop()`` it, and hand back its progress. On top of that:
+
+- :func:`run_to_memory` / :func:`run_to_parquet` — batch-equivalence
+  sinks (SURVEY.md §2-B methodology: run the streaming query with
+  availableNow over static data, compare with batch SQL);
+- :func:`replay` — the deterministic N-stream phased replay for
+  watermark semantics (the one category no batch oracle can express).
 """
 
 from __future__ import annotations
@@ -9,54 +18,82 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from s4_spark.catalog import normalize_events
 from s4_spark.scratch import scratch_root
 
 _counter = itertools.count()
 
-#: Shuffle/state partition count for the deterministic REPLAY rigs
-#: (two_phase_replay / two_stream_two_phase) only. Replay fixtures are
-#: bounded by construction (each phase is one staged file of ~dozens of
-#: rows), while every state partition costs a RocksDB instance
-#: open/commit PER STORE PER MICRO-BATCH — a stream-stream join keeps 4
-#: stores per partition, so the session default (8) paid
-#: 8 x 4 x batches RocksDB cycles to join ~30 rows. Measured r14
-#: (sf0.01, min-of-2): q165 10.2 s -> 7.8 s at 4 (6.1 s at 2, but 2 was
-#: noisy/worse on q106), q106 3.2 -> 3.0. This is NOT a local[32] tune:
-#: the rig's input is rig-sized at ANY corpus scale, so its state
-#: partition count is a property of the rig, not the box; production
-#: streams (run_to_memory/run_to_parquet consumers) keep session
-#: defaults. Env-overridable for experiments.
-REPLAY_SHUFFLE_PARTITIONS = int(os.environ.get("S4_REPLAY_SHUFFLE_PARTITIONS", "4"))
+#: Session conf for :func:`replay` runs. Replay fixtures are bounded by
+#: construction (each phase is one staged file of ~dozens of rows),
+#: while every state partition costs a RocksDB open/commit PER STORE PER
+#: MICRO-BATCH — a stream-stream join keeps 4 stores per partition, so
+#: the session default (8) paid 8 x 4 x batches RocksDB cycles to join
+#: ~30 rows (measured sf0.01, min-of-2: q165 10.2 s -> 7.8 s at 4). The
+#: rig's input is rig-sized at ANY corpus scale, so this is a property
+#: of the rig, not the box; other streams keep session defaults.
+REPLAY_CONF = {"spark.sql.shuffle.partitions": "4"}
 
 
-class _replay_partitions:
-    """Scope spark.sql.shuffle.partitions to a replay rig run, restoring
-    the previous value (or unsetting — the session-leak contract: a conf
-    that was unset must not come back pinned) on exit."""
+@contextmanager
+def running(
+    writer: DataStreamWriter, conf: dict | None = None, table: str | None = None
+):
+    """Start ``writer`` (``toTable(table)`` when a table is named) with
+    ``conf`` set on the session, yield the live query, and always stop
+    it. Each conf key is restored afterwards — unset if it was unset:
+    ``get(k)`` without a default would fetch the REGISTERED default and
+    pin it as an explicit conf on restore."""
+    spark = writer._spark
+    conf = conf or {}
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        q = writer.toTable(table) if table else writer.start()
+        try:
+            yield q
+        finally:
+            q.stop()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
-    _KEY = "spark.sql.shuffle.partitions"
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
+def progress_of(q: StreamingQuery) -> list:
+    """The query's non-null progress reports, oldest first."""
+    return [p for p in q.recentProgress if p is not None]
 
-    def __enter__(self):
-        # get with explicit None default: get(k) without a default would
-        # fetch the REGISTERED default and pin it on restore
-        self.saved = self.spark.conf.get(self._KEY, None)
-        self.spark.conf.set(self._KEY, str(REPLAY_SHUFFLE_PARTITIONS))
-        return self
 
-    def __exit__(self, *exc):
-        if self.saved is None:
-            self.spark.conf.unset(self._KEY)
+def drain(
+    writer: DataStreamWriter,
+    steps=(),
+    conf: dict | None = None,
+    table: str | None = None,
+) -> list:
+    """Run ``writer`` to completion under :func:`running` and return its
+    progress. Without ``steps`` the writer must carry an availableNow
+    trigger and is drained with ``awaitTermination``; with ``steps``
+    (zero-argument callables, e.g. staging the next input file) the
+    query is drained with ``processAllAvailable`` before the first step
+    and after each one, so batch boundaries are forced."""
+    with running(writer, conf, table) as q:
+        if steps:
+            q.processAllAvailable()
+            for step in steps:
+                step()
+                q.processAllAvailable()
         else:
-            self.spark.conf.set(self._KEY, self.saved)
-        return False
+            q.awaitTermination()
+        return progress_of(q)
 
 
 def scratch(tag: str) -> str:
@@ -121,22 +158,45 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev
 
 
-def run_to_memory(
-    df: DataFrame, mode: str = "complete", tag: str = "q"
-) -> DataFrame:
-    """Run a streaming DataFrame to a memory sink with availableNow and
-    return the sink contents as a batch DataFrame."""
+def drain_to_memory(
+    df: DataFrame,
+    mode: str = "complete",
+    tag: str = "q",
+    checkpoint: str | None = None,
+    steps=(),
+    conf: dict | None = None,
+) -> tuple[DataFrame, list]:
+    """:func:`drain` ``df`` into a memory sink (availableNow unless
+    ``steps`` phase it) and return the sink contents as a batch
+    DataFrame plus the run's progress. The sink's temp view is dropped
+    before returning — the frame keeps the sink's rows after that."""
+    spark = df.sparkSession
     name = f"s4_mem_{tag}_{next(_counter)}"
-    q = (
+    writer = (
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch(f"ckpt_{name}"))
-        .start()
+        .option("checkpointLocation", checkpoint or scratch(f"ckpt_{name}"))
     )
-    q.awaitTermination()
-    return df.sparkSession.table(name)
+    if not steps:
+        writer = writer.trigger(availableNow=True)
+    try:
+        progress = drain(writer, steps, conf)
+        return spark.table(name), progress
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def run_to_memory(
+    df: DataFrame,
+    mode: str = "complete",
+    tag: str = "q",
+    checkpoint: str | None = None,
+    conf: dict | None = None,
+) -> DataFrame:
+    """Run a streaming DataFrame to a memory sink with availableNow and
+    return the sink contents as a batch DataFrame."""
+    return drain_to_memory(df, mode, tag, checkpoint, conf=conf)[0]
 
 
 COMMIT_MARKER = "_S4_COMMIT"
@@ -250,129 +310,75 @@ def run_to_parquet(
     name = f"s4_pq_{tag}_{next(_counter)}"
     out = scratch(f"sink_{name}")
     os.makedirs(out, exist_ok=True)
-    schema = df.schema
-
-    q = (
+    drain(
         df.writeStream.foreachBatch(idempotent_batch_sink(out))
         .queryName(name)
         .outputMode(mode)
         .trigger(availableNow=True)
         .option("checkpointLocation", scratch(f"ckpt_{name}"))
-        .start()
     )
-    q.awaitTermination()
-    return read_batched_parquet(df.sparkSession, out, schema)
+    return read_batched_parquet(df.sparkSession, out, df.schema)
 
 
-def two_phase_replay(
+def stage_file(
+    df: DataFrame, landing: str, fname: str, mtime: int | None = None
+) -> None:
+    """Land ``df`` in ``landing`` as ONE flat parquet file ``fname`` —
+    one micro-batch under ``maxFilesPerTrigger=1``. The file is written
+    beside the landing dir and renamed in, so the file source never lists
+    a partial file. ``mtime`` pins FileStreamSource's processing order
+    when several files are staged before the query starts."""
+    tmp = scratch(f"stage_{os.path.basename(landing)}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(
+        p for p in os.listdir(tmp) if p.startswith("part-") and p.endswith(".parquet")
+    )
+    dest = os.path.join(landing, fname)
+    os.replace(os.path.join(tmp, part), dest)
+    if mtime is not None:
+        os.utime(dest, (mtime, mtime))
+
+
+def replay(
     spark: SparkSession,
-    phase1: DataFrame,
-    phase2: DataFrame,
+    phases: list[tuple[DataFrame, ...]],
     build_query,
     tag: str = "replay",
 ) -> DataFrame:
-    """Deterministic watermark replay: write phase-1 rows to a landing
-    dir, process to completion (watermark advances to max(ts) - delay at
-    the NEXT batch), then write phase-2 (containing late rows) and
-    process again. Append-mode results show exactly which windows closed
-    and which late rows were dropped. Fully deterministic because batch
-    boundaries are forced by processAllAvailable() between phases."""
-    landing = scratch(f"{tag}_landing")
-    os.makedirs(landing, exist_ok=True)
-    name = f"s4_mem_{tag}_{next(_counter)}"
-
-    def drop_file(df: DataFrame, fname: str) -> None:
-        # stage as one flat parquet file so each phase is exactly one
-        # source file (one micro-batch with maxFilesPerTrigger=1)
-        tmp = scratch(f"{tag}_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp) if p.startswith("part-") and p.endswith(".parquet")
-        )
-        shutil.copyfile(os.path.join(tmp, part), os.path.join(landing, fname))
-
-    drop_file(phase1, "p1.parquet")
-    with _replay_partitions(spark):
-        stream = (
-            spark.readStream.schema(phase1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        out = build_query(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", scratch(f"ckpt_{name}"))
-            .start()
-        )
-        q.processAllAvailable()
-        drop_file(phase2, "p2.parquet")
-        q.processAllAvailable()
-        # a final tick (empty file) applies the watermark computed from
-        # phase 2 so its non-late windows close deterministically
-        drop_file(phase2.limit(0), "p3.parquet")
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name)
-
-
-def two_stream_two_phase(
-    spark: SparkSession,
-    left1: DataFrame,
-    right1: DataFrame,
-    left2: DataFrame,
-    right2: DataFrame,
-    build_query,
-    tag: str = "replay2",
-) -> DataFrame:
-    """Two-stream variant of :func:`two_phase_replay` for stream-stream
-    join semantics: each stream gets its own landing dir; phases drop one
-    file per stream and run to completion, so watermark progression on
-    BOTH sides is deterministic (outer-join null emission depends on the
-    MIN of the two watermarks — only a forced batch boundary makes that
-    reproducible)."""
-    landings = [scratch(f"{tag}_l"), scratch(f"{tag}_r")]
+    """Deterministic watermark replay over N streams. Each phase holds
+    one DataFrame per stream; every stream reads its own landing dir
+    with ``maxFilesPerTrigger=1``, and a phase lands as ONE staged file
+    per stream, drained to completion before the next phase lands —
+    the watermark advances to max(ts) - delay at the NEXT batch, so
+    append-mode results show exactly which windows closed and which
+    late rows were dropped. A final empty tick applies the watermark
+    computed from the last phase so its non-late windows close. With
+    two streams this makes stream-stream join semantics reproducible
+    (outer-join null emission depends on the MIN of the two
+    watermarks — only a forced batch boundary fixes it).
+    ``build_query(*streams)`` returns the query over the streams."""
+    n = len(phases[0])
+    landings = [scratch(f"{tag}_landing{i}") for i in range(n)]
     for d in landings:
         os.makedirs(d, exist_ok=True)
-    name = f"s4_mem_{tag}_{next(_counter)}"
 
-    def drop_file(df: DataFrame, landing: str, fname: str) -> None:
-        tmp = scratch(f"{tag}_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        shutil.copyfile(os.path.join(tmp, part), os.path.join(landing, fname))
+    def drop_files(frames, fname: str) -> None:
+        for df, landing in zip(frames, landings):
+            stage_file(df, landing, fname)
 
-    drop_file(left1, landings[0], "p1.parquet")
-    drop_file(right1, landings[1], "p1.parquet")
-    with _replay_partitions(spark):
-        ls = (
-            spark.readStream.schema(left1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landings[0])
-        )
-        rs = (
-            spark.readStream.schema(right1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landings[1])
-        )
-        out = build_query(ls, rs)
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", scratch(f"ckpt_{name}"))
-            .start()
-        )
-        q.processAllAvailable()
-        drop_file(left2, landings[0], "p2.parquet")
-        drop_file(right2, landings[1], "p2.parquet")
-        q.processAllAvailable()
-        drop_file(left2.limit(0), landings[0], "p3.parquet")
-        drop_file(right2.limit(0), landings[1], "p3.parquet")
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name)
+    ticks = [*phases, tuple(df.limit(0) for df in phases[-1])]
+    drop_files(ticks[0], "p1.parquet")
+    streams = [
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+        for df, landing in zip(ticks[0], landings)
+    ]
+    steps = [
+        lambda frames=frames, k=k: drop_files(frames, f"p{k}.parquet")
+        for k, frames in enumerate(ticks[1:], start=2)
+    ]
+    out, _ = drain_to_memory(
+        build_query(*streams), "append", tag, steps=steps, conf=REPLAY_CONF
+    )
+    return out

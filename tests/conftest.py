@@ -75,3 +75,11 @@ def assert_oracle_match(spark_df, duck_con, oracle_sql: str, name: str = "?"):
             f"{name}: {int(mism.sum())} mismatched rows, first few:\n"
             f"spark:\n{got.loc[idx]}\noracle:\n{want.loc[idx]}"
         )
+
+
+def assert_no_stream_leaks(spark, name):
+    """Nothing ``name`` ran is left behind: no streaming query running
+    and no memory-sink view registered."""
+    assert spark.streams.active == [], f"{name} left a streaming query running"
+    left = [t.name for t in spark.catalog.listTables(pattern="s4_mem_*")]
+    assert not left, f"{name} left memory-sink views {left}"

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from s4_spark.queries import REGISTRY
-from tests.conftest import SF_DIR, assert_oracle_match
+from tests.conftest import SF_DIR, assert_no_stream_leaks, assert_oracle_match
 
 ORACLED = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 SMOKE_ONLY = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
@@ -17,6 +17,7 @@ def test_oracle_match(spark, duck, name):
     qd = REGISTRY[name]
     df = qd.fn(spark, SF_DIR)
     assert_oracle_match(df, duck, qd.oracle, name=name)
+    assert_no_stream_leaks(spark, name)
 
 
 @pytest.mark.parametrize("name", SMOKE_ONLY)
@@ -25,6 +26,7 @@ def test_smoke_rows(spark, name):
     df = qd.fn(spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+    assert_no_stream_leaks(spark, name)
 
 
 def test_q163_observed_metrics_match(spark, duck):

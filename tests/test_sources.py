@@ -6,6 +6,7 @@ CRLF-normalized, and (streaming) exactly-once through the spool."""
 from __future__ import annotations
 
 import os
+import shutil
 import socket
 import tempfile
 import threading
@@ -44,8 +45,21 @@ def registered(spark):
     return spark
 
 
-def test_batch_read_frames_lines(registered):
-    sock = os.path.join(tempfile.gettempdir(), "s4_src_t1.sock")
+@pytest.fixture()
+def sock_dir():
+    """A private directory for one test's socket paths. A fixed path in
+    the shared temp dir lets two concurrent runs unlink and rebind each
+    other's one-shot servers: the loser's reader is then refused, the
+    connect-mode source treats that as "no producer", and the stream
+    silently stays empty. mkdtemp keeps the path well under the 108-byte
+    unix socket limit that a deep pytest tmp_path can exceed."""
+    d = tempfile.mkdtemp(prefix="s4_src_")
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_batch_read_frames_lines(registered, sock_dir):
+    sock = os.path.join(sock_dir, "t1.sock")
     serve_lines(sock, b"hello\nworld\r\ncrlf-normalized\ntail-no-newline")
     rows = (
         registered.read.format("s4_unixline").option("path", sock).load().collect()
@@ -58,10 +72,10 @@ def test_batch_read_frames_lines(registered):
     ]
 
 
-def test_batch_multi_socket_fan_in(registered):
+def test_batch_multi_socket_fan_in(registered, sock_dir):
     """A2 listen-mode parity: N sockets -> N partitions -> one DataFrame."""
-    s1 = os.path.join(tempfile.gettempdir(), "s4_src_m1.sock")
-    s2 = os.path.join(tempfile.gettempdir(), "s4_src_m2.sock")
+    s1 = os.path.join(sock_dir, "m1.sock")
+    s2 = os.path.join(sock_dir, "m2.sock")
     serve_lines(s1, b"a1\na2\n")
     serve_lines(s2, b"b1\n")
     df = registered.read.format("s4_unixline").option("path", f"{s1},{s2}").load()
@@ -94,12 +108,12 @@ def replay(r, lo, hi):
     ]
 
 
-def test_stream_reader_spool_exactly_once(tmp_path):
+def test_stream_reader_spool_exactly_once(tmp_path, sock_dir):
     """The spool contract directly (driver-side unit): latestOffset()
     drains the receiver into the spool BEFORE reporting (write-ahead),
     partitions()+read() replay any committed-or-not range — the
     Appendix-B at-most-once fix."""
-    sock = os.path.join(tempfile.gettempdir(), "s4_src_st.sock")
+    sock = os.path.join(sock_dir, "st.sock")
     serve_lines(sock, b"r0\nr1\nr2\n")
     r = _SpoolingStreamReader(sock, str(tmp_path / "spool"))
     assert r.initialOffset() == {"index": 0}
@@ -115,7 +129,7 @@ def test_stream_reader_spool_exactly_once(tmp_path):
     assert r2.initialOffset() == {"index": 3}
 
 
-def test_stream_reader_fans_range_into_partitions(tmp_path):
+def test_stream_reader_fans_range_into_partitions(tmp_path, sock_dir):
     """VERDICT r9 item 2: a planned offset range must fan out into
     linesPerPartition-sized InputPartitions (executor-parallel drain,
     the chunk_spool pattern), and the pickled reader — what executors
@@ -127,7 +141,7 @@ def test_stream_reader_fans_range_into_partitions(tmp_path):
         SimpleDataSourceStreamReader,
     )
 
-    sock = os.path.join(tempfile.gettempdir(), "s4_src_fan.sock")
+    sock = os.path.join(sock_dir, "fan.sock")
     serve_lines(sock, b"".join(b"p%d\n" % i for i in range(5)))
     r = _SpoolingStreamReader(sock, str(tmp_path / "spool"), lines_per_partition=2)
     # the promotion itself: a FULL stream reader, not the driver-side
@@ -147,12 +161,12 @@ def test_stream_reader_fans_range_into_partitions(tmp_path):
     assert r.partitions({"index": 3}, {"index": 3}) == []
 
 
-def test_stream_reader_listen_mode_fan_in(tmp_path):
+def test_stream_reader_listen_mode_fan_in(tmp_path, sock_dir):
     """A2 streaming parity: the reader in listen mode is the SERVER —
     N concurrent clients connect to the one socket path and every line
     lands in the one stream (reference input/unix.go:49-82 accept loop,
     river/river.go:43-47 fan-in)."""
-    sock = os.path.join(tempfile.gettempdir(), "s4_src_listen.sock")
+    sock = os.path.join(sock_dir, "listen.sock")
     r = _SpoolingStreamReader(sock, str(tmp_path / "spool"), listen=True)
     r._ensure_receiver()  # binds the path
     # wait for CONNECTABILITY, not path existence — a stale socket file
@@ -193,14 +207,14 @@ def test_stream_reader_listen_mode_fan_in(tmp_path):
     assert off == {"index": 5}
 
 
-def test_stream_reader_replays_after_crash_restart(tmp_path):
+def test_stream_reader_replays_after_crash_restart(tmp_path, sock_dir):
     """Kill-and-restart (river/liner_test.go consume-test shape, with a
     mid-stream restart): records spooled by incarnation A but never
     planned into a batch MUST be served by incarnation B — the module's
     exactly-once contract. Scenario: A drains r0..r2 (spool=3, Spark
     planned through offset 1 only, then crashed before logging batch 2);
     B restarts from offset 1 and must replay r1, r2 before fresh data."""
-    sock = os.path.join(tempfile.gettempdir(), "s4_src_crash.sock")
+    sock = os.path.join(sock_dir, "crash.sock")
     serve_lines(sock, b"r0\nr1\nr2\n", accept_n=2)
     spool = str(tmp_path / "spool")
     a = _SpoolingStreamReader(sock, spool)
@@ -221,11 +235,11 @@ def test_stream_reader_replays_after_crash_restart(tmp_path):
     assert replayed[:2] == ["r1", "r2"], "spooled-but-unplanned records lost"
 
 
-def test_stream_reader_spool_compaction_bounds_growth(tmp_path):
+def test_stream_reader_spool_compaction_bounds_growth(tmp_path, sock_dir):
     """commit() must bound the spool to the uncommitted range once the
     committed prefix passes the threshold, and replay of uncommitted
     ranges must still work across the roll (global indexes stable)."""
-    sock = os.path.join(tempfile.gettempdir(), "s4_src_compact.sock")
+    sock = os.path.join(sock_dir, "compact.sock")
     payload = b"".join(b"c%d\n" % i for i in range(100))
     serve_lines(sock, payload, accept_n=1)
     spool_dir = tmp_path / "spool"
@@ -243,13 +257,13 @@ def test_stream_reader_spool_compaction_bounds_growth(tmp_path):
     r.stop()
 
 
-def test_spool_compaction_crash_atomic(tmp_path):
+def test_spool_compaction_crash_atomic(tmp_path, sock_dir):
     """ADVICE r3: a crash mid-compaction must never leave a PARTIAL file
     as the authoritative highest base. commit() now builds the roll under
     a ``.tmp`` name and os.replace()s it in, so init either sees the old
     complete file (crash before rename) or the new complete file (crash
     after) — a planted partial .tmp is ignored AND cleaned up."""
-    sock = os.path.join(tempfile.gettempdir(), "s4_src_atomic.sock")
+    sock = os.path.join(sock_dir, "atomic.sock")
     serve_lines(sock, b"".join(b"a%d\n" % i for i in range(20)))
     spool_dir = tmp_path / "spool"
     r = _SpoolingStreamReader(sock, str(spool_dir), compact_every=5)
@@ -273,11 +287,11 @@ def test_spool_compaction_crash_atomic(tmp_path):
     r2.stop()
 
 
-def test_listen_mode_refuses_live_socket(tmp_path):
+def test_listen_mode_refuses_live_socket(tmp_path, sock_dir):
     """ADVICE r3: listen mode must not unlink a socket path a LIVE
     process owns (that silently destroys the other endpoint). The stale
     path (no listener behind it) is still reclaimed."""
-    sock = os.path.join(tempfile.gettempdir(), "s4_src_live.sock")
+    sock = os.path.join(sock_dir, "live.sock")
     if os.path.exists(sock):
         os.unlink(sock)
     owner = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
@@ -337,11 +351,13 @@ def test_listen_mode_refuses_live_socket(tmp_path):
     r2.stop()
 
 
-def test_streaming_end_to_end(registered, tmp_path):
+def test_streaming_end_to_end(registered, tmp_path, sock_dir):
     """readStream -> memory sink: all served records arrive exactly once."""
-    sock = os.path.join(tempfile.gettempdir(), "s4_src_e2e.sock")
+    sock = os.path.join(sock_dir, "e2e.sock")
     serve_lines(sock, b"".join(b"rec %d\n" % i for i in range(50)))
-    q = (
+    from s4_spark.streaming.rigs import running
+
+    writer = (
         registered.readStream.format("s4_unixline")
         .option("path", sock)
         .option("spoolDir", str(tmp_path / "spool"))
@@ -350,20 +366,16 @@ def test_streaming_end_to_end(registered, tmp_path):
         .queryName("s4_unix_e2e")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="1 second")
-        .start()
     )
-    try:
+    with running(writer):
         deadline = time.time() + 30
         while time.time() < deadline:
             if registered.table("s4_unix_e2e").count() >= 50:
                 break
             time.sleep(0.5)
-        rows = sorted(
-            r.value for r in registered.table("s4_unix_e2e").collect()
-        )
-        assert rows == sorted(f"rec {i}" for i in range(50))
-    finally:
-        q.stop()
+    rows = sorted(r.value for r in registered.table("s4_unix_e2e").collect())
+    registered.catalog.dropTempView("s4_unix_e2e")
+    assert rows == sorted(f"rec {i}" for i in range(50))
 
 
 def test_compaction_reduces_file_count(spark):
@@ -458,14 +470,14 @@ def test_chunk_spool_latest_offset_monotone_after_drain(tmp_path):
     assert r2.latestOffset() == {"chunk": 3}
 
 
-def test_stream_reader_short_slice_fails_instead_of_dropping(tmp_path):
+def test_stream_reader_short_slice_fails_instead_of_dropping(tmp_path, sock_dir):
     """ADVICE r10: a spool roll that holds fewer records than a planned
     partition's [lo, hi) range (truncated by an OS crash after the
     offset was checkpointed) must surface as a task failure, not a
     silently short record set — the source's contract is exactly-once."""
     import pytest as _pytest
 
-    sock = os.path.join(tempfile.gettempdir(), "s4_src_short.sock")
+    sock = os.path.join(sock_dir, "short.sock")
     serve_lines(sock, b"a\nb\nc\n")
     r = _SpoolingStreamReader(sock, str(tmp_path / "spool"))
     got, off = drain(r, {"index": 0}, 3)

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from s4_spark.queries.registry import REGISTRY
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_no_stream_leaks
 
 
 def test_q094_watermark_drops_late_rows(spark):
@@ -597,9 +597,8 @@ def _q273_companion_run(spark, purchase_bound: str, tag: str):
     parameterized purchase bound; return (emitted window starts,
     final global watermark string from query progress)."""
     import datetime as dt
-    import shutil
 
-    from s4_spark.streaming.rigs import scratch
+    from s4_spark.streaming.rigs import drain_to_memory, scratch, stage_file
 
     hours = [0, 1, 2, 3]
     mk = lambda h: dt.datetime(2024, 1, 1, h, 30)
@@ -613,17 +612,8 @@ def _q273_companion_run(spark, purchase_bound: str, tag: str):
     for d in landings:
         os.makedirs(d, exist_ok=True)
 
-    def drop(df, landing, fname):
-        stage = scratch(f"{tag}_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            p for p in os.listdir(stage)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        shutil.copyfile(os.path.join(stage, part), os.path.join(landing, fname))
-
-    drop(clicks, landings[0], "p1.parquet")
-    drop(purch, landings[1], "p1.parquet")
+    stage_file(clicks, landings[0], "p1.parquet")
+    stage_file(purch, landings[1], "p1.parquet")
     cs = spark.readStream.schema(clicks.schema).parquet(landings[0])
     ps = spark.readStream.schema(purch.schema).parquet(landings[1])
     u = cs.withWatermark("ts", "1 minute").unionByName(
@@ -634,23 +624,15 @@ def _q273_companion_run(spark, purchase_bound: str, tag: str):
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("w_start"), "n")
     )
-    name = f"s4_mem_{tag}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch(f"ckpt_{tag}"))
-        .start()
-    )
-    q.processAllAvailable()
-    # empty second files advance both source watermarks past phase-1 maxes
-    drop(clicks.limit(0), landings[0], "p2.parquet")
-    drop(purch.limit(0), landings[1], "p2.parquet")
-    q.processAllAvailable()
-    wm = q.lastProgress["eventTime"]["watermark"]
-    q.stop()
-    starts = sorted(r.w_start for r in spark.table(name).collect())
-    return starts, wm
+
+    def tick():
+        # empty second files advance both source watermarks past phase-1 maxes
+        stage_file(clicks.limit(0), landings[0], "p2.parquet")
+        stage_file(purch.limit(0), landings[1], "p2.parquet")
+
+    got, progress = drain_to_memory(out, "append", tag, steps=[tick])
+    starts = sorted(r.w_start for r in got.collect())
+    return starts, progress[-1]["eventTime"]["watermark"]
 
 
 def test_q273_min_policy_slow_source_withholds_window(spark):
@@ -780,3 +762,72 @@ def test_batch_sink_commit_routes_through_hadoop_fs(spark, tmp_path):
         st.getPath().getName() for st in fs.listStatus(Path(out))
     )
     assert names == ["b0"], names
+
+
+def test_replay_stops_query_and_restores_conf_when_a_phase_raises(spark):
+    """A replay phase that fails to stage (here: its write raises) must
+    not leave the replay query running, its memory view registered, or
+    the replay conf pinned on the session."""
+    from s4_spark.streaming.rigs import REPLAY_CONF, replay
+
+    key = next(iter(REPLAY_CONF))
+    before = spark.conf.get(key, None)
+    p1 = spark.range(3).select(
+        "id", F.timestamp_seconds(F.col("id") * 60).alias("ts")
+    )
+    bad = p1.withColumn(
+        "ts", F.raise_error(F.lit("injected phase failure")).cast("timestamp")
+    )
+
+    def build(stream):
+        return (
+            stream.withWatermark("ts", "1 minute")
+            .groupBy(F.window("ts", "10 minutes"))
+            .count()
+        )
+
+    with pytest.raises(Exception, match="injected phase failure"):
+        replay(spark, [(p1,), (bad,)], build, tag="leak_replay")
+    assert_no_stream_leaks(spark, "replay")
+    assert spark.conf.get(key, None) == before
+
+
+def test_available_now_drain_stops_query_and_restores_conf_on_failure(
+    spark, tmp_path
+):
+    """An availableNow drain whose query fails surfaces the failure and
+    still stops the query, drops its memory view and restores the
+    run's conf."""
+    from s4_spark.streaming.rigs import run_to_memory
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key, None)
+    landing = str(tmp_path / "landing")
+    spark.range(5).write.parquet(landing)
+    stream = spark.readStream.schema("id long").parquet(landing).select(
+        F.when(F.col("id") < 10, F.raise_error(F.lit("injected batch failure")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="injected batch failure"):
+        run_to_memory(stream, "append", tag="leak_drain", conf={key: "3"})
+    assert_no_stream_leaks(spark, "run_to_memory")
+    assert spark.conf.get(key, None) == before
+
+
+def test_run_once_leaves_config_unchanged(spark, tmp_path):
+    """run_once must not mutate the caller's config: a config reused
+    with start() after a backfill drain must still run on its ticker."""
+    from s4_spark.pipeline.s4 import S4Config, run_once
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.txt").write_text("one\ntwo\n")
+    fields = dict(
+        input_path=str(landing),
+        output_path=str(tmp_path / "out"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+    )
+    cfg = S4Config(**fields)
+    run_once(spark, cfg)
+    assert cfg == S4Config(**fields)
