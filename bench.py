@@ -23,10 +23,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from s4_spark.queries import REGISTRY
-from s4_spark.session import get_spark
+from s4_spark.session import DEFAULT_CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = DEFAULT_CPUS
 STREAM_N = int(os.environ.get("S4_BENCH_STREAM_N", "1000000"))
 
 # Headline set: one per family — scan, agg, join, asof, window, top-k,

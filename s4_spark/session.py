@@ -19,10 +19,44 @@ chosen to also hold on a 1000-executor cluster reading 100 TB:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def env_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` (a positive int), else the box's core count."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 1
+    if not re.fullmatch(r"[1-9]\d*", raw.strip()):
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return int(raw)
+
+
+def env_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` (``<n>[mg]``), else min(24g, 60% of
+    MemTotal): a heap larger than the box invites the OOM killer instead
+    of a clean JVM OutOfMemoryError."""
+    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if raw is not None:
+        if not re.fullmatch(r"[1-9]\d*[mg]", raw.strip(), re.IGNORECASE):
+            raise ValueError(
+                f"SPARK_GRAFT_DRIVER_MEM must look like <n>m or <n>g, got {raw!r}"
+            )
+        return raw.strip()
+    cap_mb = 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(
+                int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, int(total_kb / 1024 * 0.6))}m"
+
+
+DEFAULT_CPUS = env_cpus()
 
 
 def get_spark(
@@ -63,7 +97,7 @@ def get_spark(
                 "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", env_driver_memory())
     )
     if os.environ.get("SPARK_GRAFT_CLUSTER"):
         # Cluster deployment against S3 (the north-star source/sink).

@@ -15,23 +15,47 @@ full Spark 4 Python DataSource streaming protocol (and, since round
   offset instead of a delete-before-send race (SURVEY.md Appendix B's
   do-not-replicate loss bug).
 
-Chunk files are ``chunk-NNNNNNNN.txt`` under ``path``, one line per
-record, appended by any producer; the committed prefix is immutable by
-contract (the producer only ever ADDS higher-numbered chunks). On a
-cluster, ``path`` must be a shared filesystem. Scale: a micro-batch
-over K new chunks is K parallel file reads; offsets are O(1) ints.
+Chunk files are ``chunk-NNNNNNNN.txt`` under ``path``, one
+``\\n``-terminated line per record, appended by any producer; the
+committed prefix is immutable by contract (the producer only ever ADDS
+higher-numbered chunks). On a cluster, ``path`` must be a shared
+filesystem. Scale: a micro-batch over K new chunks is K parallel file
+reads; offsets are O(1) ints.
+
+``line_batches`` is the one chunk-file reader: sources/unix_socket.py's
+spool chunks go through it too.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 from dataclasses import dataclass
+from typing import Iterator
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
 _CHUNK_RE = re.compile(r"chunk-(\d{8})\.txt$")
 _FLOOR_MARKER = ".offset_floor"
+# Rows per Arrow batch a chunk read yields: bounds a Python worker's
+# memory however large a producer chunk is.
+BATCH_LINES = 8192
+
+
+def line_batches(path: str, size: int = BATCH_LINES) -> Iterator:
+    """Yield the ``\\n``-framed lines of ``path`` as one-column
+    (``value string``) Arrow RecordBatches of at most ``size`` rows.
+    Only ``\\n`` ends a line (no universal-newline translation), so a
+    record's own ``\\r`` survives the round trip. Arrow batches ship to
+    the JVM as one buffer each; per-row tuples are pickled one by one."""
+    import pyarrow as pa
+
+    with open(path, encoding="utf-8", newline="\n") as f:
+        while vals := [ln.rstrip("\n") for ln in itertools.islice(f, size)]:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(vals, pa.string())], names=["value"]
+            )
 
 
 def chunk_path(path: str, i: int) -> str:
@@ -56,14 +80,13 @@ class ChunkPartition(InputPartition):
 class ChunkSpoolStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.path = options["path"]
-        self.ack = options.get("ack", "true").lower() == "true"
-        # Monotone floor for latestOffset (r6 advice): with ack enabled,
-        # commit() deletes the committed chunks, so a drained spool lists
-        # as empty and a listing-only latestOffset would REGRESS from N
-        # back to -1 — Spark then plans a spurious (N, -1] batch, persists
-        # the regressed offset, and a producer that restarts numbering
-        # after a drain would get its re-used chunk numbers re-read,
-        # breaking exactly-once. The floor is the max offset ever seen or
+        # Monotone floor for latestOffset (r6 advice): commit() deletes
+        # the committed chunks, so a drained spool lists as empty and a
+        # listing-only latestOffset would REGRESS from N back to -1 —
+        # Spark then plans a spurious (N, -1] batch, persists the
+        # regressed offset, and a producer that restarts numbering after
+        # a drain would get its re-used chunk numbers re-read, breaking
+        # exactly-once. The floor is the max offset ever seen or
         # committed, seeded from the marker file commit() writes so it
         # survives reader re-instantiation across restarts.
         self._floor = -1
@@ -89,26 +112,9 @@ class ChunkSpoolStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition: ChunkPartition):
-        # Yield ONE Arrow RecordBatch per chunk instead of per-line
-        # tuples (r14, VERDICT r13 item 6 / guide §4): tuple yields make
-        # the Python worker pickle every row individually into the
-        # JVM-bound stream, which at 50k rows was a measurable slice of
-        # the entry's ~2 s Python-source floor; the protocol accepts
-        # pyarrow.RecordBatch yields and ships the batch as one Arrow
-        # buffer. A/B (sf0.1, min-of-3, noop sink): 2.86 s -> 2.57 s;
-        # the residual ~2 s is the declared protocol surface (planner
-        # worker spawn + per-batch offset round trips).
-        import pyarrow as pa
-
-        with open(chunk_path(partition.path, partition.chunk)) as f:
-            vals = [line.rstrip("\n") for line in f]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(vals, pa.string())], names=["value"]
-        )
+        yield from line_batches(chunk_path(partition.path, partition.chunk))
 
     def commit(self, end: dict) -> None:
-        if not self.ack:
-            return
         self._floor = max(self._floor, end["chunk"])
         # Persist the floor BEFORE deleting, atomically (tmp + rename):
         # a crash between delete and marker write must not resurrect a

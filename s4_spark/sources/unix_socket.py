@@ -19,23 +19,24 @@ Semantics carried over:
 - **EOF completion** (A5): a batch read drains each socket until the
   peer closes.
 - **durable buffering upgraded to exactly-once** (A7/A14, Appendix B
-  fix): the *streaming* reader spools received records to an append-only
-  file and serves Spark's offset ranges from the spool, so a restarted
+  fix): the *streaming* reader spools received records into immutable
+  chunk files and serves Spark's offset ranges from them, so a restarted
   query replays uncommitted records instead of losing them (the
   reference truncates its buffer before the sink confirms —
-  river/liner.go:75-87 — giving at-most-once; here the spool is pruned
-  only in ``commit()``).
+  river/liner.go:75-87 — giving at-most-once; here a chunk is deleted
+  only in ``commit()``, once Spark has committed every record in it).
 
-The streaming reader is a full ``DataSourceStreamReader`` (VERDICT r9
-item 2 — promoted from the driver-side ``SimpleDataSourceStreamReader``
-prefetch): socket RECEIVE stays a single driver-side thread, which is
-the reference's own topology (one endpoint, one listener —
-input/unix.go:19-34), but the DRAIN side fans out —
-``partitions(start, end)`` slices each planned offset range into
-per-slice InputPartitions (``linesPerPartition`` records each, the
-chunk_spool pattern), so executors read the spool in parallel instead
-of funnelling every record through one driver thread. On a cluster the
-spool directory must be a shared filesystem (exactly like
+The streaming reader is a full ``DataSourceStreamReader`` in the
+sources/chunk_spool.py shape: socket RECEIVE stays a single driver-side
+thread, which is the reference's own topology (one endpoint, one
+listener — input/unix.go:19-34); ``latestOffset`` writes what it
+received as new chunk files ``chunk-{lo:020d}-{hi:020d}.txt`` holding
+global records [lo, hi), at most ``_CHUNK_LINES`` each; and
+``partitions(start, end)`` plans one InputPartition per chunk, so
+executors read the spool in parallel, one Arrow batch per chunk. No
+spool byte is ever rewritten: the only writes are new chunks (``.tmp``
+then rename) and deletions of committed chunks. On a cluster the spool
+directory must be a shared filesystem (exactly like
 sources/chunk_spool.py); ingest bandwidth is still bounded by the one
 socket, but parsing/decoding/downstream work scales with executors.
 """
@@ -43,9 +44,11 @@ socket, but parsing/decoding/downstream work scales with executors.
 from __future__ import annotations
 
 import os
+import re
 import socket
 import threading
 import time
+from dataclasses import dataclass
 from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import (
@@ -55,12 +58,26 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from s4_spark.sources.chunk_spool import line_batches
+
 _CONNECT_TIMEOUT_S = 5.0
 _POLL_TIMEOUT_S = 0.05
+# Records per spool chunk, hence per InputPartition of a planned range.
+_CHUNK_LINES = 8192
+_CHUNK_RE = re.compile(r"chunk-(\d{20})-(\d{20})\.txt")
 
 
-def _normalize(chunk: bytes) -> bytes:
-    return chunk.replace(b"\r\n", b"\n")
+def _frame(buf: bytes, eof: bool) -> tuple[list[str], bytes]:
+    """Line framing (A4, ``bufio.ScanLines``, input/unix.go:89-119):
+    split ``buf`` into its complete records and the unterminated rest.
+    A record ends at ``\\n``, a ``\\r`` before it is dropped, and bytes
+    decode as UTF-8 with replacement. At ``eof`` the rest is one last
+    record (bufio.Scanner emits the final unterminated token too)."""
+    *lines, rest = buf.split(b"\n")
+    if eof and rest:
+        lines.append(rest)
+        rest = b""
+    return [ln.removesuffix(b"\r").decode("utf-8", "replace") for ln in lines], rest
 
 
 def _read_lines_until_eof(sock_path: str) -> Iterator[str]:
@@ -73,17 +90,11 @@ def _read_lines_until_eof(sock_path: str) -> Iterator[str]:
             try:
                 chunk = s.recv(65536)
             except socket.timeout:
-                break
+                chunk = b""
+            lines, buf = _frame(buf + chunk, eof=not chunk)
+            yield from lines
             if not chunk:
-                break
-            buf += chunk
-            *lines, buf = buf.split(b"\n")
-            for ln in lines:
-                yield _normalize(ln + b"\n")[:-1].decode("utf-8", "replace")
-        if buf:
-            # trailing bytes without a newline are still one record
-            # (bufio.Scanner emits the final unterminated token too)
-            yield _normalize(buf).decode("utf-8", "replace")
+                return
 
 
 class _SocketPartition(InputPartition):
@@ -103,123 +114,78 @@ class _UnixLineBatchReader(DataSourceReader):
             yield (line,)
 
 
-class _ShortSpoolSlice(IOError):
-    """A spool roll resolved for a planned partition held fewer records
-    than the partition's [lo, hi) range — retryable (shared-filesystem
-    visibility lag), fatal if persistent (truncated roll)."""
+def _chunk_name(lo: int, hi: int) -> str:
+    return f"chunk-{lo:020d}-{hi:020d}.txt"
 
 
-class _SpoolSlicePartition(InputPartition):
-    """One executor-readable slice of the spool: global record indexes
-    [lo, hi). Carries the spool DIRECTORY, not a file name — the reader
-    resolves the current roll at read time (see ``read``), so a
-    concurrent compaction roll on the driver can't invalidate a planned
-    partition."""
-
-    def __init__(self, spool_dir: str, lo: int, hi: int):
-        self.spool_dir = spool_dir
-        self.lo = lo
-        self.hi = hi
-
-
-def _spool_bases(spool_dir: str) -> list[int]:
+def _list_chunks(spool_dir: str) -> list[tuple[int, int]]:
+    """The spool's chunks as sorted ``(lo, hi)`` record ranges."""
     return sorted(
-        int(f[len("spool-"):-len(".txt")])
-        for f in os.listdir(spool_dir)
-        if f.startswith("spool-") and f.endswith(".txt")
+        (int(m.group(1)), int(m.group(2)))
+        for m in map(_CHUNK_RE.fullmatch, os.listdir(spool_dir))
+        if m
     )
 
 
+@dataclass
+class _ChunkSlice(InputPartition):
+    """Global records [lo, hi) of the chunk holding [chunk_lo, chunk_hi)."""
+
+    spool_dir: str
+    chunk_lo: int
+    chunk_hi: int
+    lo: int
+    hi: int
+
+
 class _SpoolingStreamReader(DataSourceStreamReader):
-    """Socket receiver + durable line spool on the driver; partition-
+    """Socket receiver + durable chunk spool on the driver; partition-
     parallel spool drain on the executors.
 
     Offsets are GLOBAL record indexes (monotone across the query's
-    lifetime); the spool holds the suffix of records from ``_base``
-    onward in a single file named ``spool-{base}.txt``.
+    lifetime). The spool is a directory of immutable chunk files, each
+    holding the records [lo, hi) its name says.
 
     Driver side: a background thread receives from the socket (client
-    ``connect`` or server ``listen`` fan-in); ``latestOffset`` drains
-    whatever the thread has buffered into the spool file — durable
-    BEFORE the offset is reported (write-ahead; the reference's
-    emit-then-persist order is Appendix B's loss bug) — and reports the
-    spooled count. Records spooled by a crashed incarnation but never
-    planned into a batch are counted at init, so the next
-    ``latestOffset`` plans them (the round-1 at-most-once gap, closed
-    structurally).
+    ``connect`` or server ``listen`` fan-in); ``latestOffset`` writes
+    whatever the thread has buffered as new chunks — durable BEFORE the
+    offset is reported (write-ahead; the reference's emit-then-persist
+    order is Appendix B's loss bug) — and reports the spooled count.
+    Records spooled by a crashed incarnation but never planned into a
+    batch are counted at init (the largest chunk ``hi``), so the next
+    ``latestOffset`` plans them.
 
-    Executor side: ``partitions(start, end)`` slices the planned range
-    into ``lines_per_partition``-sized ``_SpoolSlicePartition``s and
-    ``read`` serves each slice straight from the spool file — restart
-    replay of a planned-but-uncommitted range goes through the same two
-    calls, no separate replay path.
+    Executor side: ``partitions(start, end)`` plans one ``_ChunkSlice``
+    per chunk overlapping the range and ``read`` serves it from that
+    chunk alone — restart replay of a planned-but-uncommitted range goes
+    through the same two calls, no separate replay path.
 
-    ``commit`` prunes the committed prefix once it exceeds
-    ``compact_every`` records by rolling to a new higher-base file —
-    write-new-then-delete-old, so a crash between the two steps leaves
-    two valid files and init picks the highest base (both contain every
-    uncommitted record). The roll is safe against in-flight reads:
-    ``commit(end)`` only ever moves the base to an offset Spark has
-    fully committed, and every in-flight partition's ``lo`` is at or
-    beyond that, so the post-roll file still contains it (executor
-    ``read`` resolves the roll by listing, with a retry for the
-    list/roll race)."""
+    ``commit(end)`` deletes the chunks Spark has fully committed, except
+    the newest, so a reader re-created over a drained spool still starts
+    at the spooled count, not 0. A committed chunk is never read again,
+    so a delete cannot race an in-flight read."""
 
-    def __init__(
-        self,
-        sock_path: str,
-        spool_dir: str,
-        compact_every: int = 65536,
-        listen: bool = False,
-        lines_per_partition: int = 8192,
-    ):
+    def __init__(self, sock_path: str, spool_dir: str, listen: bool = False):
         self._sock_path = sock_path
         self._spool_dir = spool_dir
-        self._compact_every = compact_every
         self._listen = listen
-        self._lines_per_partition = max(1, lines_per_partition)
         os.makedirs(spool_dir, exist_ok=True)
-        # legacy layout migration: an un-based spool.txt is base 0
-        legacy = os.path.join(spool_dir, "spool.txt")
-        if os.path.exists(legacy):
-            os.replace(legacy, os.path.join(spool_dir, self._fname(0)))
-        # ``.tmp`` files are abandoned partial compaction writes — never
-        # authoritative; remove them so they can't accumulate.
+        # a ``.tmp`` is a chunk whose write a crash interrupted before
+        # its offset was reported: never planned, so never owed
         for f in os.listdir(spool_dir):
-            if f.startswith("spool-") and f.endswith(".txt.tmp"):
+            if f.endswith(".tmp"):
                 os.unlink(os.path.join(spool_dir, f))
-        bases = _spool_bases(spool_dir)
-        if bases:
-            # highest base is the newest (completed) roll; older files are
-            # committed-prefix leftovers from a crash mid-compaction
-            self._base = bases[-1]
-            for b in bases[:-1]:
-                os.unlink(os.path.join(spool_dir, self._fname(b)))
-        else:
-            self._base = 0
-            # the file must exist from offset 0 (empty first batches plan
-            # ranges before any record arrives)
-            open(self._spool_path, "a", encoding="utf-8").close()
-        with open(self._spool_path, encoding="utf-8") as f:
-            self._spooled = self._base + sum(1 for _ in f)
+        chunks = _list_chunks(spool_dir)
+        self._spooled = chunks[-1][1] if chunks else 0
         self._lock = threading.Lock()
         self._lines: list[str] = []
         self._receiver: threading.Thread | None = None
         self._stop = threading.Event()
 
-    @staticmethod
-    def _fname(base: int) -> str:
-        return f"spool-{base:020d}.txt"
-
-    @property
-    def _spool_path(self) -> str:
-        return os.path.join(self._spool_dir, self._fname(self._base))
-
     # The reader is pickled to the executors that serve read(partition);
     # thread/lock/socket state must not travel, and the executor copy
     # must not trust driver-side counters (they go stale the moment the
-    # driver spools more) — read() therefore uses ONLY partition fields
-    # plus a directory listing.
+    # driver spools more) — read() therefore uses ONLY partition fields.
     def __getstate__(self):
         state = self.__dict__.copy()
         for k in ("_receiver", "_stop", "_lock", "_lines"):
@@ -252,21 +218,13 @@ class _SpoolingStreamReader(DataSourceStreamReader):
             except socket.timeout:
                 continue
             except OSError:
-                break
-            if not chunk:
-                break
-            buf += chunk
-            *lines, buf = buf.split(b"\n")
+                chunk = b""
+            lines, buf = _frame(buf + chunk, eof=not chunk)
             if lines:
-                decoded = [
-                    _normalize(ln + b"\n")[:-1].decode("utf-8", "replace")
-                    for ln in lines
-                ]
                 with self._lock:
-                    self._lines.extend(decoded)
-        if buf and not self._stop.is_set():
-            with self._lock:
-                self._lines.append(_normalize(buf).decode("utf-8", "replace"))
+                    self._lines.extend(lines)
+            if not chunk:
+                return
 
     def _drain_then_close(self, conn: socket.socket) -> None:
         """Accepted-connection wrapper: the fd is closed even when the
@@ -353,121 +311,74 @@ class _SpoolingStreamReader(DataSourceStreamReader):
         return {"index": self._spooled}
 
     def latestOffset(self) -> dict:
-        """Drain the receiver buffer into the spool, then report the
+        """Write the receiver buffer as new chunks, then report the
         spooled count. Records become visible to planning only AFTER
-        they are durable (write-ahead) — a crash between the append and
-        the report re-plans them from the spool count at next init, so
-        nothing is lost and nothing is double-planned."""
+        they are durable (write-ahead) — a crash before the report
+        re-plans them from the spool at next init, so nothing is lost
+        and nothing is double-planned."""
         self._ensure_receiver()
         with self._lock:
             fresh, self._lines = self._lines, []
-        if fresh:
-            with open(self._spool_path, "a", encoding="utf-8") as f:
-                for ln in fresh:
-                    f.write(ln.replace("\n", " ") + "\n")
-            self._spooled += len(fresh)
+        for i in range(0, len(fresh), _CHUNK_LINES):
+            lines = fresh[i : i + _CHUNK_LINES]
+            lo, hi = self._spooled, self._spooled + len(lines)
+            path = os.path.join(self._spool_dir, _chunk_name(lo, hi))
+            with open(path + ".tmp", "w", encoding="utf-8", newline="\n") as f:
+                f.writelines(ln + "\n" for ln in lines)
+            os.replace(path + ".tmp", path)
+            self._spooled = hi
         return {"index": self._spooled}
 
     def partitions(self, start: dict, end: dict):
-        """Fan the planned range out: one InputPartition per
-        ``lines_per_partition`` records, read in parallel on executors
-        (the chunk_spool pattern — VERDICT r9 item 2; the old Simple
-        reader served every record through one driver thread)."""
+        """One InputPartition per chunk overlapping [start, end), clipped
+        to the range and read in parallel on executors. A range the
+        chunks do not cover contiguously raises: planning fewer records
+        than the range holds would drop rows silently."""
         lo, hi = start["index"], end["index"]
-        step = self._lines_per_partition
-        return [
-            _SpoolSlicePartition(self._spool_dir, i, min(i + step, hi))
-            for i in range(lo, hi, step)
-        ]
+        parts, at = [], lo
+        for c_lo, c_hi in _list_chunks(self._spool_dir):
+            if at >= hi or c_lo > at:
+                break
+            if c_hi > at:
+                stop = min(c_hi, hi)
+                parts.append(_ChunkSlice(self._spool_dir, c_lo, c_hi, at, stop))
+                at = stop
+        if at < hi:
+            raise IOError(
+                f"spool {self._spool_dir} has no chunk for record {at} "
+                f"of the planned range [{lo}, {hi})"
+            )
+        return parts
 
     # -- Spark contract (executor side) ----------------------------------
-    def read(self, partition: _SpoolSlicePartition) -> Iterator[Tuple]:
-        """Serve records [lo, hi) by global index from the spool. The
-        current roll is resolved by LISTING: commit() only moves the
-        base to a fully-committed offset, and every planned partition's
-        lo is at-or-beyond that, so a file whose base is ≤ lo always
-        exists; a list/roll race (driver rolls between our listdir and
-        open) surfaces as FileNotFoundError and is retried."""
+    def read(self, partition: _ChunkSlice):
+        """Serve the slice as one Arrow batch. A chunk holding fewer
+        records than its name says is retried (shared-filesystem
+        visibility lag heals) and then fails the task: a truncated chunk
+        (an OS crash lost an unsynced write after its offset was
+        checkpointed) must not turn into silently missing rows
+        (ADVICE r10)."""
+        p = partition
+        path = os.path.join(p.spool_dir, _chunk_name(p.chunk_lo, p.chunk_hi))
+        want = p.chunk_hi - p.chunk_lo
         for attempt in range(5):
-            bases = [b for b in _spool_bases(partition.spool_dir) if b <= partition.lo]
-            if not bases:
-                raise FileNotFoundError(
-                    f"no spool roll covers offset {partition.lo} under "
-                    f"{partition.spool_dir} — the range was pruned past its "
-                    "commit, which violates the source's commit contract"
-                )
-            base = bases[-1]
-            path = os.path.join(partition.spool_dir, self._fname(base))
             try:
-                out = []
-                with open(path, encoding="utf-8") as f:
-                    for i, ln in enumerate(f, start=base):
-                        if i >= partition.hi:
-                            break
-                        if i >= partition.lo:
-                            out.append((ln.rstrip("\n"),))
-                if len(out) != partition.hi - partition.lo:
-                    # Short slice: the resolved roll holds fewer than
-                    # partition.hi records — a non-fsynced append lost to
-                    # an OS crash after the offset was checkpointed, or
-                    # shared-filesystem visibility lag on the documented
-                    # cluster deployment. Silent loss would break the
-                    # source's exactly-once contract, so treat it like
-                    # the list/roll race: retry (visibility lag heals),
-                    # then raise so truncation surfaces as a TASK
-                    # FAILURE instead of missing rows.
-                    raise _ShortSpoolSlice(
-                        f"spool roll {path} served {len(out)} of "
-                        f"{partition.hi - partition.lo} records for "
-                        f"[{partition.lo}, {partition.hi})"
-                    )
-                return iter(out)
-            except (FileNotFoundError, _ShortSpoolSlice):
-                time.sleep(0.05 * (attempt + 1))
+                batches = list(line_batches(path, want + 1))
+            except FileNotFoundError:
+                batches = []
+            if sum(b.num_rows for b in batches) == want:
+                yield batches[0].slice(p.lo - p.chunk_lo, p.hi - p.lo)
+                return
+            time.sleep(0.05 * (attempt + 1))
         raise IOError(
-            f"spool roll under {partition.spool_dir} kept vanishing or "
-            f"truncating across retries while reading "
-            f"[{partition.lo}, {partition.hi}) — checkpointed records are "
-            "not durably readable; failing the task rather than dropping rows"
+            f"spool chunk {path} is missing or truncated: it does not hold "
+            f"its {want} records — failing the task rather than dropping rows"
         )
 
     def commit(self, end: dict) -> None:
-        # prune the committed prefix once it is worth a rewrite: roll the
-        # suffix [end.index, _spooled) into a new higher-base file, then
-        # delete the old one. Spool size is thereby bounded by the
-        # UNCOMMITTED range (+ up to compact_every committed records),
-        # not the query's lifetime.
-        committed = end["index"] - self._base
-        if committed < self._compact_every:
-            return
-        new_base = end["index"]
-        keep = []
-        with open(self._spool_path, encoding="utf-8") as f:
-            for i, ln in enumerate(f, start=self._base):
-                if i >= new_base:
-                    keep.append(ln.rstrip("\n"))
-        old_path = self._spool_path
-        new_path = os.path.join(self._spool_dir, self._fname(new_base))
-        # Crash-atomic roll: build the new-base file under a .tmp name the
-        # init glob ignores, fsync, then os.replace() — the final name only
-        # ever appears COMPLETE. A crash mid-write leaves the old complete
-        # file as the sole ``spool-*.txt``, so init never adopts a partial
-        # spool as authoritative (which would silently drop the uncommitted
-        # records in [new_base, _spooled) and break exactly-once).
-        tmp_path = new_path + ".tmp"
-        with open(tmp_path, "w", encoding="utf-8") as f:
-            for ln in keep:
-                f.write(ln + "\n")
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp_path, new_path)
-        dir_fd = os.open(self._spool_dir, os.O_RDONLY)
-        try:
-            os.fsync(dir_fd)  # persist the rename before deleting the old roll
-        finally:
-            os.close(dir_fd)
-        self._base = new_base
-        os.unlink(old_path)
+        for c_lo, c_hi in _list_chunks(self._spool_dir)[:-1]:
+            if c_hi <= end["index"]:
+                os.unlink(os.path.join(self._spool_dir, _chunk_name(c_lo, c_hi)))
 
     def stop(self) -> None:
         self._stop.set()
@@ -479,15 +390,10 @@ class UnixLineDataSource(DataSource):
 
     - ``path``: socket path; comma-separated for multi-socket fan-in
       (batch mode only — streaming reads one socket per query).
-    - ``spoolDir``: (streaming) directory for the durable line spool;
+    - ``spoolDir``: (streaming) directory for the durable chunk spool;
       defaults next to the socket path. On a cluster this must be a
-      shared filesystem — executors read their planned spool slices
-      directly (sources/chunk_spool.py has the same contract).
-    - ``spoolCompactRecords``: (streaming) committed-prefix size that
-      triggers a spool roll (default 65536) — bounds spool growth on a
-      long-running query to uncommitted + this many records.
-    - ``linesPerPartition``: (streaming) records per InputPartition when
-      a planned range is fanned out to executors (default 8192).
+      shared filesystem — executors read their planned chunks directly
+      (sources/chunk_spool.py has the same contract).
     - ``mode``: (streaming) ``connect`` (default) dials the path as a
       client (reference A1); ``listen`` binds the path as the SERVER and
       fans every accepted client connection into the one stream
@@ -520,15 +426,7 @@ class UnixLineDataSource(DataSource):
         if len(paths) != 1:
             raise ValueError("streaming reads exactly one socket per query")
         spool = self.options.get("spooldir") or paths[0] + ".spool"
-        compact = int(self.options.get("spoolcompactrecords", 65536))
-        per_part = int(self.options.get("linesperpartition", 8192))
         mode = self.options.get("mode", "connect")
         if mode not in ("connect", "listen"):
             raise ValueError(f"mode must be 'connect' or 'listen', got {mode!r}")
-        return _SpoolingStreamReader(
-            paths[0],
-            spool,
-            compact_every=compact,
-            listen=(mode == "listen"),
-            lines_per_partition=per_part,
-        )
+        return _SpoolingStreamReader(paths[0], spool, listen=(mode == "listen"))

@@ -1675,13 +1675,14 @@ def test_q120_dispatches_above_gate(spark, monkeypatch):
     assert got == want and len(got) > 0
 
 
-def test_unix_socket_stream_drain_is_partition_parallel(spark, tmp_path):
+def test_unix_socket_stream_drain_is_partition_parallel(spark, tmp_path, monkeypatch):
     """VERDICT r9 item 2: the socket source's spool DRAIN must fan out to
     executors — every non-empty micro-batch of a live query must carry
-    ceil(rows / linesPerPartition) input partitions (the chunk_spool
-    shape), not the Simple reader's single driver-side iterator. Receive
-    stays one driver thread (one socket endpoint, the reference's own
-    topology); this pins that the planned ranges are executor-parallel."""
+    one input partition per spool chunk, ceil(rows / _CHUNK_LINES) (the
+    chunk_spool shape), not the Simple reader's single driver-side
+    iterator. Receive stays one driver thread (one socket endpoint, the
+    reference's own topology); this pins that the planned ranges are
+    executor-parallel."""
     import math
     import os as _os
     import socket as _socket
@@ -1689,7 +1690,11 @@ def test_unix_socket_stream_drain_is_partition_parallel(spark, tmp_path):
     import time as _time
 
     import s4_spark.sources as sources
+    from s4_spark.sources import unix_socket
 
+    # register() pickles the source by value, module constants included,
+    # so the small chunk size travels to the Python worker that runs it
+    monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 2)
     sources.register(spark)
     sock = _os.path.join(_tf.gettempdir(), f"s4_plan_fan_{_os.getpid()}.sock")
     seen: list[tuple[int, int]] = []
@@ -1704,7 +1709,6 @@ def test_unix_socket_stream_drain_is_partition_parallel(spark, tmp_path):
         .option("path", sock)
         .option("mode", "listen")
         .option("spoolDir", str(tmp_path / "spool"))
-        .option("linesPerPartition", "2")
         .load()
         .writeStream.foreachBatch(observe)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -1731,6 +1735,8 @@ def test_unix_socket_stream_drain_is_partition_parallel(spark, tmp_path):
             _time.sleep(0.2)
     finally:
         q.stop()
+        monkeypatch.undo()
+        sources.register(spark)  # later tests get the real chunk size
     assert sum(n for n, _ in seen) == 10, seen
     # the partition-parallel contract, batch by batch
     assert all(parts == math.ceil(rows / 2) for rows, parts in seen), seen

@@ -15,7 +15,8 @@ import time
 import pytest
 
 import s4_spark.sources as sources
-from s4_spark.sources.unix_socket import _SpoolingStreamReader
+from s4_spark.sources import unix_socket
+from s4_spark.sources.unix_socket import _frame, _SpoolingStreamReader
 
 
 def serve_lines(sock_path: str, payload: bytes, accept_n: int = 1) -> threading.Thread:
@@ -83,16 +84,21 @@ def test_batch_multi_socket_fan_in(registered, sock_dir):
     assert sorted(r.value for r in df.collect()) == ["a1", "a2", "b1"]
 
 
+def values(r, p) -> list[str]:
+    """One partition's records: read() serves Arrow batches."""
+    return [v for b in r.read(p) for v in b.column("value").to_pylist()]
+
+
 def drain(r, off, want_n, timeout=5.0):
     """Drive the full-reader contract the way a micro-batch engine does:
-    latestOffset() → partitions(start, end) → read(partition) per slice.
+    latestOffset() → partitions(start, end) → read(partition) per chunk.
     Returns (records, end_offset)."""
     got: list[str] = []
     deadline = time.time() + timeout
     while len(got) < want_n and time.time() < deadline:
         end = r.latestOffset()
         for p in r.partitions(off, end):
-            got.extend(v for (v,) in r.read(p))
+            got.extend(values(r, p))
         off = end
         time.sleep(0.05)
     return got, off
@@ -102,10 +108,23 @@ def replay(r, lo, hi):
     """Re-read a planned range exactly as restart recovery does —
     through partitions(start, end) + read, no separate replay path."""
     return [
-        rec
-        for p in r.partitions({"index": lo}, {"index": hi})
-        for rec in r.read(p)
+        (v,) for p in r.partitions({"index": lo}, {"index": hi}) for v in values(r, p)
     ]
+
+
+def buffered(r, n, timeout=5.0):
+    """Start the receiver and wait until it holds ``n`` records, so the
+    next latestOffset() spools them in one call (chunk bounds are then
+    fixed by _CHUNK_LINES alone)."""
+    r._ensure_receiver()
+    deadline = time.time() + timeout
+    while len(r._lines) < n and time.time() < deadline:
+        time.sleep(0.02)
+    assert len(r._lines) == n, r._lines
+
+
+def chunks(spool_dir) -> list[str]:
+    return sorted(f for f in os.listdir(spool_dir) if f.startswith("chunk-"))
 
 
 def test_stream_reader_spool_exactly_once(tmp_path, sock_dir):
@@ -129,11 +148,11 @@ def test_stream_reader_spool_exactly_once(tmp_path, sock_dir):
     assert r2.initialOffset() == {"index": 3}
 
 
-def test_stream_reader_fans_range_into_partitions(tmp_path, sock_dir):
-    """VERDICT r9 item 2: a planned offset range must fan out into
-    linesPerPartition-sized InputPartitions (executor-parallel drain,
-    the chunk_spool pattern), and the pickled reader — what executors
-    actually receive — must serve each slice from the spool alone."""
+def test_stream_reader_fans_range_into_partitions(tmp_path, sock_dir, monkeypatch):
+    """VERDICT r9 item 2: a planned offset range must fan out into one
+    InputPartition per spool chunk (executor-parallel drain, the
+    chunk_spool pattern), and the pickled reader — what executors
+    actually receive — must serve each chunk from the spool alone."""
     import pickle
 
     from pyspark.sql.datasource import (
@@ -141,24 +160,30 @@ def test_stream_reader_fans_range_into_partitions(tmp_path, sock_dir):
         SimpleDataSourceStreamReader,
     )
 
+    monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 2)
     sock = os.path.join(sock_dir, "fan.sock")
     serve_lines(sock, b"".join(b"p%d\n" % i for i in range(5)))
-    r = _SpoolingStreamReader(sock, str(tmp_path / "spool"), lines_per_partition=2)
+    r = _SpoolingStreamReader(sock, str(tmp_path / "spool"))
     # the promotion itself: a FULL stream reader, not the driver-side
     # Simple prefetch
     assert isinstance(r, DataSourceStreamReader)
     assert not isinstance(r, SimpleDataSourceStreamReader)
+    buffered(r, 5)
     got, off = drain(r, {"index": 0}, 5)
     r.stop()
     assert got == [f"p{i}" for i in range(5)] and off == {"index": 5}
     parts = r.partitions({"index": 0}, {"index": 5})
     assert [(p.lo, p.hi) for p in parts] == [(0, 2), (2, 4), (4, 5)]
     # executor simulation: round-trip through pickle (thread state must
-    # not travel), then read slices out of order — pure spool lookups
+    # not travel), then read chunks out of order — pure spool lookups
     rx = pickle.loads(pickle.dumps(r))
-    assert [v for (v,) in rx.read(parts[2])] == ["p4"]
-    assert [v for (v,) in rx.read(parts[0])] == ["p0", "p1"]
+    assert values(rx, parts[2]) == ["p4"]
+    assert values(rx, parts[0]) == ["p0", "p1"]
     assert r.partitions({"index": 3}, {"index": 3}) == []
+    # a range that starts or ends inside a chunk is clipped to it
+    mid = r.partitions({"index": 1}, {"index": 3})
+    assert [(p.lo, p.hi) for p in mid] == [(1, 2), (2, 3)]
+    assert [v for p in mid for v in values(rx, p)] == ["p1", "p2"]
 
 
 def test_stream_reader_listen_mode_fan_in(tmp_path, sock_dir):
@@ -235,56 +260,101 @@ def test_stream_reader_replays_after_crash_restart(tmp_path, sock_dir):
     assert replayed[:2] == ["r1", "r2"], "spooled-but-unplanned records lost"
 
 
-def test_stream_reader_spool_compaction_bounds_growth(tmp_path, sock_dir):
-    """commit() must bound the spool to the uncommitted range once the
-    committed prefix passes the threshold, and replay of uncommitted
-    ranges must still work across the roll (global indexes stable)."""
-    sock = os.path.join(sock_dir, "compact.sock")
-    payload = b"".join(b"c%d\n" % i for i in range(100))
-    serve_lines(sock, payload, accept_n=1)
+def test_commit_keeps_uncommitted_and_newest_chunks(tmp_path, sock_dir, monkeypatch):
+    """commit(end) deletes every chunk Spark has fully committed except
+    the newest; uncommitted chunks stay and still replay by global
+    index. No chunk is ever rewritten."""
+    monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 10)
+    sock = os.path.join(sock_dir, "commit.sock")
+    serve_lines(sock, b"".join(b"c%d\n" % i for i in range(100)))
     spool_dir = tmp_path / "spool"
-    r = _SpoolingStreamReader(sock, str(spool_dir), compact_every=10)
+    r = _SpoolingStreamReader(sock, str(spool_dir))
+    buffered(r, 100)
     got, off = drain(r, {"index": 0}, 100)
-    assert len(got) == 100
-    r.commit({"index": 90})
-    files = [f for f in os.listdir(spool_dir) if f.startswith("spool-")]
-    assert len(files) == 1, files
-    with open(spool_dir / files[0], encoding="utf-8") as f:
-        n_kept = sum(1 for _ in f)
-    assert n_kept == 10, n_kept  # only the uncommitted suffix survives
-    # replay across the roll still serves global-index ranges
-    assert replay(r, 95, 97) == [("c95",), ("c96",)]
     r.stop()
+    assert len(got) == 100 and off == {"index": 100}
+    assert len(chunks(spool_dir)) == 10
+    r.commit({"index": 85})  # [80, 90) is only partly committed: kept
+    assert chunks(spool_dir) == [
+        unix_socket._chunk_name(80, 90),
+        unix_socket._chunk_name(90, 100),
+    ]
+    assert replay(r, 85, 97) == [(f"c{i}",) for i in range(85, 97)]
+    r.commit({"index": 100})  # fully drained: only the newest survives
+    assert chunks(spool_dir) == [unix_socket._chunk_name(90, 100)]
 
 
-def test_spool_compaction_crash_atomic(tmp_path, sock_dir):
-    """ADVICE r3: a crash mid-compaction must never leave a PARTIAL file
-    as the authoritative highest base. commit() now builds the roll under
-    a ``.tmp`` name and os.replace()s it in, so init either sees the old
-    complete file (crash before rename) or the new complete file (crash
-    after) — a planted partial .tmp is ignored AND cleaned up."""
-    sock = os.path.join(sock_dir, "atomic.sock")
+def test_reader_recreated_after_full_drain_keeps_offset(tmp_path, sock_dir):
+    """A reader re-created over a fully committed spool reports the
+    spooled count, not 0: the newest chunk outlives its commit."""
+    sock = os.path.join(sock_dir, "redrain.sock")
+    serve_lines(sock, b"a\nb\nc\n")
+    spool = str(tmp_path / "spool")
+    r = _SpoolingStreamReader(sock, spool)
+    got, off = drain(r, {"index": 0}, 3)
+    r.stop()
+    assert got == ["a", "b", "c"]
+    r.commit(off)
+    r2 = _SpoolingStreamReader(sock, spool)
+    assert r2.initialOffset() == {"index": 3}
+    assert r2.latestOffset() == {"index": 3}
+    r2.stop()
+
+
+def test_tmp_chunk_never_planned_and_removed_at_init(tmp_path, sock_dir):
+    """A crash mid-write leaves a ``.tmp`` chunk whose offset was never
+    reported: it is never planned, and the next reader removes it and
+    resumes at the last complete chunk."""
+    sock = os.path.join(sock_dir, "tmp.sock")
     serve_lines(sock, b"".join(b"a%d\n" % i for i in range(20)))
     spool_dir = tmp_path / "spool"
-    r = _SpoolingStreamReader(sock, str(spool_dir), compact_every=5)
+    r = _SpoolingStreamReader(sock, str(spool_dir))
     got, off = drain(r, {"index": 0}, 20)
-    assert len(got) == 20
+    assert len(got) == 20 and off == {"index": 20}
+    partial = spool_dir / (unix_socket._chunk_name(20, 25) + ".tmp")
+    partial.write_text("a20\na21\n")  # the crash cut it short
+    assert r.latestOffset() == {"index": 20}
+    assert [p.hi for p in r.partitions({"index": 0}, off)][-1] == 20
     r.stop()
-    # simulate the old failure mode: a crash mid-write left a truncated
-    # higher-base roll (missing a10..a19) — as .tmp now, never final-named
-    partial = spool_dir / "spool-00000000000000000010.txt.tmp"
-    partial.write_text("")  # maximally truncated: zero records survived
-    r2 = _SpoolingStreamReader(sock, str(spool_dir), compact_every=5)
-    # init adopted the COMPLETE base-0 file, so nothing was lost
+    r2 = _SpoolingStreamReader(sock, str(spool_dir))
+    assert not partial.exists(), "abandoned .tmp should be cleaned up"
     assert r2.initialOffset() == {"index": 20}
     assert replay(r2, 10, 12) == [("a10",), ("a11",)]
-    assert not partial.exists(), "abandoned .tmp should be cleaned up"
-    # and a SUCCESSFUL commit leaves exactly one complete roll, no .tmp
-    r2.commit({"index": 18})
-    files = sorted(os.listdir(spool_dir))
-    assert files == ["spool-00000000000000000018.txt"], files
-    assert replay(r2, 18, 20) == [("a18",), ("a19",)]
     r2.stop()
+
+
+def test_missing_planned_chunk_raises(tmp_path, sock_dir, monkeypatch):
+    """A planned range the spool no longer covers fails — at planning
+    when the chunk is gone before partitions(), at read when it goes
+    after — instead of serving fewer records than the range holds."""
+    monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 2)
+    sock = os.path.join(sock_dir, "missing.sock")
+    serve_lines(sock, b"a\nb\nc\nd\n")
+    spool_dir = tmp_path / "spool"
+    r = _SpoolingStreamReader(sock, str(spool_dir))
+    buffered(r, 4)
+    got, off = drain(r, {"index": 0}, 4)
+    r.stop()
+    assert got == ["a", "b", "c", "d"]
+    parts = r.partitions({"index": 0}, off)
+    os.unlink(spool_dir / unix_socket._chunk_name(0, 2))
+    with pytest.raises(IOError, match="no chunk for record 0 "):
+        r.partitions({"index": 0}, off)
+    with pytest.raises(IOError, match="missing or truncated"):
+        values(r, parts[0])
+    assert values(r, parts[1]) == ["c", "d"]
+
+
+def test_record_with_lone_cr_round_trips(tmp_path, sock_dir):
+    """Only ``\n`` frames a record: a lone ``\r`` inside one is data,
+    and the spool must not split it into two lines on the way back."""
+    sock = os.path.join(sock_dir, "cr.sock")
+    serve_lines(sock, b"a\rb\nc\r\n")
+    r = _SpoolingStreamReader(sock, str(tmp_path / "spool"))
+    got, off = drain(r, {"index": 0}, 2)
+    r.stop()
+    assert got == ["a\rb", "c"] and off == {"index": 2}
+    assert replay(r, 0, 2) == [("a\rb",), ("c",)]
 
 
 def test_listen_mode_refuses_live_socket(tmp_path, sock_dir):
@@ -470,26 +540,58 @@ def test_chunk_spool_latest_offset_monotone_after_drain(tmp_path):
     assert r2.latestOffset() == {"chunk": 3}
 
 
-def test_stream_reader_short_slice_fails_instead_of_dropping(tmp_path, sock_dir):
-    """ADVICE r10: a spool roll that holds fewer records than a planned
-    partition's [lo, hi) range (truncated by an OS crash after the
-    offset was checkpointed) must surface as a task failure, not a
-    silently short record set — the source's contract is exactly-once."""
-    import pytest as _pytest
-
+def test_stream_reader_short_slice_fails_instead_of_dropping(
+    tmp_path, sock_dir, monkeypatch
+):
+    """ADVICE r10: a spool chunk that holds fewer records than its name
+    says (truncated by an OS crash after the offset was checkpointed)
+    must surface as a task failure, not a silently short record set —
+    the source's contract is exactly-once."""
+    monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 2)
     sock = os.path.join(sock_dir, "short.sock")
     serve_lines(sock, b"a\nb\nc\n")
     r = _SpoolingStreamReader(sock, str(tmp_path / "spool"))
+    buffered(r, 3)
     got, off = drain(r, {"index": 0}, 3)
     r.stop()
     assert got == ["a", "b", "c"]
-    # truncate the spool roll to simulate a lost (non-fsynced) append
-    spool_file = next(
-        p for p in os.listdir(tmp_path / "spool") if p.startswith("spool-")
-    )
-    with open(tmp_path / "spool" / spool_file, "w", encoding="utf-8") as f:
-        f.write("a\n")
-    with _pytest.raises(IOError, match="truncat"):
+    # truncate the last chunk to simulate a lost (non-fsynced) write
+    with open(tmp_path / "spool" / unix_socket._chunk_name(2, 3), "w") as f:
+        f.write("")
+    with pytest.raises(IOError, match="truncat"):
         replay(r, 0, 3)
     # the intact prefix still replays fine
     assert replay(r, 0, 1) == [("a",)]
+
+
+def test_frame_is_the_one_line_framing():
+    """Both receive paths frame through _frame: split on LF, drop the CR
+    of a CRLF, decode with replacement, keep the unterminated rest until
+    EOF, then emit it as the last record."""
+    assert _frame(b"a\nb\r\nc", eof=False) == (["a", "b"], b"c")
+    assert _frame(b"a\nb\r\nc", eof=True) == (["a", "b", "c"], b"")
+    assert _frame(b"x\ry\n\xff\n", eof=False) == (["x\ry", "\ufffd"], b"")
+    assert _frame(b"", eof=True) == ([], b"")
+
+
+def test_chunk_spool_read_yields_bounded_batches(tmp_path):
+    """chunk_spool's read goes through the shared chunk reader: a
+    producer chunk larger than BATCH_LINES arrives as several bounded
+    Arrow batches, in order, not one unbounded batch."""
+    from s4_spark.sources.chunk_spool import (
+        BATCH_LINES,
+        ChunkPartition,
+        ChunkSpoolStreamReader,
+        chunk_path,
+    )
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    n = 2 * BATCH_LINES + 1
+    with open(chunk_path(spool, 0), "w") as f:
+        f.writelines(f"r{i}\n" for i in range(n))
+    r = ChunkSpoolStreamReader({"path": spool})
+    batches = list(r.read(ChunkPartition(chunk=0, path=spool)))
+    assert [b.num_rows for b in batches] == [BATCH_LINES, BATCH_LINES, 1]
+    vals = [v for b in batches for v in b.column("value").to_pylist()]
+    assert vals == [f"r{i}" for i in range(n)]
