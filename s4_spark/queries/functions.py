@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from s4_spark.queries.helpers import dsum, ordered_small, t
 from s4_spark.queries.registry import query
+from s4_spark.session import scoped_conf
 
 
 @query(
@@ -815,9 +816,9 @@ def q277(spark, sf_dir):
     sf0.1, found by the round-7 scale probe). The entry therefore
     declares its own provable bound — count(customer) x
     (bit_length(max key) + 1), one aggregate-pushdown job — sets the
-    limit to exactly that for ONE eager materialization, and restores
-    it in ``finally`` (the q194 conf-scoping discipline; the runaway
-    guardrail stays meaningful instead of being cranked to infinity).
+    limit to exactly that, scoped to ONE eager materialization (the
+    runaway guardrail stays meaningful instead of being cranked to
+    infinity).
     The plan pin (UnionLoop + hash agg) runs on the un-materialized
     builder ``_q277_frame``. The oracle is the byte-identical
     statement modulo integer-division spelling (Spark ``DIV`` vs
@@ -826,20 +827,9 @@ def q277(spark, sf_dir):
         t(spark, sf_dir, "customer").agg(F.count("*"), F.max("c_custkey")).first()
     )
     bound = int(n) * (int(mx).bit_length() + 1)
-    # get(conf, None) is None when the conf was never explicitly set;
-    # restoring via set() in that case would leave an explicitly-set
-    # session conf behind (the session-leak contract
-    # bench/session_leak_audit.py enforces — its first sweep caught
-    # exactly this line), so unset instead
-    saved = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
-    spark.conf.set("spark.sql.cteRecursionRowLimit", str(max(bound, 1_000_000)))
-    try:
+    limit = {"spark.sql.cteRecursionRowLimit": str(max(bound, 1_000_000))}
+    with scoped_conf(spark, limit):
         return _q277_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.cteRecursionRowLimit")
-        else:
-            spark.conf.set("spark.sql.cteRecursionRowLimit", saved)
 
 
 def _q277_frame(spark, sf_dir):

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from s4_spark.operators.asof import asof_join
 from s4_spark.queries.helpers import ordered_small, dsum, sql_dsum, t
 from s4_spark.queries.registry import query
+from s4_spark.session import scoped_conf
 
 
 @query(
@@ -644,25 +645,14 @@ def q194(spark, sf_dir):
     blooms (file skipping on stored keys): this one is per-query,
     derived from the other join side.
 
-    Conf scoping: the injection gates are set for the duration of ONE
-    eager materialization and restored in ``finally`` — leaking
-    ``autoBroadcastJoinThreshold=-1`` would degrade every later join on
-    a shared session (the q181 save/restore discipline). The returned
+    Conf scoping: the injection gates are scoped (``scoped_conf``) to
+    ONE eager materialization — leaking ``autoBroadcastJoinThreshold=-1``
+    would degrade every later join on a shared session. The returned
     frame is the small materialized aggregate. Plan shape (bloom_filter_agg
     on the creation side, might_contain above the fact scan) is pinned in
     tests/test_plans.py on the un-materialized plan under the same confs."""
-    saved = {}
-    for k, v in _BLOOM_CONFS.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _BLOOM_CONFS):
         return _q194_join(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 _CBO_CONFS = {
@@ -744,22 +734,11 @@ def q201(spark, sf_dir):
     sizes; the ANALYZE habit is what a production 100 TB warehouse
     runs after every load.
 
-    Conf scoping: cbo flags + the no-broadcast gate are active for one
-    eager materialization and restored in ``finally`` (q194's
-    discipline)."""
+    Conf scoping: cbo flags + the no-broadcast gate are scoped to one
+    eager materialization, as in q194."""
     names = _cbo_tables(spark, sf_dir)
-    saved = {}
-    for k, v in _CBO_CONFS.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _CBO_CONFS):
         return spark.sql(_q201_sql(names)).localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @query(
@@ -1584,22 +1563,12 @@ def q260(spark, sf_dir):
     unless forceOptimizeSkewedJoin overrides it — the oracle certifies
     the override changes no results. Conf scoping follows q194:
     thresholds shrink to test-SF sizes and broadcast is disabled for
-    ONE eager materialization, restored in ``finally``. The companion
-    test materializes the same frame under these confs and asserts the
-    executed plan carries ``skew=true`` on the sort-merge join — the
-    mechanism demonstrably fired, not merely configured."""
-    saved = {}
-    for k, v in _SKEW_CONFS.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    ONE eager materialization. The companion test materializes the same
+    frame under these confs and asserts the executed plan carries
+    ``skew=true`` on the sort-merge join — the mechanism demonstrably
+    fired, not merely configured."""
+    with scoped_conf(spark, _SKEW_CONFS):
         return _q260_join(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 _STRATEGY_SWITCH_CONFS = {
@@ -1649,20 +1618,10 @@ def q270(spark, sf_dir):
     not declared: cardinality estimates after a 0.1%-selective filter
     are exactly where static costing is weakest, and the adaptive
     threshold means the expensive fact-side sort never runs once the
-    true size is known. Conf scoping follows q194's save/restore around
-    one eager materialization."""
-    saved = {}
-    for k, v in _STRATEGY_SWITCH_CONFS.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    true size is known. Confs are scoped to one eager materialization,
+    as in q194."""
+    with scoped_conf(spark, _STRATEGY_SWITCH_CONFS):
         return _q270_join(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @query(
@@ -1778,25 +1737,10 @@ def q279(spark, sf_dir):
     so the rewrite is always sound. DPP (q200) needs a partitioned
     layout; the bloom needs NOTHING from storage, which makes it the
     semi-join reduction that still fires on unpartitioned,
-    unbucketed data. Confs are scoped-and-restored; the oracle
-    certifies the rewrite is pure optimization."""
-    saved = {}
-    for k, v in _Q279_BLOOM_CONFS.items():
-        # get(k, None) is None when the conf is not EXPLICITLY set —
-        # get(k) would fetch the registered default and the finally
-        # would then pin that default as an explicit session conf
-        # (the restore-to-default leak bench/session_leak_audit.py
-        # caught here and at q277/q275 in its first sweep)
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    unbucketed data. Confs are scoped to one eager materialization; the
+    oracle certifies the rewrite is pure optimization."""
+    with scoped_conf(spark, _Q279_BLOOM_CONFS):
         return _q279_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @query(

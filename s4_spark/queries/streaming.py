@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from s4_spark.queries.helpers import dsum, ordered_small, sql_dsum, t
 from s4_spark.queries.registry import query
 from s4_spark.streaming.rigs import (
+    ROCKSDB_CONF,
     drain,
     drain_to_memory,
     events_stream,
@@ -685,15 +686,12 @@ def _q174(spark, sf_dir):
     final snapshot equals the batch aggregate), so the two entries pin
     batch-equivalence of BOTH stateful APIs side by side.
 
-    The provider conf is set here — not only in get_spark() — because
-    transformWithState REQUIRES RocksDB and the driver may run this on a
-    vanilla session (same self-sufficiency rationale as catalog.table)."""
+    The runner scopes the RocksDB provider conf to the run — not only
+    get_spark() sets it — because transformWithState REQUIRES RocksDB
+    and the driver may run this on a vanilla session (same
+    self-sufficiency rationale as catalog.table)."""
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     _ship_vendored_protobuf(spark)
     ev = events_stream(spark, sf_dir).select("user_id", "value")
 
@@ -724,7 +722,9 @@ def _q174(spark, sf_dir):
         outputMode="Update",
         timeMode="None",
     )
-    return run_to_memory(out, mode="update", tag="q174").orderBy("user_id")
+    return run_to_memory(
+        out, mode="update", tag="q174", conf=ROCKSDB_CONF
+    ).orderBy("user_id")
 
 
 if transform_with_state_available():  # pragma: no cover - env-dependent
@@ -1260,10 +1260,6 @@ def _q240(spark, sf_dir):
     user_id."""
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     _ship_vendored_protobuf(spark)
     ev = events_stream(spark, sf_dir).select("user_id", "value", "event_id")
 
@@ -1304,7 +1300,7 @@ def _q240(spark, sf_dir):
         outputMode="Update",
         timeMode="None",
     )
-    snap = run_to_memory(out, mode="update", tag="q240")
+    snap = run_to_memory(out, mode="update", tag="q240", conf=ROCKSDB_CONF)
     return (
         snap.groupBy("user_id")
         .agg(
@@ -1359,10 +1355,6 @@ def _q241(spark, sf_dir):
     """
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     _ship_vendored_protobuf(spark)
 
     GAP_US = 30 * 60 * 1_000_000
@@ -1471,7 +1463,7 @@ def _q241(spark, sf_dir):
     # hit maxResultSize at 100M events (~30M sessions) while the
     # operator itself was healthy; run_to_parquet keeps emissions
     # executor-side, same update-mode row set
-    snap = run_to_parquet(out, mode="update", tag="q241")
+    snap = run_to_parquet(out, mode="update", tag="q241", conf=ROCKSDB_CONF)
     return snap.filter(F.col("user_id") >= 0).orderBy("user_id", "session_start_us")
 
 
@@ -1532,10 +1524,6 @@ def _q247(spark, sf_dir):
     stream shuffles once on user_id; state stays 3 int64s per user."""
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     _ship_vendored_protobuf(spark)
 
     DEADLINE_US = 48 * 3600 * 1_000_000
@@ -1637,7 +1625,7 @@ def _q247(spark, sf_dir):
         initialState=warm.groupBy("user_id"),
     )
     ckpt = scratch(f"q247_ckpt_{os.getpid()}")
-    run_to_memory(out, "update", tag="q247", checkpoint=ckpt)
+    run_to_memory(out, "update", tag="q247", checkpoint=ckpt, conf=ROCKSDB_CONF)
     st = spark.read.format("statestore").option("stateVarName", "agg").load(ckpt)
     final = st.select(
         F.col("key.user_id").alias("user_id"),
@@ -1728,20 +1716,15 @@ def q251(spark, sf_dir):
     directory (the conf not merely set but exercised). Counts and the
     exact-decimal value sums shuffle once on user_id; the memory sink
     reads the complete-mode state table after the second run."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    # Scoped to each run by the runner: this conf leaked at session
-    # scope once and an x1000 probe measured the blast radius — a q258
-    # run AFTER q251 in one session took 188 s vs 23 s solo (changelog
-    # mode defers snapshot work to the shared background maintenance
-    # thread, and q251's 1.5M-row complete-mode stores keep it busy long
-    # after this entry returns). providerClass above is left set
-    # deliberately: it matches get_spark()'s default and exists for
-    # vanilla sessions.
+    # Scoped to each run by the runner: the changelog conf leaked at
+    # session scope once and an x1000 probe measured the blast radius —
+    # a q258 run AFTER q251 in one session took 188 s vs 23 s solo
+    # (changelog mode defers snapshot work to the shared background
+    # maintenance thread, and q251's 1.5M-row complete-mode stores keep
+    # it busy long after this entry returns).
     changelog = {
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true"
+        **ROCKSDB_CONF,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     }
     ev = t(spark, sf_dir, "events").select("event_id", "user_id", "value")
     landing = scratch(f"q251_landing_{os.path.basename(sf_dir)}")
@@ -1795,10 +1778,6 @@ def _q252(spark, sf_dir):
     proof (un-evicted state would carry phase-1 counts over)."""
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     _ship_vendored_protobuf(spark)
     ev = t(spark, sf_dir, "events").select("event_id", "user_id")
     landing = scratch(f"q252_landing_{os.path.basename(sf_dir)}")
@@ -1878,7 +1857,7 @@ def _q252(spark, sf_dir):
         saw_data = False
         guard_tripped = False
         hang_guard = time.time() + 3600
-        with running(writer) as q:
+        with running(writer, ROCKSDB_CONF) as q:
             while q.isActive:
                 if any(int(p["numInputRows"]) > 0 for p in progress_of(q)):
                     saw_data = True

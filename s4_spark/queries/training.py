@@ -24,6 +24,7 @@ from s4_spark.operators import similarity as S
 from s4_spark.queries.helpers import ordered_small, davg, sql_davg, t, ts
 from s4_spark.queries.registry import query
 from s4_spark.scratch import scratch_root
+from s4_spark.session import scoped_conf
 
 # DuckDB mirror of operators/corpus.hash_bucket (md5-prefix bucket).
 _DUCK_HB = "(('0x' || substr(md5(text), 1, 6))::BIGINT % 1000)"
@@ -1565,8 +1566,8 @@ def q181(spark, sf_dir):
     touch few partitions; pack-bin sharding (q176) would cascade a
     content change through the lang's whole packing order, so the
     incremental table keys on identity, and packing runs downstream per
-    refreshed partition. The conf flip is saved/restored — no session
-    leak (same hygiene as the nanos conf, ADVICE r3)."""
+    refreshed partition. The conf flip is scoped to the delta write —
+    no session leak."""
     import shutil as _shutil
 
     d = t(spark, sf_dir, "documents").select(
@@ -1598,16 +1599,9 @@ def q181(spark, sf_dir):
             F.pmod("doc_id", F.lit(4)).alias("shard"),
         )
     )
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    saved = spark.conf.get(conf, None)
-    try:
-        spark.conf.set(conf, "dynamic")
+    dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    with scoped_conf(spark, dynamic):
         delta.write.partitionBy("lang", "shard").mode("overwrite").parquet(path)
-    finally:
-        if saved is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, saved)
     back = spark.read.parquet(path)
     return (
         back.groupBy("lang", "shard")

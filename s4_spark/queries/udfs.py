@@ -476,9 +476,10 @@ def q275(spark, sf_dir):
 
     # ps.option_context restores by explicitly SETTING the previous
     # value, which pins the library default as a session conf after
-    # this entry returns (restore-to-default leak; caught by
-    # bench/session_leak_audit.py). Remember whether it was set and
-    # unset afterwards — the plan is already built by then.
+    # this entry returns (a restore-to-default leak the per-entry conf
+    # check in tests/conftest.py fails). Remember whether it was set
+    # and unset afterwards — the plan is already built by then. Not
+    # scoped_conf: the option has its own API and value encoding.
     _IDX_CONF = "pandas_on_Spark.compute.default_index_type"
     was_set = spark.conf.get(_IDX_CONF, None)
     try:

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -57,6 +58,25 @@ def env_driver_memory() -> str:
 
 
 DEFAULT_CPUS = env_cpus()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for the body, then put every key back
+    the way it was: unset if it was unset, else its old value. Restore
+    never uses ``get(k)`` without a default — that fetches the
+    REGISTERED default and would pin it as an explicit session conf."""
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

@@ -26,6 +26,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from s4_spark.catalog import normalize_events
 from s4_spark.scratch import scratch_root
+from s4_spark.session import scoped_conf
 
 _counter = itertools.count()
 
@@ -39,33 +40,30 @@ _counter = itertools.count()
 #: of the rig, not the box; other streams keep session defaults.
 REPLAY_CONF = {"spark.sql.shuffle.partitions": "4"}
 
+#: Run conf for the transformWithState and changelog-checkpoint entries:
+#: they REQUIRE the RocksDB state store, and a vanilla session does not
+#: default to it. A query fixes its state-store provider when it starts
+#: and records it in the checkpoint, so scoping the conf to the run is
+#: enough — later readers of that checkpoint get the same provider.
+ROCKSDB_CONF = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+}
+
 
 @contextmanager
 def running(
     writer: DataStreamWriter, conf: dict | None = None, table: str | None = None
 ):
     """Start ``writer`` (``toTable(table)`` when a table is named) with
-    ``conf`` set on the session, yield the live query, and always stop
-    it. Each conf key is restored afterwards — unset if it was unset:
-    ``get(k)`` without a default would fetch the REGISTERED default and
-    pin it as an explicit conf on restore."""
-    spark = writer._spark
-    conf = conf or {}
-    saved = {k: spark.conf.get(k, None) for k in conf}
-    try:
-        for k, v in conf.items():
-            spark.conf.set(k, v)
+    ``conf`` scoped to the run (:func:`~s4_spark.session.scoped_conf`),
+    yield the live query, and always stop it."""
+    with scoped_conf(writer._spark, conf or {}):
         q = writer.toTable(table) if table else writer.start()
         try:
             yield q
         finally:
             q.stop()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def progress_of(q: StreamingQuery) -> list:
@@ -169,14 +167,17 @@ def drain_to_memory(
     """:func:`drain` ``df`` into a memory sink (availableNow unless
     ``steps`` phase it) and return the sink contents as a batch
     DataFrame plus the run's progress. The sink's temp view is dropped
-    before returning — the frame keeps the sink's rows after that."""
+    before returning — the frame keeps the sink's rows after that — and
+    so is the checkpoint, unless the caller passed one in to read
+    state from."""
     spark = df.sparkSession
     name = f"s4_mem_{tag}_{next(_counter)}"
+    ckpt = checkpoint or scratch(f"ckpt_{name}")
     writer = (
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
-        .option("checkpointLocation", checkpoint or scratch(f"ckpt_{name}"))
+        .option("checkpointLocation", ckpt)
     )
     if not steps:
         writer = writer.trigger(availableNow=True)
@@ -185,6 +186,8 @@ def drain_to_memory(
         return spark.table(name), progress
     finally:
         spark.catalog.dropTempView(name)
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_to_memory(
@@ -287,7 +290,7 @@ def read_batched_parquet(spark: SparkSession, out: str, schema) -> DataFrame:
 
 
 def run_to_parquet(
-    df: DataFrame, mode: str = "update", tag: str = "q"
+    df: DataFrame, mode: str = "update", tag: str = "q", conf: dict | None = None
 ) -> DataFrame:
     """Run a streaming DataFrame to completion with availableNow and
     return the accumulated emissions, like :func:`run_to_memory`, but
@@ -306,17 +309,24 @@ def run_to_parquet(
     sink is append-only and the stateful rigs emit in update mode. The
     read-back pins the schema explicitly so a zero-emission run returns
     an empty frame instead of UNABLE_TO_INFER_SCHEMA (the q252 lesson).
+    The checkpoint is removed once the drain returns; the sink dir stays,
+    because the returned frame reads it lazily.
     """
     name = f"s4_pq_{tag}_{next(_counter)}"
     out = scratch(f"sink_{name}")
+    ckpt = scratch(f"ckpt_{name}")
     os.makedirs(out, exist_ok=True)
-    drain(
-        df.writeStream.foreachBatch(idempotent_batch_sink(out))
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch(f"ckpt_{name}"))
-    )
+    try:
+        drain(
+            df.writeStream.foreachBatch(idempotent_batch_sink(out))
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt),
+            conf=conf,
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return read_batched_parquet(df.sparkSession, out, df.schema)
 
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -77,9 +78,30 @@ def assert_oracle_match(spark_df, duck_con, oracle_sql: str, name: str = "?"):
         )
 
 
-def assert_no_stream_leaks(spark, name):
-    """Nothing ``name`` ran is left behind: no streaming query running
-    and no memory-sink view registered."""
+def session_snapshot(spark) -> tuple[dict, dict]:
+    """What an entry must leave as it found it: the session's explicitly
+    set SQL confs and the live Hadoop conf's ``fs.s3a.*`` keys. Each map
+    crosses py4j as one JSON string — converting it entry by entry costs
+    ~0.1 s a snapshot, about a minute over the oracle sweep."""
+    mapper = spark._jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    hadoop = spark._jsc.hadoopConfiguration().getPropsWithPrefix("fs.s3a.")
+    return (
+        json.loads(mapper.writeValueAsString(spark.conf._jconf.getAllAsJava())),
+        json.loads(mapper.writeValueAsString(hadoop)),
+    )
+
+
+def assert_no_leaks(spark, name, before):
+    """Nothing ``name`` ran is left behind: no streaming query running,
+    no memory-sink view registered, and no SQL conf or ``fs.s3a.*``
+    Hadoop key changed since ``before`` (a :func:`session_snapshot`
+    taken before it ran)."""
     assert spark.streams.active == [], f"{name} left a streaming query running"
     left = [t.name for t in spark.catalog.listTables(pattern="s4_mem_*")]
     assert not left, f"{name} left memory-sink views {left}"
+    after = session_snapshot(spark)
+    for kind, b, a in zip(("SQL conf", "Hadoop conf fs.s3a."), before, after):
+        changed = {
+            k: (b.get(k), a.get(k)) for k in b.keys() | a.keys() if b.get(k) != a.get(k)
+        }
+        assert not changed, f"{name} changed {kind} keys (before, after): {changed}"

@@ -6,7 +6,12 @@ from __future__ import annotations
 import pytest
 
 from s4_spark.queries import REGISTRY
-from tests.conftest import SF_DIR, assert_no_stream_leaks, assert_oracle_match
+from tests.conftest import (
+    SF_DIR,
+    assert_no_leaks,
+    assert_oracle_match,
+    session_snapshot,
+)
 
 ORACLED = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 SMOKE_ONLY = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
@@ -15,18 +20,20 @@ SMOKE_ONLY = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
 @pytest.mark.parametrize("name", ORACLED)
 def test_oracle_match(spark, duck, name):
     qd = REGISTRY[name]
+    before = session_snapshot(spark)
     df = qd.fn(spark, SF_DIR)
     assert_oracle_match(df, duck, qd.oracle, name=name)
-    assert_no_stream_leaks(spark, name)
+    assert_no_leaks(spark, name, before)
 
 
 @pytest.mark.parametrize("name", SMOKE_ONLY)
 def test_smoke_rows(spark, name):
     qd = REGISTRY[name]
+    before = session_snapshot(spark)
     df = qd.fn(spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
-    assert_no_stream_leaks(spark, name)
+    assert_no_leaks(spark, name, before)
 
 
 def test_q163_observed_metrics_match(spark, duck):

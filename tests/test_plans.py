@@ -20,6 +20,7 @@ import os
 import pytest
 
 from s4_spark.queries import REGISTRY
+from s4_spark.session import scoped_conf
 from tests.conftest import SF_DIR
 
 
@@ -416,10 +417,7 @@ def test_runtime_bloom_filter_join_pruning(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, confs):
         li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
         o = spark.read.parquet(f"{SF_DIR}/orders.parquet").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -430,14 +428,8 @@ def test_runtime_bloom_filter_join_pruning(spark):
             .count()
         )
         p = j._jdf.queryExecution().optimizedPlan().toString()
-        assert "bloom_filter_agg" in p, p
-        assert "might_contain" in p, p
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    assert "bloom_filter_agg" in p, p
+    assert "might_contain" in p, p
 
 
 def test_source_cap_pushes_window_group_limit(spark):
@@ -574,15 +566,8 @@ def test_incremental_refresh_leaves_other_partitions_untouched(spark):
     before_other = snapshot("lang=[!e]*")
     before_en = snapshot("lang=en")
     assert before_other and before_en
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         delta.write.partitionBy("lang", "shard").mode("overwrite").parquet(root)
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
     after_other = snapshot("lang=[!e]*")
     after_en = snapshot("lang=en")
     assert after_other == before_other, "non-delta partitions were rewritten"
@@ -675,22 +660,13 @@ def test_runtime_bloom_join_injects_filter(spark):
     exists to demonstrate."""
     from s4_spark.queries.joins import _BLOOM_CONFS, _q194_join
 
-    saved = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _BLOOM_CONFS):
         df = _q194_join(spark, SF_DIR)
         p = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        assert "bloom_filter_agg" in p, p
-        assert "might_contain" in p, p
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    assert "bloom_filter_agg" in p, p
+    assert "might_contain" in p, p
 
 
 def test_cdc_apply_full_outer_is_shuffled_hash(spark):
@@ -738,24 +714,15 @@ def test_cbo_reorders_selective_dim_innermost(spark):
     from s4_spark.queries.joins import _CBO_CONFS, _cbo_tables, _q201_sql
 
     names = _cbo_tables(spark, SF_DIR)
-    saved = {k: spark.conf.get(k, None) for k in _CBO_CONFS}
-    for k, v in _CBO_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _CBO_CONFS):
         df = spark.sql(_q201_sql(names))
         p = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "cost"
         )
-        joins = [l for l in p.splitlines() if "Join Inner" in l]
-        assert joins, p
-        assert "r_regionkey" in joins[-1], joins  # innermost = dim join
-        assert "c_nationkey" in joins[0], joins  # outermost = big join
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    joins = [l for l in p.splitlines() if "Join Inner" in l]
+    assert joins, p
+    assert "r_regionkey" in joins[-1], joins  # innermost = dim join
+    assert "c_nationkey" in joins[0], joins  # outermost = big join
 
 
 def test_zone_map_predicate_prunes_parquet_files(spark):
@@ -1112,20 +1079,10 @@ def test_q260_skew_join_actually_splits(spark):
     when the partial agg shares the join's stage.)"""
     from s4_spark.queries.joins import _SKEW_CONFS, _q260_join
 
-    saved = {}
-    for k, v in _SKEW_CONFS.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _SKEW_CONFS):
         df = _q260_join(spark, SF_DIR)
         df.collect()
         executed = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert "skew=true" in executed, executed[:2000]
     assert "skewed" in executed, executed[:2000]
 
@@ -1189,20 +1146,10 @@ def test_q270_aqe_switches_smj_to_broadcast(spark):
     have."""
     from s4_spark.queries.joins import _STRATEGY_SWITCH_CONFS, _q270_join
 
-    saved = {}
-    for k, v in _STRATEGY_SWITCH_CONFS.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _STRATEGY_SWITCH_CONFS):
         df = _q270_join(spark, SF_DIR)
         df.collect()
         executed = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert "== Initial Plan ==" in executed, executed[:500]
     final, initial = executed.split("== Initial Plan ==")
     assert "SortMergeJoin" in initial, initial[:2000]
@@ -1309,27 +1256,14 @@ def test_q279_bloom_filter_injected_on_probe_side(spark):
     the join must actually be the shuffle join the rewrite targets."""
     from s4_spark.queries.joins import _Q279_BLOOM_CONFS, _q279_frame
 
-    saved = {}
-    for k, v in _Q279_BLOOM_CONFS.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _Q279_BLOOM_CONFS):
         df = _q279_frame(spark, SF_DIR)
         p = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        assert "might_contain" in p, p[:4000]
-        assert "SortMergeJoin" in p or "ShuffledHashJoin" in p, p[:4000]
-        assert "BroadcastHashJoin" not in p, p[:4000]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    assert "might_contain" in p, p[:4000]
+    assert "SortMergeJoin" in p or "ShuffledHashJoin" in p, p[:4000]
+    assert "BroadcastHashJoin" not in p, p[:4000]
 
 
 def test_q281_pair_predicate_stays_filter_not_nlj(spark):

@@ -1,10 +1,11 @@
-"""Session defaults fit the box, and the two session env vars are
-validated. No Spark session needed: these are the pure helpers
-``get_spark`` reads its defaults from."""
+"""Session defaults fit the box, the two session env vars are
+validated, and :func:`~s4_spark.session.scoped_conf` puts every key
+back the way it found it."""
 
 from __future__ import annotations
 
 import os
+from contextlib import nullcontext
 
 import pytest
 
@@ -44,3 +45,23 @@ def test_bad_driver_memory_value_names_the_variable(monkeypatch, bad):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", bad)
     with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
         session.env_driver_memory()
+
+
+@pytest.mark.parametrize("body_raises", [False, True])
+def test_scoped_conf_restores_unset_and_set_keys(spark, body_raises):
+    """A key unset before is unset afterwards — not pinned to its
+    registered default — and a key set before gets its old value back,
+    also when the body raises."""
+    unset_key = "spark.sql.cteRecursionRowLimit"
+    set_key = "spark.sql.shuffle.partitions"
+    assert unset_key not in spark.conf.getAll
+    old = spark.conf.get(set_key, None)
+    assert old is not None
+    outcome = pytest.raises(RuntimeError) if body_raises else nullcontext()
+    with outcome, session.scoped_conf(spark, {unset_key: "7", set_key: "3"}):
+        assert spark.conf.get(unset_key) == "7"
+        assert spark.conf.get(set_key) == "3"
+        if body_raises:
+            raise RuntimeError("body failed")
+    assert unset_key not in spark.conf.getAll
+    assert spark.conf.get(set_key, None) == old

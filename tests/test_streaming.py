@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from s4_spark.queries.registry import REGISTRY
-from tests.conftest import SF_DIR, assert_no_stream_leaks
+from tests.conftest import SF_DIR, assert_no_leaks, session_snapshot
 
 
 def test_q094_watermark_drops_late_rows(spark):
@@ -537,7 +537,11 @@ def test_q251_restores_changelog_conf(spark):
     188 s vs 23 s solo (every subsequent streaming query silently ran
     in changelog mode). The entry must restore the conf on exit —
     collect() the previous test's rig already ran; here just assert the
-    session is clean after a fresh invocation."""
+    session is clean after a fresh invocation.
+
+    Second case, a vanilla session (no ``providerClass`` set): the
+    RocksDB-only entries scope the provider to their run, so q174 must
+    leave it unset rather than pin RocksDB for every later query."""
     from s4_spark.queries import REGISTRY
     from tests.conftest import SMOKE_SF_DIR
 
@@ -547,6 +551,35 @@ def test_q251_restores_changelog_conf(spark):
     assert spark.conf.get(conf, None) == before, (
         "q251 leaked the changelog conf into the session"
     )
+
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    saved = spark.conf.get(provider, None)
+    spark.conf.unset(provider)
+    try:
+        REGISTRY["q174_transform_with_state"].fn(spark, SMOKE_SF_DIR).collect()
+        assert spark.conf.get(provider, None) is None, (
+            "q174 pinned the state-store provider on a vanilla session"
+        )
+    finally:
+        if saved is not None:
+            spark.conf.set(provider, saved)
+
+
+def test_run_to_memory_removes_its_scratch_checkpoint(spark, tmp_path):
+    """A checkpoint the runner made for itself is removed once the drain
+    returns; only a checkpoint the caller passed in (to read state
+    from) outlives the run."""
+    import glob
+
+    from s4_spark.scratch import scratch_root
+    from s4_spark.streaming.rigs import run_to_memory
+
+    landing = str(tmp_path / "landing")
+    spark.range(5).write.parquet(landing)
+    stream = spark.readStream.schema("id long").parquet(landing)
+    assert run_to_memory(stream, "append", tag="ckpt_cleanup").count() == 5
+    left = glob.glob(os.path.join(scratch_root(), "stream", "ckpt_s4_mem_*"))
+    assert not left, f"run_to_memory left scratch checkpoints {left}"
 
 
 def test_q252_ttl_actually_evicts(spark):
@@ -768,10 +801,9 @@ def test_replay_stops_query_and_restores_conf_when_a_phase_raises(spark):
     """A replay phase that fails to stage (here: its write raises) must
     not leave the replay query running, its memory view registered, or
     the replay conf pinned on the session."""
-    from s4_spark.streaming.rigs import REPLAY_CONF, replay
+    from s4_spark.streaming.rigs import replay
 
-    key = next(iter(REPLAY_CONF))
-    before = spark.conf.get(key, None)
+    before = session_snapshot(spark)
     p1 = spark.range(3).select(
         "id", F.timestamp_seconds(F.col("id") * 60).alias("ts")
     )
@@ -788,8 +820,7 @@ def test_replay_stops_query_and_restores_conf_when_a_phase_raises(spark):
 
     with pytest.raises(Exception, match="injected phase failure"):
         replay(spark, [(p1,), (bad,)], build, tag="leak_replay")
-    assert_no_stream_leaks(spark, "replay")
-    assert spark.conf.get(key, None) == before
+    assert_no_leaks(spark, "replay", before)
 
 
 def test_available_now_drain_stops_query_and_restores_conf_on_failure(
@@ -801,7 +832,7 @@ def test_available_now_drain_stops_query_and_restores_conf_on_failure(
     from s4_spark.streaming.rigs import run_to_memory
 
     key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key, None)
+    before = session_snapshot(spark)
     landing = str(tmp_path / "landing")
     spark.range(5).write.parquet(landing)
     stream = spark.readStream.schema("id long").parquet(landing).select(
@@ -811,8 +842,7 @@ def test_available_now_drain_stops_query_and_restores_conf_on_failure(
     )
     with pytest.raises(Exception, match="injected batch failure"):
         run_to_memory(stream, "append", tag="leak_drain", conf={key: "3"})
-    assert_no_stream_leaks(spark, "run_to_memory")
-    assert spark.conf.get(key, None) == before
+    assert_no_leaks(spark, "run_to_memory", before)
 
 
 def test_run_once_leaves_config_unchanged(spark, tmp_path):
