@@ -112,7 +112,13 @@ def with_time_partitions(df: DataFrame, cfg: S4Config) -> DataFrame:
     """A17: year=/month=/day= keys — from a field of the (JSON) record
     when ``event_time_col`` is configured, else processing time (the
     reference uses the local wall clock, lake/lake.go:79; we use UTC and
-    prefer event time so the layout is reproducible and prunable)."""
+    prefer event time so the layout is reproducible and prunable).
+
+    Processing time is ``current_date``, not ``current_timestamp``: the
+    keys are the same, but Spark inlines the batch's value into the
+    generated code as a literal. A timestamp differs every trigger, so
+    each batch would compile new classes; a date stays the same all day,
+    so the codegen cache hits."""
     if cfg.event_time_col:
         if not cfg.json_schema:
             raise ValueError("event_time_col requires json_schema")
@@ -134,7 +140,7 @@ def with_time_partitions(df: DataFrame, cfg: S4Config) -> DataFrame:
         else:
             ts = F.from_json("value", cfg.json_schema)[cfg.event_time_col]
     else:
-        ts = F.current_timestamp()
+        ts = F.current_date()
     return (
         df.withColumn("year", F.year(ts))
         .withColumn("month", F.month(ts))

@@ -1178,8 +1178,7 @@ def q246(spark, sf_dir):
     the full DataSourceStreamReader protocol — explicit {"chunk": N}
     offsets checkpointed by Spark, partitions(start, end) fanning each
     micro-batch into one InputPartition per chunk for PARALLEL
-    executor-side reads (since round 10 the q107/q108 socket source
-    drains its spool the same way), and commit(end) ACKING the consumed
+    executor-side reads, and commit(end) ACKING the consumed
     prefix by deleting it — the reference's drain-after-flush spool
     semantics keyed by Spark's own committed offset rather than a
     delete-before-send race. documents.lang spread over 8 chunk files

@@ -1,6 +1,8 @@
 """Chunked-spool streaming source with REAL offset management — the
-full Spark 4 Python DataSource streaming protocol (and, since round
-10, the pattern sources/unix_socket.py's stream reader follows too):
+full Spark 4 Python DataSource streaming protocol. The chunks come from
+an outside producer, so a batch's records are on disk, not in driver
+memory (unlike sources/unix_socket.py, which serves its batches from
+the driver):
 
 - offsets are explicit dicts ({"chunk": N}), persisted by Spark's
   checkpoint like any V2 source offset;

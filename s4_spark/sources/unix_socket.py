@@ -26,19 +26,22 @@ Semantics carried over:
   river/liner.go:75-87 — giving at-most-once; here a chunk is deleted
   only in ``commit()``, once Spark has committed every record in it).
 
-The streaming reader is a full ``DataSourceStreamReader`` in the
-sources/chunk_spool.py shape: socket RECEIVE stays a single driver-side
-thread, which is the reference's own topology (one endpoint, one
-listener — input/unix.go:19-34); ``latestOffset`` writes what it
-received as new chunk files ``chunk-{lo:020d}-{hi:020d}.txt`` holding
-global records [lo, hi), at most ``_CHUNK_LINES`` each; and
-``partitions(start, end)`` plans one InputPartition per chunk, so
-executors read the spool in parallel, one Arrow batch per chunk. No
-spool byte is ever rewritten: the only writes are new chunks (``.tmp``
-then rename) and deletions of committed chunks. On a cluster the spool
-directory must be a shared filesystem (exactly like
-sources/chunk_spool.py); ingest bandwidth is still bounded by the one
-socket, but parsing/decoding/downstream work scales with executors.
+The streaming reader is a ``SimpleDataSourceStreamReader``: socket
+RECEIVE is a single driver-side thread, which is the reference's own
+topology (one endpoint, one listener — input/unix.go:19-34), and
+``read(start)`` writes what it received as new chunk files
+``chunk-{lo:020d}-{hi:020d}.txt`` holding global records [lo, hi), at
+most ``_CHUNK_LINES`` each, then hands the same records to Spark as
+Arrow batches. Spark's prefetch path ships them from the driver-side
+runner straight to the JVM, so a micro-batch runs no Python task: the
+records are already in driver memory when the offset is reported, and a
+per-batch executor read of the spool cost more in Python worker set-up
+than the read itself. The spool is read only for replay
+(``readBetweenOffsets``), after a restart. No spool byte is ever
+rewritten: the only writes are new chunks (``.tmp`` then rename) and
+deletions of committed chunks. Replay runs as an executor task, so on a
+cluster the spool directory must be a shared filesystem (exactly like
+sources/chunk_spool.py).
 """
 
 from __future__ import annotations
@@ -48,21 +51,20 @@ import re
 import socket
 import threading
 import time
-from dataclasses import dataclass
 from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 
 from s4_spark.sources.chunk_spool import line_batches
 
 _CONNECT_TIMEOUT_S = 5.0
 _POLL_TIMEOUT_S = 0.05
-# Records per spool chunk, hence per InputPartition of a planned range.
+# Records per spool chunk, hence per Arrow batch a read serves.
 _CHUNK_LINES = 8192
 _CHUNK_RE = re.compile(r"chunk-(\d{20})-(\d{20})\.txt")
 
@@ -127,43 +129,36 @@ def _list_chunks(spool_dir: str) -> list[tuple[int, int]]:
     )
 
 
-@dataclass
-class _ChunkSlice(InputPartition):
-    """Global records [lo, hi) of the chunk holding [chunk_lo, chunk_hi)."""
-
-    spool_dir: str
-    chunk_lo: int
-    chunk_hi: int
-    lo: int
-    hi: int
-
-
-class _SpoolingStreamReader(DataSourceStreamReader):
-    """Socket receiver + durable chunk spool on the driver; partition-
-    parallel spool drain on the executors.
+class _SpoolingStreamReader(SimpleDataSourceStreamReader):
+    """Socket receiver + durable chunk spool, serving every micro-batch
+    from the driver.
 
     Offsets are GLOBAL record indexes (monotone across the query's
     lifetime). The spool is a directory of immutable chunk files, each
     holding the records [lo, hi) its name says.
 
-    Driver side: a background thread receives from the socket (client
-    ``connect`` or server ``listen`` fan-in); ``latestOffset`` writes
-    whatever the thread has buffered as new chunks — durable BEFORE the
-    offset is reported (write-ahead; the reference's emit-then-persist
-    order is Appendix B's loss bug) — and reports the spooled count.
-    Records spooled by a crashed incarnation but never planned into a
-    batch are counted at init (the largest chunk ``hi``), so the next
-    ``latestOffset`` plans them.
+    A background thread receives from the socket (client ``connect`` or
+    server ``listen`` fan-in). ``read(start)`` writes whatever the thread
+    has buffered as new chunks — durable BEFORE the offset is reported
+    (write-ahead; the reference's emit-then-persist order is Appendix B's
+    loss bug) — and returns those records with the spooled count. Spark
+    caches them until the batch is planned, so the spool is not read
+    back. Records spooled by a crashed incarnation but never planned
+    into a batch are counted at init (the largest chunk ``hi``), and a
+    ``read`` from below that count serves them from the chunks first.
 
-    Executor side: ``partitions(start, end)`` plans one ``_ChunkSlice``
-    per chunk overlapping the range and ``read`` serves it from that
-    chunk alone — restart replay of a planned-but-uncommitted range goes
-    through the same two calls, no separate replay path.
+    ``readBetweenOffsets(start, end)`` is restart replay of a batch the
+    engine planned but did not commit; it reads the chunks, on an
+    executor.
 
     ``commit(end)`` deletes the chunks Spark has fully committed, except
     the newest, so a reader re-created over a drained spool still starts
     at the spooled count, not 0. A committed chunk is never read again,
-    so a delete cannot race an in-flight read."""
+    so a delete cannot race an in-flight read.
+
+    pyspark's wrapper around a simple reader never calls ``stop()``: the
+    receiver's daemon threads, and the socket they hold, end with the
+    runner process that Spark stops with the query."""
 
     def __init__(self, sock_path: str, spool_dir: str, listen: bool = False):
         self._sock_path = sock_path
@@ -182,10 +177,10 @@ class _SpoolingStreamReader(DataSourceStreamReader):
         self._receiver: threading.Thread | None = None
         self._stop = threading.Event()
 
-    # The reader is pickled to the executors that serve read(partition);
+    # The reader is pickled to the executors that serve a replay;
     # thread/lock/socket state must not travel, and the executor copy
     # must not trust driver-side counters (they go stale the moment the
-    # driver spools more) — read() therefore uses ONLY partition fields.
+    # driver spools more) — readBetweenOffsets uses ONLY the chunk files.
     def __getstate__(self):
         state = self.__dict__.copy()
         for k in ("_receiver", "_stop", "_lock", "_lines"):
@@ -305,20 +300,26 @@ class _SpoolingStreamReader(DataSourceStreamReader):
         except OSError:
             pass
 
-    # -- Spark contract (driver side) -----------------------------------
+    # -- Spark contract ---------------------------------------------------
     def initialOffset(self) -> dict:
         self._ensure_receiver()
         return {"index": self._spooled}
 
-    def latestOffset(self) -> dict:
-        """Write the receiver buffer as new chunks, then report the
-        spooled count. Records become visible to planning only AFTER
-        they are durable (write-ahead) — a crash before the report
-        re-plans them from the spool at next init, so nothing is lost
-        and nothing is double-planned."""
+    def read(self, start: dict):
+        """Write the receiver buffer as new chunks, then return its
+        records, one Arrow batch per chunk, with the spooled count as the
+        end offset. Records become visible to planning only AFTER they
+        are durable (write-ahead) — a crash before the return re-plans
+        them from the spool at next init, so nothing is lost and nothing
+        is double-planned."""
+        import pyarrow as pa
+
         self._ensure_receiver()
         with self._lock:
             fresh, self._lines = self._lines, []
+        batches = []
+        if start["index"] < self._spooled:  # spooled, never planned
+            batches = list(self.readBetweenOffsets(start, {"index": self._spooled}))
         for i in range(0, len(fresh), _CHUNK_LINES):
             lines = fresh[i : i + _CHUNK_LINES]
             lo, hi = self._spooled, self._spooled + len(lines)
@@ -327,52 +328,50 @@ class _SpoolingStreamReader(DataSourceStreamReader):
                 f.writelines(ln + "\n" for ln in lines)
             os.replace(path + ".tmp", path)
             self._spooled = hi
-        return {"index": self._spooled}
+            batches.append(
+                pa.RecordBatch.from_arrays([pa.array(lines, pa.string())], ["value"])
+            )
+        # a list iterator, not a generator: Spark copies the cached one
+        return iter(batches), {"index": self._spooled}
 
-    def partitions(self, start: dict, end: dict):
-        """One InputPartition per chunk overlapping [start, end), clipped
-        to the range and read in parallel on executors. A range the
-        chunks do not cover contiguously raises: planning fewer records
-        than the range holds would drop rows silently."""
+    def readBetweenOffsets(self, start: dict, end: dict):
+        """Replay [start, end) from the chunks, one Arrow batch per chunk
+        clipped to the range. A range the chunks do not cover
+        contiguously raises, and so does a chunk holding fewer records
+        than its name says, after retries (shared-filesystem visibility
+        lag heals): a truncated chunk (an OS crash lost an unsynced write
+        after its offset was checkpointed) must not turn into silently
+        missing rows (ADVICE r10)."""
         lo, hi = start["index"], end["index"]
-        parts, at = [], lo
+        out, at = [], lo
         for c_lo, c_hi in _list_chunks(self._spool_dir):
             if at >= hi or c_lo > at:
                 break
             if c_hi > at:
                 stop = min(c_hi, hi)
-                parts.append(_ChunkSlice(self._spool_dir, c_lo, c_hi, at, stop))
+                out.append(self._chunk(c_lo, c_hi).slice(at - c_lo, stop - at))
                 at = stop
         if at < hi:
             raise IOError(
                 f"spool {self._spool_dir} has no chunk for record {at} "
-                f"of the planned range [{lo}, {hi})"
+                f"of the range [{lo}, {hi})"
             )
-        return parts
+        return iter(out)
 
-    # -- Spark contract (executor side) ----------------------------------
-    def read(self, partition: _ChunkSlice):
-        """Serve the slice as one Arrow batch. A chunk holding fewer
-        records than its name says is retried (shared-filesystem
-        visibility lag heals) and then fails the task: a truncated chunk
-        (an OS crash lost an unsynced write after its offset was
-        checkpointed) must not turn into silently missing rows
-        (ADVICE r10)."""
-        p = partition
-        path = os.path.join(p.spool_dir, _chunk_name(p.chunk_lo, p.chunk_hi))
-        want = p.chunk_hi - p.chunk_lo
+    def _chunk(self, lo: int, hi: int):
+        """Chunk [lo, hi) as one Arrow batch, or IOError."""
+        path = os.path.join(self._spool_dir, _chunk_name(lo, hi))
         for attempt in range(5):
             try:
-                batches = list(line_batches(path, want + 1))
+                batches = list(line_batches(path, hi - lo + 1))
             except FileNotFoundError:
                 batches = []
-            if sum(b.num_rows for b in batches) == want:
-                yield batches[0].slice(p.lo - p.chunk_lo, p.hi - p.lo)
-                return
+            if sum(b.num_rows for b in batches) == hi - lo:
+                return batches[0]
             time.sleep(0.05 * (attempt + 1))
         raise IOError(
             f"spool chunk {path} is missing or truncated: it does not hold "
-            f"its {want} records — failing the task rather than dropping rows"
+            f"its {hi - lo} records — failing the task rather than dropping rows"
         )
 
     def commit(self, end: dict) -> None:
@@ -392,7 +391,7 @@ class UnixLineDataSource(DataSource):
       (batch mode only — streaming reads one socket per query).
     - ``spoolDir``: (streaming) directory for the durable chunk spool;
       defaults next to the socket path. On a cluster this must be a
-      shared filesystem — executors read their planned chunks directly
+      shared filesystem — restart replay reads the chunks on an executor
       (sources/chunk_spool.py has the same contract).
     - ``mode``: (streaming) ``connect`` (default) dials the path as a
       client (reference A1); ``listen`` binds the path as the SERVER and
@@ -421,7 +420,7 @@ class UnixLineDataSource(DataSource):
     def reader(self, schema) -> _UnixLineBatchReader:
         return _UnixLineBatchReader(self._paths())
 
-    def streamReader(self, schema) -> _SpoolingStreamReader:
+    def simpleStreamReader(self, schema) -> _SpoolingStreamReader:
         paths = self._paths()
         if len(paths) != 1:
             raise ValueError("streaming reads exactly one socket per query")

@@ -1609,15 +1609,16 @@ def test_q120_dispatches_above_gate(spark, monkeypatch):
     assert got == want and len(got) > 0
 
 
-def test_unix_socket_stream_drain_is_partition_parallel(spark, tmp_path, monkeypatch):
-    """VERDICT r9 item 2: the socket source's spool DRAIN must fan out to
-    executors — every non-empty micro-batch of a live query must carry
-    one input partition per spool chunk, ceil(rows / _CHUNK_LINES) (the
-    chunk_spool shape), not the Simple reader's single driver-side
-    iterator. Receive stays one driver thread (one socket endpoint, the
-    reference's own topology); this pins that the planned ranges are
-    executor-parallel."""
-    import math
+def test_unix_socket_stream_batches_served_from_prefetch_cache(
+    spark, tmp_path, monkeypatch
+):
+    """The socket source hands Spark the records its driver-side read()
+    just spooled, and Spark ships them to the JVM from its prefetch
+    cache: no micro-batch runs a Python task to read the spool back.
+    Replay (readBetweenOffsets) is the only spool read, and here it
+    raises on any non-empty range, so a cache miss in any batch that
+    carries records fails the live query. (A fresh query's batch 0 may
+    be the empty range [0, 0), which Spark never prefetched.)"""
     import os as _os
     import socket as _socket
     import tempfile as _tf
@@ -1625,20 +1626,27 @@ def test_unix_socket_stream_drain_is_partition_parallel(spark, tmp_path, monkeyp
 
     import s4_spark.sources as sources
     from s4_spark.sources import unix_socket
+    from s4_spark.streaming.rigs import running
 
-    # register() pickles the source by value, module constants included,
-    # so the small chunk size travels to the Python worker that runs it
-    monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 2)
+    def no_replay(self, start, end):
+        if end["index"] > start["index"]:
+            raise AssertionError(f"batch [{start}, {end}) missed the prefetch cache")
+        return iter([])
+
+    # register() pickles the source by value, so the patched method
+    # travels to the Python workers that run it
+    monkeypatch.setattr(
+        unix_socket._SpoolingStreamReader, "readBetweenOffsets", no_replay
+    )
     sources.register(spark)
-    sock = _os.path.join(_tf.gettempdir(), f"s4_plan_fan_{_os.getpid()}.sock")
-    seen: list[tuple[int, int]] = []
+    sock = _os.path.join(_tf.gettempdir(), f"s4_plan_cache_{_os.getpid()}.sock")
+    seen: list[int] = []
 
     def observe(df, _bid):
-        n = df.count()
-        if n:
-            seen.append((n, df.rdd.getNumPartitions()))
+        if n := df.count():
+            seen.append(n)
 
-    q = (
+    writer = (
         spark.readStream.format("s4_unixline")
         .option("path", sock)
         .option("mode", "listen")
@@ -1646,36 +1654,32 @@ def test_unix_socket_stream_drain_is_partition_parallel(spark, tmp_path, monkeyp
         .load()
         .writeStream.foreachBatch(observe)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="300 milliseconds")
-        .start()
+        .trigger(processingTime="200 milliseconds")
     )
     try:
-        deadline = _time.time() + 20
-        client = None
-        while _time.time() < deadline:  # server binds on the first batch
-            try:
-                client = _socket.socket(_socket.AF_UNIX, _socket.SOCK_STREAM)
-                client.connect(sock)
-                break
-            except OSError:
+        with running(writer) as q:
+            for part in range(3):
+                deadline = _time.time() + 20
+                while True:  # the server binds on the first read
+                    client = _socket.socket(_socket.AF_UNIX, _socket.SOCK_STREAM)
+                    try:
+                        client.connect(sock)
+                        break
+                    except OSError:
+                        client.close()
+                        assert _time.time() < deadline, "server never bound"
+                        _time.sleep(0.05)
+                client.sendall(b"".join(b"rec%d-%d\n" % (part, i) for i in range(10)))
                 client.close()
-                client = None
-                _time.sleep(0.05)
-        assert client is not None, "listen-mode server never bound"
-        client.sendall(b"".join(b"rec%d\n" % i for i in range(10)))
-        client.close()
-        deadline = _time.time() + 30
-        while sum(n for n, _ in seen) < 10 and _time.time() < deadline:
-            _time.sleep(0.2)
+                deadline = _time.time() + 30
+                while sum(seen) < 10 * (part + 1) and q.exception() is None:
+                    assert _time.time() < deadline, seen
+                    _time.sleep(0.1)
+                assert q.exception() is None, q.exception()
     finally:
-        q.stop()
         monkeypatch.undo()
-        sources.register(spark)  # later tests get the real chunk size
-    assert sum(n for n, _ in seen) == 10, seen
-    # the partition-parallel contract, batch by batch
-    assert all(parts == math.ceil(rows / 2) for rows, parts in seen), seen
-    # and fan-out was actually observed (≥2 partitions in some batch)
-    assert any(parts >= 2 for _, parts in seen), seen
+        sources.register(spark)  # later tests get the real replay
+    assert sum(seen) == 30 and len(seen) >= 3, seen
 
 
 def test_q121_overlap_count_plan_has_no_set_materialization(spark):

@@ -84,37 +84,33 @@ def test_batch_multi_socket_fan_in(registered, sock_dir):
     assert sorted(r.value for r in df.collect()) == ["a1", "a2", "b1"]
 
 
-def values(r, p) -> list[str]:
-    """One partition's records: read() serves Arrow batches."""
-    return [v for b in r.read(p) for v in b.column("value").to_pylist()]
+def values(batches) -> list[str]:
+    """The records of an iterator of Arrow batches."""
+    return [v for b in batches for v in b.column("value").to_pylist()]
 
 
 def drain(r, off, want_n, timeout=5.0):
-    """Drive the full-reader contract the way a micro-batch engine does:
-    latestOffset() → partitions(start, end) → read(partition) per chunk.
+    """Drive the simple-reader contract the way a micro-batch engine
+    does: read(start) returns the fresh records and the next start.
     Returns (records, end_offset)."""
     got: list[str] = []
     deadline = time.time() + timeout
     while len(got) < want_n and time.time() < deadline:
-        end = r.latestOffset()
-        for p in r.partitions(off, end):
-            got.extend(values(r, p))
-        off = end
+        batches, off = r.read(off)
+        got.extend(values(batches))
         time.sleep(0.05)
     return got, off
 
 
 def replay(r, lo, hi):
     """Re-read a planned range exactly as restart recovery does —
-    through partitions(start, end) + read, no separate replay path."""
-    return [
-        (v,) for p in r.partitions({"index": lo}, {"index": hi}) for v in values(r, p)
-    ]
+    readBetweenOffsets, from the chunks alone."""
+    return [(v,) for v in values(r.readBetweenOffsets({"index": lo}, {"index": hi}))]
 
 
 def buffered(r, n, timeout=5.0):
     """Start the receiver and wait until it holds ``n`` records, so the
-    next latestOffset() spools them in one call (chunk bounds are then
+    next read() spools them in one call (chunk bounds are then
     fixed by _CHUNK_LINES alone)."""
     r._ensure_receiver()
     deadline = time.time() + timeout
@@ -128,9 +124,9 @@ def chunks(spool_dir) -> list[str]:
 
 
 def test_stream_reader_spool_exactly_once(tmp_path, sock_dir):
-    """The spool contract directly (driver-side unit): latestOffset()
-    drains the receiver into the spool BEFORE reporting (write-ahead),
-    partitions()+read() replay any committed-or-not range — the
+    """The spool contract directly (driver-side unit): read() drains
+    the receiver into the spool BEFORE reporting (write-ahead), and
+    readBetweenOffsets() replays any committed-or-not range — the
     Appendix-B at-most-once fix."""
     sock = os.path.join(sock_dir, "st.sock")
     serve_lines(sock, b"r0\nr1\nr2\n")
@@ -148,42 +144,44 @@ def test_stream_reader_spool_exactly_once(tmp_path, sock_dir):
     assert r2.initialOffset() == {"index": 3}
 
 
-def test_stream_reader_fans_range_into_partitions(tmp_path, sock_dir, monkeypatch):
-    """VERDICT r9 item 2: a planned offset range must fan out into one
-    InputPartition per spool chunk (executor-parallel drain, the
-    chunk_spool pattern), and the pickled reader — what executors
-    actually receive — must serve each chunk from the spool alone."""
+def test_stream_reader_serves_one_batch_per_chunk(tmp_path, sock_dir, monkeypatch):
+    """The source is a simple reader: read() hands Spark the records it
+    just spooled, one Arrow batch per chunk, as a copyable iterator
+    (Spark caches it and copies it when the batch is planned). The
+    pickled reader — what an executor receives for a replay — serves
+    any range from the spool alone, clipped to the range."""
+    import copy
     import pickle
 
-    from pyspark.sql.datasource import (
-        DataSourceStreamReader,
-        SimpleDataSourceStreamReader,
+    from pyspark.sql.datasource import SimpleDataSourceStreamReader
+    from pyspark.sql.datasource_internal import (
+        _SimpleStreamReaderWrapper,
+        _streamReader,
     )
 
     monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 2)
     sock = os.path.join(sock_dir, "fan.sock")
+    ds = unix_socket.UnixLineDataSource({"path": sock})
+    assert isinstance(_streamReader(ds, None), _SimpleStreamReaderWrapper)
     serve_lines(sock, b"".join(b"p%d\n" % i for i in range(5)))
     r = _SpoolingStreamReader(sock, str(tmp_path / "spool"))
-    # the promotion itself: a FULL stream reader, not the driver-side
-    # Simple prefetch
-    assert isinstance(r, DataSourceStreamReader)
-    assert not isinstance(r, SimpleDataSourceStreamReader)
+    assert isinstance(r, SimpleDataSourceStreamReader)
     buffered(r, 5)
-    got, off = drain(r, {"index": 0}, 5)
+    batches, off = r.read({"index": 0})
     r.stop()
-    assert got == [f"p{i}" for i in range(5)] and off == {"index": 5}
-    parts = r.partitions({"index": 0}, {"index": 5})
-    assert [(p.lo, p.hi) for p in parts] == [(0, 2), (2, 4), (4, 5)]
+    assert off == {"index": 5}
+    assert values(copy.copy(batches)) == [f"p{i}" for i in range(5)]
+    assert [b.num_rows for b in batches] == [2, 2, 1]
     # executor simulation: round-trip through pickle (thread state must
-    # not travel), then read chunks out of order — pure spool lookups
+    # not travel), then replay out of order — pure spool lookups
     rx = pickle.loads(pickle.dumps(r))
-    assert values(rx, parts[2]) == ["p4"]
-    assert values(rx, parts[0]) == ["p0", "p1"]
-    assert r.partitions({"index": 3}, {"index": 3}) == []
+    assert replay(rx, 4, 5) == [("p4",)]
+    assert replay(rx, 0, 2) == [("p0",), ("p1",)]
+    assert replay(r, 3, 3) == []
     # a range that starts or ends inside a chunk is clipped to it
-    mid = r.partitions({"index": 1}, {"index": 3})
-    assert [(p.lo, p.hi) for p in mid] == [(1, 2), (2, 3)]
-    assert [v for p in mid for v in values(rx, p)] == ["p1", "p2"]
+    mid = list(rx.readBetweenOffsets({"index": 1}, {"index": 3}))
+    assert [b.num_rows for b in mid] == [1, 1]
+    assert values(mid) == ["p1", "p2"]
 
 
 def test_stream_reader_listen_mode_fan_in(tmp_path, sock_dir):
@@ -249,15 +247,16 @@ def test_stream_reader_replays_after_crash_restart(tmp_path, sock_dir):
 
     # incarnation B: fresh process over the same spool, resuming from the
     # last offset Spark DURABLY planned (1) — not the last spooled (3).
-    # B's init counts the whole spool, so latestOffset plans r1..r2
-    # without any separate replay path.
+    # B's init counts the whole spool, so a read from 1 serves r1..r2
+    # from the chunks before any fresh record.
     b = _SpoolingStreamReader(sock, spool)
     assert b.initialOffset() == {"index": 3}
-    end = b.latestOffset()
+    batches, end = b.read({"index": 1})
     assert end["index"] >= 3
-    replayed = [v for (v,) in replay(b, 1, end["index"])]
+    served = values(batches)
     b.stop()
-    assert replayed[:2] == ["r1", "r2"], "spooled-but-unplanned records lost"
+    assert served[:2] == ["r1", "r2"], "spooled-but-unplanned records lost"
+    assert replay(b, 1, 3) == [("r1",), ("r2",)]
 
 
 def test_commit_keeps_uncommitted_and_newest_chunks(tmp_path, sock_dir, monkeypatch):
@@ -297,7 +296,8 @@ def test_reader_recreated_after_full_drain_keeps_offset(tmp_path, sock_dir):
     r.commit(off)
     r2 = _SpoolingStreamReader(sock, spool)
     assert r2.initialOffset() == {"index": 3}
-    assert r2.latestOffset() == {"index": 3}
+    batches, end = r2.read({"index": 3})
+    assert end == {"index": 3} and values(batches) == []
     r2.stop()
 
 
@@ -313,8 +313,11 @@ def test_tmp_chunk_never_planned_and_removed_at_init(tmp_path, sock_dir):
     assert len(got) == 20 and off == {"index": 20}
     partial = spool_dir / (unix_socket._chunk_name(20, 25) + ".tmp")
     partial.write_text("a20\na21\n")  # the crash cut it short
-    assert r.latestOffset() == {"index": 20}
-    assert [p.hi for p in r.partitions({"index": 0}, off)][-1] == 20
+    batches, end = r.read(off)
+    assert end == {"index": 20} and values(batches) == []
+    assert len(replay(r, 0, 20)) == 20
+    with pytest.raises(IOError, match="no chunk for record 20 "):
+        replay(r, 0, 25)
     r.stop()
     r2 = _SpoolingStreamReader(sock, str(spool_dir))
     assert not partial.exists(), "abandoned .tmp should be cleaned up"
@@ -324,9 +327,9 @@ def test_tmp_chunk_never_planned_and_removed_at_init(tmp_path, sock_dir):
 
 
 def test_missing_planned_chunk_raises(tmp_path, sock_dir, monkeypatch):
-    """A planned range the spool no longer covers fails — at planning
-    when the chunk is gone before partitions(), at read when it goes
-    after — instead of serving fewer records than the range holds."""
+    """A planned range the spool no longer covers fails — when the chunk
+    is gone before the replay lists the spool, and when it goes after —
+    instead of serving fewer records than the range holds."""
     monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 2)
     sock = os.path.join(sock_dir, "missing.sock")
     serve_lines(sock, b"a\nb\nc\nd\n")
@@ -336,13 +339,14 @@ def test_missing_planned_chunk_raises(tmp_path, sock_dir, monkeypatch):
     got, off = drain(r, {"index": 0}, 4)
     r.stop()
     assert got == ["a", "b", "c", "d"]
-    parts = r.partitions({"index": 0}, off)
+    listed = unix_socket._list_chunks(str(spool_dir))
     os.unlink(spool_dir / unix_socket._chunk_name(0, 2))
     with pytest.raises(IOError, match="no chunk for record 0 "):
-        r.partitions({"index": 0}, off)
+        replay(r, 0, 4)
+    monkeypatch.setattr(unix_socket, "_list_chunks", lambda _: listed)
     with pytest.raises(IOError, match="missing or truncated"):
-        values(r, parts[0])
-    assert values(r, parts[1]) == ["c", "d"]
+        replay(r, 0, 4)
+    assert replay(r, 2, 4) == [("c",), ("d",)]
 
 
 def test_record_with_lone_cr_round_trips(tmp_path, sock_dir):
@@ -446,6 +450,80 @@ def test_streaming_end_to_end(registered, tmp_path, sock_dir):
     rows = sorted(r.value for r in registered.table("s4_unix_e2e").collect())
     registered.catalog.dropTempView("s4_unix_e2e")
     assert rows == sorted(f"rec {i}" for i in range(50))
+
+
+def test_listen_pipeline_restart_lands_every_record_once(registered, tmp_path, sock_dir):
+    """Stop a listen-mode ``pipeline.s4`` query mid-stream and restart it
+    on the same checkpoint and spool: every record sent lands in the
+    lake exactly once. Before the restart, the last batch is rolled back
+    the way a crash between the sink write and the commit leaves it (its
+    commit-log and sink-log entries gone), so the restarted query replays
+    it from the spool: a prefetch-cache miss, served by
+    readBetweenOffsets. The restart also rebinds the socket path, which
+    the stopped query's runner process must have released."""
+    import re
+
+    from s4_spark.pipeline import s4
+
+    sock = os.path.join(sock_dir, "restart.sock")
+    lake, ckpt = str(tmp_path / "lake"), str(tmp_path / "ckpt")
+    cfg = s4.S4Config(
+        input_path=sock,
+        output_path=lake,
+        checkpoint_path=ckpt,
+        source_format="unixline",
+        socket_mode="listen",
+        flush_interval="200 milliseconds",
+    )
+
+    def send(lo, hi):
+        deadline = time.time() + 30
+        while True:  # the server binds on the first read
+            c = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
+            try:
+                c.connect(sock)
+                break
+            except OSError:
+                c.close()
+                assert time.time() < deadline, "server never bound"
+                time.sleep(0.05)
+        c.sendall(b"".join(b"rec-%d\n" % i for i in range(lo, hi)))
+        c.close()
+
+    def wait(q, done):
+        deadline = time.time() + 60
+        while not done(q.recentProgress):
+            assert q.exception() is None, q.exception()
+            assert time.time() < deadline, q.recentProgress
+            time.sleep(0.1)
+
+    def landed(n):
+        # a progress renders the {"index": N} offset as text
+        ends = lambda ps: (re.search(r"\d+", p.sources[0].endOffset) for p in ps)
+        return lambda ps: any(m and int(m.group()) >= n for m in ends(ps))
+
+    q = s4.start(registered, cfg)
+    try:
+        send(0, 60)
+        wait(q, landed(60))
+        send(60, 100)
+        wait(q, landed(100))
+    finally:
+        q.stop()
+    last = max(int(f) for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit())
+    for log in (os.path.join(ckpt, "commits"), os.path.join(lake, "_spark_metadata")):
+        os.unlink(os.path.join(log, str(last)))
+        os.unlink(os.path.join(log, f".{last}.crc"))  # the local fs checksum
+
+    q = s4.start(registered, cfg)
+    try:
+        wait(q, lambda ps: any(p.batchId == last and p.numInputRows for p in ps))
+        send(100, 150)
+        wait(q, landed(150))
+    finally:
+        q.stop()
+    got = [r.value for r in registered.read.text(lake).select("value").collect()]
+    assert sorted(got) == sorted(f"rec-{i}" for i in range(150))
 
 
 def test_compaction_reduces_file_count(spark):

@@ -202,6 +202,44 @@ def test_single_object_per_flush_compat_mode(spark):
     assert not glob.glob(os.path.join(out, "_staging_b*"))
 
 
+def test_processing_time_partitions_compile_nothing_per_trigger(spark, tmp_path):
+    """Spark inlines the batch's current time into the generated code as
+    a literal, so arrival-time keys taken from ``current_timestamp``
+    made every trigger compile new classes. Keyed by ``current_date``,
+    a processing-time pipeline over a landing dir compiles nothing
+    between batch 3 and batch 8."""
+    import time
+
+    from s4_spark.pipeline import s4
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    cfg = s4.S4Config(
+        input_path=str(landing),
+        output_path=str(tmp_path / "lake"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        flush_interval="100 milliseconds",
+    )
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = {}
+    q = s4.start(spark, cfg)
+    try:
+        for i in range(9):
+            staged = tmp_path / f"f{i}.txt"
+            staged.write_text("".join(f"rec-{i}-{j}\n" for j in range(10)))
+            os.replace(staged, landing / staged.name)
+            deadline = time.time() + 60
+            while not any(
+                p.batchId == i and p.numInputRows for p in q.recentProgress
+            ):
+                assert time.time() < deadline, f"batch {i} never ran"
+                time.sleep(0.05)
+            compiled[i] = codegen.METRIC_COMPILATION_TIME().getCount()
+    finally:
+        q.stop()
+    assert compiled[8] == compiled[3], compiled
+
+
 def test_q165_outer_join_exact_rows(spark):
     """q165: exactly 10 matched rows (users 0-9, r_val = 100*user) and
     10 null-padded unmatched rows (users 10-19); sentinels never emit."""
