@@ -24,15 +24,14 @@ overwrites, the LineRiver truncate race.
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from s4_spark.streaming.rigs import drain, hadoop_fs
+from s4_spark.streaming.rigs import drain
 
 # Mirrors river.Config (/root/reference/river/river.go:22-27) +
 # the CLI flag surface (/root/reference/main.go:20-57).
@@ -50,7 +49,9 @@ class S4Config:
     # "listen" (A23 server — bind + fan-in of N producer connections)
     max_files_per_trigger: int | None = None  # 100 TB listing control
     event_time_col: str | None = None  # partition by this instead of arrival time
-    single_object_per_flush: bool = False  # A13/A18 literal batch-shape parity
+    # A13/A18 literal batch shape: coalesce(1) in front of the same file
+    # sink, so each trigger lands one gzip object per partition dir
+    single_object_per_flush: bool = False
 
 
 def read_records(spark: SparkSession, cfg: S4Config) -> DataFrame:
@@ -120,25 +121,23 @@ def with_time_partitions(df: DataFrame, cfg: S4Config) -> DataFrame:
     each batch would compile new classes; a date stays the same all day,
     so the codegen cache hits."""
     if cfg.event_time_col:
+        if cfg.record_type != "json":
+            raise ValueError('event_time_col requires record_type="json"')
         if not cfg.json_schema:
             raise ValueError("event_time_col requires json_schema")
-        if "__parsed" in df.columns:
-            # one-parse path: the validation stage already parsed the
-            # record into a string map; a typed extraction of the one
-            # needed field replaces a second full-schema from_json per
-            # record. try_element_at + try_cast mirror from_json's
-            # null-on-missing / null-on-unparseable semantics exactly
-            # (a plain [] access or cast would THROW under ANSI mode
-            # where from_json yields NULL).
-            field_type = {
-                f.name: f.dataType.simpleString()
-                for f in StructType.fromDDL(cfg.json_schema).fields
-            }[cfg.event_time_col]
-            ts = F.try_element_at(
-                F.col("__parsed"), F.lit(cfg.event_time_col)
-            ).try_cast(field_type)
-        else:
-            ts = F.from_json("value", cfg.json_schema)[cfg.event_time_col]
+        # the validation stage already parsed the record into a string
+        # map; a typed extraction of the one needed field replaces a
+        # second full-schema from_json per record. try_element_at +
+        # try_cast mirror from_json's null-on-missing /
+        # null-on-unparseable semantics exactly (a plain [] access or
+        # cast would THROW under ANSI mode where from_json yields NULL).
+        field_type = {
+            f.name: f.dataType.simpleString()
+            for f in StructType.fromDDL(cfg.json_schema).fields
+        }[cfg.event_time_col]
+        ts = F.try_element_at(
+            F.col("__parsed"), F.lit(cfg.event_time_col)
+        ).try_cast(field_type)
     else:
         ts = F.current_date()
     return (
@@ -155,50 +154,6 @@ def build_pipeline(spark: SparkSession, cfg: S4Config) -> DataFrame:
     return records
 
 
-def single_object_batch_sink(cfg: S4Config):
-    """SURVEY §4.3 compat mode for the reference's literal
-    one-object-per-flush batch shape (river/jsonr.go:70-78 drains the
-    whole buffer into ONE body per ticker fire; lake/lake.go:65-90 PUTs
-    it as one S3 object). The default lake sink is semantically
-    equivalent — one file-SET per epoch — but writes N part-files;
-    here each trigger lands exactly one gzip'd text object per
-    partition dir, named ``b{batchId}.txt.gz``.
-
-    Mechanics: ``coalesce(1)`` collapses the batch to one task (the
-    compat mode trades away write parallelism by definition — that is
-    the reference's shape; don't enable it for throughput), the task
-    writes a staged ``year=/month=/day=`` tree, and the driver moves
-    each staged part-file to ``<out>/<partition>/b{batchId}.txt.gz``
-    through the Hadoop FileSystem API. The batchId-keyed fixed name
-    makes a retried batch overwrite its own object rather than
-    duplicate it — idempotent like rigs.idempotent_batch_sink, and
-    scheme-agnostic the same way."""
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fs, Path = hadoop_fs(spark, cfg.output_path)
-        staged = f"{cfg.output_path}/_staging_b{batch_id}"
-        (
-            batch_df.coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("year", "month", "day")
-            .option("compression", "gzip")
-            .text(staged)
-        )
-        for st in fs.globStatus(Path(f"{staged}/year=*/month=*/day=*/part-*")):
-            part = st.getPath()
-            day = part.getParent()
-            rel = f"{day.getParent().getParent().getName()}/{day.getParent().getName()}/{day.getName()}"
-            dest_dir = Path(f"{cfg.output_path}/{rel}")
-            fs.mkdirs(dest_dir)
-            dest = Path(f"{cfg.output_path}/{rel}/b{batch_id}.txt.gz")
-            if fs.exists(dest):
-                fs.delete(dest, False)
-            fs.rename(part, dest)
-        fs.delete(Path(staged), True)
-
-    return sink
-
-
 def _writer(spark: SparkSession, cfg: S4Config) -> DataStreamWriter:
     """Source → validation → sink wiring, without a trigger."""
     df = build_pipeline(spark, cfg)
@@ -208,17 +163,17 @@ def _writer(spark: SparkSession, cfg: S4Config) -> DataStreamWriter:
     else:
         df = with_time_partitions(df, cfg)
         # text sink: exactly one data column ("value") + partition keys —
-        # one gzip'd line-file set per epoch, the A13/A18 batch shape
+        # one gzip'd line-file set per epoch, committed by the sink's
+        # _spark_metadata log; compat mode writes it from one task
         df = df.select("value", "year", "month", "day")
         if cfg.single_object_per_flush:
-            writer = df.writeStream.foreachBatch(single_object_batch_sink(cfg))
-        else:
-            writer = (
-                df.writeStream.format("text")
-                .option("path", cfg.output_path)
-                .option("compression", "gzip")
-                .partitionBy("year", "month", "day")
-            )
+            df = df.coalesce(1)
+        writer = (
+            df.writeStream.format("text")
+            .option("path", cfg.output_path)
+            .option("compression", "gzip")
+            .partitionBy("year", "month", "day")
+        )
     return writer.option("checkpointLocation", cfg.checkpoint_path)
 
 

@@ -1179,15 +1179,17 @@ def q246(spark, sf_dir):
     offsets checkpointed by Spark, partitions(start, end) fanning each
     micro-batch into one InputPartition per chunk for PARALLEL
     executor-side reads, and commit(end) ACKING the consumed
-    prefix by deleting it — the reference's drain-after-flush spool
-    semantics keyed by Spark's own committed offset rather than a
-    delete-before-send race. documents.lang spread over 8 chunk files
-    must aggregate back to the table exactly. The ack is deferred the
-    way V2 sources define it — commit(end) fires when the NEXT run (or
-    batch) starts from the checkpointed offset, never before the
-    downstream commit is durable; the pytest rig drives two
-    availableNow runs through one checkpoint and asserts run 2 deletes
-    run 1's chunks and re-reads nothing (exactly-once drain)."""
+    prefix by deleting it (all but the newest chunk, which holds the
+    offset once the spool is drained, as in the unix-socket source) —
+    the reference's drain-after-flush spool semantics keyed by Spark's
+    own committed offset rather than a delete-before-send race.
+    documents.lang spread over 8 chunk files must aggregate back to the
+    table exactly. The ack is deferred the way V2 sources define it —
+    commit(end) fires when the NEXT run (or batch) starts from the
+    checkpointed offset, never before the downstream commit is durable;
+    the pytest rig drives two availableNow runs through one checkpoint
+    and asserts run 2 deletes run 1's chunks and re-reads nothing
+    (exactly-once drain)."""
     import s4_spark.sources as sources
     from s4_spark.sources.chunk_spool import chunk_path
     from s4_spark.streaming.rigs import scratch

@@ -21,8 +21,10 @@ from s4_spark.streaming.rigs import (
     drain,
     drain_to_memory,
     events_stream,
+    idempotent_batch_sink,
     instant_as_utc_ntz,
     ntz_as_utc_instant,
+    read_batched_parquet,
     replay,
     run_to_memory,
     run_to_parquet,
@@ -784,13 +786,15 @@ def q209(spark, sf_dir):
     any corpus-wide rebuild (the kappa pairing of q203's batch
     snapshot split, exactly as q197 pairs q093).
 
-    Exactly-once: each micro-batch writes to a ``batch_id=<N>`` leaf
-    with overwrite — a replayed batch (sink failure after write,
-    before commit) rewrites the SAME leaf with the SAME deterministic
-    rows (xxhash signatures, no rand), so duplication is structurally
-    impossible; blind ``mode("append")`` would double-index on replay.
-    The seed snapshot (first corpus half) lands as leaf batch_id=-1 by
-    the same path.
+    Exactly-once: each micro-batch lands through
+    ``rigs.idempotent_batch_sink`` (a ``b<N>`` leaf made visible by a
+    zero-byte commit marker) — a replayed batch (sink failure after
+    write, before checkpoint commit) is a no-op once committed, or
+    rewrites the SAME leaf with the SAME deterministic rows (xxhash
+    signatures, no rand) if it crashed part-written, and the read-back
+    skips marker-less leaves; blind ``mode("append")`` would
+    double-index on replay. The seed snapshot (first corpus half)
+    lands as leaf ``b-1`` by the same sink.
 
     The check re-reads the maintained index and pins its global
     invariants (every doc indexed exactly once, exactly 24 band rows
@@ -803,7 +807,6 @@ def q209(spark, sf_dir):
     name = os.path.basename(sf_dir)
     landing = scratch(f"q209_landing_{name}")
     index_dir = scratch(f"q209_index_{name}")
-    os.makedirs(index_dir, exist_ok=True)
 
     from s4_spark.operators import dedup as D
 
@@ -813,9 +816,9 @@ def q209(spark, sf_dir):
         )
         return D.banded_signatures(sig, "doc_id")
 
-    band_rows(docs.filter(F.col("doc_id") < half)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(index_dir, "batch_id=-1"))
+    sink = idempotent_batch_sink(index_dir)
+    seed = band_rows(docs.filter(F.col("doc_id") < half))
+    sink(seed, -1)
 
     os.makedirs(landing, exist_ok=True)
     docs.filter(F.col("doc_id") >= half).write.mode("overwrite").parquet(
@@ -827,18 +830,13 @@ def q209(spark, sf_dir):
         .load(os.path.join(landing, "new"))
     )
 
-    def upsert(batch_df, batch_id):
-        band_rows(batch_df).write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch_id={batch_id}")
-        )
-
     drain(
-        stream.writeStream.foreachBatch(upsert)
+        stream.writeStream.foreachBatch(lambda df, i: sink(band_rows(df), i))
         .trigger(availableNow=True)
         .option("checkpointLocation", scratch(f"q209_ckpt_{name}"))
     )
 
-    index = spark.read.parquet(index_dir).select("doc_id")
+    index = read_batched_parquet(spark, index_dir, seed.schema).select("doc_id")
     return index.agg(
         F.countDistinct("doc_id").cast("long").alias("n_docs"),
         F.count("*").cast("long").alias("n_band_rows"),
@@ -1811,12 +1809,7 @@ def _q252(spark, sf_dir):
             )
         )
 
-        from s4_spark.streaming.rigs import (
-            idempotent_batch_sink,
-            progress_of,
-            read_batched_parquet,
-            running,
-        )
+        from s4_spark.streaming.rigs import progress_of, running
 
         sink = idempotent_batch_sink(outdir)
 

@@ -10,12 +10,13 @@ the driver):
   InputPartition PER CHUNK, so executors read chunks in parallel
   (a SimpleDataSourceStreamReader would prefetch single-threaded on
   the driver);
-- ``commit(end)`` deletes chunks at-or-below the committed offset —
-  the drain/ack semantics of the reference's durable buffer
-  (/root/reference/river: records leave the spool only after the
-  downstream flush commits), but keyed by Spark's own checkpointed
-  offset instead of a delete-before-send race (SURVEY.md Appendix B's
-  do-not-replicate loss bug).
+- ``commit(end)`` deletes chunks at-or-below the committed offset,
+  except the newest, which keeps ``latestOffset`` from regressing once
+  the spool is drained — the drain/ack semantics of the reference's
+  durable buffer (records leave the spool only after the downstream
+  flush commits), but keyed by Spark's own checkpointed offset instead
+  of a delete-before-send race (SURVEY.md Appendix B's do-not-replicate
+  loss bug). sources/unix_socket.py acks its spool by the same rule.
 
 Chunk files are ``chunk-NNNNNNNN.txt`` under ``path``, one
 ``\\n``-terminated line per record, appended by any producer; the
@@ -39,7 +40,6 @@ from typing import Iterator
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
 _CHUNK_RE = re.compile(r"chunk-(\d{8})\.txt$")
-_FLOOR_MARKER = ".offset_floor"
 # Rows per Arrow batch a chunk read yields: bounds a Python worker's
 # memory however large a producer chunk is.
 BATCH_LINES = 8192
@@ -82,29 +82,13 @@ class ChunkPartition(InputPartition):
 class ChunkSpoolStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.path = options["path"]
-        # Monotone floor for latestOffset (r6 advice): commit() deletes
-        # the committed chunks, so a drained spool lists as empty and a
-        # listing-only latestOffset would REGRESS from N back to -1 —
-        # Spark then plans a spurious (N, -1] batch, persists the
-        # regressed offset, and a producer that restarts numbering after
-        # a drain would get its re-used chunk numbers re-read, breaking
-        # exactly-once. The floor is the max offset ever seen or
-        # committed, seeded from the marker file commit() writes so it
-        # survives reader re-instantiation across restarts.
-        self._floor = -1
-        try:
-            with open(os.path.join(self.path, _FLOOR_MARKER)) as f:
-                self._floor = int(f.read().strip())
-        except (OSError, ValueError):
-            pass
 
     def initialOffset(self) -> dict:
         return {"chunk": -1}
 
     def latestOffset(self) -> dict:
         chunks = _list_chunks(self.path)
-        self._floor = max(self._floor, chunks[-1] if chunks else -1)
-        return {"chunk": self._floor}
+        return {"chunk": chunks[-1] if chunks else -1}
 
     def partitions(self, start: dict, end: dict):
         return [
@@ -117,15 +101,7 @@ class ChunkSpoolStreamReader(DataSourceStreamReader):
         yield from line_batches(chunk_path(partition.path, partition.chunk))
 
     def commit(self, end: dict) -> None:
-        self._floor = max(self._floor, end["chunk"])
-        # Persist the floor BEFORE deleting, atomically (tmp + rename):
-        # a crash between delete and marker write must not resurrect a
-        # regressed offset on restart.
-        tmp = os.path.join(self.path, _FLOOR_MARKER + ".tmp")
-        with open(tmp, "w") as f:
-            f.write(str(self._floor))
-        os.replace(tmp, os.path.join(self.path, _FLOOR_MARKER))
-        for i in _list_chunks(self.path):
+        for i in _list_chunks(self.path)[:-1]:
             if i <= end["chunk"]:
                 try:
                     os.remove(chunk_path(self.path, i))

@@ -591,10 +591,10 @@ def test_chunk_spool_acks_on_next_run_exactly_once(spark, tmp_path):
 
 def test_chunk_spool_latest_offset_monotone_after_drain(tmp_path):
     """r6 advice: with ack enabled, commit() deletes the committed chunks,
-    so a drained (empty) spool must NOT report {"chunk": -1} — the floor
-    persists the highest committed offset (marker file survives reader
-    re-instantiation), preventing a spurious regressed batch and a
-    re-read of re-used chunk numbers after a producer restart."""
+    so a drained spool must NOT report {"chunk": -1} — commit keeps the
+    newest chunk, whose number survives reader re-instantiation,
+    preventing a spurious regressed batch and a re-read of re-used
+    chunk numbers after a producer restart."""
     import os
 
     from s4_spark.sources.chunk_spool import ChunkSpoolStreamReader, chunk_path
@@ -606,10 +606,12 @@ def test_chunk_spool_latest_offset_monotone_after_drain(tmp_path):
             f.write(f"r{i}\n")
     r = ChunkSpoolStreamReader({"path": spool})
     assert r.latestOffset() == {"chunk": 2}
-    r.commit({"chunk": 2})  # deletes all chunks
-    assert [p for p in os.listdir(spool) if p.startswith("chunk")] == []
+    r.commit({"chunk": 2})  # deletes every chunk but the newest
+    assert [p for p in os.listdir(spool) if p.startswith("chunk")] == [
+        "chunk-00000002.txt"
+    ]
     assert r.latestOffset() == {"chunk": 2}  # monotone, not -1
-    # a fresh reader instance (restart) seeds the floor from the marker
+    # a fresh reader instance (restart) starts from the kept chunk
     r2 = ChunkSpoolStreamReader({"path": spool})
     assert r2.latestOffset() == {"chunk": 2}
     # new production continues forward

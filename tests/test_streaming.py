@@ -131,75 +131,83 @@ def test_exactly_once_across_restarts(spark):
     assert len(got) == len(set(got))  # no duplicates
 
 
-def test_single_object_per_flush_compat_mode(spark):
-    """SURVEY §4.3 / VERDICT r12 item 3: with single_object_per_flush the
-    lake sink reproduces the reference's literal batch shape — ONE gzip
-    object per trigger per partition dir (river/jsonr.go:70-78 drains
-    the buffer into one body per ticker fire; lake/lake.go:65-90 PUTs
-    one object). maxFilesPerTrigger=1 over two input files forces two
-    triggers; both land in the same (processing-time, UTC today)
-    partition dir, which must then hold exactly b0.txt.gz and
-    b1.txt.gz, whose decompressed bytes equal the fed lines. A third
-    file through the SAME checkpoint appends b2 without touching b0/b1."""
+def test_single_object_per_flush_compat_mode(spark, tmp_path):
+    """SURVEY §4.3: with single_object_per_flush the lake sink reproduces
+    the reference's literal batch shape — ONE gzip object per trigger per
+    partition dir (river/jsonr.go:70-78 drains the buffer into one body
+    per ticker fire; lake/lake.go:65-90 PUTs one object) — committed by
+    the file sink's own _spark_metadata log, with no rename.
+    maxFilesPerTrigger=1 over two input files forces two triggers; both
+    land in the same (processing-time, UTC today) partition dir. Each
+    log entry adds exactly one object there, holding its batch's lines.
+    A third file through the SAME checkpoint adds a third object without
+    touching the first two, and the lake read goes through the log, so a
+    stray part-file in the partition dir is not read."""
     import glob
     import gzip
-    import os
+    import json
+    import time
+    from urllib.parse import urlparse
 
     from s4_spark.pipeline.s4 import S4Config, run_once
-    from s4_spark.streaming.rigs import scratch
 
-    landing = scratch("sof_landing")
-    out = scratch("sof_out")
-    ckpt = scratch("sof_ckpt")
-    os.makedirs(landing, exist_ok=True)
+    landing, out, ckpt = (str(tmp_path / d) for d in ("landing", "out", "ckpt"))
+    os.makedirs(landing)
 
-    def feed(lo, hi, fname):
-        with open(os.path.join(landing, fname), "w") as f:
+    def feed(lo, hi, fname, age):
+        path = os.path.join(landing, fname)
+        with open(path, "w") as f:
             for i in range(lo, hi):
                 f.write(f"rec-{i}\n")
+        # the file source takes files oldest first: pin the batch order
+        mtime = time.time() - age
+        os.utime(path, (mtime, mtime))
 
-    feed(0, 100, "a.txt")
-    feed(100, 250, "b.txt")
+    def logged(batch):
+        """The data objects log entry ``batch`` committed."""
+        with open(os.path.join(out, "_spark_metadata", str(batch))) as f:
+            assert f.readline().strip() == "v1"
+            return [urlparse(json.loads(ln)["path"]).path for ln in f if ln.strip()]
+
+    def lines(path):
+        with gzip.open(path, "rt") as fh:
+            return [ln.rstrip("\n") for ln in fh]
+
+    feed(0, 100, "a.txt", age=20)
+    feed(100, 250, "b.txt", age=10)
     cfg = S4Config(
         input_path=landing, output_path=out, checkpoint_path=ckpt,
         record_type="line", max_files_per_trigger=1,
         single_object_per_flush=True,
     )
     run_once(spark, cfg)
+    feed(250, 300, "c.txt", age=0)
+    first = [logged(0), logged(1)]
+    before = {o: os.path.getmtime(o) for objs in first for o in objs}
+    run_once(spark, cfg)  # same checkpoint: resumes at batch 2
+    objs = first + [logged(2)]
 
     part_dirs = glob.glob(os.path.join(out, "year=*", "month=*", "day=*"))
     assert len(part_dirs) == 1, part_dirs
-    def data_objs(d):
-        # '.'-prefixed names are hidden by Hadoop convention (the local
-        # ChecksumFileSystem's .crc sidecars; absent on object stores)
-        return sorted(o for o in os.listdir(d) if not o.startswith("."))
-
-    objs = data_objs(part_dirs[0])
-    assert objs == ["b0.txt.gz", "b1.txt.gz"], objs
-
-    def lines(path):
-        with gzip.open(path, "rt") as fh:
-            return [ln.rstrip("\n") for ln in fh]
-
-    # byte-compare: each trigger's single object carries exactly its
-    # file's records (maxFilesPerTrigger=1 -> one input file per batch)
-    per_obj = {o: sorted(lines(os.path.join(part_dirs[0], o))) for o in objs}
-    assert sorted(
-        sum(per_obj.values(), [])
-    ) == sorted(f"rec-{i}" for i in range(250))
-    assert {len(v) for v in per_obj.values()} == {100, 150}
-
-    feed(250, 300, "c.txt")
-    before = {o: os.path.getmtime(os.path.join(part_dirs[0], o)) for o in objs}
-    run_once(spark, cfg)  # same checkpoint: resumes at b2
-    objs2 = data_objs(part_dirs[0])
-    assert objs2 == ["b0.txt.gz", "b1.txt.gz", "b2.txt.gz"], objs2
+    got = []
+    for batch, (lo, hi) in enumerate([(0, 100), (100, 250), (250, 300)]):
+        assert len(objs[batch]) == 1, objs[batch]
+        (obj,) = objs[batch]
+        assert os.path.dirname(obj) == part_dirs[0]
+        assert obj.endswith(".txt.gz")
+        assert sorted(lines(obj)) == sorted(f"rec-{i}" for i in range(lo, hi))
+        got += lines(obj)
+    assert sorted(got) == sorted(f"rec-{i}" for i in range(300))
     for o, mt in before.items():
-        assert os.path.getmtime(os.path.join(part_dirs[0], o)) == mt
-    assert sorted(lines(os.path.join(part_dirs[0], "b2.txt.gz"))) == sorted(
-        f"rec-{i}" for i in range(250, 300)
-    )
-    assert not glob.glob(os.path.join(out, "_staging_b*"))
+        assert os.path.getmtime(o) == mt
+
+    # an object the log never committed (what a crashed task leaves) is
+    # invisible to a read of the lake
+    stray = os.path.join(part_dirs[0], "part-99999-stray.c000.txt.gz")
+    with gzip.open(stray, "wt") as f:
+        f.write("stray\n")
+    values = [r.value for r in spark.read.text(out).select("value").collect()]
+    assert sorted(values) == sorted(f"rec-{i}" for i in range(300))
 
 
 def test_processing_time_partitions_compile_nothing_per_trigger(spark, tmp_path):
@@ -343,20 +351,24 @@ def test_transform_with_state_matches_batch_when_available(spark, duck):
 
 
 def test_q209_index_batch_replay_is_idempotent(spark, tmp_path):
-    """q209's exactly-once claim: a replayed micro-batch (failure after
-    write, before checkpoint commit) rewrites its batch_id leaf with the
-    SAME deterministic rows — the maintained index is bit-identical
-    after the replay, where a blind append would double-index."""
-    import os
-
+    """q209's exactly-once claim, through the sink q209 uses
+    (rigs.idempotent_batch_sink): a replayed micro-batch (failure after
+    write, before checkpoint commit) leaves the maintained index
+    bit-identical, where a blind append would double-index; a leaf a
+    crash left without its commit marker is invisible to the read-back
+    until the replay rewrites it."""
     from s4_spark.operators import dedup as D
+    from s4_spark.streaming.rigs import (
+        COMMIT_MARKER,
+        idempotent_batch_sink,
+        read_batched_parquet,
+    )
 
     docs = spark.createDataFrame(
         [(i, f"w{i} x{i} y{i} z{i} a b c d e f") for i in range(20)],
         "doc_id long, text string",
     )
     index_dir = str(tmp_path / "idx")
-    os.makedirs(index_dir, exist_ok=True)
 
     def band_rows(df):
         sig = D.with_minhash_signature(
@@ -364,24 +376,28 @@ def test_q209_index_batch_replay_is_idempotent(spark, tmp_path):
         )
         return D.banded_signatures(sig, "doc_id")
 
-    def upsert(batch_df, batch_id):
-        band_rows(batch_df).write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch_id={batch_id}")
+    sink = idempotent_batch_sink(index_dir)
+    seed = band_rows(docs.filter(F.col("doc_id") < 10))
+    sink(seed, -1)
+    batch = docs.filter(F.col("doc_id") >= 10)
+    sink(band_rows(batch), 0)
+
+    def index():
+        return sorted(
+            (r["doc_id"], r["band_id"], r["band_key"])
+            for r in read_batched_parquet(spark, index_dir, seed.schema).collect()
         )
 
-    batch = docs.filter(F.col("doc_id") < 10)
-    upsert(batch, 0)
-    first = sorted(
-        (r["doc_id"], r["band_id"], r["band_key"])
-        for r in spark.read.parquet(index_dir).collect()
-    )
-    assert len(first) == 10 * 24
-    upsert(batch, 0)  # replay of the same committed batch
-    second = sorted(
-        (r["doc_id"], r["band_id"], r["band_key"])
-        for r in spark.read.parquet(index_dir).collect()
-    )
-    assert second == first
+    first = index()
+    assert len(first) == 20 * 24
+    assert {d for d, _, _ in first} == set(range(20))
+    sink(band_rows(batch), 0)  # replay of the same committed batch
+    assert index() == first
+    # a crash between the parquet write and the marker PUT
+    os.remove(os.path.join(index_dir, "b0", COMMIT_MARKER))
+    assert len(index()) == 10 * 24  # only the seed leaf b-1 is visible
+    sink(band_rows(batch), 0)  # the replay rewrites the leaf and commits it
+    assert index() == first
 
 
 def test_q234_funnel_state_survives_multi_batch(spark, tmp_path):
@@ -881,6 +897,27 @@ def test_available_now_drain_stops_query_and_restores_conf_on_failure(
     with pytest.raises(Exception, match="injected batch failure"):
         run_to_memory(stream, "append", tag="leak_drain", conf={key: "3"})
     assert_no_leaks(spark, "run_to_memory", before)
+
+
+def test_event_time_col_requires_json_records(spark, tmp_path):
+    """event_time_col is read from the parsed JSON record, so a line
+    pipeline that sets it is refused before any query starts."""
+    from s4_spark.pipeline.s4 import S4Config, run_once
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.txt").write_text('{"ts": "2024-01-02 03:04:05"}\n')
+    cfg = S4Config(
+        input_path=str(landing),
+        output_path=str(tmp_path / "out"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        record_type="line",
+        json_schema="ts timestamp",
+        event_time_col="ts",
+    )
+    with pytest.raises(ValueError, match="record_type"):
+        run_once(spark, cfg)
+    assert spark.streams.active == []
 
 
 def test_run_once_leaves_config_unchanged(spark, tmp_path):
