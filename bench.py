@@ -215,8 +215,16 @@ def build_payload(
         ratios = {
             k: live_q[k] / idle_q[k]
             for k in live_q
-            if idle_q.get(k)
+            if idle_q.get(k, 0) > 0
         }
+        unrated = sorted(set(live_q) - set(ratios))
+        if unrated:
+            # a key with no positive idle seconds has no ratio; name it
+            # rather than drop it silently (stdout stays one line)
+            print(
+                f"bench: no positive idle value for {', '.join(unrated)}",
+                file=sys.stderr,
+            )
         if ratios:
             worst = max(ratios, key=ratios.get)
             payload["n_over_2x_idle"] = sum(1 for r in ratios.values() if r > 2)

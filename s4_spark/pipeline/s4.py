@@ -114,6 +114,8 @@ def with_time_partitions(df: DataFrame, cfg: S4Config) -> DataFrame:
     when ``event_time_col`` is configured, else processing time (the
     reference uses the local wall clock, lake/lake.go:79; we use UTC and
     prefer event time so the layout is reproducible and prunable).
+    Event-time keys spread a batch over many day dirs; ``lake_frame``
+    clusters its rows so each dir gets one object per batch.
 
     Processing time is ``current_date``, not ``current_timestamp``: the
     keys are the same, but Spark inlines the batch's value into the
@@ -154,22 +156,37 @@ def build_pipeline(spark: SparkSession, cfg: S4Config) -> DataFrame:
     return records
 
 
+def lake_frame(df: DataFrame, cfg: S4Config) -> DataFrame:
+    """A17/A18: the frame the lake sink writes — exactly one data column
+    ("value") plus the year=/month=/day= keys, one gzip'd line file per
+    task per partition dir, committed by the sink's _spark_metadata log.
+
+    Under event time a batch spans many days, so its rows are hashed on
+    the keys first: each day dir gets ONE object per batch, written by
+    one task (the reference's one object per flush per key,
+    lake/lake.go:65-90), and the days spread over the shuffle
+    partitions. Processing-time keys put a whole batch in one dir, so
+    that path stays shuffle-free; compat mode writes every dir from one
+    task."""
+    df = with_time_partitions(df, cfg).select("value", "year", "month", "day")
+    if cfg.single_object_per_flush:
+        return df.coalesce(1)
+    if cfg.event_time_col:
+        return df.repartition("year", "month", "day")
+    return df
+
+
 def _writer(spark: SparkSession, cfg: S4Config) -> DataStreamWriter:
-    """Source → validation → sink wiring, without a trigger."""
+    """Source → validation → sink wiring, without a trigger. The lake
+    sink writes ``lake_frame``: under event time, one object per day dir
+    per micro-batch."""
     df = build_pipeline(spark, cfg)
     if cfg.sink == "console":
         # the validation helper column must not reach the console
         writer = df.drop("__parsed").writeStream.format("console")
     else:
-        df = with_time_partitions(df, cfg)
-        # text sink: exactly one data column ("value") + partition keys —
-        # one gzip'd line-file set per epoch, committed by the sink's
-        # _spark_metadata log; compat mode writes it from one task
-        df = df.select("value", "year", "month", "day")
-        if cfg.single_object_per_flush:
-            df = df.coalesce(1)
         writer = (
-            df.writeStream.format("text")
+            lake_frame(df, cfg).writeStream.format("text")
             .option("path", cfg.output_path)
             .option("compression", "gzip")
             .partitionBy("year", "month", "day")

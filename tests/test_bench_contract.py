@@ -100,6 +100,24 @@ def test_contamination_summary_fields():
     assert "n_over_2x_idle" not in p2 and "worst_vs_idle" not in p2
 
 
+def test_zero_or_missing_idle_keys_are_excluded_and_named(capsys):
+    """A key whose idle recording is 0.0, or that the recording lacks,
+    has no live-vs-idle ratio: it is left out of n_over_2x_idle (no
+    ZeroDivisionError) and named on stderr, never skipped silently."""
+    live = {"q001_parquet_scan": 3.0, "q002": 1.0, "q003": 1.0}
+    idle = {
+        "value": 1.0,
+        "git_sha": "abc",
+        "queries": {"q001_parquet_scan": 1.0, "q002": 0.0},
+    }
+    payload = bench.build_payload(5.0, live, {}, "0.1", "4.1.2", idle)
+    assert payload["n_over_2x_idle"] == 1
+    assert payload["worst_vs_idle"] == "q001_parquet_scan:3.00"
+    err = capsys.readouterr().err
+    assert "q002" in err and "q003" in err
+    assert "q001_parquet_scan" not in err
+
+
 def test_idle_scalars_omitted_when_no_recording():
     payload = bench.build_payload(1.0, {"q001_parquet_scan": 1.0}, {}, "0.1", "4.1.2", None)
     parsed = json.loads(bench.emit_line(payload))

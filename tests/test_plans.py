@@ -1779,3 +1779,37 @@ def test_connected_components_first_round_folds_identity_and_sums(spark):
     assert got == {
         (1, 1), (2, 1), (5, 5), (6, 5), (10, 10), (11, 10), (12, 10)
     }
+
+
+def test_only_event_time_lake_frame_hashes_on_day_keys(spark, tmp_path):
+    """The lake sink's frame: under event time the rows are hashed on
+    (year, month, day) so each day dir gets one object per batch; the
+    processing-time frame (the socket path) and the compat frame
+    (coalesce(1)) carry no repartition, so they stay shuffle-free."""
+    import re
+
+    from s4_spark.pipeline.s4 import S4Config, build_pipeline, lake_frame
+
+    def analyzed(**kw):
+        cfg = S4Config(
+            input_path=str(tmp_path), output_path=str(tmp_path / "out"),
+            checkpoint_path=str(tmp_path / "ckpt"), **kw,
+        )
+        df = lake_frame(build_pipeline(spark, cfg), cfg)
+        return df._jdf.queryExecution().analyzed().toString()
+
+    json_kw = dict(record_type="json", json_schema="id string, ts timestamp")
+    event = analyzed(event_time_col="ts", **json_kw)
+    keys = re.search(r"RepartitionByExpression \[([^\]]*)\]", event)
+    assert keys, event
+    assert [k.split("#")[0] for k in keys.group(1).split(", ")] == [
+        "year", "month", "day"
+    ], event
+    for p in (
+        analyzed(),
+        analyzed(**json_kw),
+        analyzed(single_object_per_flush=True),
+        analyzed(event_time_col="ts", single_object_per_flush=True, **json_kw),
+    ):
+        assert "RepartitionByExpression" not in p, p
+    assert "Repartition 1, false" in analyzed(single_object_per_flush=True)

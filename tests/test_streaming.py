@@ -210,6 +210,55 @@ def test_single_object_per_flush_compat_mode(spark, tmp_path):
     assert sorted(values) == sorted(f"rec-{i}" for i in range(300))
 
 
+def test_event_time_lake_writes_one_object_per_day_per_batch(spark, tmp_path):
+    """Under event-time keys a batch spans many days, and the lake lands
+    ONE object per year=/month=/day= dir per batch (the reference PUTs
+    one object per flush per key, lake/lake.go:65-90), not one per input
+    task per dir. Four input files, each spanning the same three days,
+    are read by at least two tasks in one availableNow batch; the log
+    entry lists one object in each of the three day dirs, holding
+    exactly the valid lines, and no malformed line lands."""
+    import gzip
+    import json
+    from urllib.parse import urlparse
+
+    from s4_spark.pipeline.s4 import S4Config, run_once
+
+    landing, out, ckpt = (str(tmp_path / d) for d in ("landing", "out", "ckpt"))
+    os.makedirs(landing)
+    valid = []
+    for f in range(4):
+        rows = [
+            json.dumps({"id": f"{f}-{i}", "ts": f"2024-03-0{1 + i % 3} 12:00:00"})
+            for i in range(30)
+        ]
+        valid += rows
+        with open(os.path.join(landing, f"part-{f}.json"), "w") as fh:
+            fh.write("\n".join(rows + ['{"id": "broken', "[1, 2]", "42"]) + "\n")
+
+    run_once(spark, S4Config(
+        input_path=landing, output_path=out, checkpoint_path=ckpt,
+        record_type="json", json_schema="id string, ts timestamp",
+        event_time_col="ts",
+    ))
+
+    with open(os.path.join(out, "_spark_metadata", "0")) as f:
+        assert f.readline().strip() == "v1"
+        objs = [urlparse(json.loads(ln)["path"]).path for ln in f if ln.strip()]
+    by_dir = {}
+    for o in objs:
+        by_dir.setdefault(os.path.relpath(os.path.dirname(o), out), []).append(o)
+    assert sorted(by_dir) == [
+        f"year=2024/month=3/day={d}" for d in (1, 2, 3)
+    ], by_dir
+    assert all(len(v) == 1 for v in by_dir.values()), by_dir
+    got = []
+    for o in objs:
+        with gzip.open(o, "rt") as fh:
+            got += [ln.rstrip("\n") for ln in fh]
+    assert sorted(got) == sorted(valid)
+
+
 def test_processing_time_partitions_compile_nothing_per_trigger(spark, tmp_path):
     """Spark inlines the batch's current time into the generated code as
     a literal, so arrival-time keys taken from ``current_timestamp``
