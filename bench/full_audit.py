@@ -14,9 +14,9 @@ fix this repo already carries) and its own DuckDB connection; shards
 are round-robin by registry order, so the three ~9-minute exact
 all-pairs near-dup oracles (q111/q120/q121 at sf0.1) land on different
 workers and the audit's wall-clock drops from ~90 sequential minutes
-to roughly the slowest shard. Hash compare is the driver's own
-algorithm: sort columns by name, round floats to 6, stringify, sort
-rows, md5.
+to roughly the slowest shard. Each entry is compared by tier-1's own
+``tests.conftest.assert_oracle_match`` (row count, column names, then
+every normalized cell), so the audit and tier-1 give one verdict.
 """
 
 from __future__ import annotations
@@ -31,35 +31,22 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _WORKER = r"""
-import sys, os, json, hashlib
+import sys, json
 sys.path.insert(0, %(repo)r)
 import duckdb
-import pandas as pd
+from s4_spark.catalog import TABLES
 from s4_spark.session import get_spark
 from s4_spark.queries import REGISTRY
+from tests.conftest import assert_oracle_match
 
 sf = %(sf)r
 names = %(names)r
 spark = get_spark(app_name="s4_audit_worker", cpus=%(cpus)d)
 con = duckdb.connect()
-for t in ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]:
+for t in TABLES:
     con.execute(
         f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
     )
-
-def vhash(pdf):
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    cols = {}
-    for c in pdf.columns:
-        s = pdf[c]
-        if pd.api.types.is_float_dtype(s):
-            s = s.round(6)
-        elif pd.api.types.is_datetime64_any_dtype(s):
-            s = s.dt.floor("us")
-        cols[c] = s.astype(str)
-    lines = sorted(",".join(r) for r in pd.DataFrame(cols).itertuples(index=False))
-    return hashlib.md5("\n".join(lines).encode()).hexdigest()
 
 out = {}
 for name in names:
@@ -69,9 +56,10 @@ for name in names:
         continue
     try:
         spark.catalog.clearCache()
-        got = vhash(q.fn(spark, sf).toPandas())
-        want = vhash(con.sql(q.oracle).df())
-        out[name] = "pass" if got == want else "MISMATCH"
+        assert_oracle_match(q.fn(spark, sf), con, q.oracle, name)
+        out[name] = "pass"
+    except AssertionError as e:
+        out[name] = "MISMATCH: " + str(e).splitlines()[0]
     except Exception as e:  # noqa: BLE001 - audit must enumerate, not die
         out[name] = f"ERROR: {type(e).__name__}: {e}"
     print(f"{name}: {out[name]}", file=sys.stderr, flush=True)

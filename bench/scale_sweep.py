@@ -23,8 +23,8 @@ is quadratic in the corpus looks fine at sf0.1 and detonates one decade
 up, which is precisely the 100 TB failure mode the mandate cares about.
 Institutionalized per VERDICT r7 item 3: rebuild the probe dirs if /tmp
 was wiped (``make_scaled_sf.py /root/testdata/sf0.1 /tmp/s4_scaleprobe/sf1 10``),
-re-run after substantive operator changes, append the decade table to
-SCALE.md each round.
+re-run after substantive operator changes, and update the latest figures
+in SCALE.md ("Latest gates" and the family sections).
 
 ``outliers`` lists entries over ``--outlier-sec`` (default 120 s at x10
 — r7's two true positives ran 814/968 s; the slowest honest entries,

@@ -10,7 +10,7 @@ Usage: python bench/stream_state_probe.py [sf_dir]
            [--only name1,name2] [--out results.json]
 
 Default entry set = the map-state/funnel/changelog/TTL/chained rigs the
-r9 verdict names; timings land in SCALE.md's measured-scaling tables
+r9 verdict names; timings land in SCALE.md B9's streaming-state table
 with the ×10 (full sweep) and ×100/×1000 (this instrument) decades.
 State-size capture matters as much as time here: a stateful operator
 whose numRowsTotal grows with STREAM LIFETIME instead of open-window /

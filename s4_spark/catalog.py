@@ -160,13 +160,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# spread_scan fires only below this input-size gate (env-overridable).
-# 256 MB: every driver SF and the ×10 probe sit below it (single-digit
-# MB to ~100 MB single-row-group files); any real deployment's input is
-# orders of magnitude above it and keeps the untouched plan.
-SPREAD_GATE_BYTES = int(
-    os.environ.get("S4_SPREAD_GATE_BYTES", str(256 * 1024 * 1024))
-)
+# spread_scan fires only below this input-size gate. 256 MB: every
+# driver SF and the ×10 probe sit below it (single-digit MB to ~100 MB
+# single-row-group files); any real deployment's input is orders of
+# magnitude above it and keeps the untouched plan.
+SPREAD_GATE_BYTES = 256 * 1024 * 1024
 
 
 def spread_scan(df: DataFrame, key: str) -> DataFrame:

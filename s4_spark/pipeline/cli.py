@@ -40,8 +40,7 @@ def main(argv: list[str] | None = None) -> int:
 
     run = sub.add_parser("run", help="start the ingest pipeline")
     run.add_argument("--input", default=os.environ.get("S4_SOCKET_PATH"),
-                     help="landing dir, unix socket path (--source unixline), "
-                          "or host:port (--source socket)")
+                     help="landing dir, or unix socket path (--source unixline)")
     run.add_argument("--output", default=os.environ.get("S4_S3_PATH"),
                      help="sink dir or s3a:// URI")
     run.add_argument("--checkpoint", default=os.environ.get("S4_BUFFER_PATH"),
@@ -57,7 +56,7 @@ def main(argv: list[str] | None = None) -> int:
                      choices=["line", "json"])
     run.add_argument("--sink", default="lake", choices=["lake", "console"])
     run.add_argument("--source", default="text",
-                     choices=["text", "unixline", "socket"])
+                     choices=["text", "unixline"])
     run.add_argument("--socket-mode", default="connect",
                      choices=["connect", "listen"],
                      help="unixline only: connect = s4 client, "

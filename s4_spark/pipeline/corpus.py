@@ -1,8 +1,8 @@
-"""Corpus-prep pipeline as a reusable job (the q130 stages, importable):
-quality filter → exact dedup → MinHash-LSH near-dup removal. q130 keeps
-its own inline copy as the oracle-checked specification; this module is
-the OPERATIONAL form the CLI runs over an arbitrary documents directory
-(the reference's whole program is one such ingest job, main.go:106-140 —
+"""Corpus-prep pipeline: quality filter → exact dedup → MinHash-LSH
+near-dup removal. One code path: ``cli corpus`` runs it over an
+arbitrary documents directory, and q130 runs it over the registry's
+documents table and checks the result against its DuckDB oracle (the
+reference's whole program is one such ingest job, main.go:106-140 —
 this is its training-data descendant).
 """
 
@@ -22,8 +22,8 @@ def prepare_corpus(
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """Returns the cleaned corpus (same schema as input plus the quality
-    feature columns). Stages and plan shapes are q130's — see its
-    docstring and SCALE.md §B12 for the 100 TB argument per stage."""
+    feature columns). q130's docstring describes the stages; SCALE.md
+    §B12 gives the 100 TB argument per stage."""
     d = X.quality_features(docs).filter(
         (F.col("n_tokens") >= min_tokens)
         & (F.col("punct_ratio") <= max_punct_ratio)
@@ -35,9 +35,9 @@ def prepare_corpus(
         .drop("rn")
     )
     sig = D.with_minhash_signature(D.shingles_exploded(kept, "doc_id"), "doc_id")
-    cands = D.lsh_candidate_pairs(sig, "doc_id", bands=24, rows=4).localCheckpoint(
-        eager=False
-    )
+    # no cut here: verify_pairs_jaccard already cuts its pairs input
+    # lazily, and ReusedExchange dedups the twice-referenced subtree
+    cands = D.lsh_candidate_pairs(sig, "doc_id", bands=24, rows=4)
     removed = (
         D.verify_pairs_jaccard(cands, kept, "doc_id")
         .filter(F.col("jac") >= jaccard_threshold)

@@ -7,7 +7,7 @@ that pipeline's semantics idiomatically:
 
 | reference                                  | here |
 |--------------------------------------------|------|
-| unix socket source (input/unix.go:19-82)   | `unixline` custom DataSource (connect = client A22, listen = server A23 fan-in); file/text stream over a landing dir (the "S3 source" north star); `socket` format for dev |
+| unix socket source (input/unix.go:19-82)   | `unixline` custom DataSource (connect = client A22, listen = server A23 fan-in); file/text stream over a landing dir (the "S3 source" north star) |
 | line framing (input/unix.go:91-103)        | readStream.text lineSep="\n" |
 | JSON validation, drop malformed (river/jsonr.go:99-116) | from_json(schema) + isNotNull filter (DROPMALFORMED semantics) |
 | durable buffer (river/liner.go, jsonr.go)  | source WAL + checkpointLocation (upgrades at-most-once → exactly-once, fixes Appendix-B races) |
@@ -37,14 +37,14 @@ from s4_spark.streaming.rigs import drain
 # the CLI flag surface (/root/reference/main.go:20-57).
 @dataclass
 class S4Config:
-    input_path: str  # landing dir (or host:port for socket mode)
+    input_path: str  # landing dir, or socket path for unixline
     output_path: str  # sink dir / s3a:// URI ("s3Path")
     checkpoint_path: str  # "bufferPath" analog — durable progress
     record_type: str = "line"  # "line" | "json"  (--type)
     flush_interval: str = "5 minutes"  # --flush (ticker default, main.go:44-49)
     sink: str = "lake"  # "lake" (gzip text, partitioned) | "console"
     json_schema: str | None = None  # schema for json mode (None -> permissive map)
-    source_format: str = "text"  # "text" | "unixline" | "socket" (dev only)
+    source_format: str = "text"  # "text" | "unixline"
     socket_mode: str = "connect"  # unixline only: "connect" (A22 client) |
     # "listen" (A23 server — bind + fan-in of N producer connections)
     max_files_per_trigger: int | None = None  # 100 TB listing control
@@ -61,7 +61,8 @@ def read_records(spark: SparkSession, cfg: S4Config) -> DataFrame:
     domain-socket DataSource with the durable spool (exactly-once), in
     connect mode (`s4 client`, main.go:106-122) or listen mode
     (`s4 server`, main.go:124-140 — the source binds and fans in every
-    producer connection)."""
+    producer connection). Any other ``source_format`` than ``"text"``
+    or ``"unixline"`` raises ``ValueError``."""
     if cfg.source_format == "unixline":
         import s4_spark.sources as sources
 
@@ -72,13 +73,9 @@ def read_records(spark: SparkSession, cfg: S4Config) -> DataFrame:
             .option("mode", cfg.socket_mode)
             .load()
         )
-    if cfg.source_format == "socket":
-        host, port = cfg.input_path.split(":")
-        return (
-            spark.readStream.format("socket")
-            .option("host", host)
-            .option("port", int(port))
-            .load()
+    if cfg.source_format != "text":
+        raise ValueError(
+            f"source_format must be 'text' or 'unixline', got {cfg.source_format!r}"
         )
     reader = spark.readStream.format("text").option("lineSep", "\n")
     if cfg.max_files_per_trigger:

@@ -17,40 +17,17 @@ from s4_spark.queries import (  # noqa: F401,E402
     training,
 )
 
-# The round driver oracle-checks the FIRST 50 registry entries only; module
-# import order alone put scans/filters/joins/aggregates there, so windows,
-# setops, functions, streaming, UDFs and the entire LLM/training surface
-# never had a driver-verified row (round-2 finding: the streaming family
-# broke and the driver gate stayed green). DRIVER_WINDOW pins a curated
-# sample — every §2-B family represented, all entries oracle-backed, all
-# outputs hashable scalars (the driver's pandas hash cannot sort/hash
-# array, map, or binary cells) — and the reorder below puts it first.
-# tests/test_driver_window.py enforces all three properties.
-# Round-14 rotation (saturation steady state, standing rule "window
-# priority = code changed since last driver row, then staleness" —
-# VERDICT r8 item 1). Leads: the 13 entries whose RESULT-PRODUCING code
-# was restructured in the r14 optimization round — q145 (whale-safe
-# window funnel), q144 (NOSORT constant split), the seven
-# verify_pairs_jaccard callers q111/q121/q130/q148/q190/q203/q216
-# (lazy candidate cut + hot-bucket guard), the replay-rig consumers
-# q094/q165/q273 (rig-scoped shuffle partitions), and q246 (Arrow-batch
-# source reads). The ~88 bounded-sort sweep conversions are covered by
-# the full-registry pytest oracle (the r13-verified invariant for
-# outside-window rewrites); the leads are the entries whose PLAN
-# restructuring goes beyond the machine-checked ordered_small pattern.
-# Then the FULL remaining r8-vintage cohort (27 entries after q246
-# moved into the leads; latest driver row = r8 per the
-# CORRECTNESS_r01..r13 union — after this window lands the staleness
-# floor rises to r9). Then 10 r9-cohort entries by family spread,
-# preferring sweep-converted ones (q015/q037/q096/q102), plus the
-# stalest B6/B7 canaries (q060 r12, q071 r12 — q071 is also a sweep
-# conversion).
-# NEXT_WINDOW_QUEUE pins entries that should rotate into the NEXT
-# round's window when NEVER-VERIFIED entries outnumber the 50 slots;
-# empty (nothing is never-verified — saturation steady state). The
-# round-15 rotation, per the standing priority rule: lead with any
-# entry whose code changes after this round's window freezes, then the
-# remaining r9 cohort by family spread.
+# The round driver oracle-checks the FIRST 50 registry entries only, so
+# DRIVER_WINDOW pins which 50 those are and _reorder() puts them first.
+# Rotation rule: lead with entries whose result-producing code changed
+# since their last driver row, then the stalest entries by family spread.
+# tests/test_driver_window.py enforces that the window is the first 50
+# entries, every one oracle-backed with hashable scalar outputs (the
+# driver's pandas hash cannot sort array/map/binary/struct cells), that
+# every §2-B family is in it, and that it spends no slot on an already
+# verified entry while a never-verified one waits. NEXT_WINDOW_QUEUE
+# pins the never-verified entries that do not fit into this window;
+# empty while every entry has a driver row.
 NEXT_WINDOW_QUEUE: tuple = ()
 
 DRIVER_WINDOW = (

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from s4_spark.operators import dedup as D
 from s4_spark.operators import similarity as S
 from s4_spark.operators import text as X
+from s4_spark.pipeline.corpus import prepare_corpus
 from s4_spark.queries.helpers import ordered_small, t, ts
 from s4_spark.queries.registry import query
 
@@ -916,27 +917,10 @@ def q130(spark, sf_dir):
       → per-language corpus stats.
 
     The SQL oracle is the exact all-pairs formulation — the pipeline must
-    land on identical rows through the approximate-then-verify path."""
-    d = X.quality_features(t(spark, sf_dir, "documents")).filter(
-        (F.col("n_tokens") >= 5) & (F.col("punct_ratio") <= 0.5)
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.sha2("text", 256)).orderBy("doc_id")
-    kept = (
-        d.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
-    )
-    sig = D.with_minhash_signature(D.shingles_exploded(kept, "doc_id"), "doc_id")
-    # no barrier: ReusedExchange dedups the twice-referenced candidate
-    # subtree — same argument as q111 (r13)
-    cands = D.lsh_candidate_pairs(sig, "doc_id", bands=24, rows=4)
-    removed = (
-        D.verify_pairs_jaccard(cands, kept, "doc_id")
-        .filter(F.col("jac") >= 0.5)
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
-    final = kept.join(removed, "doc_id", "left_anti")
+    land on identical rows through the approximate-then-verify path. The
+    stages are ``pipeline.corpus.prepare_corpus``, the job ``cli corpus``
+    runs, so the oracle checks the shipped code path."""
+    final = prepare_corpus(t(spark, sf_dir, "documents"))
     return (
         final.groupBy("lang")
         .agg(F.count("*").alias("n_docs"), F.sum("n_tokens").cast("long").alias("sum_tokens"))
@@ -991,11 +975,10 @@ def q148(spark, sf_dir):
         D.verify_pairs_jaccard(cands, docs, "doc_id")
         .filter(F.col("jac") >= 0.5)
         .select("id_a", "id_b")
-        # second lazy cut (r14, VERDICT r13 item 5): CC's edge
-        # symmetrization checkpoint otherwise compiles the whole
-        # verify-over-LSH plan on the driver; stacked with the
-        # verify-internal candidate cut this measured 3.99 -> 3.06 s
-        # min-of-3 at sf0.1 (bench/r14_q148_probe.py), identical rows
+        # second lazy cut: CC's edge symmetrization checkpoint otherwise
+        # compiles the whole verify-over-LSH plan on the driver; stacked
+        # with the verify-internal candidate cut this measured
+        # 3.99 -> 3.06 s min-of-3 at sf0.1, identical rows (SCALE.md B11)
         .localCheckpoint(eager=False)
     )
     labels = D.connected_components(pairs)

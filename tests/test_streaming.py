@@ -969,6 +969,32 @@ def test_event_time_col_requires_json_records(spark, tmp_path):
     assert spark.streams.active == []
 
 
+@pytest.mark.parametrize("fmt", ["socket", "parquet"])
+def test_unknown_source_format_is_refused(spark, tmp_path, fmt):
+    """Only the text landing dir and the unixline socket are sources: any
+    other source_format (a stale "socket" config included) raises instead
+    of falling through to the text reader, and the CLI refuses it."""
+    from s4_spark.pipeline.cli import main
+    from s4_spark.pipeline.s4 import S4Config, run_once
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.txt").write_text("one\ntwo\n")
+    cfg = S4Config(
+        input_path=str(landing),
+        output_path=str(tmp_path / "out"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        source_format=fmt,
+    )
+    with pytest.raises(ValueError, match="source_format"):
+        run_once(spark, cfg)
+    assert spark.streams.active == []
+    assert not (tmp_path / "out").exists()
+    with pytest.raises(SystemExit):
+        main(["run", "--input", str(landing), "--output", str(tmp_path / "o"),
+              "--checkpoint", str(tmp_path / "c"), "--source", fmt, "--once"])
+
+
 def test_run_once_leaves_config_unchanged(spark, tmp_path):
     """run_once must not mutate the caller's config: a config reused
     with start() after a backfill drain must still run on its ticker."""
