@@ -97,7 +97,7 @@ def bench_stream_ingest(spark, n: int) -> float:
     from pyspark.sql import functions as F
 
     from s4_spark.pipeline.s4 import S4Config, run_once
-    from s4_spark.streaming.rigs import scratch
+    from s4_spark.scratch import scratch
 
     landing = scratch("bench_stream_landing")
     (

@@ -10,13 +10,16 @@ Usage: python bench/full_audit.py [sf_dir] [--workers 4]
 
 Each worker is a SEPARATE PROCESS with its own Spark session (pid-
 namespaced scratch keeps them from clobbering each other — the round-5
-fix this repo already carries) and its own DuckDB connection; shards
-are round-robin by registry order, so the three ~9-minute exact
-all-pairs near-dup oracles (q111/q120/q121 at sf0.1) land on different
-workers and the audit's wall-clock drops from ~90 sequential minutes
-to roughly the slowest shard. Each entry is compared by tier-1's own
-``tests.conftest.assert_oracle_match`` (row count, column names, then
-every normalized cell), so the audit and tier-1 give one verdict.
+fix this repo already carries) and its own DuckDB connection, sized to
+an equal share of the box: the session's default cores and driver
+memory (``session.env_cpus`` / ``env_driver_memory``) split over
+``--workers``. Shards are round-robin by registry order, so the three
+~9-minute exact all-pairs near-dup oracles (q111/q120/q121 at sf0.1)
+land on different workers and the audit's wall-clock drops from ~90
+sequential minutes to roughly the slowest shard. Each entry is compared
+by tier-1's own ``tests.conftest.assert_oracle_match`` (row count,
+column names, then every normalized cell), so the audit and tier-1 give
+one verdict.
 """
 
 from __future__ import annotations
@@ -41,7 +44,7 @@ from tests.conftest import assert_oracle_match
 
 sf = %(sf)r
 names = %(names)r
-spark = get_spark(app_name="s4_audit_worker", cpus=%(cpus)d)
+spark = get_spark(app_name="s4_audit_worker")
 con = duckdb.connect()
 for t in TABLES:
     con.execute(
@@ -74,11 +77,11 @@ def main() -> None:
     ap.add_argument("--workers", type=int, default=4)
     ap.add_argument("--only", default=None)
     ap.add_argument("--out", default=None)
-    ap.add_argument("--cpus", type=int, default=8)
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
     from s4_spark.queries import REGISTRY
+    from s4_spark.session import DEFAULT_CPUS, env_driver_memory
 
     names = list(REGISTRY)
     if args.only:
@@ -91,7 +94,13 @@ def main() -> None:
     shards = [names[i :: args.workers] for i in range(args.workers)]
     procs = []
     outfiles = []
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="8g")
+    mem = env_driver_memory()
+    mem_mb = int(mem[:-1]) * (1024 if mem[-1].lower() == "g" else 1)
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CPUS=str(max(1, DEFAULT_CPUS // args.workers)),
+        SPARK_GRAFT_DRIVER_MEM=f"{mem_mb // args.workers}m",
+    )
     for i, shard in enumerate(shards):
         outfile = os.path.join(
             tempfile.gettempdir(), f"s4_audit_shard_{os.getpid()}_{i}.json"
@@ -101,7 +110,6 @@ def main() -> None:
             "repo": REPO,
             "sf": args.sf_dir,
             "names": shard,
-            "cpus": args.cpus,
             "outfile": outfile,
         }
         procs.append(

@@ -1,7 +1,13 @@
 #!/usr/bin/env python
 """Build a k-times scaled copy of a test SF directory for scale probes.
 
-Usage: python bench/make_scaled_sf.py <src_sf_dir> <out_dir> <k>
+Usage: python bench/make_scaled_sf.py <src_sf_dir> <out_dir> <k> [table ...]
+
+With no tables named every table is built; naming some (e.g.
+``documents`` for the corpus probes, ``embeddings`` for the ANN family,
+``events`` for the event-analytics and stream rigs) builds only those,
+and reads only the key domains they need — ``<src_sf_dir>`` then needs
+just those tables (plus the tables owning their foreign keys).
 
 The driver ships sf0.001/0.01/0.1 only; the 100 TB mandate needs
 evidence the headline plans keep their shape ANOTHER decade (or two) up,
@@ -19,10 +25,10 @@ rows:
   same time range, so per-bucket volumes and per-user sessions grow the
   way real event feeds grow.
 - documents: doc_id shifted; copy i > 0 gets an INJECTIVE VOCAB RENAME
-  (every token suffixed `_<salt>c<i>` — the salt, defaulting to the
-  output dir basename and overridable as a 4th CLI arg, keeps the
-  rename injective across COMPOSED build levels; see build()'s comment
-  for the round-10 collision this fixes). Shingle equality is invariant under
+  (every token suffixed `_<salt>c<i>` — the salt, the output dir's
+  basename, keeps the rename injective across COMPOSED build levels
+  whose dirs are named apart; see build()'s comment for the round-10
+  collision this fixes). Shingle equality is invariant under
   injective renaming, so each copy reproduces the source's internal
   near-dup structure exactly while sharing zero shingles/tokens across
   copies: dup-rate stays constant as the corpus grows -- the honest
@@ -43,6 +49,8 @@ SPARK_GRAFT_SF_DIR=<out_dir>.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 import sys
 
@@ -52,13 +60,30 @@ from pyspark.sql import DataFrame, functions as F
 
 PLAIN = ("region", "nation")
 
+#: Shifted key columns per table, each with the (table, column) whose max
+#: sizes its key domain — both sides of a foreign key shift together.
+KEYS = {
+    "supplier": {"s_suppkey": ("supplier", "s_suppkey")},
+    "part": {"p_partkey": ("part", "p_partkey")},
+    "customer": {"c_custkey": ("customer", "c_custkey")},
+    "orders": {
+        "o_orderkey": ("orders", "o_orderkey"),
+        "o_custkey": ("customer", "c_custkey"),
+    },
+    "lineitem": {
+        "l_orderkey": ("orders", "o_orderkey"),
+        "l_partkey": ("part", "p_partkey"),
+        "l_suppkey": ("supplier", "s_suppkey"),
+    },
+    "events": {
+        "event_id": ("events", "event_id"),
+        "user_id": ("events", "user_id"),
+    },
+    "documents": {"doc_id": ("documents", "doc_id")},
+    "embeddings": {"vec_id": ("embeddings", "vec_id")},
+}
 
-def _shift(df: DataFrame, i: int, shifts: dict[str, int]) -> DataFrame:
-    out = df
-    for c, m in shifts.items():
-        if c in out.columns:
-            out = out.withColumn(c, F.col(c) + F.lit(i * (m + 1)))
-    return out
+TABLES = PLAIN + tuple(KEYS)
 
 
 def _copies(df: DataFrame, k: int, fn) -> DataFrame:
@@ -69,8 +94,53 @@ def _copies(df: DataFrame, k: int, fn) -> DataFrame:
     return out
 
 
-def build(spark, src: str, out: str, k: int, salt: str | None = None) -> None:
-    # ``salt`` keys the per-copy text rename and embedding transform so
+def _rename_tokens(df: DataFrame, i: int, salt: str) -> DataFrame:
+    # salt makes the suffix level-unique: `_sf10c1` from one build
+    # level can never equal `_sf100c1` from the next, so composing
+    # builds keeps zero cross-copy token overlap (copy 0 stays
+    # un-renamed, which is safe once salts differ per level)
+    renamed = F.array_join(
+        F.transform(
+            F.split(F.col("text"), " "),
+            lambda x: F.concat(x, F.lit(f"_{salt}c{i}")),
+        ),
+        " ",
+    )
+    return df.withColumn("text", renamed).withColumn("n_chars", F.length("text"))
+
+
+def _transform_vectors(df: DataFrame, i: int, salt: str, dim: int) -> DataFrame:
+    # Rotation step and sign pattern are keyed by (salt, i): plain
+    # rotate-by-i composed across levels collides exactly like the
+    # token suffixes (rotate i then j == rotate j then i == rotate
+    # i+j, so paths with equal index sums were coordinate-identical
+    # vectors). A salt-keyed odd step de-aliases rotation amounts
+    # across levels and the per-copy sign flip (still orthogonal —
+    # within-copy geometry exact) makes a residual rotation
+    # collision across levels vanishingly unlikely instead of
+    # structural.
+    h = int.from_bytes(hashlib.md5(f"{salt}:{i}".encode()).digest()[:8], "big")
+    step = (h % (dim - 1)) + 1
+    r = (i * step) % dim
+    rotated = (
+        F.concat(
+            F.slice(F.col("embedding"), r + 1, dim - r),
+            F.slice(F.col("embedding"), 1, r),
+        )
+        if r
+        else F.col("embedding")
+    )
+    signs = [-1.0 if (h >> (8 + (j % 48))) & 1 else 1.0 for j in range(dim)]
+    rotated = F.zip_with(
+        rotated,
+        F.array(*[F.lit(s) for s in signs]),
+        lambda x, s: (x * s).cast("float"),
+    )
+    return df.withColumn("embedding", rotated)
+
+
+def build(spark, src: str, out: str, k: int, tables=TABLES) -> None:
+    # The salt keys the per-copy text rename and embedding transform so
     # COMPOSED builds (sf1 → sf10 → sf100) stay injective across levels.
     # Round-10 finding: without it, copy paths with the same non-zero
     # index subsequence collide — at ×1000 composed in three ×10 levels,
@@ -80,117 +150,50 @@ def build(spark, src: str, out: str, k: int, salt: str | None = None) -> None:
     # (the q120 recall certification derived and matched that number
     # exactly — see SCALE.md). Harder-than-declared dup-rate is
     # conservative for timing probes but wrong for the "dup-rate stays
-    # constant" model; distinct salts per level (default: the output
-    # dir's basename) restore it.
-    salt = salt if salt is not None else os.path.basename(out.rstrip("/"))
+    # constant" model; distinct salts per level (the output dir's
+    # basename) restore it.
+    salt = os.path.basename(out.rstrip("/"))
     read = lambda t: spark.read.parquet(os.path.join(src, f"{t}.parquet"))
     write = lambda df, t: df.write.mode("overwrite").parquet(
         os.path.join(out, f"{t}.parquet")
     )
 
-    for t in PLAIN:
-        write(read(t), t)
+    @functools.cache
+    def domain_max(t: str, c: str) -> int:
+        return read(t).agg(F.max(c)).first()[0]
 
-    # one max per key domain, shared by every table referencing it
-    maxes = {
-        "supp": read("supplier").agg(F.max("s_suppkey")).first()[0],
-        "part": read("part").agg(F.max("p_partkey")).first()[0],
-        "cust": read("customer").agg(F.max("c_custkey")).first()[0],
-        "ord": read("orders").agg(F.max("o_orderkey")).first()[0],
-        "event": read("events").agg(F.max("event_id")).first()[0],
-        "user": read("events").agg(F.max("user_id")).first()[0],
-        "doc": read("documents").agg(F.max("doc_id")).first()[0],
-        "vec": read("embeddings").agg(F.max("vec_id")).first()[0],
-    }
+    for t in tables:
+        if t in PLAIN:
+            write(read(t), t)
+            continue
+        df = read(t)
+        dim = len(df.select("embedding").first()[0]) if t == "embeddings" else 0
 
-    domains = {
-        "supplier": {"s_suppkey": maxes["supp"]},
-        "part": {"p_partkey": maxes["part"]},
-        "customer": {"c_custkey": maxes["cust"]},
-        "orders": {"o_orderkey": maxes["ord"], "o_custkey": maxes["cust"]},
-        "lineitem": {
-            "l_orderkey": maxes["ord"],
-            "l_partkey": maxes["part"],
-            "l_suppkey": maxes["supp"],
-        },
-        "events": {"event_id": maxes["event"], "user_id": maxes["user"]},
-    }
-    for t, shifts in domains.items():
-        write(_copies(read(t), k, lambda df, i: _shift(df, i, shifts)), t)
+        def copy(part: DataFrame, i: int) -> DataFrame:
+            for c, domain in KEYS[t].items():
+                part = part.withColumn(
+                    c, F.col(c) + F.lit(i * (domain_max(*domain) + 1))
+                )
+            if i and t == "documents":
+                return _rename_tokens(part, i, salt)
+            if i and t == "embeddings":
+                return _transform_vectors(part, i, salt, dim)
+            return part
 
-    def doc_copy(df: DataFrame, i: int) -> DataFrame:
-        out = df.withColumn("doc_id", F.col("doc_id") + F.lit(i * (maxes["doc"] + 1)))
-        if i == 0:
-            return out
-        # salt makes the suffix level-unique: `_sf10c1` from one build
-        # level can never equal `_sf100c1` from the next, so composing
-        # builds keeps zero cross-copy token overlap (copy 0 stays
-        # un-renamed, which is safe once salts differ per level)
-        renamed = F.array_join(
-            F.transform(
-                F.split(F.col("text"), " "),
-                lambda x: F.concat(x, F.lit(f"_{salt}c{i}")),
-            ),
-            " ",
-        )
-        return out.withColumn("text", renamed).withColumn(
-            "n_chars", F.length("text")
-        )
-
-    write(_copies(read("documents"), k, doc_copy), "documents")
-
-    dim = len(read("embeddings").select("embedding").first()[0])
-
-    import hashlib
-
-    def emb_copy(df: DataFrame, i: int) -> DataFrame:
-        out = df.withColumn("vec_id", F.col("vec_id") + F.lit(i * (maxes["vec"] + 1)))
-        if i == 0:
-            return out
-        # Rotation step and sign pattern are keyed by (salt, i): plain
-        # rotate-by-i composed across levels collides exactly like the
-        # token suffixes (rotate i then j == rotate j then i == rotate
-        # i+j, so paths with equal index sums were coordinate-identical
-        # vectors). A salt-keyed odd step de-aliases rotation amounts
-        # across levels and the per-copy sign flip (still orthogonal —
-        # within-copy geometry exact) makes a residual rotation
-        # collision across levels vanishingly unlikely instead of
-        # structural.
-        h = int.from_bytes(
-            hashlib.md5(f"{salt}:{i}".encode()).digest()[:8], "big"
-        )
-        step = (h % (dim - 1)) + 1
-        r = (i * step) % dim
-        rotated = (
-            F.concat(
-                F.slice(F.col("embedding"), r + 1, dim - r),
-                F.slice(F.col("embedding"), 1, r),
-            )
-            if r
-            else F.col("embedding")
-        )
-        signs = [-1.0 if (h >> (8 + (j % 48))) & 1 else 1.0 for j in range(dim)]
-        rotated = F.zip_with(
-            rotated,
-            F.array(*[F.lit(s) for s in signs]),
-            lambda x, s: (x * s).cast("float"),
-        )
-        return out.withColumn("embedding", rotated)
-
-    write(_copies(read("embeddings"), k, emb_copy), "embeddings")
+        write(_copies(df, k, copy), t)
 
 
 def main() -> None:
     src, out, k = sys.argv[1], sys.argv[2], int(sys.argv[3])
-    salt = sys.argv[4] if len(sys.argv) > 4 else None
+    tables = tuple(sys.argv[4:]) or TABLES
+    unknown = sorted(set(tables) - set(TABLES))
+    if unknown:
+        sys.exit(f"unknown tables {unknown}; choose from {list(TABLES)}")
     from s4_spark.session import get_spark
 
-    spark = get_spark(app_name="make_scaled_sf", cpus=16)
-    build(spark, src, out, k, salt=salt)
-    for t in PLAIN + tuple(
-        ["supplier", "part", "customer", "orders", "lineitem", "events",
-         "documents", "embeddings"]
-    ):
+    spark = get_spark(app_name="make_scaled_sf")
+    build(spark, src, out, k, tables)
+    for t in tables:
         n = spark.read.parquet(os.path.join(out, f"{t}.parquet")).count()
         print(f"{t}: {n} rows")
 

@@ -85,7 +85,7 @@ def planted_cert(pairs_per_level: int = 2000) -> None:
     )
     from s4_spark.session import get_spark
 
-    spark = get_spark(app_name="banding_recall_cert", cpus=32)
+    spark = get_spark(app_name="banding_recall_cert")
     S = 48  # shingles per doc (50 tokens)
     LEVELS = [32, 34, 36]  # shared shingles c -> jac = c/(2S-c)
     rows, pair_level = [], {}
@@ -159,7 +159,7 @@ def main() -> None:
     from s4_spark.queries import REGISTRY
     from s4_spark.session import get_spark
 
-    spark = get_spark(app_name="neardup_recall_probe", cpus=32)
+    spark = get_spark(app_name="neardup_recall_probe")
 
     block = (
         spark.read.parquet(os.path.join(src, "documents.parquet"))

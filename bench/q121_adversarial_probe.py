@@ -182,7 +182,7 @@ def main() -> None:
     args = ap.parse_args()
     from s4_spark.session import get_spark
 
-    spark = get_spark(app_name="q121_adversarial_probe", cpus=32)
+    spark = get_spark(app_name="q121_adversarial_probe")
     if args.build:
         build(spark, args.build)
     else:

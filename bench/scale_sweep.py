@@ -62,7 +62,6 @@ def main() -> None:
     ap.add_argument("--out", default=None)
     ap.add_argument("--only", default=None, help="comma-separated entry names")
     ap.add_argument("--outlier-sec", type=float, default=120.0)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument(
         "--runs",
         type=int,
@@ -72,7 +71,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    spark = get_spark(app_name="s4_scale_sweep", cpus=args.cpus)
+    spark = get_spark(app_name="s4_scale_sweep")
     # JVM/codegen warm-up on the SMALLEST table the probe dir has —
     # subset probe dirs (e.g. a documents-only ×1000 build) are a
     # legitimate --only target and don't carry the full SF layout, and

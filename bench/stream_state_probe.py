@@ -121,14 +121,17 @@ def q269_chunked_probe(spark, sf_dir: str, chunks: int) -> dict:
     files in modification-time order; maxFilesPerTrigger=1), so the
     watermark advances per chunk and the listener observes the real
     interval-bounded join state: ~2 chunks of feed + the 10-minute
-    interval population, orders of magnitude under worst case."""
+    interval population, orders of magnitude under worst case. The
+    query runs through ``rigs.drain_to_memory``, and the state maxima are
+    read from the progress it returns."""
     import glob
 
     from pyspark.sql import functions as F
 
     from s4_spark.catalog import table
     from s4_spark.queries.streaming import _q269_chain
-    from s4_spark.streaming.rigs import ntz_as_utc_instant, scratch
+    from s4_spark.scratch import scratch
+    from s4_spark.streaming.rigs import drain_to_memory, ntz_as_utc_instant
 
     ev = table(spark, sf_dir, "events")
     if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
@@ -142,40 +145,36 @@ def q269_chunked_probe(spark, sf_dir: str, chunks: int) -> dict:
     for i, p in enumerate(parts):
         os.utime(p, (base + i, base + i))
 
-    cap = _StateCapture()
-    spark.streams.addListener(cap)
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        name = f"s4_q269probe_{os.getpid()}"
-        t0 = time.time()
-        q = (
-            _q269_chain(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", scratch(f"ckpt_{name}"))
-            .start()
-        )
-        q.awaitTermination()
-        sec = round(time.time() - t0, 2)
-        n_out = spark.table(name).count()
-        time.sleep(2.0)  # async listener dispatch
-    finally:
-        spark.streams.removeListener(cap)
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+    )
+    t0 = time.time()
+    out, progress = drain_to_memory(
+        _q269_chain(stream),
+        "append",
+        "q269probe",
+        # keep every batch's progress report (the default keeps 100):
+        # one per chunk, each possibly followed by a no-data batch
+        conf={"spark.sql.streaming.numRecentProgressUpdates": str(2 * len(parts))},
+    )
+    sec = round(time.time() - t0, 2)
+    n_out = out.count()
 
-    join_ops = {k: v for k, v in cap.ops.items() if "join" in k.lower()}
+    ops: dict[str, int] = defaultdict(int)
+    for p in progress:
+        for op in p.stateOperators:
+            name = op.operatorName or "state"
+            ops[name] = max(ops[name], op.numRowsTotal)
+    join_ops = {k: v for k, v in ops.items() if "join" in k.lower()}
     join_max = max(join_ops.values(), default=0)
     res = {
         "sec": sec,
         "chunks": len(parts),
         "feed_rows_click_purchase": feed_rows,
         "out_rows": n_out,
-        "state_ops": dict(sorted(cap.ops.items())),
+        "state_ops": dict(sorted(ops.items())),
         "join_state_max": join_max,
         "join_state_vs_worst_case": round(join_max / feed_rows, 4)
         if feed_rows
@@ -209,9 +208,6 @@ def main() -> None:
         "time-ordered micro-batches (see q269_chunked_probe)",
     )
     ap.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
-    ap.add_argument(
         "--shuffle-partitions",
         type=int,
         default=None,
@@ -237,9 +233,7 @@ def main() -> None:
         if args.shuffle_partitions
         else None
     )
-    spark = get_spark(
-        app_name="s4_stream_state_probe", cpus=args.cpus, extra_conf=extra
-    )
+    spark = get_spark(app_name="s4_stream_state_probe", extra_conf=extra)
     if args.q269_chunked:
         res = q269_chunked_probe(spark, args.sf_dir, args.q269_chunked)
         out = {"sf_dir": args.sf_dir, "q269_chunked": res}

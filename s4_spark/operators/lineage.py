@@ -19,84 +19,10 @@ and planning cost grows quadratically. Two cut strategies:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame
 
-DEFAULT_CHECKPOINT_DIR = os.path.join(
-    tempfile.gettempdir(), "s4_spark_scratch", "reliable_ckpt"
-)
-
-
-OWNER_PID_FILE = ".owner_pid"
-
-
-def _owner_alive(root_dir: str) -> bool:
-    """True iff the dir's recorded owner process still runs on this host.
-
-    The default checkpoint root is a single-node convenience (cluster
-    deployments set their own HDFS/S3 dir), so a local PID probe is a
-    valid liveness signal. A missing/garbled marker reads as not-alive —
-    pre-marker dirs fall back to the age heuristic. EPERM from the probe
-    means the PID EXISTS but belongs to another user — on a multi-user
-    host sharing tempfile.gettempdir() that is a LIVE session, so it
-    must read as alive (deleting would be the exact live-state loss the
-    sweep exists to prevent); only ESRCH means the process is gone."""
-    try:
-        with open(os.path.join(root_dir, OWNER_PID_FILE)) as f:
-            pid = int(f.read().strip())
-    except (OSError, ValueError):
-        return False
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # process exists under another uid
-    except OSError:
-        return False
-
-
-def sweep_stale_checkpoint_roots(
-    current_app_id: str, max_age_s: float = 3600.0
-) -> list[str]:
-    """Delete dead apps' checkpoint roots under the shared default dir.
-
-    A sibling dir is swept only when BOTH signals say dead: its owner
-    PID (recorded in ``.owner_pid`` at dir creation) no longer runs,
-    AND the dir has been untouched for ``max_age_s``. The PID probe is
-    the liveness fix from the r6 advice: a directory's mtime only moves
-    when its direct children change, so a long-lived session idle past
-    ``max_age_s`` — but still depending on its checkpointed RDDs for
-    recompute — looked identical to a dead app under the age-only rule
-    and lost its checkpoints mid-run. PID reuse is the residual race
-    (another process adopting a dead owner's PID keeps the dir alive
-    until that process also exits — conservative direction: we may keep
-    garbage an extra hour, never delete live state). Returns the swept
-    paths (for the unit test)."""
-    import shutil
-    import time
-
-    swept: list[str] = []
-    if not os.path.isdir(DEFAULT_CHECKPOINT_DIR):
-        return swept
-    cutoff = time.time() - max_age_s
-    for d in os.listdir(DEFAULT_CHECKPOINT_DIR):
-        full = os.path.join(DEFAULT_CHECKPOINT_DIR, d)
-        try:
-            stale = os.path.getmtime(full) < cutoff
-        except OSError:
-            continue
-        if (
-            d != current_app_id
-            and os.path.isdir(full)
-            and stale
-            and not _owner_alive(full)
-        ):
-            shutil.rmtree(full, ignore_errors=True)
-            swept.append(full)
-    return swept
+from s4_spark.scratch import scratch_root
 
 
 def cut_lineage(df: DataFrame, reliable: bool = False) -> DataFrame:
@@ -113,20 +39,10 @@ def cut_lineage(df: DataFrame, reliable: bool = False) -> DataFrame:
         return df.localCheckpoint(eager=True)
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():
-        # Namespace by app id so two concurrent local sessions never share
-        # (and never clobber) a checkpoint root. App ids embed their start
-        # timestamp, so "our own dir already exists" cannot happen (the
-        # r5 judge flagged that same-id prune as dead code); what DOES
-        # accumulate is dead apps' dirs under the shared default root.
-        # Sweep SIBLING dirs whose owner process is gone AND that sat
-        # untouched for an hour; our own dir records this process's PID
-        # so concurrent sweeps see us alive however long we idle.
-        ckpt_dir = os.path.join(DEFAULT_CHECKPOINT_DIR, sc.applicationId)
-        sweep_stale_checkpoint_roots(sc.applicationId)
-        os.makedirs(ckpt_dir, exist_ok=True)
-        with open(os.path.join(ckpt_dir, OWNER_PID_FILE), "w") as f:
-            f.write(str(os.getpid()))
-        sc.setCheckpointDir(ckpt_dir)
+        # One SparkContext per process, and setCheckpointDir adds its own
+        # UUID subdir, so the process's scratch dir is a private root that
+        # the scratch sweep reclaims once this process is gone.
+        sc.setCheckpointDir(os.path.join(scratch_root(), "reliable_ckpt"))
     # Per-round checkpoint data is deleted when the superseded round's RDD
     # is GC'd, but ONLY under spark.cleaner.referenceTracking.cleanCheckpoints
     # — a core conf the ContextCleaner reads at context start, so it lives

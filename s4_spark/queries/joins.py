@@ -379,7 +379,7 @@ def q045(spark, sf_dir):
     from s4_spark.scratch import scratch_root
 
     tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    # plain join, not scans._scratch(): that helper rmtrees on every
+    # plain join, not scratch(): that helper rmtrees on every
     # call, so a second invocation in one session would delete the
     # bucket files while the catalog entry still passes the guard below
     warehouse = _os.path.join(scratch_root(), f"bucketed_{tag}")
@@ -673,18 +673,17 @@ def _cbo_tables(spark, sf_dir):
     path triggers a clean rebuild)."""
     import os
 
-    from s4_spark.scratch import scratch_root
+    from s4_spark.scratch import scratch, scratch_root
 
     tag = os.path.basename(sf_dir).replace(".", "_")
     names = {}
     for name in ("region", "nation", "customer"):
         tbl = f"s4_cbo_{name}_{tag}"
-        path = os.path.join(scratch_root(), f"cbo_{tag}", name)
+        rel = os.path.join(f"cbo_{tag}", name)
+        path = os.path.join(scratch_root(), rel)
         if not (spark.catalog.tableExists(tbl) and os.path.isdir(path)):
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            import shutil
-
-            shutil.rmtree(path, ignore_errors=True)
+            scratch(rel)
             (
                 t(spark, sf_dir, name)
                 .write.option("path", path)

@@ -21,14 +21,8 @@ from pyspark.sql import functions as F
 
 from s4_spark.queries.helpers import csum, dsum, ordered_small, sql_dsum, t
 from s4_spark.queries.registry import query
-from s4_spark.scratch import scratch_root
+from s4_spark.scratch import scratch, scratch_root
 from s4_spark.streaming.rigs import drain, run_to_memory
-
-
-def _scratch(tag: str) -> str:
-    path = os.path.join(scratch_root(), tag)
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 def events_landing_dir(sf_dir: str) -> str:
@@ -101,7 +95,7 @@ def q001(spark, sf_dir):
 def q002(spark, sf_dir):
     """lineitem → csv (header) → schema-ful read → agg; csv scan is
     splittable per file so parallelism survives the round trip."""
-    path = _scratch(f"csv_{os.path.basename(sf_dir)}")
+    path = scratch(f"csv_{os.path.basename(sf_dir)}")
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     li.write.mode("overwrite").option("header", "true").csv(path)
     back = spark.read.schema("l_orderkey long, l_quantity double").option(
@@ -121,7 +115,7 @@ def q002(spark, sf_dir):
 def q003(spark, sf_dir):
     """events → json-lines → read with explicit schema (no inference pass —
     at 100 TB schema inference is a full extra scan, never do it)."""
-    path = _scratch(f"jsonl_{os.path.basename(sf_dir)}")
+    path = scratch(f"jsonl_{os.path.basename(sf_dir)}")
     ev = t(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
     ev.write.mode("overwrite").json(path)
     back = spark.read.schema("event_id long, event_type string, user_id long").json(path)
@@ -140,7 +134,7 @@ def q003(spark, sf_dir):
 )
 def q004(spark, sf_dir):
     """S4 line-record parity (A4): newline-framed opaque text lines."""
-    path = _scratch(f"text_{os.path.basename(sf_dir)}")
+    path = scratch(f"text_{os.path.basename(sf_dir)}")
     docs = t(spark, sf_dir, "documents").select(F.col("text").alias("value"))
     docs.write.mode("overwrite").text(path)
     back = spark.read.text(path)
@@ -163,7 +157,7 @@ def q005(spark, sf_dir):
     """Hive-style partitioned write (A17 parity: year=/...) + partition-
     pruned re-read; the read groups by the partition column only, so the
     scan lists directories, it does not decode row data for the key."""
-    path = _scratch(f"part_{os.path.basename(sf_dir)}")
+    path = scratch(f"part_{os.path.basename(sf_dir)}")
     o = t(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )
@@ -185,7 +179,7 @@ def q005(spark, sf_dir):
 )
 def q006(spark, sf_dir):
     """Gzip-compressed text sink (A16 parity) and re-read."""
-    path = _scratch(f"gz_{os.path.basename(sf_dir)}")
+    path = scratch(f"gz_{os.path.basename(sf_dir)}")
     docs = t(spark, sf_dir, "documents").select(F.col("text").alias("value"))
     docs.write.mode("overwrite").option("compression", "gzip").text(path)
     back = spark.read.text(path)
@@ -239,7 +233,7 @@ def q008(spark, sf_dir):
         .writeStream.format("console")
         .option("numRows", 5)
         .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch(f"q008_ckpt_{os.path.basename(sf_dir)}"))
+        .option("checkpointLocation", scratch(f"q008_ckpt_{os.path.basename(sf_dir)}"))
     )
     n_rows = sum(int(p["numInputRows"]) for p in progresses)
     committed = int(any(int(p["batchId"]) >= 0 for p in progresses))
@@ -261,7 +255,7 @@ def q009(spark, sf_dir):
     """lineitem → ORC (zlib) → read → agg. ORC is the second columnar
     format the engine speaks natively (vectorized reader, predicate
     pushdown, column pruning — same scan contract as parquet)."""
-    path = _scratch(f"orc_{os.path.basename(sf_dir)}")
+    path = scratch(f"orc_{os.path.basename(sf_dir)}")
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     li.write.mode("overwrite").option("compression", "zlib").orc(path)
     back = spark.read.orc(path)
@@ -287,7 +281,7 @@ def q019(spark, sf_dir):
     schema inference and rowTag framing). XML is the interchange format
     the engine accepts for small dimension/config feeds; columnar formats
     remain the bulk path."""
-    path = _scratch(f"xml_{os.path.basename(sf_dir)}")
+    path = scratch(f"xml_{os.path.basename(sf_dir)}")
     n = t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     n.write.mode("overwrite").format("xml").option("rowTag", "nation").save(path)
     back = spark.read.format("xml").option("rowTag", "nation").load(path)
@@ -357,7 +351,7 @@ def q108(spark, sf_dir):
     import time as _time
 
     import s4_spark.sources as sources
-    from s4_spark.streaming.rigs import _counter, running, scratch
+    from s4_spark.streaming.rigs import _counter, running
 
     sources.register(spark)
     langs = [r[0] for r in t(spark, sf_dir, "documents").select("lang").collect()]
@@ -441,7 +435,7 @@ def q142(spark, sf_dir):
     downstream decode attaches via mapInPandas (q127). Only the listing
     is centralized; for billions of objects a manifest table replaces
     it (SCALE.md)."""
-    path = _scratch(f"bin_{os.path.basename(sf_dir)}")
+    path = scratch(f"bin_{os.path.basename(sf_dir)}")
     os.makedirs(path, exist_ok=True)
     rows = (
         t(spark, sf_dir, "documents")
@@ -521,7 +515,7 @@ def q152(spark, sf_dir):
             z = F.shiftleft(z, 1).bitwiseOR(
                 F.shiftright(c, bit).bitwiseAND(F.lit(1))
             )
-    path = _scratch(f"zorder_{os.path.basename(sf_dir)}")
+    path = scratch(f"zorder_{os.path.basename(sf_dir)}")
     (
         li.withColumn("__z", z)
         .repartitionByRange(8, "__z")
@@ -562,10 +556,10 @@ def q153(spark, sf_dir):
     verified to land 64 -> 2 files (asserted in tests/test_sources.py)
     with byte-identical content (the oracle aggregates the original
     table; equality proves losslessness)."""
-    frag = _scratch(f"frag_{os.path.basename(sf_dir)}")
+    frag = scratch(f"frag_{os.path.basename(sf_dir)}")
     docs = t(spark, sf_dir, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(frag)
-    compacted_dir = _scratch(f"compacted_{os.path.basename(sf_dir)}")
+    compacted_dir = scratch(f"compacted_{os.path.basename(sf_dir)}")
     frag_df = spark.read.parquet(frag)
     # target ~8 MB files: estimate from the fragmented copy's total size
     total = sum(
@@ -614,7 +608,7 @@ def q154(spark, sf_dir):
     full-footer sweep; readers pin an explicit schema so adding a column
     is always backward-compatible. The check counts per-lang rows with
     and without the evolved column."""
-    base = _scratch(f"evolve_{os.path.basename(sf_dir)}")
+    base = scratch(f"evolve_{os.path.basename(sf_dir)}")
     docs = t(spark, sf_dir, "documents")
     docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
         "overwrite"
@@ -658,7 +652,7 @@ def q164(spark, sf_dir):
     salted with the reference's 4 drop-case shapes and proves
     valid + corrupt partitions exactly: corrupt rows surface the raw
     line, valid rows parse every field."""
-    landing = _scratch(f"q164_landing_{os.path.basename(sf_dir)}")
+    landing = scratch(f"q164_landing_{os.path.basename(sf_dir)}")
     os.makedirs(landing, exist_ok=True)
     ev = t(spark, sf_dir, "events").select(
         F.to_json(F.struct("event_id", "event_type", "user_id")).alias("value")
@@ -688,7 +682,7 @@ def q164(spark, sf_dir):
 def bloom_sink_dir(sf_dir: str) -> str:
     """Deterministic output dir for q173's bloom-filtered write, shared
     with the footer-assertion test (tests/test_plans.py). NOT routed
-    through _scratch(), which rmtree-clears on every call — the test
+    through scratch(), which rmtree-clears on every call — the test
     must be able to resolve the path without destroying the output."""
     return os.path.join(scratch_root(), f"bloom_{os.path.basename(sf_dir)}")
 
@@ -782,7 +776,7 @@ def q185(spark, sf_dir):
     import glob as _glob
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "lang")
-    path = _scratch(f"quarantine_{os.path.basename(sf_dir)}")
+    path = scratch(f"quarantine_{os.path.basename(sf_dir)}")
     docs.repartition(4).write.mode("overwrite").parquet(path)
     good = set(
         os.path.basename(f) for f in _glob.glob(os.path.join(path, "*.parquet"))
@@ -932,8 +926,7 @@ def q202(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem").select("l_orderkey")
     mn, mx = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
     w = (mx - mn) // 8 + 1
-    path = os.path.join(scratch_root(), f"zmap_{os.path.basename(sf_dir)}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch(f"zmap_{os.path.basename(sf_dir)}")
     (
         li.withColumn("zbucket", F.expr(f"(l_orderkey - {mn}) div {w}"))
         .repartition("zbucket")
@@ -1004,7 +997,7 @@ def q210(spark, sf_dir):
     reading the source directly (file layout is a physical property,
     never a semantic one)."""
     d = _q210_write_df(spark, sf_dir)
-    path = _scratch(f"rebal_{os.path.basename(sf_dir)}")
+    path = scratch(f"rebal_{os.path.basename(sf_dir)}")
     d.write.partitionBy("lang").mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     return (
@@ -1058,7 +1051,7 @@ def q214(spark, sf_dir):
     half = docs.count() // 2
     import glob as _glob
 
-    base = _scratch(f"ttl_{os.path.basename(sf_dir)}")
+    base = scratch(f"ttl_{os.path.basename(sf_dir)}")
     d1, d2 = os.path.join(base, "batch1"), os.path.join(base, "batch2")
     docs.filter(F.col("doc_id") < half).write.parquet(d1)
     docs.filter(F.col("doc_id") >= half).write.parquet(d2)
@@ -1114,7 +1107,6 @@ def q242(spark, sf_dir):
     exactly once through the stage/commit path; the abort path (a
     failed job leaves NO visible output) is pinned by pytest."""
     import s4_spark.sources as sources
-    from s4_spark.streaming.rigs import scratch
 
     sources.register(spark)
     out = scratch(f"q242_out_{os.path.basename(sf_dir)}")
@@ -1144,7 +1136,7 @@ def q243(spark, sf_dir):
     idempotency is pinned by a direct unit test on the committer).
     The streamed events aggregate back to the events-table oracle."""
     import s4_spark.sources as sources
-    from s4_spark.streaming.rigs import events_stream, scratch
+    from s4_spark.streaming.rigs import events_stream
 
     sources.register(spark)
     out = scratch(f"q243_out_{os.path.basename(sf_dir)}")
@@ -1192,7 +1184,6 @@ def q246(spark, sf_dir):
     (exactly-once drain)."""
     import s4_spark.sources as sources
     from s4_spark.sources.chunk_spool import chunk_path
-    from s4_spark.streaming.rigs import scratch
 
     sources.register(spark)
     spool = scratch(f"q246_spool_{os.path.basename(sf_dir)}")
@@ -1249,7 +1240,7 @@ def q263(spark, sf_dir):
     discipline as q045/q201 (a fresh session with a stale directory
     rebuilds cleanly)."""
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    # NOT _scratch(): that helper rmtrees on every call, which would
+    # NOT scratch(): that helper rmtrees on every call, which would
     # delete the table's files while the catalog entry survives
     warehouse = os.path.join(scratch_root(), f"bucketprune_{tag}")
     name = f"orders_bp_{tag}"
@@ -1312,9 +1303,8 @@ def q271(spark, sf_dir):
     register_views(spark, sf_dir, tables=("orders",))
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     name = f"orders_defaults_{tag}"
-    path = os.path.join(scratch_root(), f"defaults_{tag}")
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch(f"defaults_{tag}")
     spark.sql(
         f"""
         CREATE TABLE {name} (

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from s4_spark.queries.helpers import dsum, ordered_small, sql_dsum, t
 from s4_spark.queries.registry import query
+from s4_spark.queries.windows import WINDOWED_FUNNEL_SQL
+from s4_spark.scratch import scratch, scratch_root
 from s4_spark.streaming.rigs import (
     ROCKSDB_CONF,
     drain,
@@ -28,7 +30,6 @@ from s4_spark.streaming.rigs import (
     replay,
     run_to_memory,
     run_to_parquet,
-    scratch,
     stage_file,
 )
 
@@ -652,8 +653,6 @@ def _ship_vendored_protobuf(spark) -> None:
         return
     import zipfile
 
-    from s4_spark.scratch import scratch_root
-
     zip_path = os.path.join(scratch_root(), "vendored_protobuf.zip")
     if not os.path.exists(zip_path):
         os.makedirs(os.path.dirname(zip_path), exist_ok=True)
@@ -901,33 +900,9 @@ def _funnel_stateful_stream(spark, sf_dir):
 
 @query(
     "q234_streaming_funnel",
-    # Identical SQL to q219's batch windowed funnel: the stream's final
-    # state must equal the batch computation (kappa pairing).
-    oracle="""
-    WITH s1 AS (
-      SELECT user_id, min(ts) AS t1 FROM events
-      WHERE event_type = 'view' GROUP BY user_id),
-    s2 AS (
-      SELECT e.user_id, min(e.ts) AS t2, min(s1.t1) AS t1
-      FROM events e JOIN s1 ON e.user_id = s1.user_id
-        AND e.ts > s1.t1 AND e.ts <= s1.t1 + INTERVAL 48 HOUR
-      WHERE e.event_type = 'click' GROUP BY e.user_id),
-    s3 AS (
-      SELECT e.user_id, min(e.ts) AS t3, min(s2.t1) AS t1
-      FROM events e JOIN s2 ON e.user_id = s2.user_id
-        AND e.ts > s2.t2 AND e.ts <= s2.t2 + INTERVAL 48 HOUR
-      WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-    SELECT * FROM (
-      SELECT 'step1_view' AS step, count(*) AS n_users,
-             CAST(0 AS BIGINT) AS total_lag_us FROM s1
-      UNION ALL
-      SELECT 'step2_click', count(*),
-             CAST(sum(epoch_us(t2) - epoch_us(t1)) AS BIGINT) FROM s2
-      UNION ALL
-      SELECT 'step3_purchase', count(*),
-             CAST(sum(epoch_us(t3) - epoch_us(t1)) AS BIGINT) FROM s3
-    ) ORDER BY step
-    """,
+    # q219's batch SQL: the stream's final state must equal the batch
+    # computation (kappa pairing).
+    oracle=WINDOWED_FUNNEL_SQL,
     section="B9-streaming",
 )
 def q234(spark, sf_dir):
@@ -956,58 +931,7 @@ def q234(spark, sf_dir):
     final = snap.groupBy("user_id").agg(
         F.max("t1").alias("t1"), F.max("t2").alias("t2"), F.max("t3").alias("t3")
     )
-
-    def step(flag_col, label, end_col):
-        lag = (
-            F.lit(0).cast("long")
-            if end_col is None
-            else F.sum(
-                F.when(F.col(flag_col) >= 0, F.col(end_col) - F.col("t1"))
-            ).cast("long")
-        )
-        return final.filter(F.col(flag_col) >= 0).agg(
-            F.lit(label).alias("step"),
-            F.count("*").alias("n_users"),
-            lag.alias("total_lag_us"),
-        )
-
-    return (
-        step("t1", "step1_view", None)
-        .unionAll(step("t2", "step2_click", "t2"))
-        .unionAll(step("t3", "step3_purchase", "t3"))
-        # bounded result (one row per funnel step)
-        .transform(ordered_small, "step")
-    )
-
-
-# q219's batch windowed-funnel SQL, shared verbatim by the streaming
-# twins (q234 in-order, q235 reordering-buffer): the stream's final
-# state must equal the batch computation (kappa pairing).
-_FUNNEL_ORACLE = """
-    WITH s1 AS (
-      SELECT user_id, min(ts) AS t1 FROM events
-      WHERE event_type = 'view' GROUP BY user_id),
-    s2 AS (
-      SELECT e.user_id, min(e.ts) AS t2, min(s1.t1) AS t1
-      FROM events e JOIN s1 ON e.user_id = s1.user_id
-        AND e.ts > s1.t1 AND e.ts <= s1.t1 + INTERVAL 48 HOUR
-      WHERE e.event_type = 'click' GROUP BY e.user_id),
-    s3 AS (
-      SELECT e.user_id, min(e.ts) AS t3, min(s2.t1) AS t1
-      FROM events e JOIN s2 ON e.user_id = s2.user_id
-        AND e.ts > s2.t2 AND e.ts <= s2.t2 + INTERVAL 48 HOUR
-      WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-    SELECT * FROM (
-      SELECT 'step1_view' AS step, count(*) AS n_users,
-             CAST(0 AS BIGINT) AS total_lag_us FROM s1
-      UNION ALL
-      SELECT 'step2_click', count(*),
-             CAST(sum(epoch_us(t2) - epoch_us(t1)) AS BIGINT) FROM s2
-      UNION ALL
-      SELECT 'step3_purchase', count(*),
-             CAST(sum(epoch_us(t3) - epoch_us(t1)) AS BIGINT) FROM s3
-    ) ORDER BY step
-    """
+    return _funnel_rollup(final)
 
 
 def _funnel_rollup(final):
@@ -1037,7 +961,11 @@ def _funnel_rollup(final):
     )
 
 
-@query("q235_streaming_funnel_reordered", oracle=_FUNNEL_ORACLE, section="B9-streaming")
+@query(
+    "q235_streaming_funnel_reordered",
+    oracle=WINDOWED_FUNNEL_SQL,
+    section="B9-streaming",
+)
 def q235(spark, sf_dir):
     """Out-of-order-hardened streaming funnel (round-5 verdict item 5:
     q234 documents an in-order-ingest caveat; this entry REMOVES it).
@@ -1069,8 +997,6 @@ def q235(spark, sf_dir):
     import os
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from s4_spark.streaming.rigs import scratch
 
     DEADLINE_US = 48 * 3600 * 1_000_000
 
@@ -1637,7 +1563,7 @@ def _q247(spark, sf_dir):
 if transform_with_state_available():  # pragma: no cover - env-dependent
     query(
         "q247_transform_with_initial_state",
-        oracle=_FUNNEL_ORACLE,
+        oracle=WINDOWED_FUNNEL_SQL,
         section="B9-streaming",
     )(_q247)
 
@@ -1746,12 +1672,7 @@ def q251(spark, sf_dir):
 
 def q251_checkpoint_dir(sf_dir: str) -> str:
     """The checkpoint q251 writes (for the changelog-evidence test)."""
-    from s4_spark.streaming.rigs import scratch as stream_scratch  # noqa: F401
-    from s4_spark.scratch import scratch_root
-
-    return os.path.join(
-        scratch_root(), "stream", f"q251_ckpt_{os.path.basename(sf_dir)}"
-    )
+    return os.path.join(scratch_root(), f"q251_ckpt_{os.path.basename(sf_dir)}")
 
 
 def _q252(spark, sf_dir):
@@ -1992,15 +1913,10 @@ def q268(spark, sf_dir):
     counts match the source exactly iff commit atomicity held. Same
     pid-namespaced warehouse + rebuild guard as the other table
     entries."""
-    from s4_spark.scratch import scratch_root
-
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     name = f"events_stream_tbl_{tag}"
-    path = os.path.join(scratch_root(), f"stream_tbl_{tag}")
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch(f"stream_tbl_{tag}")
     ev = events_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
     drain(
         ev.writeStream.trigger(availableNow=True)

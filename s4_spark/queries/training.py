@@ -23,7 +23,7 @@ from s4_spark.operators import dedup as D
 from s4_spark.operators import similarity as S
 from s4_spark.queries.helpers import ordered_small, davg, sql_davg, t, ts
 from s4_spark.queries.registry import query
-from s4_spark.scratch import scratch_root
+from s4_spark.scratch import scratch, scratch_root
 from s4_spark.session import scoped_conf
 
 # DuckDB mirror of operators/corpus.hash_bucket (md5-prefix bucket).
@@ -987,8 +987,6 @@ def q155(spark, sf_dir):
     identical to scoring directly off the corpus (q138's formula; the
     oracle recomputes df from the pruned postings, which equals q138's
     corpus-wide df for these terms)."""
-    import shutil
-
     docs = t(spark, sf_dir, "documents")
     tag = os.path.basename(sf_dir).replace(".", "_")
     tbl = f"s4_postings_{tag}"
@@ -996,8 +994,7 @@ def q155(spark, sf_dir):
         # explicit path (q045 pattern): a fresh session's in-memory
         # metastore forgets the table while the old dir survives, so the
         # build clears its own location instead of tripping on it
-        path = os.path.join(scratch_root(), f"postings_{tag}")
-        shutil.rmtree(path, ignore_errors=True)
+        path = scratch(f"postings_{tag}")
         toks = docs.select(
             "doc_id", F.explode(F.split("text", " ")).alias("w")
         )
@@ -1297,8 +1294,6 @@ def q176(spark, sf_dir):
     upstream token ledger before a run starts. The export itself is one
     shuffle (the packing window) + a partitioned write; manifest cost is
     a scan of the written shards only."""
-    import shutil as _shutil
-
     d = t(spark, sf_dir, "documents").withColumn(
         "n_tokens", F.size(F.split("text", " "))
     )
@@ -1310,8 +1305,7 @@ def q176(spark, sf_dir):
         "pack_bin",
         F.pmod("pack_bin", F.lit(4)).alias("shard"),
     )
-    path = os.path.join(scratch_root(), f"shards_{os.path.basename(sf_dir)}")
-    _shutil.rmtree(path, ignore_errors=True)
+    path = scratch(f"shards_{os.path.basename(sf_dir)}")
     shards.write.partitionBy("lang", "shard").mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     return (
@@ -1568,16 +1562,13 @@ def q181(spark, sf_dir):
     incremental table keys on identity, and packing runs downstream per
     refreshed partition. The conf flip is scoped to the delta write —
     no session leak."""
-    import shutil as _shutil
-
     d = t(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
         F.size(F.split("text", " ")).alias("n_tokens"),
         F.pmod("doc_id", F.lit(4)).alias("shard"),
     )
-    path = incremental_shard_dir(sf_dir)
-    _shutil.rmtree(path, ignore_errors=True)
+    path = scratch(os.path.basename(incremental_shard_dir(sf_dir)))
     # full build (v1)
     d.write.partitionBy("lang", "shard").mode("overwrite").parquet(path)
     # delta: lang 'en' re-crawled, every doc_id % 7 == 0 doc changed
@@ -1761,13 +1752,10 @@ def q184(spark, sf_dir):
     provenance (ADVICE r4). At 100 TB `_metadata` joins rows to a file
     manifest (size, mtime, checksum) for incremental re-validation —
     the same manifest q142's docstring describes for binary corpora."""
-    import shutil as _shutil
-
     d = t(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.pmod("doc_id", F.lit(4)).alias("shard")
     )
-    path = os.path.join(scratch_root(), f"prov_{os.path.basename(sf_dir)}")
-    _shutil.rmtree(path, ignore_errors=True)
+    path = scratch(f"prov_{os.path.basename(sf_dir)}")
     (
         d.repartition("lang", "shard")
         .write.partitionBy("lang", "shard")

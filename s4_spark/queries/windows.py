@@ -382,9 +382,10 @@ def q197(spark, sf_dir):
     )
 
 
-@query(
-    "q219_windowed_funnel",
-    oracle="""
+# q219's windowed-funnel SQL, also the oracle of its streaming twins
+# (q234 in-order, q235 reordering buffer, q247 initial state): a
+# stream's final state must equal the batch computation (kappa pairing).
+WINDOWED_FUNNEL_SQL = """
     WITH s1 AS (
       SELECT user_id, min(ts) AS t1 FROM events
       WHERE event_type = 'view' GROUP BY user_id),
@@ -408,9 +409,10 @@ def q197(spark, sf_dir):
       SELECT 'step3_purchase', count(*),
              CAST(sum(epoch_us(t3) - epoch_us(t1)) AS BIGINT) FROM s3
     ) ORDER BY step
-    """,
-    section="B5-windows",
-)
+    """
+
+
+@query("q219_windowed_funnel", oracle=WINDOWED_FUNNEL_SQL, section="B5-windows")
 def q219(spark, sf_dir):
     """WINDOWED funnel (view -> click -> purchase, each step within
     48 h of the previous step's earliest completion): how many users

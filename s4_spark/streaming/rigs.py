@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from s4_spark.catalog import normalize_events
-from s4_spark.scratch import scratch_root
+from s4_spark.scratch import scratch
 from s4_spark.session import scoped_conf
 
 _counter = itertools.count()
@@ -92,14 +92,6 @@ def drain(
         else:
             q.awaitTermination()
         return progress_of(q)
-
-
-def scratch(tag: str) -> str:
-    base = os.path.join(scratch_root(), "stream")
-    os.makedirs(base, exist_ok=True)
-    path = os.path.join(base, tag)
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 _EPOCH_NTZ = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"

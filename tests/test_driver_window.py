@@ -115,7 +115,7 @@ def test_window_outputs_are_hashable_scalars(spark, name):
 
 def _correctness_seen() -> set[str]:
     seen: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r0*.json"))):
+    for path in sorted(glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json"))):
         with open(path) as f:
             seen |= set(json.load(f))
     return seen

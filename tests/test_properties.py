@@ -577,70 +577,6 @@ def test_streak_islands_match_naive_run_length(spark, seq):
     assert got == want
 
 
-def test_stale_checkpoint_roots_swept_fresh_kept(tmp_path, monkeypatch):
-    """r5 verdict nit closed: the shared reliable-checkpoint root used to
-    prune only the CURRENT app's dir (dead code — app ids embed start
-    timestamps), letting dead apps' dirs accumulate forever. The sweep
-    removes siblings untouched for an hour and never touches a fresh
-    (possibly concurrent) sibling or the current app's own dir.
-
-    r6 advice closed: age alone is NOT death — a dir's mtime freezes once
-    its last checkpoint lands, so an old dir whose recorded owner PID is
-    still running (a long-idle live session) must survive the sweep; only
-    dead-owner (or pre-marker) old dirs go."""
-    import os
-    import time
-
-    from s4_spark.operators import lineage
-
-    root = tmp_path / "reliable_ckpt"
-    root.mkdir()
-    monkeypatch.setattr(lineage, "DEFAULT_CHECKPOINT_DIR", str(root))
-    old = root / "local-111"           # old, no owner marker -> swept
-    dead_owner = root / "local-444"    # old, owner PID dead -> swept
-    idle_live = root / "local-555"     # old, owner (us) alive -> KEPT
-    fresh = root / "local-222"
-    mine = root / "local-333"
-    for d in (old, dead_owner, idle_live, fresh, mine):
-        d.mkdir()
-        (d / "rdd-1").write_text("x")
-    (dead_owner / lineage.OWNER_PID_FILE).write_text("999999999")
-    (idle_live / lineage.OWNER_PID_FILE).write_text(str(os.getpid()))
-    past = time.time() - 7200
-    for d in (old, dead_owner, idle_live, mine):
-        os.utime(d, (past, past))  # mine: own dir never swept even if old
-    swept = lineage.sweep_stale_checkpoint_roots("local-333")
-    assert sorted(swept) == sorted([str(old), str(dead_owner)])
-    assert not old.exists() and not dead_owner.exists()
-    assert idle_live.exists() and fresh.exists() and mine.exists()
-
-
-def test_owner_alive_eperm_means_alive(tmp_path, monkeypatch):
-    """r7 advice closed: os.kill(pid, 0) raising PermissionError means the
-    PID EXISTS under another uid — on a multi-user host sharing the temp
-    root that is a LIVE session and must NOT be swept. Only ESRCH
-    (ProcessLookupError) reads as dead."""
-    import os
-
-    from s4_spark.operators import lineage
-
-    d = tmp_path / "owned"
-    d.mkdir()
-    (d / lineage.OWNER_PID_FILE).write_text("12345")
-
-    def kill_eperm(pid, sig):
-        raise PermissionError("Operation not permitted")
-
-    monkeypatch.setattr(os, "kill", kill_eperm)
-    assert lineage._owner_alive(str(d)) is True
-
-    def kill_esrch(pid, sig):
-        raise ProcessLookupError("No such process")
-
-    monkeypatch.setattr(os, "kill", kill_esrch)
-    assert lineage._owner_alive(str(d)) is False
-
-
 nullable_keys = st.lists(
     st.one_of(st.none(), st.text(alphabet="xyz", min_size=1, max_size=2)),
     min_size=1,

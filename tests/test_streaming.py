@@ -97,7 +97,7 @@ def test_exactly_once_across_restarts(spark):
     from pyspark.sql import functions as F
 
     from s4_spark.pipeline.s4 import S4Config, run_once
-    from s4_spark.streaming.rigs import scratch
+    from s4_spark.scratch import scratch
 
     landing = scratch("eo_landing")
     out = scratch("eo_out")
@@ -681,7 +681,7 @@ def test_run_to_memory_removes_its_scratch_checkpoint(spark, tmp_path):
     spark.range(5).write.parquet(landing)
     stream = spark.readStream.schema("id long").parquet(landing)
     assert run_to_memory(stream, "append", tag="ckpt_cleanup").count() == 5
-    left = glob.glob(os.path.join(scratch_root(), "stream", "ckpt_s4_mem_*"))
+    left = glob.glob(os.path.join(scratch_root(), "ckpt_s4_mem_*"))
     assert not left, f"run_to_memory left scratch checkpoints {left}"
 
 
@@ -734,7 +734,8 @@ def _q273_companion_run(spark, purchase_bound: str, tag: str):
     final global watermark string from query progress)."""
     import datetime as dt
 
-    from s4_spark.streaming.rigs import drain_to_memory, scratch, stage_file
+    from s4_spark.scratch import scratch
+    from s4_spark.streaming.rigs import drain_to_memory, stage_file
 
     hours = [0, 1, 2, 3]
     mk = lambda h: dt.datetime(2024, 1, 1, h, 30)
