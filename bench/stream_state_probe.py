@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """Streaming-STATE family scale probe (VERDICT r9 item 3) — the heavy
 family that had no third-decade row: runs the stateful rigs against a
-scaled SF dir and records, per entry, wall-clock AND the state store's
-maximum ``numRowsTotal`` across every state operator of every query the
-entry runs (captured with a StreamingQueryListener, so no rig needs to
-expose its query handle).
+scaled SF dir and records, per entry, wall-clock, every micro-batch of
+every query the entry runs, AND the state store's maximum
+``numRowsTotal`` per state operator derived from those batches
+(captured with one StreamingQueryListener, so no rig needs to expose
+its query handle).
 
 Usage: python bench/stream_state_probe.py [sf_dir]
            [--only name1,name2] [--out results.json]
@@ -50,34 +51,36 @@ DEFAULT_ENTRIES = [
 ]
 
 
-class _StateCapture(StreamingQueryListener):
-    """Records the max numRowsTotal per state operator across every
-    progress event observed while attached. Listener dispatch is
-    asynchronous — callers settle briefly before reading."""
-
-    def __init__(self) -> None:
-        self.ops: dict[str, int] = defaultdict(int)
-
-    def onQueryStarted(self, event) -> None:
-        pass
-
-    def onQueryProgress(self, event) -> None:
-        for op in event.progress.stateOperators:
-            name = op.operatorName or "state"
-            self.ops[name] = max(self.ops[name], op.numRowsTotal)
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        pass
+def _batch_record(p) -> dict:
+    """One micro-batch of a progress report: input rows, trigger
+    execution ms and ``[operator, numRowsTotal]`` per state operator."""
+    return {
+        "name": p.name,
+        "batchId": p.batchId,
+        "inputRows": p.numInputRows,
+        "ms": (p.durationMs or {}).get("triggerExecution"),
+        "stateOps": [
+            [op.operatorName or "state", op.numRowsTotal] for op in p.stateOperators
+        ],
+    }
 
 
-class _BatchProfile(StreamingQueryListener):
-    """Per-micro-batch profile: (query, batchId) -> input rows, trigger
-    execution ms, state rows/bytes. Lets a probe attribute an entry's
-    wall-clock to its phases (e.g. q235: append-only data batches vs
-    the watermark-release fold batch) instead of guessing from totals."""
+def _state_ops(batches: list[dict]) -> dict[str, int]:
+    """Max numRowsTotal per state operator name across ``batches``."""
+    ops: dict[str, int] = defaultdict(int)
+    for b in batches:
+        for name, rows in b["stateOps"]:
+            ops[name] = max(ops[name], rows)
+    return dict(sorted(ops.items()))
+
+
+class _BatchCapture(StreamingQueryListener):
+    """Records every micro-batch (:func:`_batch_record`) of every query
+    that reports progress while attached, so an entry's wall-clock can
+    be attributed to its batches (e.g. q235: append-only data batches vs
+    the watermark-release fold batch) and its state maxima read back.
+    Listener dispatch is asynchronous — callers settle briefly before
+    reading."""
 
     def __init__(self) -> None:
         self.batches: list[dict] = []
@@ -86,21 +89,7 @@ class _BatchProfile(StreamingQueryListener):
         pass
 
     def onQueryProgress(self, event) -> None:
-        p = event.progress
-        self.batches.append(
-            {
-                "name": p.name,
-                "batchId": p.batchId,
-                "inputRows": p.numInputRows,
-                "ms": (p.durationMs or {}).get("triggerExecution"),
-                "stateRows": max(
-                    (op.numRowsTotal for op in p.stateOperators), default=0
-                ),
-                "stateBytes": max(
-                    (op.memoryUsedBytes for op in p.stateOperators), default=0
-                ),
-            }
-        )
+        self.batches.append(_batch_record(event.progress))
 
     def onQueryIdle(self, event) -> None:
         pass
@@ -162,11 +151,7 @@ def q269_chunked_probe(spark, sf_dir: str, chunks: int) -> dict:
     sec = round(time.time() - t0, 2)
     n_out = out.count()
 
-    ops: dict[str, int] = defaultdict(int)
-    for p in progress:
-        for op in p.stateOperators:
-            name = op.operatorName or "state"
-            ops[name] = max(ops[name], op.numRowsTotal)
+    ops = _state_ops([_batch_record(p) for p in progress])
     join_ops = {k: v for k, v in ops.items() if "join" in k.lower()}
     join_max = max(join_ops.values(), default=0)
     res = {
@@ -174,7 +159,7 @@ def q269_chunked_probe(spark, sf_dir: str, chunks: int) -> dict:
         "chunks": len(parts),
         "feed_rows_click_purchase": feed_rows,
         "out_rows": n_out,
-        "state_ops": dict(sorted(ops.items())),
+        "state_ops": ops,
         "join_state_max": join_max,
         "join_state_vs_worst_case": round(join_max / feed_rows, 4)
         if feed_rows
@@ -193,12 +178,6 @@ def main() -> None:
     ap.add_argument("sf_dir", nargs="?", default="/tmp/s4_scaleprobe/sf10")
     ap.add_argument("--only", default=None)
     ap.add_argument("--out", default=None)
-    ap.add_argument(
-        "--batch-profile",
-        action="store_true",
-        help="also record a per-micro-batch profile (input rows, trigger "
-        "ms, state rows/bytes) for each probed entry",
-    )
     ap.add_argument(
         "--q269-chunked",
         type=int,
@@ -246,12 +225,8 @@ def main() -> None:
     results: dict[str, dict] = {}
     for name in names:
         spark.catalog.clearCache()
-        cap = _StateCapture()
+        cap = _BatchCapture()
         spark.streams.addListener(cap)
-        prof = None
-        if args.batch_profile:
-            prof = _BatchProfile()
-            spark.streams.addListener(prof)
         t0 = time.time()
         try:
             REGISTRY[name].fn(spark, args.sf_dir).write.mode("overwrite").format(
@@ -259,13 +234,13 @@ def main() -> None:
             ).save()
             sec = round(time.time() - t0, 2)
             time.sleep(2.0)  # let async listener dispatch settle
+            ops = _state_ops(cap.batches)
             results[name] = {
                 "sec": sec,
-                "state_rows_max": max(cap.ops.values(), default=0),
-                "state_ops": dict(sorted(cap.ops.items())),
+                "state_rows_max": max(ops.values(), default=0),
+                "state_ops": ops,
+                "batches": cap.batches,
             }
-            if prof is not None:
-                results[name]["batches"] = prof.batches
             print(f"{name}: {sec}s state_max={results[name]['state_rows_max']}",
                   file=sys.stderr)
         except Exception:
@@ -274,8 +249,6 @@ def main() -> None:
             traceback.print_exc()
         finally:
             spark.streams.removeListener(cap)
-            if prof is not None:
-                spark.streams.removeListener(prof)
 
     out = {"sf_dir": args.sf_dir, "results": results}
     line = json.dumps(out)

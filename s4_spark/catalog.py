@@ -31,13 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Dimension tables small enough to broadcast at any realistic scale factor
-# (region=5 rows, nation=25 — fixed size regardless of SF).
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
-
 # events.ts: the driver's generator has stored this column two ways across
 # rounds — parquet TIMESTAMP(NANOS) (round 1) and native timestamp[us] NTZ
 # (current). normalize_events() adapts on the SCANNED type rather than
@@ -45,11 +38,6 @@ BROADCAST_DIMS = frozenset({"region", "nation"})
 # again. In the nanos case both engines floor identically to µs (Spark
 # ``ts div 1000``; DuckDB's TIMESTAMP_NS→TIMESTAMP cast) — correctness
 # rests on matched truncation, not losslessness.
-EVENTS_RAW_SCHEMA = (
-    "event_id long, ts timestamp_ntz, user_id long, event_type string, "
-    "value double, props string"
-)
-
 _EVENTS_COLS = ("event_id", "ts", "user_id", "event_type", "value", "props")
 
 

@@ -110,24 +110,6 @@ def redact_pii(text: Column) -> Column:
     return F.regexp_replace(red, URL_RE, "<URL>")
 
 
-def quantize_embedding(vec: Column, bits_max: int = 127) -> Column:
-    """Symmetric int8 quantization of a float vector: scale =
-    max(|x|)/127, q_i = floor(x_i/scale + 0.5). ``floor(+0.5)`` (not
-    round()) so ties break identically on every engine. Zero vectors
-    quantize to zeros. Returns the int array; elementwise — no shuffle.
-
-    Higher-order functions don't enter whole-stage codegen; acceptable
-    here because quantization is a one-time storage-compression pass,
-    not a per-query path."""
-    as_d = F.transform(vec, lambda x: F.abs(x.cast("double")))
-    mx = F.array_max(as_d)
-    scale = mx / bits_max
-    return F.when(
-        mx > 0,
-        F.transform(vec, lambda x: F.floor(x.cast("double") / scale + 0.5).cast("int")),
-    ).otherwise(F.transform(vec, lambda x: F.lit(0)))
-
-
 def tfidf_scores(docs: DataFrame, terms: list[str], id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
     """tf-idf relevance of each document to a bag of query terms:

@@ -201,4 +201,4 @@ def start(spark: SparkSession, cfg: S4Config) -> StreamingQuery:
 def run_once(spark: SparkSession, cfg: S4Config) -> None:
     """Drain everything currently in the landing dir and stop (test /
     backfill mode; also how the e2e parity check runs the pipeline)."""
-    drain(_writer(spark, cfg).trigger(availableNow=True))
+    drain(_writer(spark, cfg))

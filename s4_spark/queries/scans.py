@@ -202,8 +202,8 @@ def q007(spark, sf_dir):
     readStream over the events parquet, availableNow trigger, complete-mode
     aggregate into a memory sink — batch-equivalent by construction.
 
-    At 100 TB: the same code with `maxFilesPerTrigger` caps per-batch
-    work and checkpointing makes the listing incremental."""
+    At 100 TB: the same code with a per-trigger file limit caps
+    per-batch work and checkpointing makes the listing incremental."""
     stream = _events_stream_raw(spark, sf_dir)
     agg = stream.agg(
         F.count("*").alias("n"), dsum("value").alias("sum_value")
@@ -232,7 +232,6 @@ def q008(spark, sf_dir):
         _events_stream_raw(spark, sf_dir)
         .writeStream.format("console")
         .option("numRows", 5)
-        .trigger(availableNow=True)
         .option("checkpointLocation", scratch(f"q008_ckpt_{os.path.basename(sf_dir)}"))
     )
     n_rows = sum(int(p["numInputRows"]) for p in progresses)
@@ -1148,7 +1147,6 @@ def q243(spark, sf_dir):
         lines.writeStream.format("linespool")
         .option("path", out)
         .option("checkpointLocation", scratch(f"q243_ckpt_{os.path.basename(sf_dir)}"))
-        .trigger(availableNow=True)
     )
     back = spark.read.text(os.path.join(out, "batch=*")).withColumn(
         "__row", F.from_json("value", "event_id long, value double")

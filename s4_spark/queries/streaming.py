@@ -31,6 +31,7 @@ from s4_spark.streaming.rigs import (
     run_to_memory,
     run_to_parquet,
     stage_file,
+    staged_streams,
 )
 
 
@@ -266,7 +267,8 @@ def q094(spark, sf_dir):
         )
 
     # bounded result (calendar-sized window buckets)
-    return ordered_small(replay(spark, [(p1,), (p2,)], build, tag="q094"), "w_start")
+    out, _ = replay(spark, [(p1,), (p2,)], build, tag="q094")
+    return ordered_small(out, "w_start")
 
 
 @query(
@@ -559,9 +561,8 @@ def q165(spark, sf_dir):
             "left_outer",
         ).select("user_id", "l_val", "r_val")
 
-    return replay(spark, [(l1, r1), (l2, r2)], build, tag="q165").orderBy(
-        "user_id"
-    )
+    out, _ = replay(spark, [(l1, r1), (l2, r2)], build, tag="q165")
+    return out.orderBy("user_id")
 
 
 @query(
@@ -831,7 +832,6 @@ def q209(spark, sf_dir):
 
     drain(
         stream.writeStream.foreachBatch(lambda df, i: sink(band_rows(df), i))
-        .trigger(availableNow=True)
         .option("checkpointLocation", scratch(f"q209_ckpt_{name}"))
     )
 
@@ -845,6 +845,36 @@ def q209(spark, sf_dir):
         F.min("doc_id").cast("long").alias("min_doc"),
         F.max("doc_id").cast("long").alias("max_doc"),
     )
+
+
+def _funnel_fold():
+    """The write-once view -> click -> purchase fold of the streaming
+    funnels (q234/q238, q235, q247): ``fold(t1, t2, t3, pairs)`` advances
+    the three microsecond slots (-1 = unset) over ``(event_type, ts_us)``
+    pairs in event order and returns them. A click counts only within
+    48 h after the view, a purchase only within 48 h after the click.
+
+    Built by a factory so ``fold`` is a local function: cloudpickle
+    ships local functions to the Python workers by value, like the
+    stateful closures that call it, and those workers may not have this
+    package on their path."""
+    deadline_us = 48 * 3600 * 1_000_000
+
+    def fold(t1, t2, t3, pairs):
+        for et, t_us in pairs:
+            t_us = int(t_us)
+            if t1 < 0:
+                if et == "view":
+                    t1 = t_us
+            elif t2 < 0:
+                if et == "click" and t1 < t_us <= t1 + deadline_us:
+                    t2 = t_us
+            elif t3 < 0:
+                if et == "purchase" and t2 < t_us <= t2 + deadline_us:
+                    t3 = t_us
+        return t1, t2, t3
+
+    return fold
 
 
 def _funnel_stateful_stream(spark, sf_dir):
@@ -863,7 +893,7 @@ def _funnel_stateful_stream(spark, sf_dir):
     shift-invariant lags masked)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    DEADLINE_US = 48 * 3600 * 1_000_000
+    fold = _funnel_fold()
     ev = events_stream(spark, sf_dir).select(
         "user_id", "event_type", F.unix_micros("ts").alias("ts_us"), "event_id"
     )
@@ -873,17 +903,9 @@ def _funnel_stateful_stream(spark, sf_dir):
         batch = [pdf for pdf in pdfs if len(pdf)]
         if batch:
             pdf = pd.concat(batch).sort_values(["ts_us", "event_id"])
-            for et, t_us in zip(pdf["event_type"].values, pdf["ts_us"].values):
-                t_us = int(t_us)
-                if t1 < 0:
-                    if et == "view":
-                        t1 = t_us
-                elif t2 < 0:
-                    if et == "click" and t1 < t_us <= t1 + DEADLINE_US:
-                        t2 = t_us
-                elif t3 < 0:
-                    if et == "purchase" and t2 < t_us <= t2 + DEADLINE_US:
-                        t3 = t_us
+            t1, t2, t3 = fold(
+                t1, t2, t3, zip(pdf["event_type"].values, pdf["ts_us"].values)
+            )
         state.update((t1, t2, t3))
         yield pd.DataFrame(
             {"user_id": [key[0]], "t1": [t1], "t2": [t2], "t3": [t3]}
@@ -973,7 +995,8 @@ def q235(spark, sf_dir):
     The feed is deliberately hostile: events split into three landing
     files by hash(event_id) % 3 — each micro-batch spans the WHOLE time
     range, so cross-batch arrival order is maximally shuffled — plus a
-    far-future watermark sentinel and a final empty tick. The state
+    far-future watermark sentinel, each phase followed by the empty tick
+    ``staged_streams`` stages. The state
     machine cannot fold on arrival; instead each user's GroupState
     carries a REORDERING BUFFER (event-time/event-id arrays) alongside
     the three funnel slots. Events are appended on arrival and folded —
@@ -994,12 +1017,9 @@ def q235(spark, sf_dir):
     Reference parity: the reference's river buffers and re-sequences
     socket frames before its flush loop (river/jsonr.go) — this is the
     event-time analog with exactly-once state."""
-    import os
-
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    DEADLINE_US = 48 * 3600 * 1_000_000
-
+    fold = _funnel_fold()
     ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
     if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
         ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
@@ -1007,36 +1027,19 @@ def q235(spark, sf_dir):
     span_hours = int((bounds["hi"] - bounds["lo"]).total_seconds() // 3600) + 2
     hi = F.lit(bounds["hi"]).cast("timestamp")
 
-    landing = scratch("q235_landing")
-    os.makedirs(landing, exist_ok=True)
-
     # three hash-split (time-interleaved) batches, then the watermark
-    # sentinel, then an empty tick so the release timeout fires in a
-    # deterministic final micro-batch; strictly increasing mtimes pin
-    # FileStreamSource's processing order
-    for i in range(3):
-        stage_file(
-            ev.filter(F.abs(F.xxhash64("event_id")) % 3 == i),
-            landing,
-            f"{i:03d}.parquet",
-            1_000_000 + i,
-        )
+    # sentinel; the tick after the sentinel fires the release timeout
+    # in a deterministic final micro-batch
+    splits = [(ev.filter(F.abs(F.xxhash64("event_id")) % 3 == i),) for i in range(3)]
     sentinel = spark.range(1).select(
         F.lit(-1).cast("long").alias("user_id"),
         F.lit("sentinel").alias("event_type"),
         F.timestamp_add("HOUR", F.lit(span_hours + 1), hi).alias("ts"),
         F.lit(-1).cast("long").alias("event_id"),
     )
-    stage_file(sentinel, landing, "003.parquet", 1_000_003)
-    stage_file(ev.limit(0), landing, "004.parquet", 1_000_004)
-
+    (stream,) = staged_streams(spark, [*splits, (sentinel,)], "q235")
     stream = (
-        spark.readStream.schema(
-            "user_id long, event_type string, ts timestamp, event_id long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .withWatermark("ts", f"{span_hours} hours")
+        stream.withWatermark("ts", f"{span_hours} hours")
         # event time crosses into Python as int64 epoch micros — Arrow
         # renders TIMESTAMP session-tz-naive in the state worker, which
         # would shift the buffer-vs-watermark comparison on non-UTC
@@ -1062,16 +1065,7 @@ def q235(spark, sf_dir):
                 (pair for pair in zip(buf_ts, buf_id, buf_et) if pair[0] <= wm_us),
             )
             kept = [pair for pair in zip(buf_ts, buf_id, buf_et) if pair[0] > wm_us]
-            for t_us, _eid, et in ready:
-                if t1 < 0:
-                    if et == "view":
-                        t1 = t_us
-                elif t2 < 0:
-                    if et == "click" and t1 < t_us <= t1 + DEADLINE_US:
-                        t2 = t_us
-                elif t3 < 0:
-                    if et == "purchase" and t2 < t_us <= t2 + DEADLINE_US:
-                        t3 = t_us
+            t1, t2, t3 = fold(t1, t2, t3, ((et, t_us) for t_us, _eid, et in ready))
             buf_ts = [p[0] for p in kept]
             buf_id = [p[1] for p in kept]
             buf_et = [p[2] for p in kept]
@@ -1289,26 +1283,15 @@ def _q241(spark, sf_dir):
         ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
     hi = ev.agg(F.max("ts")).collect()[0][0]
 
-    landing = scratch("q241_landing")
-    os.makedirs(landing, exist_ok=True)
-
-    stage_file(ev, landing, "000.parquet", 1_000_000)
     sentinel = spark.range(1).select(
         F.lit(-1).cast("long").alias("user_id"),
         F.lit("sentinel").alias("event_type"),
         F.timestamp_add("HOUR", F.lit(40), F.lit(hi).cast("timestamp")).alias("ts"),
         F.lit(-1).cast("long").alias("event_id"),
     )
-    stage_file(sentinel, landing, "001.parquet", 1_000_001)
-    stage_file(ev.limit(0), landing, "002.parquet", 1_000_002)
-
+    (stream,) = staged_streams(spark, [(ev,), (sentinel,)], "q241")
     stream = (
-        spark.readStream.schema(
-            "user_id long, event_type string, ts timestamp, event_id long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .withWatermark("ts", "0 seconds")
+        stream.withWatermark("ts", "0 seconds")
         # int64 epoch micros for the worker — Arrow's session-tz-naive
         # timestamp rendering would shift timer registration on non-UTC
         # sessions (round-6 vanilla-session finding)
@@ -1451,6 +1434,7 @@ def _q247(spark, sf_dir):
     _ship_vendored_protobuf(spark)
 
     DEADLINE_US = 48 * 3600 * 1_000_000
+    fold = _funnel_fold()
 
     ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
     if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
@@ -1524,17 +1508,9 @@ def _q247(spark, sf_dir):
             batch = [pdf for pdf in rows if len(pdf)]
             if batch:
                 pdf = pd.concat(batch).sort_values(["ts_us", "event_id"])
-                for et, t_us in zip(pdf["event_type"].values, pdf["ts_us"].values):
-                    t_us = int(t_us)
-                    if t1 < 0:
-                        if et == "view":
-                            t1 = t_us
-                    elif t2 < 0:
-                        if et == "click" and t1 < t_us <= t1 + DEADLINE_US:
-                            t2 = t_us
-                    elif t3 < 0:
-                        if et == "purchase" and t2 < t_us <= t2 + DEADLINE_US:
-                            t3 = t_us
+                t1, t2, t3 = fold(
+                    t1, t2, t3, zip(pdf["event_type"].values, pdf["ts_us"].values)
+                )
             self._state.update((t1, t2, t3))
             yield from ()
 
@@ -1919,8 +1895,7 @@ def q268(spark, sf_dir):
     path = scratch(f"stream_tbl_{tag}")
     ev = events_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
     drain(
-        ev.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", scratch(f"q268_ckpt_{tag}"))
+        ev.writeStream.option("checkpointLocation", scratch(f"q268_ckpt_{tag}"))
         .option("path", path),
         table=name,
     )
@@ -2112,14 +2087,6 @@ def q273(spark, sf_dir):
             .select(instant_as_utc_ntz("w.start").alias("w_start"), "etype", "n")
         )
 
+    out, _ = replay(spark, [(clicks, purch)], build, tag="q273")
     # bounded result (calendar windows x event types)
-    return ordered_small(
-        replay(
-            spark,
-            [(clicks, purch), (clicks.limit(0), purch.limit(0))],
-            build,
-            tag="q273",
-        ),
-        "w_start",
-        "etype",
-    )
+    return ordered_small(out, "w_start", "etype")

@@ -1,16 +1,21 @@
 """Streaming runner and test rigs.
 
 :func:`running` / :func:`drain` are the one way the package runs a
-stream to completion: scope an optional session conf, start the query,
-drain it (availableNow -> ``awaitTermination``; a phased query ->
-``processAllAvailable`` before its first step and after each step),
-always ``stop()`` it, and hand back its progress. On top of that:
+stream to completion: scope an optional session conf, start the query
+with an availableNow trigger (:func:`drain` sets it; callers never do),
+wait for it to terminate, always ``stop()`` it, and hand back its
+progress. On top of that:
 
 - :func:`run_to_memory` / :func:`run_to_parquet` — batch-equivalence
   sinks (SURVEY.md §2-B methodology: run the streaming query with
   availableNow over static data, compare with batch SQL);
-- :func:`replay` — the deterministic N-stream phased replay for
-  watermark semantics (the one category no batch oracle can express).
+- :func:`staged_streams` — every phase of a watermark rig staged up
+  front, one file per stream per phase and an empty tick file after
+  each, read one file per micro-batch, so availableNow drains the
+  phases as deterministic batch boundaries;
+- :func:`replay` — :func:`staged_streams` drained into a memory sink,
+  the N-stream watermark replay (the one category no batch oracle can
+  express).
 """
 
 from __future__ import annotations
@@ -72,25 +77,12 @@ def progress_of(q: StreamingQuery) -> list:
 
 
 def drain(
-    writer: DataStreamWriter,
-    steps=(),
-    conf: dict | None = None,
-    table: str | None = None,
+    writer: DataStreamWriter, conf: dict | None = None, table: str | None = None
 ) -> list:
-    """Run ``writer`` to completion under :func:`running` and return its
-    progress. Without ``steps`` the writer must carry an availableNow
-    trigger and is drained with ``awaitTermination``; with ``steps``
-    (zero-argument callables, e.g. staging the next input file) the
-    query is drained with ``processAllAvailable`` before the first step
-    and after each one, so batch boundaries are forced."""
-    with running(writer, conf, table) as q:
-        if steps:
-            q.processAllAvailable()
-            for step in steps:
-                step()
-                q.processAllAvailable()
-        else:
-            q.awaitTermination()
+    """Run ``writer`` with an availableNow trigger to completion under
+    :func:`running` and return its progress."""
+    with running(writer.trigger(availableNow=True), conf, table) as q:
+        q.awaitTermination()
         return progress_of(q)
 
 
@@ -153,15 +145,13 @@ def drain_to_memory(
     mode: str = "complete",
     tag: str = "q",
     checkpoint: str | None = None,
-    steps=(),
     conf: dict | None = None,
 ) -> tuple[DataFrame, list]:
-    """:func:`drain` ``df`` into a memory sink (availableNow unless
-    ``steps`` phase it) and return the sink contents as a batch
-    DataFrame plus the run's progress. The sink's temp view is dropped
-    before returning — the frame keeps the sink's rows after that — and
-    so is the checkpoint, unless the caller passed one in to read
-    state from."""
+    """:func:`drain` ``df`` into a memory sink and return the sink
+    contents as a batch DataFrame plus the run's progress. The sink's
+    temp view is dropped before returning — the frame keeps the sink's
+    rows after that — and so is the checkpoint, unless the caller
+    passed one in to read state from."""
     spark = df.sparkSession
     name = f"s4_mem_{tag}_{next(_counter)}"
     ckpt = checkpoint or scratch(f"ckpt_{name}")
@@ -171,10 +161,8 @@ def drain_to_memory(
         .outputMode(mode)
         .option("checkpointLocation", ckpt)
     )
-    if not steps:
-        writer = writer.trigger(availableNow=True)
     try:
-        progress = drain(writer, steps, conf)
+        progress = drain(writer, conf)
         return spark.table(name), progress
     finally:
         spark.catalog.dropTempView(name)
@@ -313,7 +301,6 @@ def run_to_parquet(
             df.writeStream.foreachBatch(idempotent_batch_sink(out))
             .queryName(name)
             .outputMode(mode)
-            .trigger(availableNow=True)
             .option("checkpointLocation", ckpt),
             conf=conf,
         )
@@ -341,46 +328,51 @@ def stage_file(
         os.utime(dest, (mtime, mtime))
 
 
+def staged_streams(
+    spark: SparkSession, phases: list[tuple[DataFrame, ...]], tag: str
+) -> list[DataFrame]:
+    """Stage every phase before any query starts and return one
+    ``maxFilesPerTrigger=1`` stream per landing dir. Each phase holds
+    one DataFrame per stream and lands as ONE file per stream, followed
+    by an empty tick file; mtimes follow the phase order, so an
+    availableNow drain reads phase, tick, phase, tick, ... one file per
+    stream per micro-batch.
+
+    The tick is the batch boundary watermark semantics need. Spark
+    drops a late row by the watermark of the batch BEFORE the one that
+    reads it, and it only closes a window in a batch after the one that
+    moved the watermark past it. So the rows of phase k+1 are judged
+    late against the watermark phase k set, and after the last phase
+    its non-late windows close. With two streams this makes
+    stream-stream join semantics reproducible (outer-join null emission
+    depends on the MIN of the two watermarks)."""
+    landings = [scratch(f"{tag}_landing{i}") for i in range(len(phases[0]))]
+    for d in landings:
+        os.makedirs(d, exist_ok=True)
+    for k, frames in enumerate(phases):
+        mtime = 1_000_000 + 2 * k  # the file source lists oldest first
+        for df, landing in zip(frames, landings):
+            stage_file(df, landing, f"p{k:03d}.parquet", mtime)
+            stage_file(df.limit(0), landing, f"p{k:03d}_tick.parquet", mtime + 1)
+    return [
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+        for df, landing in zip(phases[0], landings)
+    ]
+
+
 def replay(
     spark: SparkSession,
     phases: list[tuple[DataFrame, ...]],
     build_query,
     tag: str = "replay",
-) -> DataFrame:
-    """Deterministic watermark replay over N streams. Each phase holds
-    one DataFrame per stream; every stream reads its own landing dir
-    with ``maxFilesPerTrigger=1``, and a phase lands as ONE staged file
-    per stream, drained to completion before the next phase lands —
-    the watermark advances to max(ts) - delay at the NEXT batch, so
-    append-mode results show exactly which windows closed and which
-    late rows were dropped. A final empty tick applies the watermark
-    computed from the last phase so its non-late windows close. With
-    two streams this makes stream-stream join semantics reproducible
-    (outer-join null emission depends on the MIN of the two
-    watermarks — only a forced batch boundary fixes it).
-    ``build_query(*streams)`` returns the query over the streams."""
-    n = len(phases[0])
-    landings = [scratch(f"{tag}_landing{i}") for i in range(n)]
-    for d in landings:
-        os.makedirs(d, exist_ok=True)
-
-    def drop_files(frames, fname: str) -> None:
-        for df, landing in zip(frames, landings):
-            stage_file(df, landing, fname)
-
-    ticks = [*phases, tuple(df.limit(0) for df in phases[-1])]
-    drop_files(ticks[0], "p1.parquet")
-    streams = [
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        for df, landing in zip(ticks[0], landings)
-    ]
-    steps = [
-        lambda frames=frames, k=k: drop_files(frames, f"p{k}.parquet")
-        for k, frames in enumerate(ticks[1:], start=2)
-    ]
-    out, _ = drain_to_memory(
-        build_query(*streams), "append", tag, steps=steps, conf=REPLAY_CONF
-    )
-    return out
+) -> tuple[DataFrame, list]:
+    """Deterministic watermark replay over N streams: the phases are
+    staged by :func:`staged_streams`, ``build_query(*streams)`` returns
+    the query over them, and it is drained in append mode into a memory
+    sink, so the output shows exactly which windows closed and which
+    late rows were dropped. Returns the sink contents and the run's
+    progress."""
+    streams = staged_streams(spark, phases, tag)
+    return drain_to_memory(build_query(*streams), "append", tag, conf=REPLAY_CONF)

@@ -577,6 +577,35 @@ def test_q234_funnel_state_survives_multi_batch(spark, tmp_path):
     assert got_steps["step3"] == single["step3_purchase"]
 
 
+def test_funnel_fold_reaches_a_worker_without_the_package(tmp_path):
+    """The shared funnel fold ships by value: it unpickles and runs in
+    an interpreter that cannot import s4_spark, as a Python worker may
+    be."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from s4_spark.queries.streaming import _funnel_fold
+
+    blob = tmp_path / "fold.pkl"
+    blob.write_bytes(cloudpickle.dumps(_funnel_fold()))
+    code = (
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('s4_spark') is None\n"
+        "fold = pickle.load(open(sys.argv[1], 'rb'))\n"
+        "print(fold(-1, -1, -1, [('click', 1), ('view', 2), ('click', 3),"
+        " ('purchase', 2 + 49 * 3600 * 10**6)]))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", code, str(blob)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, check=True,
+    )
+    # the click before the view is ignored; the purchase is past 48 h
+    assert run.stdout.strip() == "(2, 3, -1)"
+
+
 def test_q235_feed_is_genuinely_out_of_order(spark):
     """q235's whole point is surviving cross-batch disorder: verify the
     hash(event_id)%3 split actually interleaves event time — every
@@ -734,8 +763,7 @@ def _q273_companion_run(spark, purchase_bound: str, tag: str):
     final global watermark string from query progress)."""
     import datetime as dt
 
-    from s4_spark.scratch import scratch
-    from s4_spark.streaming.rigs import drain_to_memory, stage_file
+    from s4_spark.streaming.rigs import replay
 
     hours = [0, 1, 2, 3]
     mk = lambda h: dt.datetime(2024, 1, 1, h, 30)
@@ -745,29 +773,19 @@ def _q273_companion_run(spark, purchase_bound: str, tag: str):
     purch = spark.createDataFrame(
         [("purchase", mk(h)) for h in hours], "etype string, ts timestamp"
     )
-    landings = [scratch(f"{tag}_c"), scratch(f"{tag}_p")]
-    for d in landings:
-        os.makedirs(d, exist_ok=True)
 
-    stage_file(clicks, landings[0], "p1.parquet")
-    stage_file(purch, landings[1], "p1.parquet")
-    cs = spark.readStream.schema(clicks.schema).parquet(landings[0])
-    ps = spark.readStream.schema(purch.schema).parquet(landings[1])
-    u = cs.withWatermark("ts", "1 minute").unionByName(
-        ps.withWatermark("ts", purchase_bound)
-    )
-    out = (
-        u.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("w_start"), "n")
-    )
+    def build(cs, ps):
+        u = cs.withWatermark("ts", "1 minute").unionByName(
+            ps.withWatermark("ts", purchase_bound)
+        )
+        return (
+            u.groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(F.count("*").alias("n"))
+            .select(F.col("w.start").alias("w_start"), "n")
+        )
 
-    def tick():
-        # empty second files advance both source watermarks past phase-1 maxes
-        stage_file(clicks.limit(0), landings[0], "p2.parquet")
-        stage_file(purch.limit(0), landings[1], "p2.parquet")
-
-    got, progress = drain_to_memory(out, "append", tag, steps=[tick])
+    # the tick after the phase advances both source watermarks past its maxes
+    got, progress = replay(spark, [(clicks, purch)], build, tag)
     starts = sorted(r.w_start for r in got.collect())
     return starts, progress[-1]["eventTime"]["watermark"]
 
@@ -899,6 +917,34 @@ def test_batch_sink_commit_routes_through_hadoop_fs(spark, tmp_path):
         st.getPath().getName() for st in fs.listStatus(Path(out))
     )
     assert names == ["b0"], names
+
+
+def test_replay_ticks_each_phase_and_drops_rows_late_against_it(spark):
+    """rigs.replay's contract: every staged phase is one micro-batch
+    followed by an empty tick batch, and a phase-2 row older than the
+    watermark phase 1 set is dropped (q094's oracle is the end-to-end
+    guard of the same boundary)."""
+    import datetime as dt
+
+    from s4_spark.streaming.rigs import replay
+
+    mk = lambda m: dt.datetime(2024, 1, 1, 0, m)
+    schema = "id long, ts timestamp"
+    p1 = spark.createDataFrame([(1, mk(0)), (2, mk(20)), (3, mk(40))], schema)
+    # phase 1 sets the watermark to 00:30; row 4 at 00:05 is late
+    p2 = spark.createDataFrame([(4, mk(5)), (5, mk(55))], schema)
+
+    def build(stream):
+        return (
+            stream.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "10 minutes"))
+            .agg(F.collect_list("id").alias("ids"))
+        )
+
+    got, progress = replay(spark, [(p1,), (p2,)], build, tag="rig_contract")
+    assert [p["numInputRows"] for p in progress] == [3, 0, 2, 0]
+    # the final watermark (00:45) closes the 00:00 and 00:20 windows
+    assert sorted(i for r in got.collect() for i in r.ids) == [1, 2]
 
 
 def test_replay_stops_query_and_restores_conf_when_a_phase_raises(spark):
