@@ -120,11 +120,9 @@ def q269_chunked_probe(spark, sf_dir: str, chunks: int) -> dict:
     from s4_spark.catalog import table
     from s4_spark.queries.streaming import _q269_chain
     from s4_spark.scratch import scratch
-    from s4_spark.streaming.rigs import drain_to_memory, ntz_as_utc_instant
+    from s4_spark.streaming.rigs import drain_to_memory, with_instant_ts
 
-    ev = table(spark, sf_dir, "events")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
+    ev = with_instant_ts(table(spark, sf_dir, "events"))
     feed_rows = ev.filter(F.col("event_type").isin("click", "purchase")).count()
 
     landing = scratch(f"q269chunked_{os.path.basename(sf_dir.rstrip('/'))}")

@@ -230,6 +230,27 @@ def lsh_candidates_multitable(
     return out.distinct()
 
 
+def _seq_kernels():
+    """``(seq_dot, seq_norm)``: A·Bᵀ and the row norms, accumulated dim
+    by dim, left to right (the fp order of :func:`dot` and the oracle).
+    Local functions, so cloudpickle ships them to the Python workers by
+    value: those may not have this package on their path."""
+
+    def seq_dot(A, B):
+        acc = np.zeros((A.shape[0], B.shape[0]))
+        for j in range(A.shape[1]):
+            acc += np.outer(A[:, j], B[:, j])
+        return acc
+
+    def seq_norm(A):
+        acc = np.zeros(A.shape[0])
+        for j in range(A.shape[1]):
+            acc += A[:, j] * A[:, j]
+        return np.sqrt(acc)
+
+    return seq_dot, seq_norm
+
+
 def block_topk_cosine(
     candidates: DataFrame,
     queries: list[tuple[int, list[float]]],
@@ -262,20 +283,7 @@ def block_topk_cosine(
     qids = [int(q) for q, _ in queries]
     Q = np.asarray([v for _, v in queries], dtype=np.float64)
 
-    def seq_dot(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-        # A: Q×d, B: B×d -> Q×B, accumulated dim-by-dim (left-to-right,
-        # same fp order as a sequential fold)
-        acc = np.zeros((A.shape[0], B.shape[0]))
-        for j in range(A.shape[1]):
-            acc += np.outer(A[:, j], B[:, j])
-        return acc
-
-    def seq_norm(A: "np.ndarray") -> "np.ndarray":
-        acc = np.zeros(A.shape[0])
-        for j in range(A.shape[1]):
-            acc += A[:, j] * A[:, j]
-        return np.sqrt(acc)
-
+    seq_dot, seq_norm = _seq_kernels()
     qn = seq_norm(Q)
 
     def score_batches(batches):
@@ -375,18 +383,7 @@ def allpairs_topk_cosine(
     ids_all = np.asarray([int(r[0]) for r in rows], dtype=np.int64)
     M = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
 
-    def seq_dot(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-        acc = np.zeros((A.shape[0], B.shape[0]))
-        for j in range(A.shape[1]):
-            acc += np.outer(A[:, j], B[:, j])
-        return acc
-
-    def seq_norm(A: "np.ndarray") -> "np.ndarray":
-        acc = np.zeros(A.shape[0])
-        for j in range(A.shape[1]):
-            acc += A[:, j] * A[:, j]
-        return np.sqrt(acc)
-
+    seq_dot, seq_norm = _seq_kernels()
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast((ids_all, M, seq_norm(M)))
 

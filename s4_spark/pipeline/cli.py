@@ -138,7 +138,10 @@ def main(argv: list[str] | None = None) -> int:
         run_once(spark, cfg)
         return 0
     q = start(spark, cfg)
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
     return 0
 
 

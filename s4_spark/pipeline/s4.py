@@ -47,7 +47,6 @@ class S4Config:
     source_format: str = "text"  # "text" | "unixline"
     socket_mode: str = "connect"  # unixline only: "connect" (A22 client) |
     # "listen" (A23 server — bind + fan-in of N producer connections)
-    max_files_per_trigger: int | None = None  # 100 TB listing control
     event_time_col: str | None = None  # partition by this instead of arrival time
     # A13/A18 literal batch shape: coalesce(1) in front of the same file
     # sink, so each trigger lands one gzip object per partition dir
@@ -77,10 +76,7 @@ def read_records(spark: SparkSession, cfg: S4Config) -> DataFrame:
         raise ValueError(
             f"source_format must be 'text' or 'unixline', got {cfg.source_format!r}"
         )
-    reader = spark.readStream.format("text").option("lineSep", "\n")
-    if cfg.max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", cfg.max_files_per_trigger)
-    return reader.load(cfg.input_path)
+    return spark.readStream.format("text").option("lineSep", "\n").load(cfg.input_path)
 
 
 def validate_json(records: DataFrame, cfg: S4Config) -> DataFrame:

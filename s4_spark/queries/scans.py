@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from s4_spark.queries.helpers import csum, dsum, ordered_small, sql_dsum, t
 from s4_spark.queries.registry import query
 from s4_spark.scratch import scratch, scratch_root
-from s4_spark.streaming.rigs import drain, run_to_memory
+from s4_spark.streaming.rigs import drain, events_stream, run_to_memory
 
 
 def events_landing_dir(sf_dir: str) -> str:
@@ -52,22 +52,6 @@ def events_landing_dir(sf_dir: str) -> str:
         if not os.path.exists(dst):
             shutil.copyfile(src, dst)
     return path
-
-
-def _events_stream_raw(spark, sf_dir: str):
-    """Raw events stream with the schema taken from a batch scan of the
-    landing dir (one footer read) — NOT hardcoded: the generator has
-    stored events.ts two different ways across rounds and a forced
-    schema breaks on the next flip (streaming/rigs.events_stream applies
-    the same rule, plus ts normalization for event-time consumers)."""
-    from s4_spark.catalog import read_parquet_adaptive
-
-    landing = events_landing_dir(sf_dir)
-    return (
-        spark.readStream.schema(read_parquet_adaptive(spark, landing).schema)
-        .format("parquet")
-        .load(landing)
-    )
 
 
 @query(
@@ -204,7 +188,7 @@ def q007(spark, sf_dir):
 
     At 100 TB: the same code with a per-trigger file limit caps
     per-batch work and checkpointing makes the listing incremental."""
-    stream = _events_stream_raw(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
     agg = stream.agg(
         F.count("*").alias("n"), dsum("value").alias("sum_value")
     )
@@ -229,7 +213,7 @@ def q008(spark, sf_dir):
     sink itself writes stdout (unassertable), but the metrics surface a
     production monitor scrapes is exact and oracle-checked."""
     progresses = drain(
-        _events_stream_raw(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .writeStream.format("console")
         .option("numRows", 5)
         .option("checkpointLocation", scratch(f"q008_ckpt_{os.path.basename(sf_dir)}"))
@@ -1135,7 +1119,6 @@ def q243(spark, sf_dir):
     idempotency is pinned by a direct unit test on the committer).
     The streamed events aggregate back to the events-table oracle."""
     import s4_spark.sources as sources
-    from s4_spark.streaming.rigs import events_stream
 
     sources.register(spark)
     out = scratch(f"q243_out_{os.path.basename(sf_dir)}")
@@ -1165,9 +1148,9 @@ def q243(spark, sf_dir):
 )
 def q246(spark, sf_dir):
     """Offset-managed custom STREAMING source (sources/chunk_spool.py):
-    the full DataSourceStreamReader protocol — explicit {"chunk": N}
-    offsets checkpointed by Spark, partitions(start, end) fanning each
-    micro-batch into one InputPartition per chunk for PARALLEL
+    the full DataSourceStreamReader protocol — explicit {"index": N}
+    record offsets checkpointed by Spark, partitions(start, end) fanning
+    each micro-batch into one InputPartition per chunk for PARALLEL
     executor-side reads, and commit(end) ACKING the consumed
     prefix by deleting it (all but the newest chunk, which holds the
     offset once the spool is drained, as in the unix-socket source) —
@@ -1181,7 +1164,7 @@ def q246(spark, sf_dir):
     and asserts run 2 deletes run 1's chunks and re-reads nothing
     (exactly-once drain)."""
     import s4_spark.sources as sources
-    from s4_spark.sources.chunk_spool import chunk_path
+    from s4_spark.sources.chunk_spool import write_chunk
 
     sources.register(spark)
     spool = scratch(f"q246_spool_{os.path.basename(sf_dir)}")
@@ -1189,13 +1172,9 @@ def q246(spark, sf_dir):
     # toPandas rides the session Arrow transfer path (guide §6) -
     # cheaper than row-pickled collect() for this driver fixture
     langs = t(spark, sf_dir, "documents").select("lang").toPandas()["lang"].tolist()
-    n_chunks = 8
-    per = (len(langs) + n_chunks - 1) // n_chunks
-    for i in range(n_chunks):
-        part = langs[i * per : (i + 1) * per]
-        if part:
-            with open(chunk_path(spool, i), "w") as f:
-                f.writelines(v + "\n" for v in part)
+    per = max(1, (len(langs) + 7) // 8)  # 8 chunk files
+    for i in range(0, len(langs), per):
+        write_chunk(spool, i, langs[i : i + per])
 
     df = (
         spark.readStream.format("chunkspool")

@@ -25,13 +25,13 @@ from s4_spark.streaming.rigs import (
     events_stream,
     idempotent_batch_sink,
     instant_as_utc_ntz,
-    ntz_as_utc_instant,
     read_batched_parquet,
     replay,
     run_to_memory,
     run_to_parquet,
     stage_file,
     staged_streams,
+    with_instant_ts,
 )
 
 
@@ -231,10 +231,7 @@ def q094(spark, sf_dir):
     producer), not a query-path pattern."""
     from pyspark.sql import Window as W
 
-    ev = t(spark, sf_dir, "events").select("event_id", "ts")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        # event time (withWatermark) requires TIMESTAMP; pin wall clock=UTC
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
+    ev = with_instant_ts(t(spark, sf_dir, "events").select("event_id", "ts"))
     lo = ev.agg(F.min("ts")).collect()[0][0]
     base = F.lit(lo).cast("timestamp")
     p1 = ev.select(
@@ -1020,9 +1017,9 @@ def q235(spark, sf_dir):
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     fold = _funnel_fold()
-    ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
+    ev = with_instant_ts(t(spark, sf_dir, "events")).select(
+        "user_id", "event_type", "ts", "event_id"
+    )
     bounds = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     span_hours = int((bounds["hi"] - bounds["lo"]).total_seconds() // 3600) + 2
     hi = F.lit(bounds["hi"]).cast("timestamp")
@@ -1278,9 +1275,9 @@ def _q241(spark, sf_dir):
     GAP_US = 30 * 60 * 1_000_000
     GAP_MS = 30 * 60 * 1000
 
-    ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
+    ev = with_instant_ts(t(spark, sf_dir, "events")).select(
+        "user_id", "event_type", "ts", "event_id"
+    )
     hi = ev.agg(F.max("ts")).collect()[0][0]
 
     sentinel = spark.range(1).select(
@@ -1436,9 +1433,9 @@ def _q247(spark, sf_dir):
     DEADLINE_US = 48 * 3600 * 1_000_000
     fold = _funnel_fold()
 
-    ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
+    ev = with_instant_ts(t(spark, sf_dir, "events")).select(
+        "user_id", "event_type", "ts", "event_id"
+    )
     ev = ev.select(
         "user_id", "event_type", F.unix_micros("ts").alias("ts_us"), "event_id"
     )
@@ -2057,9 +2054,9 @@ def q273(spark, sf_dir):
     verbatim in the oracle's HAVING."""
     from pyspark.sql import Window as W
 
-    ev = t(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
+    ev = with_instant_ts(t(spark, sf_dir, "events")).select(
+        "event_id", "ts", "event_type"
+    )
     lo = ev.agg(F.min("ts")).collect()[0][0]
     base = F.lit(lo).cast("timestamp")
 

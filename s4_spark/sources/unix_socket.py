@@ -29,28 +29,25 @@ Semantics carried over:
 The streaming reader is a ``SimpleDataSourceStreamReader``: socket
 RECEIVE is a single driver-side thread, which is the reference's own
 topology (one endpoint, one listener — input/unix.go:19-34), and
-``read(start)`` writes what it received as new chunk files
-``chunk-{lo:020d}-{hi:020d}.txt`` holding global records [lo, hi), at
-most ``_CHUNK_LINES`` each, then hands the same records to Spark as
-Arrow batches. Spark's prefetch path ships them from the driver-side
-runner straight to the JVM, so a micro-batch runs no Python task: the
-records are already in driver memory when the offset is reported, and a
-per-batch executor read of the spool cost more in Python worker set-up
-than the read itself. The spool is read only for replay
-(``readBetweenOffsets``), after a restart. No spool byte is ever
-rewritten: the only writes are new chunks (``.tmp`` then rename) and
+``read(start)`` writes what it received as new chunks of the
+record-indexed spool (sources/chunk_spool.py owns the format: chunks of
+at most ``CHUNK_LINES`` records, written ``.tmp`` then renamed), then
+hands the same records to Spark as Arrow batches. Spark's prefetch path
+ships them from the driver-side runner straight to the JVM, so a
+micro-batch runs no Python task: the records are already in driver
+memory when the offset is reported, and a per-batch executor read of the
+spool cost more in Python worker set-up than the read itself. The spool
+is read only for replay (``readBetweenOffsets``), after a restart. No
+spool byte is ever rewritten: the only writes are new chunks and
 deletions of committed chunks. Replay runs as an executor task, so on a
-cluster the spool directory must be a shared filesystem (exactly like
-sources/chunk_spool.py).
+cluster the spool directory must be a shared filesystem.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import socket
 import threading
-import time
 from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import (
@@ -60,13 +57,16 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from s4_spark.sources.chunk_spool import line_batches
+from s4_spark.sources.chunk_spool import (
+    CHUNK_LINES,
+    ack,
+    read_range,
+    spooled,
+    write_chunk,
+)
 
 _CONNECT_TIMEOUT_S = 5.0
 _POLL_TIMEOUT_S = 0.05
-# Records per spool chunk, hence per Arrow batch a read serves.
-_CHUNK_LINES = 8192
-_CHUNK_RE = re.compile(r"chunk-(\d{20})-(\d{20})\.txt")
 
 
 def _frame(buf: bytes, eof: bool) -> tuple[list[str], bytes]:
@@ -116,26 +116,12 @@ class _UnixLineBatchReader(DataSourceReader):
             yield (line,)
 
 
-def _chunk_name(lo: int, hi: int) -> str:
-    return f"chunk-{lo:020d}-{hi:020d}.txt"
-
-
-def _list_chunks(spool_dir: str) -> list[tuple[int, int]]:
-    """The spool's chunks as sorted ``(lo, hi)`` record ranges."""
-    return sorted(
-        (int(m.group(1)), int(m.group(2)))
-        for m in map(_CHUNK_RE.fullmatch, os.listdir(spool_dir))
-        if m
-    )
-
-
 class _SpoolingStreamReader(SimpleDataSourceStreamReader):
     """Socket receiver + durable chunk spool, serving every micro-batch
     from the driver.
 
     Offsets are GLOBAL record indexes (monotone across the query's
-    lifetime). The spool is a directory of immutable chunk files, each
-    holding the records [lo, hi) its name says.
+    lifetime), the spool's own (sources/chunk_spool.py).
 
     A background thread receives from the socket (client ``connect`` or
     server ``listen`` fan-in). ``read(start)`` writes whatever the thread
@@ -151,10 +137,9 @@ class _SpoolingStreamReader(SimpleDataSourceStreamReader):
     engine planned but did not commit; it reads the chunks, on an
     executor.
 
-    ``commit(end)`` deletes the chunks Spark has fully committed, except
-    the newest, so a reader re-created over a drained spool still starts
-    at the spooled count, not 0. A committed chunk is never read again,
-    so a delete cannot race an in-flight read.
+    ``commit(end)`` acks the spool: the chunks Spark has fully committed
+    go, except the newest, so a reader re-created over a drained spool
+    still starts at the spooled count, not 0.
 
     pyspark's wrapper around a simple reader never calls ``stop()``: the
     receiver's daemon threads, and the socket they hold, end with the
@@ -170,8 +155,7 @@ class _SpoolingStreamReader(SimpleDataSourceStreamReader):
         for f in os.listdir(spool_dir):
             if f.endswith(".tmp"):
                 os.unlink(os.path.join(spool_dir, f))
-        chunks = _list_chunks(spool_dir)
-        self._spooled = chunks[-1][1] if chunks else 0
+        self._spooled = spooled(spool_dir)
         self._lock = threading.Lock()
         self._lines: list[str] = []
         self._receiver: threading.Thread | None = None
@@ -320,14 +304,9 @@ class _SpoolingStreamReader(SimpleDataSourceStreamReader):
         batches = []
         if start["index"] < self._spooled:  # spooled, never planned
             batches = list(self.readBetweenOffsets(start, {"index": self._spooled}))
-        for i in range(0, len(fresh), _CHUNK_LINES):
-            lines = fresh[i : i + _CHUNK_LINES]
-            lo, hi = self._spooled, self._spooled + len(lines)
-            path = os.path.join(self._spool_dir, _chunk_name(lo, hi))
-            with open(path + ".tmp", "w", encoding="utf-8", newline="\n") as f:
-                f.writelines(ln + "\n" for ln in lines)
-            os.replace(path + ".tmp", path)
-            self._spooled = hi
+        for i in range(0, len(fresh), CHUNK_LINES):
+            lines = fresh[i : i + CHUNK_LINES]
+            self._spooled = write_chunk(self._spool_dir, self._spooled, lines)
             batches.append(
                 pa.RecordBatch.from_arrays([pa.array(lines, pa.string())], ["value"])
             )
@@ -335,49 +314,15 @@ class _SpoolingStreamReader(SimpleDataSourceStreamReader):
         return iter(batches), {"index": self._spooled}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        """Replay [start, end) from the chunks, one Arrow batch per chunk
-        clipped to the range. A range the chunks do not cover
-        contiguously raises, and so does a chunk holding fewer records
-        than its name says, after retries (shared-filesystem visibility
-        lag heals): a truncated chunk (an OS crash lost an unsynced write
-        after its offset was checkpointed) must not turn into silently
-        missing rows (ADVICE r10)."""
-        lo, hi = start["index"], end["index"]
-        out, at = [], lo
-        for c_lo, c_hi in _list_chunks(self._spool_dir):
-            if at >= hi or c_lo > at:
-                break
-            if c_hi > at:
-                stop = min(c_hi, hi)
-                out.append(self._chunk(c_lo, c_hi).slice(at - c_lo, stop - at))
-                at = stop
-        if at < hi:
-            raise IOError(
-                f"spool {self._spool_dir} has no chunk for record {at} "
-                f"of the range [{lo}, {hi})"
-            )
-        return iter(out)
-
-    def _chunk(self, lo: int, hi: int):
-        """Chunk [lo, hi) as one Arrow batch, or IOError."""
-        path = os.path.join(self._spool_dir, _chunk_name(lo, hi))
-        for attempt in range(5):
-            try:
-                batches = list(line_batches(path, hi - lo + 1))
-            except FileNotFoundError:
-                batches = []
-            if sum(b.num_rows for b in batches) == hi - lo:
-                return batches[0]
-            time.sleep(0.05 * (attempt + 1))
-        raise IOError(
-            f"spool chunk {path} is missing or truncated: it does not hold "
-            f"its {hi - lo} records — failing the task rather than dropping rows"
-        )
+        """Replay [start, end) from the chunks alone (``read_range``: a
+        range the chunks do not cover, or a chunk holding fewer records
+        than its name says after retries, raises — a truncated chunk, an
+        unsynced write an OS crash lost after its offset was
+        checkpointed, must not turn into silently missing rows)."""
+        return read_range(self._spool_dir, start["index"], end["index"])
 
     def commit(self, end: dict) -> None:
-        for c_lo, c_hi in _list_chunks(self._spool_dir)[:-1]:
-            if c_hi <= end["index"]:
-                os.unlink(os.path.join(self._spool_dir, _chunk_name(c_lo, c_hi)))
+        ack(self._spool_dir, end["index"])
 
     def stop(self) -> None:
         self._stop.set()
@@ -392,7 +337,6 @@ class UnixLineDataSource(DataSource):
     - ``spoolDir``: (streaming) directory for the durable chunk spool;
       defaults next to the socket path. On a cluster this must be a
       shared filesystem — restart replay reads the chunks on an executor
-      (sources/chunk_spool.py has the same contract).
     - ``mode``: (streaming) ``connect`` (default) dials the path as a
       client (reference A1); ``listen`` binds the path as the SERVER and
       fans every accepted client connection into the one stream

@@ -111,6 +111,15 @@ def instant_as_utc_ntz(col: str):
     return F.expr(f"timestampadd(MICROSECOND, unix_micros({col}), {_EPOCH_NTZ})")
 
 
+def with_instant_ts(df: DataFrame) -> DataFrame:
+    """``df`` with an NTZ ``ts`` read as a UTC instant
+    (:func:`ntz_as_utc_instant`), the type event time needs; a ``ts`` of
+    any other type is left as it is."""
+    if df.schema["ts"].dataType.typeName() == "timestamp_ntz":
+        return df.withColumn("ts", ntz_as_utc_instant("ts"))
+    return df
+
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a streaming DataFrame (file source over a landing dir).
 
@@ -134,10 +143,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(landing)
     )
-    ev = normalize_events(raw)
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
-    return ev
+    return with_instant_ts(normalize_events(raw))
 
 
 def drain_to_memory(

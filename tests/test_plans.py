@@ -1382,6 +1382,35 @@ def test_allpairs_regime_bound_enforced(spark):
     assert S.allpairs_topk_cosine(e, k=3, max_broadcast_rows=None).count() == 3
 
 
+def test_cosine_kernels_reach_a_worker_without_the_package(tmp_path):
+    """The shared seq_dot/seq_norm pair ships by value: it unpickles and
+    runs in an interpreter that cannot import s4_spark, as a Python
+    worker may be."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from s4_spark.operators.similarity import _seq_kernels
+
+    blob = tmp_path / "kernels.pkl"
+    blob.write_bytes(cloudpickle.dumps(_seq_kernels()))
+    code = (
+        "import importlib.util, pickle, sys\n"
+        "import numpy as np\n"
+        "assert importlib.util.find_spec('s4_spark') is None\n"
+        "dot, norm = pickle.load(open(sys.argv[1], 'rb'))\n"
+        "A = np.array([[3.0, 4.0], [1.0, 0.0]])\n"
+        "print(dot(A, A[:1]).ravel().tolist(), norm(A).tolist())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", code, str(blob)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, check=True,
+    )
+    assert run.stdout.strip() == "[25.0, 3.0] [5.0, 1.0]"
+
+
 def test_connected_components_zero_iters_raises_cleanly(spark):
     """r7 advice: the non-convergence message interpolated ``changed``,
     unbound when max_iters <= 0 — that call must raise the intended

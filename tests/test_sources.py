@@ -15,7 +15,7 @@ import time
 import pytest
 
 import s4_spark.sources as sources
-from s4_spark.sources import unix_socket
+from s4_spark.sources import chunk_spool, unix_socket
 from s4_spark.sources.unix_socket import _frame, _SpoolingStreamReader
 
 
@@ -111,7 +111,7 @@ def replay(r, lo, hi):
 def buffered(r, n, timeout=5.0):
     """Start the receiver and wait until it holds ``n`` records, so the
     next read() spools them in one call (chunk bounds are then
-    fixed by _CHUNK_LINES alone)."""
+    fixed by CHUNK_LINES alone)."""
     r._ensure_receiver()
     deadline = time.time() + timeout
     while len(r._lines) < n and time.time() < deadline:
@@ -159,7 +159,7 @@ def test_stream_reader_serves_one_batch_per_chunk(tmp_path, sock_dir, monkeypatc
         _streamReader,
     )
 
-    monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 2)
+    monkeypatch.setattr(unix_socket, "CHUNK_LINES", 2)
     sock = os.path.join(sock_dir, "fan.sock")
     ds = unix_socket.UnixLineDataSource({"path": sock})
     assert isinstance(_streamReader(ds, None), _SimpleStreamReaderWrapper)
@@ -263,7 +263,7 @@ def test_commit_keeps_uncommitted_and_newest_chunks(tmp_path, sock_dir, monkeypa
     """commit(end) deletes every chunk Spark has fully committed except
     the newest; uncommitted chunks stay and still replay by global
     index. No chunk is ever rewritten."""
-    monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 10)
+    monkeypatch.setattr(unix_socket, "CHUNK_LINES", 10)
     sock = os.path.join(sock_dir, "commit.sock")
     serve_lines(sock, b"".join(b"c%d\n" % i for i in range(100)))
     spool_dir = tmp_path / "spool"
@@ -275,12 +275,12 @@ def test_commit_keeps_uncommitted_and_newest_chunks(tmp_path, sock_dir, monkeypa
     assert len(chunks(spool_dir)) == 10
     r.commit({"index": 85})  # [80, 90) is only partly committed: kept
     assert chunks(spool_dir) == [
-        unix_socket._chunk_name(80, 90),
-        unix_socket._chunk_name(90, 100),
+        chunk_spool.chunk_name(80, 90),
+        chunk_spool.chunk_name(90, 100),
     ]
     assert replay(r, 85, 97) == [(f"c{i}",) for i in range(85, 97)]
     r.commit({"index": 100})  # fully drained: only the newest survives
-    assert chunks(spool_dir) == [unix_socket._chunk_name(90, 100)]
+    assert chunks(spool_dir) == [chunk_spool.chunk_name(90, 100)]
 
 
 def test_reader_recreated_after_full_drain_keeps_offset(tmp_path, sock_dir):
@@ -311,7 +311,7 @@ def test_tmp_chunk_never_planned_and_removed_at_init(tmp_path, sock_dir):
     r = _SpoolingStreamReader(sock, str(spool_dir))
     got, off = drain(r, {"index": 0}, 20)
     assert len(got) == 20 and off == {"index": 20}
-    partial = spool_dir / (unix_socket._chunk_name(20, 25) + ".tmp")
+    partial = spool_dir / (chunk_spool.chunk_name(20, 25) + ".tmp")
     partial.write_text("a20\na21\n")  # the crash cut it short
     batches, end = r.read(off)
     assert end == {"index": 20} and values(batches) == []
@@ -330,7 +330,7 @@ def test_missing_planned_chunk_raises(tmp_path, sock_dir, monkeypatch):
     """A planned range the spool no longer covers fails — when the chunk
     is gone before the replay lists the spool, and when it goes after —
     instead of serving fewer records than the range holds."""
-    monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 2)
+    monkeypatch.setattr(unix_socket, "CHUNK_LINES", 2)
     sock = os.path.join(sock_dir, "missing.sock")
     serve_lines(sock, b"a\nb\nc\nd\n")
     spool_dir = tmp_path / "spool"
@@ -339,11 +339,11 @@ def test_missing_planned_chunk_raises(tmp_path, sock_dir, monkeypatch):
     got, off = drain(r, {"index": 0}, 4)
     r.stop()
     assert got == ["a", "b", "c", "d"]
-    listed = unix_socket._list_chunks(str(spool_dir))
-    os.unlink(spool_dir / unix_socket._chunk_name(0, 2))
+    listed = chunk_spool.list_chunks(str(spool_dir))
+    os.unlink(spool_dir / chunk_spool.chunk_name(0, 2))
     with pytest.raises(IOError, match="no chunk for record 0 "):
         replay(r, 0, 4)
-    monkeypatch.setattr(unix_socket, "_list_chunks", lambda _: listed)
+    monkeypatch.setattr(chunk_spool, "list_chunks", lambda _: listed)
     with pytest.raises(IOError, match="missing or truncated"):
         replay(r, 0, 4)
     assert replay(r, 2, 4) == [("c",), ("d",)]
@@ -554,14 +554,13 @@ def test_chunk_spool_acks_on_next_run_exactly_once(spark, tmp_path):
     import os
 
     import s4_spark.sources as sources
-    from s4_spark.sources.chunk_spool import chunk_path
+    from s4_spark.sources.chunk_spool import chunk_name, write_chunk
 
     sources.register(spark)
     spool, ckpt, out = (str(tmp_path / d) for d in ("spool", "ckpt", "out"))
     os.makedirs(spool)
     for i in range(3):
-        with open(chunk_path(spool, i), "w") as f:
-            f.write(f"r{i}\n")
+        write_chunk(spool, i, [f"r{i}"])
 
     def run():
         df = spark.readStream.format("chunkspool").option("path", spool).load()
@@ -577,47 +576,136 @@ def test_chunk_spool_acks_on_next_run_exactly_once(spark, tmp_path):
     run()
     assert sorted(
         p for p in os.listdir(spool) if p.startswith("chunk")
-    ) == [f"chunk-{i:08d}.txt" for i in range(3)]  # not yet acked
+    ) == [chunk_name(i, i + 1) for i in range(3)]  # not yet acked
     for i in range(3, 5):
-        with open(chunk_path(spool, i), "w") as f:
-            f.write(f"r{i}\n")
+        write_chunk(spool, i, [f"r{i}"])
     run()
     assert sorted(
         p for p in os.listdir(spool) if p.startswith("chunk")
-    ) == [f"chunk-{i:08d}.txt" for i in range(3, 5)]  # run-1 prefix drained
+    ) == [chunk_name(i, i + 1) for i in range(3, 5)]  # run-1 prefix drained
     rows = sorted(r.value for r in spark.read.parquet(out).collect())
     assert rows == [f"r{i}" for i in range(5)]  # exactly once, no re-read
 
 
 def test_chunk_spool_latest_offset_monotone_after_drain(tmp_path):
     """r6 advice: with ack enabled, commit() deletes the committed chunks,
-    so a drained spool must NOT report {"chunk": -1} — commit keeps the
-    newest chunk, whose number survives reader re-instantiation,
+    so a drained spool must NOT report {"index": 0} — commit keeps the
+    newest chunk, whose ``hi`` survives reader re-instantiation,
     preventing a spurious regressed batch and a re-read of re-used
-    chunk numbers after a producer restart."""
+    record indexes after a producer restart."""
     import os
 
-    from s4_spark.sources.chunk_spool import ChunkSpoolStreamReader, chunk_path
+    from s4_spark.sources.chunk_spool import (
+        ChunkSpoolStreamReader,
+        chunk_name,
+        write_chunk,
+    )
 
     spool = str(tmp_path / "spool")
     os.makedirs(spool)
     for i in range(3):
-        with open(chunk_path(spool, i), "w") as f:
-            f.write(f"r{i}\n")
+        write_chunk(spool, i, [f"r{i}"])
     r = ChunkSpoolStreamReader({"path": spool})
-    assert r.latestOffset() == {"chunk": 2}
-    r.commit({"chunk": 2})  # deletes every chunk but the newest
+    assert r.latestOffset() == {"index": 3}
+    r.commit({"index": 3})  # deletes every chunk but the newest
     assert [p for p in os.listdir(spool) if p.startswith("chunk")] == [
-        "chunk-00000002.txt"
+        chunk_name(2, 3)
     ]
-    assert r.latestOffset() == {"chunk": 2}  # monotone, not -1
+    assert r.latestOffset() == {"index": 3}  # monotone, not 0
     # a fresh reader instance (restart) starts from the kept chunk
     r2 = ChunkSpoolStreamReader({"path": spool})
-    assert r2.latestOffset() == {"chunk": 2}
+    assert r2.latestOffset() == {"index": 3}
     # new production continues forward
-    with open(chunk_path(spool, 3), "w") as f:
-        f.write("r3\n")
-    assert r2.latestOffset() == {"chunk": 3}
+    write_chunk(spool, 3, ["r3"])
+    assert r2.latestOffset() == {"index": 4}
+
+
+def test_chunk_spool_short_chunk_fails_the_batch_and_commits_nothing(
+    spark, tmp_path
+):
+    """A chunk holding fewer records than its name says (a write the
+    storage lost after the producer renamed it) fails the micro-batch
+    with IOError instead of serving a short range: no batch commits, no
+    row lands, and the chunk stays in the spool for a retry."""
+    import s4_spark.sources as sources
+    from s4_spark.sources.chunk_spool import chunk_name, write_chunk
+
+    sources.register(spark)
+    spool, ckpt, out = (str(tmp_path / d) for d in ("spool", "ckpt", "out"))
+    os.makedirs(spool)
+    write_chunk(spool, 0, ["a", "b"])
+    with open(os.path.join(spool, chunk_name(2, 5)), "w") as f:
+        f.write("c\nd\n")  # named for 3 records, holds 2
+    q = (
+        spark.readStream.format("chunkspool").option("path", spool).load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        with pytest.raises(Exception, match="missing or truncated"):
+            q.awaitTermination()
+    finally:
+        q.stop()
+    commits = os.path.join(ckpt, "commits")
+    assert not os.path.isdir(commits) or not os.listdir(commits)
+    assert not any(f.endswith(".parquet") for _, _, fs in os.walk(out) for f in fs)
+    assert sorted(os.listdir(spool)) == [chunk_name(0, 2), chunk_name(2, 5)]
+
+
+def test_chunk_spool_gap_in_planned_range_raises_in_partitions(tmp_path):
+    """A chunk missing inside a planned range fails planning: the
+    partitions do not silently skip the records it held."""
+    from s4_spark.sources.chunk_spool import (
+        ChunkSpoolStreamReader,
+        chunk_name,
+        write_chunk,
+    )
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    for lo in (0, 2, 4):
+        write_chunk(spool, lo, [f"r{lo}", f"r{lo + 1}"])
+    r = ChunkSpoolStreamReader({"path": spool})
+    assert [(p.lo, p.hi) for p in r.partitions({"index": 1}, {"index": 5})] == [
+        (1, 2),
+        (2, 4),
+        (4, 5),
+    ]
+    os.unlink(os.path.join(spool, chunk_name(2, 4)))
+    with pytest.raises(IOError, match="no chunk for record 2 "):
+        r.partitions({"index": 0}, {"index": 6})
+
+
+def test_chunk_spool_leaves_a_producer_tmp_alone(tmp_path):
+    """A producer's chunk still being written (``.tmp``) is not listed,
+    planned or acked away: only its renamed chunk is the reader's."""
+    from s4_spark.sources.chunk_spool import (
+        ChunkSpoolStreamReader,
+        chunk_name,
+        write_chunk,
+    )
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    write_chunk(spool, 0, ["a", "b"])
+    write_chunk(spool, 2, ["c"])
+    inflight = os.path.join(spool, chunk_name(3, 6) + ".tmp")
+    with open(inflight, "w") as f:
+        f.write("d\ne\n")
+    r = ChunkSpoolStreamReader({"path": spool})
+    assert r.latestOffset() == {"index": 3}
+    assert [(p.lo, p.hi) for p in r.partitions({"index": 0}, {"index": 3})] == [
+        (0, 2),
+        (2, 3),
+    ]
+    r.commit({"index": 3})
+    assert sorted(os.listdir(spool)) == [
+        chunk_name(2, 3),
+        chunk_name(3, 6) + ".tmp",
+    ]
 
 
 def test_stream_reader_short_slice_fails_instead_of_dropping(
@@ -627,7 +715,7 @@ def test_stream_reader_short_slice_fails_instead_of_dropping(
     says (truncated by an OS crash after the offset was checkpointed)
     must surface as a task failure, not a silently short record set —
     the source's contract is exactly-once."""
-    monkeypatch.setattr(unix_socket, "_CHUNK_LINES", 2)
+    monkeypatch.setattr(unix_socket, "CHUNK_LINES", 2)
     sock = os.path.join(sock_dir, "short.sock")
     serve_lines(sock, b"a\nb\nc\n")
     r = _SpoolingStreamReader(sock, str(tmp_path / "spool"))
@@ -636,7 +724,7 @@ def test_stream_reader_short_slice_fails_instead_of_dropping(
     r.stop()
     assert got == ["a", "b", "c"]
     # truncate the last chunk to simulate a lost (non-fsynced) write
-    with open(tmp_path / "spool" / unix_socket._chunk_name(2, 3), "w") as f:
+    with open(tmp_path / "spool" / chunk_spool.chunk_name(2, 3), "w") as f:
         f.write("")
     with pytest.raises(IOError, match="truncat"):
         replay(r, 0, 3)
@@ -656,22 +744,21 @@ def test_frame_is_the_one_line_framing():
 
 def test_chunk_spool_read_yields_bounded_batches(tmp_path):
     """chunk_spool's read goes through the shared chunk reader: a
-    producer chunk larger than BATCH_LINES arrives as several bounded
+    producer chunk larger than CHUNK_LINES arrives as several bounded
     Arrow batches, in order, not one unbounded batch."""
     from s4_spark.sources.chunk_spool import (
-        BATCH_LINES,
+        CHUNK_LINES,
         ChunkPartition,
         ChunkSpoolStreamReader,
-        chunk_path,
+        write_chunk,
     )
 
     spool = str(tmp_path / "spool")
     os.makedirs(spool)
-    n = 2 * BATCH_LINES + 1
-    with open(chunk_path(spool, 0), "w") as f:
-        f.writelines(f"r{i}\n" for i in range(n))
+    n = 2 * CHUNK_LINES + 1
+    write_chunk(spool, 0, [f"r{i}" for i in range(n)])
     r = ChunkSpoolStreamReader({"path": spool})
-    batches = list(r.read(ChunkPartition(chunk=0, path=spool)))
-    assert [b.num_rows for b in batches] == [BATCH_LINES, BATCH_LINES, 1]
+    batches = list(r.read(ChunkPartition(path=spool, lo=0, hi=n)))
+    assert [b.num_rows for b in batches] == [CHUNK_LINES, CHUNK_LINES, 1]
     vals = [v for b in batches for v in b.column("value").to_pylist()]
     assert vals == [f"r{i}" for i in range(n)]

@@ -84,6 +84,31 @@ def test_cli_region_flag(spark, monkeypatch):
     hconf.unset("fs.s3a.endpoint.region")
 
 
+def test_cli_run_stops_its_query_when_the_wait_ends(spark, monkeypatch, tmp_path):
+    """``cli run`` stops the query it started however the wait ends: an
+    interrupt (Ctrl-C) propagates, and the query is stopped first."""
+    import pytest as _pytest
+
+    from s4_spark.pipeline import cli, s4
+
+    class Query:
+        stopped = False
+
+        def awaitTermination(self):
+            raise KeyboardInterrupt
+
+        def stop(self):
+            self.stopped = True
+
+    q = Query()
+    monkeypatch.setattr(s4, "start", lambda spark, cfg: q)
+    with _pytest.raises(KeyboardInterrupt):
+        cli.main(["run", "--input", str(tmp_path / "in"),
+                  "--output", str(tmp_path / "out"),
+                  "--checkpoint", str(tmp_path / "ckpt")])
+    assert q.stopped
+
+
 def test_exactly_once_across_restarts(spark):
     """The headline upgrade over the reference (SURVEY.md Appendix B:
     LevelDB delete-before-send loses data on crash; LineRiver truncate
@@ -137,7 +162,7 @@ def test_single_object_per_flush_compat_mode(spark, tmp_path):
     partition dir (river/jsonr.go:70-78 drains the buffer into one body
     per ticker fire; lake/lake.go:65-90 PUTs one object) — committed by
     the file sink's own _spark_metadata log, with no rename.
-    maxFilesPerTrigger=1 over two input files forces two triggers; both
+    Two input files fed one run at a time make two triggers; both
     land in the same (processing-time, UTC today) partition dir. Each
     log entry adds exactly one object there, holding its batch's lines.
     A third file through the SAME checkpoint adds a third object without
@@ -146,7 +171,6 @@ def test_single_object_per_flush_compat_mode(spark, tmp_path):
     import glob
     import gzip
     import json
-    import time
     from urllib.parse import urlparse
 
     from s4_spark.pipeline.s4 import S4Config, run_once
@@ -154,14 +178,10 @@ def test_single_object_per_flush_compat_mode(spark, tmp_path):
     landing, out, ckpt = (str(tmp_path / d) for d in ("landing", "out", "ckpt"))
     os.makedirs(landing)
 
-    def feed(lo, hi, fname, age):
-        path = os.path.join(landing, fname)
-        with open(path, "w") as f:
+    def feed(lo, hi, fname):
+        with open(os.path.join(landing, fname), "w") as f:
             for i in range(lo, hi):
                 f.write(f"rec-{i}\n")
-        # the file source takes files oldest first: pin the batch order
-        mtime = time.time() - age
-        os.utime(path, (mtime, mtime))
 
     def logged(batch):
         """The data objects log entry ``batch`` committed."""
@@ -173,16 +193,16 @@ def test_single_object_per_flush_compat_mode(spark, tmp_path):
         with gzip.open(path, "rt") as fh:
             return [ln.rstrip("\n") for ln in fh]
 
-    feed(0, 100, "a.txt", age=20)
-    feed(100, 250, "b.txt", age=10)
     cfg = S4Config(
         input_path=landing, output_path=out, checkpoint_path=ckpt,
-        record_type="line", max_files_per_trigger=1,
-        single_object_per_flush=True,
+        record_type="line", single_object_per_flush=True,
     )
+    feed(0, 100, "a.txt")
     run_once(spark, cfg)
-    feed(250, 300, "c.txt", age=0)
+    feed(100, 250, "b.txt")
+    run_once(spark, cfg)
     first = [logged(0), logged(1)]
+    feed(250, 300, "c.txt")
     before = {o: os.path.getmtime(o) for objs in first for o in objs}
     run_once(spark, cfg)  # same checkpoint: resumes at batch 2
     objs = first + [logged(2)]
@@ -462,7 +482,7 @@ def test_q234_funnel_state_survives_multi_batch(spark, tmp_path):
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from s4_spark.catalog import table
-    from s4_spark.streaming.rigs import ntz_as_utc_instant
+    from s4_spark.streaming.rigs import with_instant_ts
 
     # time-ordered thirds so cross-batch arrival respects event order
     ev = table(spark, SF_DIR, "events").select(
@@ -527,8 +547,7 @@ def test_q234_funnel_state_survives_multi_batch(spark, tmp_path):
         .format("parquet")
         .load(landing)
     )
-    if stream.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        stream = stream.withColumn("ts", ntz_as_utc_instant("ts"))
+    stream = with_instant_ts(stream)
     out = stream.groupBy("user_id").applyInPandasWithState(
         funnel,
         outputStructType="user_id long, t1 long, t2 long, t3 long",
