@@ -525,7 +525,6 @@ def q165(spark, sf_dir):
     lo = ev.limit(1).collect()[0][0]
     base = F.lit(lo).cast("timestamp")
 
-    mk = lambda rows, schema: spark.createDataFrame(rows, schema)  # noqa: E731
     l1 = spark.range(20).select(
         F.col("id").cast("int").alias("user_id"),
         base.alias("lts"),
@@ -1906,12 +1905,10 @@ def q268(spark, sf_dir):
 
 
 def _q269_chain(ev):
-    """The q269 operator chain, parameterized by the event stream so the
-    scale probe (bench/stream_state_probe.py --q269-chunked) can drive
-    the SAME two-state-operator plan through a chunked, time-ordered
-    replay: clicks joined to purchases within 10 minutes per user
-    (watermarked stream-stream interval join), rolled up to hourly
-    conversion counts (windowed agg)."""
+    """The q269 operator chain over the event stream ``ev``: clicks
+    joined to purchases within 10 minutes per user (watermarked
+    stream-stream interval join), rolled up to hourly conversion counts
+    (windowed agg)."""
     clicks = (
         ev.filter(F.col("event_type") == "click")
         .select("user_id", F.col("ts").alias("click_ts"))

@@ -11,9 +11,12 @@ Both writers implement the two-phase commit protocol the V2 API defines:
   never touch each other's staging) and return a picklable
   :class:`WriterCommitMessage` naming it;
 - only the DRIVER publishes: batch commit renames every staged file to
-  its final ``part-NNNNN.txt`` and drops a ``_SUCCESS`` manifest listing
-  files + row counts; abort deletes the staged files, so a failed job
-  leaves NO visible output (test-pinned).
+  its final ``part-NNNNN-<token>.txt`` (named for the job, so an append
+  adds files beside the earlier jobs' parts), an overwrite then deletes
+  the earlier parts, and a ``_SUCCESS`` manifest lists every part the
+  root holds + its row count; abort deletes the staged files, so a
+  failed job — an overwrite included — leaves the earlier output as it
+  was and adds NO visible output (test-pinned).
 - the STREAMING writer keys publication by ``batchId``
   (``batch=<id>/part-*``) and REPLACES the whole batch directory on
   replay via an atomic rename — the same batch-id-keyed idempotent
@@ -71,26 +74,50 @@ def _write_partition(path: str, token: str, iterator) -> SpoolCommit:
     return SpoolCommit(staged=staged, n_rows=n)
 
 
+def _manifest(path: str) -> dict[str, int]:
+    """Row count per part file from ``path``'s ``_SUCCESS`` manifest
+    (empty when no job has committed there)."""
+    try:
+        with open(os.path.join(path, "_SUCCESS")) as f:
+            rows = dict(line.rstrip("\n").split("\t") for line in f)
+    except FileNotFoundError:
+        return {}
+    rows.pop("total", None)
+    return {name: int(n) for name, n in rows.items()}
+
+
 class LineSpoolBatchWriter(DataSourceWriter):
-    def __init__(self, options):
+    def __init__(self, options, overwrite: bool):
         self.path = options["path"]
+        self.overwrite = overwrite
         self.token = uuid.uuid4().hex
 
     def write(self, iterator) -> SpoolCommit:
         return _write_partition(self.path, self.token, iterator)
 
     def commit(self, messages) -> None:
-        total = 0
-        lines = []
+        published = {}
         for i, m in enumerate(messages):
             if m is None:
                 continue
-            final = os.path.join(self.path, f"part-{i:05d}.txt")
-            os.replace(m.staged, final)
-            total += m.n_rows
-            lines.append(f"part-{i:05d}.txt\t{m.n_rows}")
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            f.write("\n".join(lines + [f"total\t{total}"]) + "\n")
+            name = f"part-{i:05d}-{self.token}.txt"
+            os.replace(m.staged, os.path.join(self.path, name))
+            published[name] = m.n_rows
+        if self.overwrite:
+            # only now that the new parts are published: an overwrite
+            # that fails before this point leaves the old output whole
+            held = {}
+            for p in os.listdir(self.path):
+                if p.startswith("part-") and p not in published:
+                    os.remove(os.path.join(self.path, p))
+        else:
+            held = _manifest(self.path)
+        held.update(published)
+        lines = [f"{name}\t{n}" for name, n in sorted(held.items())]
+        tmp = os.path.join(self.path, "_SUCCESS.tmp")
+        with open(tmp, "w") as f:
+            f.write("\n".join(lines + [f"total\t{sum(held.values())}"]) + "\n")
+        os.replace(tmp, os.path.join(self.path, "_SUCCESS"))
         # Scoped to OUR token subtree only: sweeps this job's failed-attempt
         # leftovers without touching a concurrent writer's staging.
         shutil.rmtree(_stage_dir(self.path, self.token), ignore_errors=True)
@@ -153,7 +180,7 @@ class LineSpoolDataSource(DataSource):
     def writer(self, schema, overwrite: bool) -> LineSpoolBatchWriter:
         if len(schema.fields) != 1:
             raise ValueError("linespool expects exactly one (string) column")
-        return LineSpoolBatchWriter(self.options)
+        return LineSpoolBatchWriter(self.options, overwrite)
 
     def streamWriter(self, schema, overwrite: bool) -> LineSpoolStreamWriter:
         if len(schema.fields) != 1:

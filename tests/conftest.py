@@ -13,8 +13,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from s4_spark.catalog import TABLES
 from s4_spark.session import get_spark
 
-SF_DIR = os.environ.get("S4_TEST_SF_DIR", "/root/testdata/sf0.01")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
+SF_DIR = os.path.join(os.path.dirname(SMOKE_SF_DIR), "sf0.01")
 
 
 @pytest.fixture(scope="session")

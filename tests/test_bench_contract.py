@@ -8,7 +8,9 @@ stay under 1,800 chars even with worst-case numeric widths, and must
 carry the fields the driver and BASELINE.md consumers rely on — live
 total, live per-query maps, idle_value, idle_git_sha.
 
-No SparkSession needed: bench.build_payload/emit_line are pure.
+No SparkSession needed: bench.build_payload/emit_line are pure. The
+last test runs ``bench/scale_sweep.py`` in the session fixture's
+session and pins the sweep's JSON line.
 """
 
 import json
@@ -164,3 +166,47 @@ def test_box_fingerprint_keys():
     assert '"box": box,' in src_bench
     assert src_bench.index("box = box_fingerprint()") < src_bench.index(
         'get_spark(app_name="s4_bench"')
+
+
+def test_scale_sweep_records_streams_only_for_entries_that_start_one(
+    spark, tmp_path
+):
+    """One sweep gives the timings and the streaming-state record: a
+    streaming entry gets a ``streams`` record with its state maxima and
+    batches, a batch entry is timed and gets none."""
+    import importlib.util
+
+    from tests.conftest import SMOKE_SF_DIR, assert_no_leaks, session_snapshot
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "bench",
+        "scale_sweep.py",
+    )
+    spec = importlib.util.spec_from_file_location("scale_sweep", path)
+    sweep = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sweep)
+
+    out = tmp_path / "sweep.json"
+    before = session_snapshot(spark)
+    sweep.main(
+        [
+            SMOKE_SF_DIR,
+            "--only",
+            "q095_streaming_dedup,q020_inner_join_tpch_q3",
+            "--out",
+            str(out),
+        ],
+        spark=spark,
+    )
+    assert_no_leaks(spark, "scale_sweep", before)
+    line = json.loads(out.read_text())
+    assert set(line["timings"]) == {
+        "q095_streaming_dedup",
+        "q020_inner_join_tpch_q3",
+    }
+    assert line["n"] == line["attempted"] == 2 and line["failed"] == []
+    assert set(line["streams"]) == {"q095_streaming_dedup"}
+    rec = line["streams"]["q095_streaming_dedup"]
+    assert rec["state_ops"], rec
+    assert rec["batches"] and all(b["stateOps"] for b in rec["batches"])

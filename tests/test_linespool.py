@@ -1,5 +1,6 @@
 """Commit-protocol guarantees of the linespool Python DataSource sink
-(q242/q243): abort leaves no visible output; streaming batch commit is
+(q242/q243): abort leaves no visible output; a batch append adds to the
+root and an overwrite replaces it; streaming batch commit is
 replay-idempotent."""
 
 from __future__ import annotations
@@ -9,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from s4_spark.sources.linespool import LineSpoolStreamWriter, SpoolCommit
+from s4_spark.sources.linespool import LineSpoolStreamWriter, SpoolCommit, _manifest
 
 
 def test_batch_abort_leaves_no_visible_output(spark, tmp_path):
@@ -27,6 +28,56 @@ def test_batch_abort_leaves_no_visible_output(spark, tmp_path):
         df.write.format("linespool").option("path", out).mode("append").save()
     visible = [p for p in os.listdir(out) if not p.startswith(".")]
     assert visible == [], visible
+
+
+def _spool_write(spark, out, values, mode, partitions=1):
+    df = spark.sql(
+        "SELECT * FROM VALUES " + ", ".join(f"('{v}')" for v in values) + " AS t(value)"
+    ).repartition(partitions)
+    df.write.format("linespool").option("path", out).mode(mode).save()
+
+
+def _spool_read(spark, out):
+    return sorted(r.value for r in spark.read.text(out).collect())
+
+
+def test_batch_append_adds_to_the_earlier_output(spark, tmp_path):
+    """A second append lands beside the first job's parts instead of
+    renaming over them, and the manifest lists both jobs' parts."""
+    import s4_spark.sources as sources
+
+    sources.register(spark)
+    out = str(tmp_path / "appended")
+    os.makedirs(out)
+    _spool_write(spark, out, ["a", "b"], "append")
+    _spool_write(spark, out, ["c"], "append")
+    assert _spool_read(spark, out) == ["a", "b", "c"]
+    parts = sorted(p for p in os.listdir(out) if p.startswith("part-"))
+    assert sorted(_manifest(out)) == parts and len(parts) == 2
+
+
+def test_batch_overwrite_replaces_the_earlier_output_once_committed(
+    spark, tmp_path
+):
+    """An overwrite that fails leaves the earlier output as it was; one
+    that commits leaves only its own rows, and the manifest lists only
+    its parts."""
+    import s4_spark.sources as sources
+
+    sources.register(spark)
+    out = str(tmp_path / "overwritten")
+    os.makedirs(out)
+    _spool_write(spark, out, ["x", "y"], "append", partitions=2)
+    poison = F.udf(lambda v: (_ for _ in ()).throw(RuntimeError("poison")), "string")
+    with pytest.raises(Exception):
+        spark.range(1).select(poison("id").alias("value")).write.format(
+            "linespool"
+        ).option("path", out).mode("overwrite").save()
+    assert _spool_read(spark, out) == ["x", "y"]
+    _spool_write(spark, out, ["z"], "overwrite")
+    assert _spool_read(spark, out) == ["z"]
+    parts = sorted(p for p in os.listdir(out) if p.startswith("part-"))
+    assert sorted(_manifest(out)) == parts and len(parts) == 1
 
 
 def test_stream_commit_is_replay_idempotent(tmp_path):

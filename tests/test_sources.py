@@ -17,6 +17,7 @@ import pytest
 import s4_spark.sources as sources
 from s4_spark.sources import chunk_spool, unix_socket
 from s4_spark.sources.unix_socket import _frame, _SpoolingStreamReader
+from s4_spark.streaming import rigs
 
 
 def serve_lines(sock_path: str, payload: bytes, accept_n: int = 1) -> threading.Thread:
@@ -564,14 +565,11 @@ def test_chunk_spool_acks_on_next_run_exactly_once(spark, tmp_path):
 
     def run():
         df = spark.readStream.format("chunkspool").option("path", spool).load()
-        q = (
+        rigs.drain(
             df.writeStream.format("parquet")
             .option("path", out)
-            .trigger(availableNow=True)
             .option("checkpointLocation", ckpt)
-            .start()
         )
-        q.awaitTermination()
 
     run()
     assert sorted(
@@ -636,19 +634,14 @@ def test_chunk_spool_short_chunk_fails_the_batch_and_commits_nothing(
     write_chunk(spool, 0, ["a", "b"])
     with open(os.path.join(spool, chunk_name(2, 5)), "w") as f:
         f.write("c\nd\n")  # named for 3 records, holds 2
-    q = (
-        spark.readStream.format("chunkspool").option("path", spool).load()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        with pytest.raises(Exception, match="missing or truncated"):
-            q.awaitTermination()
-    finally:
-        q.stop()
+    with pytest.raises(Exception, match="missing or truncated"):
+        rigs.drain(
+            spark.readStream.format("chunkspool").option("path", spool).load()
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+        )
+    assert spark.streams.active == []
     commits = os.path.join(ckpt, "commits")
     assert not os.path.isdir(commits) or not os.listdir(commits)
     assert not any(f.endswith(".parquet") for _, _, fs in os.walk(out) for f in fs)

@@ -476,42 +476,31 @@ def test_q234_funnel_state_survives_multi_batch(spark, tmp_path):
     emits one row per user per batch. Force 3 micro-batches
     (maxFilesPerTrigger=1 over 3 time-ordered files) and assert the
     aggregated funnel equals the single-batch result."""
-    import os
-
     import pandas as pd
+    from pyspark.sql import Window
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from s4_spark.catalog import table
-    from s4_spark.streaming.rigs import with_instant_ts
+    from s4_spark.streaming.rigs import drain_to_memory, stage_file, with_instant_ts
 
     # time-ordered thirds so cross-batch arrival respects event order
     ev = table(spark, SF_DIR, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
-    n = ev.count()
-    ordered = ev.orderBy("ts", "event_id").collect()
+    third = (ev.count() + 2) // 3
+    rank = F.row_number().over(Window.orderBy("ts", "event_id")) - 1
+    ranked = ev.withColumn("_third", F.floor(rank / third))
     landing = str(tmp_path / "landing")
     os.makedirs(landing)
-    third = (n + 2) // 3
     for i in range(3):
-        rows = ordered[i * third : (i + 1) * third]
-        spark.createDataFrame(rows, ev.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"stage{i}"))
-        part = next(
-            p
-            for p in os.listdir(str(tmp_path / f"stage{i}"))
-            if p.startswith("part-") and p.endswith(".parquet")
+        # FileStreamSource orders files by modification time, which can
+        # TIE on coarse-mtime filesystems: pin strictly increasing mtimes
+        stage_file(
+            ranked.filter(F.col("_third") == i).drop("_third"),
+            landing,
+            f"{i:03d}.parquet",
+            1_000_000 + i,
         )
-        os.rename(
-            str(tmp_path / f"stage{i}" / part),
-            os.path.join(landing, f"{i:03d}.parquet"),
-        )
-        # FileStreamSource orders files by modification time; the rename
-        # preserves the stage files' mtimes, which can TIE on coarse-mtime
-        # filesystems and process out of order — pin strictly increasing
-        # mtimes explicitly (round-5 advice item)
-        os.utime(os.path.join(landing, f"{i:03d}.parquet"), (1_000_000 + i, 1_000_000 + i))
 
     DEADLINE_US = 48 * 3600 * 1_000_000
 
@@ -555,17 +544,8 @@ def test_q234_funnel_state_survives_multi_batch(spark, tmp_path):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = "q234_multibatch_test"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    snap = spark.table(name)
+    snap, progress = drain_to_memory(out, "update", "q234multi")
+    assert sum(p["numInputRows"] > 0 for p in progress) == 3
     # update mode over 3 batches: multiple rows per user; write-once
     # slots make max() the final state
     assert snap.count() > snap.select("user_id").distinct().count(), (
@@ -780,18 +760,16 @@ def _q273_companion_run(spark, purchase_bound: str, tag: str):
     """Drive q273's union-of-watermarked-streams shape live with a
     parameterized purchase bound; return (emitted window starts,
     final global watermark string from query progress)."""
-    import datetime as dt
-
     from s4_spark.streaming.rigs import replay
 
-    hours = [0, 1, 2, 3]
-    mk = lambda h: dt.datetime(2024, 1, 1, h, 30)
-    clicks = spark.createDataFrame(
-        [("click", mk(h)) for h in hours], "etype string, ts timestamp"
-    )
-    purch = spark.createDataFrame(
-        [("purchase", mk(h)) for h in hours], "etype string, ts timestamp"
-    )
+    def rows(etype):  # one row at hh:30 for hh in 00..03
+        return spark.sql(
+            "SELECT * FROM VALUES "
+            + ", ".join(f"('{etype}', TIMESTAMP '2024-01-01 0{h}:30:00')" for h in range(4))
+            + " AS t(etype, ts)"
+        )
+
+    clicks, purch = rows("click"), rows("purchase")
 
     def build(cs, ps):
         u = cs.withWatermark("ts", "1 minute").unionByName(
@@ -943,15 +921,18 @@ def test_replay_ticks_each_phase_and_drops_rows_late_against_it(spark):
     followed by an empty tick batch, and a phase-2 row older than the
     watermark phase 1 set is dropped (q094's oracle is the end-to-end
     guard of the same boundary)."""
-    import datetime as dt
-
     from s4_spark.streaming.rigs import replay
 
-    mk = lambda m: dt.datetime(2024, 1, 1, 0, m)
-    schema = "id long, ts timestamp"
-    p1 = spark.createDataFrame([(1, mk(0)), (2, mk(20)), (3, mk(40))], schema)
+    def rows(*id_minute):  # (id, minute past 2024-01-01 00:00)
+        return spark.sql(
+            "SELECT * FROM VALUES "
+            + ", ".join(f"({i}L, TIMESTAMP '2024-01-01 00:{m:02d}:00')" for i, m in id_minute)
+            + " AS t(id, ts)"
+        )
+
+    p1 = rows((1, 0), (2, 20), (3, 40))
     # phase 1 sets the watermark to 00:30; row 4 at 00:05 is late
-    p2 = spark.createDataFrame([(4, mk(5)), (5, mk(55))], schema)
+    p2 = rows((4, 5), (5, 55))
 
     def build(stream):
         return (
