@@ -4,8 +4,9 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS], one JSON line on stdout.
 
 Three metric families:
-- relational/LLM headline queries: wall-clock seconds each (collect()d);
-  their sum is `value`, the 37-key continuity metric vs BASELINE.md;
+- relational/LLM headline queries: min-of-N wall-clock seconds each,
+  timed by bench/scale_sweep.py's `time_entries`; their sum is `value`,
+  the 37-key continuity metric vs BASELINE.md;
 - S4-parity streaming ingest (BASELINE.md §3.2): n line records replayed
   through the q090-shaped pipeline with availableNow, reported as
   `stream_ingest_1m` seconds (records/s derivable: n / sec);
@@ -17,17 +18,22 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
+# the per-entry timing loop lives in bench/scale_sweep.py (this file
+# shadows the bench/ directory as a package name, so import it by path)
+sys.path.insert(0, os.path.join(_HERE, "bench"))
 
-from s4_spark.queries import REGISTRY
+from scale_sweep import box_fingerprint, time_entries, warm_up
 from s4_spark.session import DEFAULT_CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = DEFAULT_CPUS
-STREAM_N = int(os.environ.get("S4_BENCH_STREAM_N", "1000000"))
+STREAM_N = 1_000_000
 
 # Headline set: one per family — scan, agg, join, asof, window, top-k,
 # setop, functions, UDF, dedup (exact + LSH), similarity, text, stream e2e.
@@ -118,46 +124,14 @@ def bench_stream_ingest(spark, n: int) -> float:
     return time.time() - t0
 
 
-def box_fingerprint() -> dict:
-    """Box condition at recording time (the shape bench/scale_sweep.py
-    established; that instrument now imports this). VERDICT r12 item 7:
-    the idle series
-    has been recorded under three different box conditions in three
-    rounds; stamping load / free-mem / page-cache / concurrent-runtime
-    counts into bench/idle-sf{sf}.json makes cross-round drift
-    attributable from the recorded JSON alone."""
-    fp: dict = {}
-    try:
-        fp["load1"] = round(os.getloadavg()[0], 1)
-    except OSError:
-        pass
-    try:
-        mem = {}
-        with open("/proc/meminfo") as f:
-            for ln in f:
-                k, v = ln.split(":", 1)
-                if k in ("MemFree", "Cached"):
-                    mem[k] = int(v.strip().split()[0]) // 1024
-        fp["mem_free_mb"] = mem.get("MemFree")
-        fp["page_cache_mb"] = mem.get("Cached")
-    except OSError:
-        pass
-    try:
-        me = os.getpid()
-        n = 0
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit() or int(pid) == me:
-                continue
-            try:
-                with open(f"/proc/{pid}/comm") as f:
-                    if f.read().strip().startswith(("python", "java")):
-                        n += 1
-            except OSError:
-                pass
-        fp["other_python_java_procs"] = n
-    except OSError:
-        pass
-    return fp
+def env_runs() -> int:
+    """``S4_BENCH_RUNS`` (a positive int, default 2): the per-entry
+    min-of-N. Single-shot numbers at this scale carry 10-20% load noise
+    plus first-run codegen; the min is the stable statistic."""
+    raw = os.environ.get("S4_BENCH_RUNS", "2")
+    if not re.fullmatch(r"[1-9]\d*", raw.strip()):
+        raise ValueError(f"S4_BENCH_RUNS must be a positive integer, got {raw!r}")
+    return int(raw)
 
 
 def build_payload(
@@ -239,74 +213,38 @@ def emit_line(payload: dict) -> str:
 
 
 def main() -> None:
+    runs = env_runs()
     # Fingerprint BEFORE the session spins up: captured at write time it
     # would measure the bench's own 32-thread JVM + python workers
     # (observed: load1 3.1, 17 runtime procs on an otherwise idle box),
     # not the box condition the series was recorded under.
     box = box_fingerprint()
     spark = get_spark(app_name="s4_bench", cpus=CPUS)
-    # Warm up JVM / codegen so query 1 isn't charged for session startup.
-    # A bare count() is NOT enough: with parquet.aggregatePushdown on it
-    # is answered from row-group metadata, so the vectorized parquet
-    # reader, WholeStageCodegen and the noop v2 write path all stay cold
-    # and their first JIT/classload lands on the first timed query —
-    # measured at CPUS=8 (fewer C2 compiler threads) as q001 2.94 s
-    # min-of-2 vs 0.63 s steady-state, a 4.6x phantom "scaling" artifact
-    # on the lower-core PERF run (r13 opt session; guide §1.4).
-    warm = spark.read.parquet(os.path.join(SF_DIR, "region.parquet"))
-    warm.count()
-    warm.write.mode("overwrite").format("noop").save()
+    warm_up(spark, SF_DIR)
 
-    # min of N runs: single-shot numbers at this scale carry 10-20%
-    # machine-load noise plus first-run codegen compilation; the min is
-    # the stable, comparable statistic for a regression bound.
-    runs = int(os.environ.get("S4_BENCH_RUNS", "2"))
+    head, _, head_failed, head_flaky = time_entries(spark, HEADLINE, SF_DIR, runs)
+    stream_s = bench_stream_ingest(spark, STREAM_N)
+    ext, _, ext_failed, ext_flaky = time_entries(spark, EXTENDED, SF_DIR, runs)
+    bad = head_failed + head_flaky + ext_failed + ext_flaky
+    if bad:
+        # a partial line would read as a (fast) complete run
+        print(f"bench: failed or flaky entries: {', '.join(bad)}", file=sys.stderr)
+        sys.exit(1)
 
-    def time_set(names: list[str]) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for name in names:
-            fn = REGISTRY[name].fn
-            best = float("inf")
-            for _ in range(runs):
-                spark.catalog.clearCache()
-                t0 = time.time()
-                # Engine-side reduction (VERDICT r7 item 4): the noop v2
-                # sink executes the FULL plan on the executors and
-                # discards rows there, so the timing measures the plan,
-                # not single-threaded driver deserialization of the
-                # result set — at x10 the old collect() charged q050
-                # ~23 s of driver IO for a 4.5M-row result against
-                # ~3.5 s of actual compute, poisoning decade ratios.
-                # The correctness/oracle path still collects; only the
-                # bench measurement changed.
-                fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-                best = min(best, time.time() - t0)
-            out[name] = round(best, 3)
-        return out
-
-    results = time_set(HEADLINE)
-    results["stream_ingest_1m"] = round(bench_stream_ingest(spark, STREAM_N), 3)
+    results = {n: round(s, 3) for n, s in head.items()}
+    results["stream_ingest_1m"] = round(stream_s, 3)
     total = round(sum(results.values()), 3)
-
-    extended = time_set(EXTENDED)
+    extended = {n: round(s, 3) for n, s in ext.items()}
 
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
 
-    # Idle-series handoff (VERDICT r10 item 7): the per-round driver runs
-    # this script UNDER DRIVER LOAD, and r10 showed that load noise
-    # (+17% total, every >1.15x per-query delta) dominates cross-round
-    # triage. The builder records an idle min-of-3 at round close via
-    # S4_BENCH_WRITE_IDLE=1; every subsequent run surfaces that recorded
-    # series' headline (`idle_value`/`idle_git_sha`) as the PRIMARY
-    # regression-triage number, keeping the live numbers as the
-    # load-sensitive secondary. The full idle per-query series stays in
-    # bench/idle-sf{sf}.json — embedding it whole made the stdout line
-    # ~4 KB and overflowed the driver's 2,000-char tail capture
-    # (BENCH_r11 `parsed: null`, VERDICT r11 item 1), so the stdout line
-    # carries only the two idle scalars and is length-tested < 1,800.
-    idle_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench", f"idle-sf{sf}.json"
-    )
+    # Idle series: a run under load (+17% total, every >1.15x per-query
+    # delta in r10) is triaged against an idle min-of-3 recorded with
+    # S4_BENCH_WRITE_IDLE=1. The full series stays in
+    # bench/idle-sf{sf}.json; the stdout line carries only its two
+    # scalars (the whole series once made it ~4 KB, past the driver's
+    # 2,000-char tail capture), and is length-tested < 1,800.
+    idle_path = os.path.join(_HERE, "bench", f"idle-sf{sf}.json")
     if os.environ.get("S4_BENCH_WRITE_IDLE"):
         import subprocess
 
@@ -314,16 +252,13 @@ def main() -> None:
             sha = subprocess.run(
                 ["git", "rev-parse", "--short", "HEAD"],
                 capture_output=True, text=True,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
+                cwd=_HERE,
             ).stdout.strip()
         except OSError:
             sha = "unknown"
-        # Recording audit trail (ADVICE r13 item 2): EVERY idle-write
-        # invocation appends its full per-query series here, so the
-        # keep/discard decision of the recording protocol (discard a
-        # recording iff some query runs >2x its value in the majority of
-        # sibling recordings — a host stall, not a plan property) is
-        # reapplicable from the repo alone. The kept recording in
+        # Audit trail: EVERY idle-write invocation appends its series
+        # here, so the keep/discard rule (discard_criterion below) can be
+        # reapplied from the repo alone; the kept recording in
         # bench/idle-sf{sf}.json is always one unmodified invocation.
         rec_path = idle_path.replace(".json", "-recordings.jsonl")
         with open(rec_path, "a") as f:

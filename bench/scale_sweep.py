@@ -9,8 +9,9 @@ Usage: python bench/scale_sweep.py [sf_dir] [--out results.json]
 
 Runs EVERY registry entry (not just the bench subsets) against
 ``sf_dir`` (default /tmp/s4_scaleprobe/sf1, the x10 decade built by
-``bench/make_scaled_sf.py``) with the same engine-side noop-sink
-reduction bench.py uses, and prints one JSON line:
+``bench/make_scaled_sf.py``) through :func:`time_entries` — the one
+per-entry timing loop, which bench.py times its keys through too — and
+prints one JSON line:
 
     {"sf_dir": ..., "n": 255, "attempted": 255, "failed": [...],
      "total_sec": ..., "outliers": [...], "timings": {"q...": sec, ...},
@@ -47,11 +48,9 @@ the heap holds (q241 ran out of heap); a cluster bounds that share by
 executor width, and this is the local analog.
 
 Box-state protocol: identical code swept 646 s and 822 s in consecutive
-rounds — environment spread (disk cache, background load). ``--runs 2``
-takes a per-entry min-of-N (the round-close gate setting), and every
-output carries a ``box`` fingerprint (1-min load average, free/cached
-memory, concurrent python/java process count); SCALE.md rows quote its
-load figure alongside the totals.
+rounds (disk cache, background load). ``--runs 2`` takes a per-entry
+min-of-N (the round-close gate setting), and every output carries a
+:func:`box_fingerprint`; SCALE.md rows quote its load figure.
 """
 
 from __future__ import annotations
@@ -141,78 +140,84 @@ class _StreamCapture(StreamingQueryListener):
             return settled, batches
 
 
-def main(argv: list[str] | None = None, spark=None) -> None:
-    """Run the sweep; ``spark`` is the session to run it in (the command
-    line builds one, sized by ``get_spark``'s defaults)."""
-    ap = argparse.ArgumentParser()
-    ap.add_argument("sf_dir", nargs="?", default="/tmp/s4_scaleprobe/sf1")
-    ap.add_argument("--out", default=None)
-    ap.add_argument("--only", default=None, help="comma-separated entry names")
-    ap.add_argument("--outlier-sec", type=float, default=120.0)
-    ap.add_argument(
-        "--runs",
-        type=int,
-        default=1,
-        help="per-entry min-of-N (use 2 for the round-close gate; see "
-        "the box-state protocol in the module docstring)",
+def box_fingerprint() -> dict:
+    """Box condition at call time: 1-min load average, free and cached
+    memory (MB) and the count of other python/java processes. bench.py
+    stamps it into the idle recordings and this sweep into its line, so
+    cross-round drift is attributable from the recorded JSON alone."""
+    fp: dict = {}
+    try:
+        fp["load1"] = round(os.getloadavg()[0], 1)
+    except OSError:
+        pass
+    try:
+        mem = {}
+        with open("/proc/meminfo") as f:
+            for ln in f:
+                k, v = ln.split(":", 1)
+                if k in ("MemFree", "Cached"):
+                    mem[k] = int(v.strip().split()[0]) // 1024
+        fp["mem_free_mb"] = mem.get("MemFree")
+        fp["page_cache_mb"] = mem.get("Cached")
+    except OSError:
+        pass
+    try:
+        me = os.getpid()
+        n = 0
+        for pid in os.listdir("/proc"):
+            if not pid.isdigit() or int(pid) == me:
+                continue
+            try:
+                with open(f"/proc/{pid}/comm") as f:
+                    if f.read().strip().startswith(("python", "java")):
+                        n += 1
+            except OSError:
+                pass
+        fp["other_python_java_procs"] = n
+    except OSError:
+        pass
+    return fp
+
+
+def _du(path: str) -> int:
+    """Bytes under ``path``: a file, or a table directory's files."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(r, f)) for r, _, fs in os.walk(path) for f in fs
     )
-    ap.add_argument(
-        "--shuffle-partitions",
-        type=int,
-        default=None,
-        help="spark.sql.shuffle.partitions for the session (raise it at "
-        "x1000 for the stateful rigs; see the module docstring)",
-    )
-    args = ap.parse_args(argv)
 
-    if spark is None:
-        extra = (
-            {"spark.sql.shuffle.partitions": str(args.shuffle_partitions)}
-            if args.shuffle_partitions
-            else None
-        )
-        spark = get_spark(app_name="s4_scale_sweep", extra_conf=extra)
-    # JVM/codegen warm-up on the SMALLEST table the probe dir has —
-    # subset probe dirs (e.g. a documents-only ×1000 build) are a
-    # legitimate --only target and don't carry the full SF layout, and
-    # alphabetical-first on a full dir is customer.parquet, whose full
-    # count at ×100/×1000 burns minutes before any timing starts
-    # (ADVICE r9); warm-up only needs a JVM+codegen spin-up, so size is
-    # the right selector.
-    def _du(path: str) -> int:
-        if os.path.isfile(path):
-            return os.path.getsize(path)
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(path)
-            for f in fs
-        )
 
-    warm = [
-        p for p in os.listdir(args.sf_dir) if p.endswith(".parquet")
-    ]
-    if not warm:
-        sys.exit(f"no *.parquet tables under {args.sf_dir}")
-    smallest = min(warm, key=lambda p: _du(os.path.join(args.sf_dir, p)))
-    spark.read.parquet(os.path.join(args.sf_dir, smallest)).count()
+def warm_up(spark, sf_dir: str) -> None:
+    """JVM/codegen warm-up on the SMALLEST table under ``sf_dir``, so the
+    first timed entry is not charged for it. Size is the selector because
+    subset probe dirs (a documents-only x1000 build) carry no ``region``,
+    and a full count of the alphabetically first table (customer) at
+    x100/x1000 burns minutes. A bare ``count()`` is not enough: with
+    parquet aggregatePushdown it is answered from row-group metadata, so
+    the vectorized reader, WholeStageCodegen and the noop v2 write path
+    stay cold (q001 once timed 2.94 s min-of-2 against 0.63 s steady
+    state at 8 cpus); the noop write runs them."""
+    tables = [p for p in os.listdir(sf_dir) if p.endswith(".parquet")]
+    if not tables:
+        sys.exit(f"no *.parquet tables under {sf_dir}")
+    smallest = min(tables, key=lambda p: _du(os.path.join(sf_dir, p)))
+    warm = spark.read.parquet(os.path.join(sf_dir, smallest))
+    warm.count()
+    warm.write.mode("overwrite").format("noop").save()
 
-    names = list(REGISTRY)
-    if args.only:
-        keep = set(args.only.split(","))
-        unknown = keep - set(names)
-        if unknown:
-            # a typo'd/renamed --only entry must not yield a vacuous
-            # green gate line — this instrument exists to catch
-            # regressions, so unknown names are an error
-            sys.exit(f"--only names not in the registry: {sorted(unknown)}")
-        names = [n for n in names if n in keep]
 
-    # box fingerprint shared with the idle-series recorder (bench.py at
-    # the repo root wins the `bench` name over this namespace dir)
-    from bench import box_fingerprint
-
-    box = box_fingerprint()
-
+def time_entries(
+    spark, names: list[str], sf_dir: str, runs: int
+) -> tuple[dict[str, float], dict[str, dict], list[str], list[str]]:
+    """Time each registry entry in ``names`` against ``sf_dir``: min of
+    ``runs`` runs of ``clearCache()`` then the entry's plan executed to
+    the noop sink (engine-side, so the time is the plan's, not driver
+    deserialization of the result). Returns ``(timings, streams, failed,
+    flaky)``: unrounded seconds per entry with at least one successful
+    run, the ``streams`` record of every timed entry that started a
+    query, the entries whose every run failed, and the entries that kept
+    a timing but had a failed run. Progress goes to stderr."""
     timings: dict[str, float] = {}
     streams: dict[str, dict] = {}
     failed: list[str] = []
@@ -221,18 +226,14 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     spark.streams.addListener(cap)
     try:
         for name in names:
-            # a failure must not discard an earlier successful timing —
-            # the entry is FAILED only if every run failed; an entry with
-            # both a success and a failure keeps its min-of-N sample and
-            # is flagged in `flaky` for follow-up.
             best = None
             run_failures = 0
-            for _ in range(max(1, args.runs)):
+            for _ in range(runs):
                 spark.catalog.clearCache()
                 started = cap.started
                 t0 = time.time()
                 try:
-                    REGISTRY[name].fn(spark, args.sf_dir).write.mode(
+                    REGISTRY[name].fn(spark, sf_dir).write.mode(
                         "overwrite"
                     ).format("noop").save()
                     sec = time.time() - t0
@@ -258,20 +259,71 @@ def main(argv: list[str] | None = None, spark=None) -> None:
                             "state_ops": _state_ops(batches),
                             "batches": batches,
                         }
-            if best is not None:
-                timings[name] = round(best, 2)
-                if run_failures:
-                    flaky.append(name)
-                print(f"{name}: {timings[name]}s", file=sys.stderr)
-            else:
+            if best is None:
                 failed.append(name)
-                print(f"FAIL {name} (all {max(1, args.runs)} runs)", file=sys.stderr)
+                print(f"FAIL {name} (all {runs} runs)", file=sys.stderr)
+                continue
+            timings[name] = best
+            if run_failures:
+                flaky.append(name)
+            print(f"{name}: {round(best, 2)}s", file=sys.stderr)
     finally:
         spark.streams.removeListener(cap)
+    return timings, streams, failed, flaky
+
+
+def main(argv: list[str] | None = None, spark=None) -> None:
+    """Run the sweep; ``spark`` is the session to run it in (the command
+    line builds one, sized by ``get_spark``'s defaults)."""
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir", nargs="?", default="/tmp/s4_scaleprobe/sf1")
+    ap.add_argument("--out", default=None)
+    ap.add_argument("--only", default=None, help="comma-separated entry names")
+    ap.add_argument("--outlier-sec", type=float, default=120.0)
+    ap.add_argument(
+        "--runs",
+        type=int,
+        default=1,
+        help="per-entry min-of-N (use 2 for the round-close gate; see "
+        "the box-state protocol in the module docstring)",
+    )
+    ap.add_argument(
+        "--shuffle-partitions",
+        type=int,
+        default=None,
+        help="spark.sql.shuffle.partitions for the session (raise it at "
+        "x1000 for the stateful rigs; see the module docstring)",
+    )
+    args = ap.parse_args(argv)
+    runs = max(1, args.runs)
+
+    if spark is None:
+        extra = (
+            {"spark.sql.shuffle.partitions": str(args.shuffle_partitions)}
+            if args.shuffle_partitions
+            else None
+        )
+        spark = get_spark(app_name="s4_scale_sweep", extra_conf=extra)
+    warm_up(spark, args.sf_dir)
+
+    names = list(REGISTRY)
+    if args.only:
+        keep = set(args.only.split(","))
+        unknown = keep - set(names)
+        if unknown:
+            # a typo'd/renamed --only entry must not yield a vacuous
+            # green gate line — this instrument exists to catch
+            # regressions, so unknown names are an error
+            sys.exit(f"--only names not in the registry: {sorted(unknown)}")
+        names = [n for n in names if n in keep]
+
+    box = box_fingerprint()
+    secs, streams, failed, flaky = time_entries(spark, names, args.sf_dir, runs)
+    timings = {n: round(s, 2) for n, s in secs.items()}
 
     out = {
         "sf_dir": args.sf_dir,
-        "runs": max(1, args.runs),
+        "runs": runs,
         "box": box,
         # n counts SUCCESSFUL timings; failures are enumerated (and
         # excluded from total_sec/outliers), so n + len(failed) =

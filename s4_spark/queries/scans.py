@@ -294,17 +294,14 @@ def q107(spark, sf_dir):
     the per-language counts match the table exactly. The driver-side
     collect feeds the MOCK PRODUCER only — the consuming path is the
     registered data source."""
-    import tempfile as _tf
-
     import s4_spark.sources as sources
     from s4_spark.sources.mock import serve_payload_forever
 
     sources.register(spark)
     langs = [r[0] for r in t(spark, sf_dir, "documents").select("lang").collect()]
     payload = "".join(v + "\n" for v in langs).encode()
-    sock = os.path.join(
-        _tf.gettempdir(), f"s4_q107_{os.path.basename(sf_dir)}_{os.getpid()}.sock"
-    )
+    # short name: AF_UNIX paths are limited to 107 bytes
+    sock = os.path.join(scratch_root(), f"q107_{os.path.basename(sf_dir)}.sock")
     serve_payload_forever(sock, payload)
     df = spark.read.format("s4_unixline").option("path", sock).load()
     return (
@@ -328,19 +325,18 @@ def q108(spark, sf_dir):
     slices of documents.lang; every line from every connection lands in
     the one stream, so per-language counts equal the table exactly —
     multi-producer fan-in with zero loss across arbitrary interleaving."""
-    import socket as _socket
-    import tempfile as _tf
     import threading as _threading
     import time as _time
 
     import s4_spark.sources as sources
+    from s4_spark.sources.mock import send_when_bound
     from s4_spark.streaming.rigs import _counter, running
 
     sources.register(spark)
     langs = [r[0] for r in t(spark, sf_dir, "documents").select("lang").collect()]
     slices = [langs[i::3] for i in range(3)]
-    run_id = f"{os.path.basename(sf_dir)}_{os.getpid()}_{next(_counter)}"
-    sock = os.path.join(_tf.gettempdir(), f"s4_q108_{run_id}.sock")
+    run_id = f"{os.path.basename(sf_dir)}_{next(_counter)}"
+    sock = os.path.join(scratch_root(), f"q108_{run_id}.sock")
     name = f"s4_q108_{run_id}".replace(".", "_")
     writer = (
         spark.readStream.format("s4_unixline")
@@ -354,24 +350,15 @@ def q108(spark, sf_dir):
         .trigger(processingTime="500 milliseconds")
     )
 
-    def push(sl):
-        payload = "".join(v + "\n" for v in sl).encode()
-        deadline = _time.time() + 20
-        while True:  # the server binds on the first micro-batch — retry
-            try:
-                c = _socket.socket(_socket.AF_UNIX, _socket.SOCK_STREAM)
-                c.connect(sock)
-                break
-            except OSError:
-                c.close()
-                if _time.time() > deadline:
-                    raise
-                _time.sleep(0.05)
-        c.sendall(payload)
-        c.close()
-
     with running(writer):
-        threads = [_threading.Thread(target=push, args=(s,)) for s in slices]
+        # the source binds on its first micro-batch
+        threads = [
+            _threading.Thread(
+                target=send_when_bound,
+                args=(sock, "".join(v + "\n" for v in sl).encode(), 20),
+            )
+            for sl in slices
+        ]
         for th in threads:
             th.start()
         for th in threads:

@@ -606,25 +606,23 @@ VENDOR_DIR = os.path.join(
 )
 
 
-def transform_with_state_available() -> bool:
+def _import_protobuf() -> None:
     """Spark 4's transformWithStateInPandas drives its state-server
     protocol over protobuf; without the ``protobuf`` package the Python
-    driver worker crashes at import. A real installation wins; when the
-    import fails we fall back to the vendored minimal runtime under
-    s4_spark/_vendor (round-5 verdict item 3 — declaring the dependency
-    in requirements.txt demonstrably did not make the container satisfy
-    it). The fallback also prepends the vendor dir to PYTHONPATH so a
-    JVM (and its Python worker daemon) launched AFTER this import
-    inherits it; for sessions that are already running, _q174 ships the
-    same files to workers via addPyFile."""
+    driver worker crashes at import. A real installation wins; otherwise
+    the vendored minimal runtime under s4_spark/_vendor goes first on
+    sys.path (declaring the dependency in requirements.txt demonstrably
+    did not make the container satisfy it), and on PYTHONPATH so a JVM
+    (and its Python worker daemon) launched AFTER this import inherits
+    it; for sessions that are already running, the entries ship the same
+    files to workers via :func:`_ship_vendored_protobuf`. Raises
+    ImportError when neither imports."""
     try:
         import google.protobuf  # noqa: F401
 
-        return True
+        return
     except ImportError:
         pass
-    if not os.path.isdir(os.path.join(VENDOR_DIR, "google", "protobuf")):
-        return False
     if VENDOR_DIR not in sys.path:
         sys.path.insert(0, VENDOR_DIR)
     env_path = os.environ.get("PYTHONPATH", "")
@@ -632,12 +630,10 @@ def transform_with_state_available() -> bool:
         os.environ["PYTHONPATH"] = (
             VENDOR_DIR + (os.pathsep + env_path if env_path else "")
         )
-    try:
-        import google.protobuf  # noqa: F401
+    import google.protobuf  # noqa: F401
 
-        return True
-    except ImportError:
-        return False
+
+_import_protobuf()
 
 
 def _ship_vendored_protobuf(spark) -> None:
@@ -675,7 +671,15 @@ def _ship_vendored_protobuf(spark) -> None:
         )
 
 
-def _q174(spark, sf_dir):
+@query(
+    "q174_transform_with_state",
+    oracle="""
+    SELECT user_id, max(value) AS running_max, count(*) AS n_seen
+    FROM events GROUP BY user_id ORDER BY user_id
+    """,
+    section="B9-streaming",
+)
+def q174(spark, sf_dir):
     """Arbitrary stateful op on Spark 4's transformWithStateInPandas —
     the successor API to q097's applyInPandasWithState: state lives in
     named handles (value/list/map state, timers, TTL) on the RocksDB
@@ -723,17 +727,6 @@ def _q174(spark, sf_dir):
     return run_to_memory(
         out, mode="update", tag="q174", conf=ROCKSDB_CONF
     ).orderBy("user_id")
-
-
-if transform_with_state_available():  # pragma: no cover - env-dependent
-    query(
-        "q174_transform_with_state",
-        oracle="""
-    SELECT user_id, max(value) AS running_max, count(*) AS n_seen
-    FROM events GROUP BY user_id ORDER BY user_id
-    """,
-        section="B9-streaming",
-    )(_q174)
 
 
 @query(
@@ -1157,7 +1150,24 @@ def q238(spark, sf_dir):
     ).orderBy("user_id")
 
 
-def _q240(spark, sf_dir):
+@query(
+    "q240_transform_with_list_state",
+    oracle="""
+    WITH ranked AS (
+      SELECT user_id, value,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY value DESC, event_id) AS rn
+      FROM events)
+    SELECT user_id,
+           max(CASE WHEN rn = 1 THEN value END) AS top1,
+           max(CASE WHEN rn = 2 THEN value END) AS top2,
+           max(CASE WHEN rn = 3 THEN value END) AS top3
+    FROM ranked WHERE rn <= 3
+    GROUP BY user_id ORDER BY user_id
+    """,
+    section="B9-streaming",
+)
+def q240(spark, sf_dir):
     """Per-user top-3 values maintained in transformWithState LIST state
     — the multi-row state handle q174's ValueState doesn't touch. Each
     micro-batch merges arriving (value, event_id) pairs into the stored
@@ -1226,27 +1236,39 @@ def _q240(spark, sf_dir):
     )
 
 
-if transform_with_state_available():  # pragma: no cover - env-dependent
-    query(
-        "q240_transform_with_list_state",
-        oracle="""
-    WITH ranked AS (
-      SELECT user_id, value,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY value DESC, event_id) AS rn
-      FROM events)
-    SELECT user_id,
-           max(CASE WHEN rn = 1 THEN value END) AS top1,
-           max(CASE WHEN rn = 2 THEN value END) AS top2,
-           max(CASE WHEN rn = 3 THEN value END) AS top3
-    FROM ranked WHERE rn <= 3
-    GROUP BY user_id ORDER BY user_id
+@query(
+    "q241_transform_with_map_state_timers",
+    oracle="""
+    WITH g AS (
+      SELECT user_id, ts, event_id, event_type,
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
+             THEN 1 ELSE 0 END AS ns
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+    s AS (
+      SELECT user_id, ts, event_type,
+             sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                           ROWS UNBOUNDED PRECEDING) AS sid
+      FROM g),
+    agg AS (
+      SELECT user_id, sid, epoch_us(min(ts)) AS session_start_us,
+             count(*) AS n_events,
+             count(DISTINCT event_type) AS n_types
+      FROM s GROUP BY user_id, sid),
+    top AS (
+      SELECT user_id, sid, event_type AS top_type,
+             row_number() OVER (PARTITION BY user_id, sid
+                                ORDER BY count(*) DESC, event_type) AS rn
+      FROM s GROUP BY user_id, sid, event_type
+      QUALIFY rn = 1)
+    SELECT a.user_id, a.session_start_us, a.n_events, a.n_types, t.top_type
+    FROM agg a JOIN top t USING (user_id, sid)
+    ORDER BY a.user_id, a.session_start_us
     """,
-        section="B9-streaming",
-    )(_q240)
-
-
-def _q241(spark, sf_dir):
+    section="B9-streaming",
+)
+def q241(spark, sf_dir):
     """Sessionization on transformWithState MAP state + EVENT-TIME
     TIMERS — the remaining cells of the state-handle matrix after
     q174 (ValueState) and q240 (ListState). Per user, the OPEN
@@ -1370,42 +1392,12 @@ def _q241(spark, sf_dir):
     return snap.filter(F.col("user_id") >= 0).orderBy("user_id", "session_start_us")
 
 
-if transform_with_state_available():  # pragma: no cover - env-dependent
-    query(
-        "q241_transform_with_map_state_timers",
-        oracle="""
-    WITH g AS (
-      SELECT user_id, ts, event_id, event_type,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-             THEN 1 ELSE 0 END AS ns
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    s AS (
-      SELECT user_id, ts, event_type,
-             sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sid
-      FROM g),
-    agg AS (
-      SELECT user_id, sid, epoch_us(min(ts)) AS session_start_us,
-             count(*) AS n_events,
-             count(DISTINCT event_type) AS n_types
-      FROM s GROUP BY user_id, sid),
-    top AS (
-      SELECT user_id, sid, event_type AS top_type,
-             row_number() OVER (PARTITION BY user_id, sid
-                                ORDER BY count(*) DESC, event_type) AS rn
-      FROM s GROUP BY user_id, sid, event_type
-      QUALIFY rn = 1)
-    SELECT a.user_id, a.session_start_us, a.n_events, a.n_types, t.top_type
-    FROM agg a JOIN top t USING (user_id, sid)
-    ORDER BY a.user_id, a.session_start_us
-    """,
-        section="B9-streaming",
-    )(_q241)
-
-
-def _q247(spark, sf_dir):
+@query(
+    "q247_transform_with_initial_state",
+    oracle=WINDOWED_FUNNEL_SQL,
+    section="B9-streaming",
+)
+def q247(spark, sf_dir):
     """Warm-start state migration (kappa backfill→live handoff): the
     funnel's per-user state is BATCH-COMPUTED over the first half of
     the event log (three chained min-aggregations — the q219 shape),
@@ -1532,14 +1524,6 @@ def _q247(spark, sf_dir):
     return _funnel_rollup(final)
 
 
-if transform_with_state_available():  # pragma: no cover - env-dependent
-    query(
-        "q247_transform_with_initial_state",
-        oracle=WINDOWED_FUNNEL_SQL,
-        section="B9-streaming",
-    )(_q247)
-
-
 @query(
     "q248_streaming_progress_metrics",
     oracle="""
@@ -1647,7 +1631,19 @@ def q251_checkpoint_dir(sf_dir: str) -> str:
     return os.path.join(scratch_root(), f"q251_ckpt_{os.path.basename(sf_dir)}")
 
 
-def _q252(spark, sf_dir):
+@query(
+    "q252_state_ttl_eviction",
+    oracle="""
+    SELECT 1 AS phase, user_id, count(*) AS n
+    FROM events WHERE event_id % 2 = 0 GROUP BY user_id
+    UNION ALL
+    SELECT 2 AS phase, user_id, count(*) AS n
+    FROM events WHERE event_id % 2 <> 0 GROUP BY user_id
+    ORDER BY phase, user_id
+    """,
+    section="B9-streaming",
+)
+def q252(spark, sf_dir):
     """State TTL on transformWithState: the per-user counter's
     ValueState is declared with ttlDurationMs=1000, run 1 counts the
     phase-1 events, the rig then WAITS past the TTL and feeds phase 2
@@ -1780,21 +1776,6 @@ def _q252(spark, sf_dir):
         F.lit(2).alias("phase"), "user_id", "n"
     )
     return p1.union(p2).orderBy("phase", "user_id")
-
-
-if transform_with_state_available():  # pragma: no cover - env-dependent
-    query(
-        "q252_state_ttl_eviction",
-        oracle="""
-    SELECT 1 AS phase, user_id, count(*) AS n
-    FROM events WHERE event_id % 2 = 0 GROUP BY user_id
-    UNION ALL
-    SELECT 2 AS phase, user_id, count(*) AS n
-    FROM events WHERE event_id % 2 <> 0 GROUP BY user_id
-    ORDER BY phase, user_id
-    """,
-        section="B9-streaming",
-    )(_q252)
 
 
 @query(

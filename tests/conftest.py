@@ -2,7 +2,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -21,6 +23,20 @@ SF_DIR = os.path.join(os.path.dirname(SMOKE_SF_DIR), "sf0.01")
 def spark():
     s = get_spark(app_name="s4_spark_tests", cpus=8)
     yield s
+
+
+@pytest.fixture()
+def sock_dir():
+    """A private directory for one test's socket paths. A fixed path in
+    the shared temp dir lets two concurrent runs unlink and rebind each
+    other's one-shot servers: the loser's reader is then refused, the
+    connect-mode source treats that as "no producer", and the stream
+    silently stays empty. mkdtemp keeps the path well under the 108-byte
+    unix socket limit that a deep pytest tmp_path can exceed, and the
+    directory is removed with everything in it when the test ends."""
+    d = tempfile.mkdtemp(prefix="s4_src_")
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

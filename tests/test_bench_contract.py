@@ -8,9 +8,9 @@ stay under 1,800 chars even with worst-case numeric widths, and must
 carry the fields the driver and BASELINE.md consumers rely on — live
 total, live per-query maps, idle_value, idle_git_sha.
 
-No SparkSession needed: bench.build_payload/emit_line are pure. The
-last test runs ``bench/scale_sweep.py`` in the session fixture's
-session and pins the sweep's JSON line.
+bench.build_payload/emit_line are pure and need no SparkSession. The
+last tests run ``bench.main()`` and ``bench/scale_sweep.py`` in the
+session fixture's session and pin their lines.
 """
 
 import json
@@ -156,11 +156,10 @@ def test_box_fingerprint_keys():
     assert {"load1", "mem_free_mb", "page_cache_mb",
             "other_python_java_procs"} <= set(fp)
     assert all(v is not None for v in fp.values()), fp
-    src = open(os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "bench", "scale_sweep.py")).read()
-    assert "from bench import box_fingerprint" in src
+    assert bench.box_fingerprint.__module__ == "scale_sweep"
     src_bench = open(os.path.join(os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))), "bench.py")).read()
+    assert "def box_fingerprint" not in src_bench
     # captured pre-session (box_fingerprint() before get_spark in main),
     # stamped into the idle write as "box"
     assert '"box": box,' in src_bench
@@ -210,3 +209,61 @@ def test_scale_sweep_records_streams_only_for_entries_that_start_one(
     rec = line["streams"]["q095_streaming_dedup"]
     assert rec["state_ops"], rec
     assert rec["batches"] and all(b["stateOps"] for b in rec["batches"])
+
+
+@pytest.mark.parametrize("raw", ["0", "-1", "two"])
+def test_bench_runs_must_be_a_positive_integer(raw, monkeypatch):
+    """S4_BENCH_RUNS=0 once skipped every run, so each key timed as inf
+    and the line carried ``Infinity`` (not JSON); it is refused before a
+    session starts, and the error names the variable."""
+    monkeypatch.setenv("S4_BENCH_RUNS", raw)
+
+    def no_session(**kw):
+        raise AssertionError("session started before S4_BENCH_RUNS was checked")
+
+    monkeypatch.setattr(bench, "get_spark", no_session)
+    with pytest.raises(ValueError, match="S4_BENCH_RUNS"):
+        bench.main()
+
+
+def test_main_emits_one_line_or_names_failures(spark, monkeypatch, capsys):
+    """bench.main() end to end at sf0.001 on one headline and one
+    extended key: stdout is one JSON line with value == sum(queries).
+    A failing entry makes it exit non-zero, name the entry on stderr
+    and print no line (a partial line would read as a fast run)."""
+    from s4_spark.queries import REGISTRY
+    from s4_spark.queries.registry import QueryDef
+    from tests.conftest import SMOKE_SF_DIR, assert_no_leaks, session_snapshot
+
+    monkeypatch.setattr(bench, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(bench, "SF_DIR", SMOKE_SF_DIR)
+    monkeypatch.setattr(bench, "HEADLINE", ["q001_parquet_scan"])
+    monkeypatch.setattr(bench, "EXTENDED", ["q257_approx_top_k_sketch"])
+    monkeypatch.setattr(bench, "STREAM_N", 3000)
+    monkeypatch.delenv("S4_BENCH_WRITE_IDLE", raising=False)
+    monkeypatch.setenv("S4_BENCH_RUNS", "1")
+    before = session_snapshot(spark)
+
+    bench.main()
+    out = capsys.readouterr().out.splitlines()
+    assert len(out) == 1, out
+    line = json.loads(out[0])
+    assert set(line["queries"]) == {"q001_parquet_scan", "stream_ingest_1m"}
+    assert set(line["queries_extended"]) == {"q257_approx_top_k_sketch"}
+    assert line["value"] == pytest.approx(sum(line["queries"].values()))
+    assert line["sf"] == 0.001 and line["env"]["stream_records"] == 3000
+
+    def boom(spark, sf_dir):
+        raise RuntimeError("boom")
+
+    monkeypatch.setitem(
+        REGISTRY, "q999_boom", QueryDef("q999_boom", boom, None, "test")
+    )
+    monkeypatch.setattr(bench, "HEADLINE", ["q001_parquet_scan", "q999_boom"])
+    with pytest.raises(SystemExit) as exit_:
+        bench.main()
+    assert exit_.value.code != 0
+    captured = capsys.readouterr()
+    assert captured.out == ""
+    assert "q999_boom" in captured.err.splitlines()[-1]
+    assert_no_leaks(spark, "bench.main", before)

@@ -1639,7 +1639,7 @@ def test_q120_dispatches_above_gate(spark, monkeypatch):
 
 
 def test_unix_socket_stream_batches_served_from_prefetch_cache(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, sock_dir
 ):
     """The socket source hands Spark the records its driver-side read()
     just spooled, and Spark ships them to the JVM from its prefetch
@@ -1649,12 +1649,11 @@ def test_unix_socket_stream_batches_served_from_prefetch_cache(
     carries records fails the live query. (A fresh query's batch 0 may
     be the empty range [0, 0), which Spark never prefetched.)"""
     import os as _os
-    import socket as _socket
-    import tempfile as _tf
     import time as _time
 
     import s4_spark.sources as sources
     from s4_spark.sources import unix_socket
+    from s4_spark.sources.mock import send_when_bound
     from s4_spark.streaming.rigs import running
 
     def no_replay(self, start, end):
@@ -1668,7 +1667,7 @@ def test_unix_socket_stream_batches_served_from_prefetch_cache(
         unix_socket._SpoolingStreamReader, "readBetweenOffsets", no_replay
     )
     sources.register(spark)
-    sock = _os.path.join(_tf.gettempdir(), f"s4_plan_cache_{_os.getpid()}.sock")
+    sock = _os.path.join(sock_dir, "plan_cache.sock")
     seen: list[int] = []
 
     def observe(df, _bid):
@@ -1687,19 +1686,10 @@ def test_unix_socket_stream_batches_served_from_prefetch_cache(
     )
     try:
         with running(writer) as q:
-            for part in range(3):
-                deadline = _time.time() + 20
-                while True:  # the server binds on the first read
-                    client = _socket.socket(_socket.AF_UNIX, _socket.SOCK_STREAM)
-                    try:
-                        client.connect(sock)
-                        break
-                    except OSError:
-                        client.close()
-                        assert _time.time() < deadline, "server never bound"
-                        _time.sleep(0.05)
-                client.sendall(b"".join(b"rec%d-%d\n" % (part, i) for i in range(10)))
-                client.close()
+            for part in range(3):  # the server binds on the first read
+                send_when_bound(
+                    sock, b"".join(b"rec%d-%d\n" % (part, i) for i in range(10)), 20
+                )
                 deadline = _time.time() + 30
                 while sum(seen) < 10 * (part + 1) and q.exception() is None:
                     assert _time.time() < deadline, seen

@@ -107,3 +107,23 @@ def test_reliable_cut_lineage_defaults_under_scratch_root(spark):
     finally:
         if not prev.isEmpty():
             set_dir(prev)
+
+
+def test_only_scratch_module_names_the_temp_dir():
+    """Every scratch path comes from s4_spark/scratch.py: a module that
+    builds one from the temp dir itself leaves files the dead-process
+    sweep never sees (q107/q108's sockets once outlived their runs)."""
+    import re
+
+    pkg = os.path.dirname(S.__file__)
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == S.__file__:
+                continue
+            with open(path) as f:
+                for n, line in enumerate(f, 1):
+                    if re.search(r"\b(gettempdir|mkdtemp)\b", line):
+                        offenders.append(f"{os.path.relpath(path, pkg)}:{n}")
+    assert not offenders, f"temp dir named outside scratch.py: {offenders}"

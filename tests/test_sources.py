@@ -6,9 +6,7 @@ CRLF-normalized, and (streaming) exactly-once through the spool."""
 from __future__ import annotations
 
 import os
-import shutil
 import socket
-import tempfile
 import threading
 import time
 
@@ -16,6 +14,7 @@ import pytest
 
 import s4_spark.sources as sources
 from s4_spark.sources import chunk_spool, unix_socket
+from s4_spark.sources.mock import send_when_bound
 from s4_spark.sources.unix_socket import _frame, _SpoolingStreamReader
 from s4_spark.streaming import rigs
 
@@ -45,19 +44,6 @@ def serve_lines(sock_path: str, payload: bytes, accept_n: int = 1) -> threading.
 def registered(spark):
     sources.register(spark)
     return spark
-
-
-@pytest.fixture()
-def sock_dir():
-    """A private directory for one test's socket paths. A fixed path in
-    the shared temp dir lets two concurrent runs unlink and rebind each
-    other's one-shot servers: the loser's reader is then refused, the
-    connect-mode source treats that as "no producer", and the stream
-    silently stays empty. mkdtemp keeps the path well under the 108-byte
-    unix socket limit that a deep pytest tmp_path can exceed."""
-    d = tempfile.mkdtemp(prefix="s4_src_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_batch_read_frames_lines(registered, sock_dir):
@@ -193,30 +179,9 @@ def test_stream_reader_listen_mode_fan_in(tmp_path, sock_dir):
     sock = os.path.join(sock_dir, "listen.sock")
     r = _SpoolingStreamReader(sock, str(tmp_path / "spool"), listen=True)
     r._ensure_receiver()  # binds the path
-    # wait for CONNECTABILITY, not path existence — a stale socket file
-    # from a previous run exists on disk before the reader has reclaimed
-    # and re-bound it, and connecting to it is refused
-    deadline = time.time() + 5
-    while time.time() < deadline:
-        probe = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
-        try:
-            probe.connect(sock)
-            probe.close()
-            break
-        except OSError:
-            probe.close()
-            time.sleep(0.02)
-
-    def client(payload: bytes):
-        c = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
-        c.connect(sock)
-        c.sendall(payload)
-        c.close()
-
     threads = [
-        threading.Thread(target=client, args=(b"a0\na1\n",)),
-        threading.Thread(target=client, args=(b"b0\r\nb1\n",)),
-        threading.Thread(target=client, args=(b"c0\n",)),
+        threading.Thread(target=send_when_bound, args=(sock, payload, 5))
+        for payload in (b"a0\na1\n", b"b0\r\nb1\n", b"c0\n")
     ]
     for th in threads:
         th.start()
@@ -407,20 +372,10 @@ def test_listen_mode_refuses_live_socket(tmp_path, sock_dir):
     stale_owner.close()  # path remains on disk, no listener behind it
     r2 = _SpoolingStreamReader(sock, str(tmp_path / "spool2"), listen=True)
     r2._ensure_receiver()
-    deadline = time.time() + 5
-    client = None
-    while time.time() < deadline:
-        try:
-            client = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
-            client.connect(sock)
-            break
-        except OSError:
-            client.close()
-            client = None
-            time.sleep(0.05)
-    assert client is not None, "listen mode failed to reclaim stale path"
-    client.sendall(b"alive\n")
-    client.close()
+    try:
+        send_when_bound(sock, b"alive\n", 5)
+    except TimeoutError:
+        pytest.fail("listen mode failed to reclaim stale path")
     got, _ = drain(r2, r2.initialOffset(), 1)
     assert got == ["alive"]
     r2.stop()
@@ -477,19 +432,8 @@ def test_listen_pipeline_restart_lands_every_record_once(registered, tmp_path, s
         flush_interval="200 milliseconds",
     )
 
-    def send(lo, hi):
-        deadline = time.time() + 30
-        while True:  # the server binds on the first read
-            c = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
-            try:
-                c.connect(sock)
-                break
-            except OSError:
-                c.close()
-                assert time.time() < deadline, "server never bound"
-                time.sleep(0.05)
-        c.sendall(b"".join(b"rec-%d\n" % i for i in range(lo, hi)))
-        c.close()
+    def send(lo, hi):  # the server binds on the first read
+        send_when_bound(sock, b"".join(b"rec-%d\n" % i for i in range(lo, hi)), 30)
 
     def wait(q, done):
         deadline = time.time() + 60

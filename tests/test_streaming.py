@@ -401,24 +401,6 @@ def test_events_paths_survive_nanos_generator_flip(spark, tmp_path):
     assert batch_rows[0].ts == datetime.datetime(2023, 11, 14, 22, 13, 20)
 
 
-def test_transform_with_state_matches_batch_when_available(spark, duck):
-    """q174 (gated): on runtimes with protobuf, the transformWithState
-    snapshot must equal the batch aggregate — same contract as q097 on
-    the successor API. Skips (does not fake-pass) where the dep is
-    absent; the gate itself is exercised either way."""
-    import pytest as _pytest
-
-    from s4_spark.queries.streaming import transform_with_state_available
-
-    if not transform_with_state_available():
-        assert "q174_transform_with_state" not in REGISTRY
-        _pytest.skip("transformWithStateInPandas needs the protobuf package")
-    from tests.conftest import assert_oracle_match
-
-    q = REGISTRY["q174_transform_with_state"]
-    assert_oracle_match(q.fn(spark, SF_DIR), duck, q.oracle, q.name)
-
-
 def test_q209_index_batch_replay_is_idempotent(spark, tmp_path):
     """q209's exactly-once claim, through the sink q209 uses
     (rigs.idempotent_batch_sink): a replayed micro-batch (failure after
@@ -721,11 +703,8 @@ def test_q252_ttl_actually_evicts(spark):
     import pyspark.sql.functions as F  # noqa: N812
 
     from s4_spark.queries import REGISTRY
-    from s4_spark.queries.streaming import transform_with_state_available
     from tests.conftest import SMOKE_SF_DIR
 
-    if not transform_with_state_available():
-        pytest.skip("transformWithState needs protobuf")
     out = REGISTRY["q252_state_ttl_eviction"].fn(spark, SMOKE_SF_DIR).collect()
     p1 = {r["user_id"]: r["n"] for r in out if r["phase"] == 1}
     p2 = {r["user_id"]: r["n"] for r in out if r["phase"] == 2}

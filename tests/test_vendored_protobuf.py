@@ -11,14 +11,11 @@ presence, repeated containers, packed decode, unknown-field skip.
 
 from __future__ import annotations
 
-import pytest
+# importing the streaming entries puts a protobuf runtime (real, else the
+# vendored one) on the import path
+import s4_spark.queries.streaming  # noqa: F401
 
-from s4_spark.queries.streaming import transform_with_state_available
-
-if not transform_with_state_available():  # pragma: no cover - env guard
-    pytest.skip("no protobuf runtime (real or vendored)", allow_module_level=True)
-
-import pyspark.sql.streaming.proto.StateMessage_pb2 as sm  # noqa: E402
+import pyspark.sql.streaming.proto.StateMessage_pb2 as sm
 
 
 def roundtrip(msg, cls):
